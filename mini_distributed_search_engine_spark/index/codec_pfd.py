@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .codec import varint_decode, varint_encode, varint_lengths
+from .codec import varint_decode, varint_encode
 
 PFD_BLOCK = 128
 _MAX_B = 32  # packed-width cap; wider values ride the exception path
@@ -123,9 +123,12 @@ def pfd_encode(values: np.ndarray) -> bytes:
 
     bl = _bit_lengths(blocks) * in_range
     # candidate widths: {0} u the distinct bit lengths present (capped).
-    # EXACT, not a heuristic: between two present bit lengths the exception
-    # set is constant while packed bytes grow with b, so cost(b) is
-    # minimized at the interval's lower end — always 0 or a present bl.
+    # Exact when every bit length is <= _MAX_B: between two present bit
+    # lengths the exception set is constant while packed bytes grow with b,
+    # so cost(b) is minimized at the interval's lower end — always 0 or a
+    # present bl. A value wider than _MAX_B is an exception at every allowed
+    # width, so the pick is then only the cheapest width <= _MAX_B (a wider
+    # packing, which the format cannot store, might cost less).
     cand = np.unique(np.concatenate(
         [[0], np.minimum(np.unique(bl), _MAX_B)]))
     # exact per-(candidate, block) byte cost: packed bytes + 1 position
@@ -226,30 +229,24 @@ PFD_SCHEMA = T.StructType([
 def build_packed_postings_pfd(term_doc_tf: DataFrame,
                               shard_span: int = 1 << 20) -> DataFrame:
     """(term, doc_id, tf, dl) rows -> PFD-compressed per-(term, doc-shard)
-    segments: same delta-gap preprocessing, sharding and exchange shape as
-    `packed.build_packed_postings`, different at-rest bit format."""
+    segments: same delta-gap preprocessing, sharding and sorted-run encode
+    (`packed.encode_runs`) as `packed.build_packed_postings`, different
+    at-rest bit format."""
     from pyspark.sql import functions as F
+
+    from .packed import encode_runs
+
+    def encode_run(docs, tfs, dls) -> dict:
+        gaps = np.diff(docs, prepend=0)
+        return {"df": int(docs.size), "first_doc": int(docs[0]),
+                "doc_gaps": pfd_encode(gaps.astype(np.uint64)),
+                "tfs": pfd_encode(tfs.astype(np.uint64)),
+                "dls": pfd_encode(dls.astype(np.uint64))}
 
     with_shard = term_doc_tf.withColumn(
         "shard_id", (F.col("doc_id") / F.lit(shard_span)).cast("int"))
-
-    def encode_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        term, shard_id = key
-        order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-        docs = pdf["doc_id"].to_numpy()[order].astype(np.int64)
-        gaps = np.empty_like(docs)
-        gaps[0] = docs[0]
-        np.subtract(docs[1:], docs[:-1], out=gaps[1:])
-        return pd.DataFrame([{
-            "term": term, "shard_id": int(shard_id), "df": int(docs.size),
-            "first_doc": int(docs[0]),
-            "doc_gaps": pfd_encode(gaps.astype(np.uint64)),
-            "tfs": pfd_encode(pdf["tf"].to_numpy()[order].astype(np.uint64)),
-            "dls": pfd_encode(pdf["dl"].to_numpy()[order].astype(np.uint64)),
-        }])
-
-    return (with_shard.groupBy("term", "shard_id")
-            .applyInPandas(encode_group, PFD_SCHEMA))
+    return encode_runs(with_shard, ("doc_id", "tf", "dl"), encode_run,
+                       PFD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -339,8 +336,7 @@ def restore_packed(archived: DataFrame) -> DataFrame:
     restore to the canonical 128-block equivalent — same postings blobs,
     same scores, sound block-max bounds, just re-blocked skip metadata
     (logical identity + rank-identity test-enforced)."""
-    from .codec import encode_postings
-    from .packed import PACKED_SCHEMA, _ENC_KEYS
+    from .packed import PACKED_SCHEMA, _tf_segment
 
     _require_columns(
         archived,
@@ -353,15 +349,13 @@ def restore_packed(archived: DataFrame) -> DataFrame:
             out = []
             for r in pdf.itertuples(index=False):
                 gaps = pfd_decode(bytes(r.doc_gaps)).astype(np.int64)
-                docs = np.cumsum(gaps)
-                enc = encode_postings(
-                    docs, pfd_decode(bytes(r.tfs)).astype(np.int64),
+                row = _tf_segment(
+                    np.cumsum(gaps),
+                    pfd_decode(bytes(r.tfs)).astype(np.int64),
                     pfd_decode(bytes(r.dls)).astype(np.int64),
                     float(r.enc_avgdl))
-                row = {"term": r.term, "shard_id": int(r.shard_id),
-                       "global_df": int(r.global_df),
-                       "last_doc": int(docs[-1]) if docs.size else 0}
-                row.update({k: enc[k] for k in _ENC_KEYS})
+                row.update(term=r.term, shard_id=int(r.shard_id),
+                           global_df=int(r.global_df))
                 out.append(row)
             if out:
                 yield pd.DataFrame(out, columns=cols)

@@ -18,6 +18,8 @@ group) union-ed then globally ranked is exact.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -61,29 +63,107 @@ _ENC_KEYS = ("df", "first_doc", "doc_gaps", "tfs", "dls", "block_last_doc",
 DEFAULT_SHARD_SPAN = 1 << 20  # docs per shard; bounds any encode group size
 
 
+def encode_runs(rows: DataFrame, cols: tuple[str, ...],
+                encode_run: Callable[..., dict],
+                schema: T.StructType) -> DataFrame:
+    """Encode every (term, shard_id) run of ``rows`` into one segment row —
+    the one encode operator behind the TF, positional and PFD builders.
+
+    One hash exchange on (term, shard_id), a sort within each partition on
+    (term, shard_id, *cols), then ONE mapInPandas pass: each Arrow batch is
+    cut into equal-key runs by a vectorized key comparison and
+    ``encode_run(*cols)`` is called once per run with the run's sorted
+    numpy slices; it returns the row's non-key columns. A per-group
+    applyInPandas pays one Python call and one single-row pandas frame per
+    (term, shard) segment, which dominates the encode on a Zipfian
+    vocabulary of rare terms; here a batch's segments leave as one frame.
+
+    Memory: a run cut by an Arrow batch boundary is copied and carried
+    into the next batch, so a task holds one Arrow batch
+    (spark.sql.execution.arrow.maxRecordsPerBatch rows) plus one group —
+    at most shard_span docs' rows — the same bound as the grouped operator.
+    """
+    names = [f.name for f in schema.fields]
+
+    def gen(batches):
+        key, pieces = None, []  # the open run: its key and column slices
+
+        def close() -> dict:
+            row = encode_run(*(np.concatenate(p) for p in zip(*pieces)))
+            row["term"], row["shard_id"] = key
+            return row
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            terms = pdf["term"].to_numpy()
+            shards = pdf["shard_id"].to_numpy()
+            vals = [pdf[c].to_numpy() for c in cols]
+            cuts = np.flatnonzero((terms[1:] != terms[:-1])
+                                  | (shards[1:] != shards[:-1])) + 1
+            out = []
+            for a, b in zip(np.concatenate([[0], cuts]),
+                            np.concatenate([cuts, [len(pdf)]])):
+                k = (terms[a], int(shards[a]))
+                if k != key:
+                    if pieces:
+                        out.append(close())
+                    key, pieces = k, []
+                pieces.append([v[a:b] for v in vals])
+            # the batch's last run may continue in the next batch: copy it
+            # so the carry does not pin this batch's buffers
+            pieces[-1] = [v.copy() for v in pieces[-1]]
+            if out:
+                yield pd.DataFrame(out, columns=names)
+        if pieces:
+            yield pd.DataFrame([close()], columns=names)
+
+    return (rows.select("term", "shard_id", *cols)
+            .repartition("term", "shard_id")
+            .sortWithinPartitions("term", "shard_id", *cols)
+            .mapInPandas(gen, schema))
+
+
+def _tf_segment(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                avgdl: float) -> dict:
+    """encode_postings output as a PACKED_SCHEMA row minus the key columns;
+    global_df is a placeholder the totals join overwrites."""
+    enc = encode_postings(doc_ids, tfs, dls, avgdl)
+    row = {"global_df": 0,
+           "last_doc": int(enc["block_last_doc"][-1])
+           if enc["block_last_doc"] else 0}
+    row.update({k: enc[k] for k in _ENC_KEYS})
+    return row
+
+
+def _attach_totals(segs: DataFrame, rows: DataFrame) -> DataFrame:
+    """Ride each term's total df on its segments, counted over the SKINNY
+    (term, doc_id) source rows (count of pairs == sum of segment dfs), not
+    over the segments: a with_global_df over unpersisted segments would
+    run the encode once for the totals aggregate and once for the join."""
+    totals = rows.groupBy("term").agg(
+        F.count(F.lit(1)).cast("long").alias("_gdf"))
+    return (segs.drop("global_df").join(F.broadcast(totals), "term")
+            .withColumnRenamed("_gdf", "global_df")
+            .select(*[f.name for f in PACKED_SCHEMA.fields]))
+
+
 def build_packed_postings(term_doc_tf: DataFrame, avgdl: float,
                           shard_span: int = DEFAULT_SHARD_SPAN) -> DataFrame:
     """(term, doc_id, tf, dl) rows -> packed per-(term, shard) segments.
 
-    One exchange on (term, shard_id); each group is at most shard_span
-    postings regardless of term hotness.
+    One exchange on (term, shard_id) and one sorted-run encode pass
+    (`encode_runs`); each segment is at most shard_span postings
+    regardless of term hotness, and a task holds one Arrow batch plus one
+    such group.
     """
     with_shard = term_doc_tf.withColumn(
         "shard_id", (F.col("doc_id") / F.lit(shard_span)).cast("int"))
-
-    def encode_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        term, shard_id = key
-        enc = encode_postings(pdf["doc_id"].to_numpy(), pdf["tf"].to_numpy(),
-                              pdf["dl"].to_numpy(), avgdl)
-        row = {"term": term, "shard_id": int(shard_id), "global_df": 0,
-               "last_doc": int(enc["block_last_doc"][-1])
-               if enc["block_last_doc"] else 0}
-        row.update({k: enc[k] for k in _ENC_KEYS})
-        return pd.DataFrame([row])
-
-    segments = (with_shard.groupBy("term", "shard_id")
-                .applyInPandas(encode_group, PACKED_SCHEMA))
-    return with_global_df(segments)
+    segs = encode_runs(with_shard, ("doc_id", "tf", "dl"),
+                       lambda docs, tfs, dls: _tf_segment(docs, tfs, dls,
+                                                          avgdl),
+                       PACKED_SCHEMA)
+    return _attach_totals(segs, term_doc_tf)
 
 
 def with_global_df(segments: DataFrame) -> DataFrame:
@@ -135,13 +215,9 @@ def build_packed_postings_local(tf_dl: DataFrame, avgdl: float,
         out = []
         for (term, shard_id), g in all_.groupby(["term", "shard_id"],
                                                 sort=False):
-            enc = encode_postings(g["doc_id"].to_numpy(),
-                                  g["tf"].to_numpy(),
-                                  g["dl"].to_numpy(), avgdl)
-            row = {"term": term, "shard_id": int(shard_id), "global_df": 0,
-                   "last_doc": int(enc["block_last_doc"][-1])
-                   if enc["block_last_doc"] else 0}
-            row.update({k: enc[k] for k in _ENC_KEYS})
+            row = _tf_segment(g["doc_id"].to_numpy(), g["tf"].to_numpy(),
+                              g["dl"].to_numpy(), avgdl)
+            row.update(term=term, shard_id=int(shard_id))
             out.append(row)
         yield pd.DataFrame(out, columns=[f.name for f in PACKED_SCHEMA.fields])
 
@@ -167,25 +243,13 @@ def build_packed_postings_local(tf_dl: DataFrame, avgdl: float,
         if int(r["lo"]) // shard_span == int(prev["hi"]) // shard_span})
 
     segs = src.mapInPandas(gen, PACKED_SCHEMA)
-    # term totals from the SKINNY source rows (count of (term, doc) pairs ==
-    # sum of segment dfs), not from the segments: a with_global_df over the
-    # union would re-run the splice branch once for the totals aggregate and
-    # once for the join probe.
-    totals = src.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("_gdf"))
-
-    def attach(df: DataFrame) -> DataFrame:
-        return (df.drop("global_df").join(F.broadcast(totals), "term")
-                .withColumnRenamed("_gdf", "global_df")
-                .select(*[f.name for f in PACKED_SCHEMA.fields]))
-
     if not boundary_ids:
-        return attach(segs)
+        return _attach_totals(segs, src)
     segs = segs.persist()
     whole = segs.where(~F.col("shard_id").isin(boundary_ids))
     spliced = merge_packed(segs.where(F.col("shard_id").isin(boundary_ids)),
                            level_factor=1)
-    return attach(whole.unionByName(spliced))
+    return _attach_totals(whole.unionByName(spliced), src)
 
 
 def merge_packed(packed: DataFrame, level_factor: int = 8,
@@ -206,9 +270,10 @@ def merge_packed(packed: DataFrame, level_factor: int = 8,
     (target shard, hash(term) % salt) — per-task memory drops by the salt
     factor while keeping the batched-splice win, since a term's segments
     always share a salt bucket (splice correctness is per TERM, never
-    across terms). The per-(term, shard) grouping alternative bounds
-    memory at shard_span but measured far slower (thousands of tiny
-    applyInPandas groups).
+    across terms). Grouping per (term, shard) instead would bound memory
+    at shard_span but pay one applyInPandas call and one pandas frame per
+    segment — the per-group cost `encode_runs` avoids for the encoders
+    (an encode holds one Arrow batch plus one group).
     """
 
     def merge_one(term, new_shard, g: pd.DataFrame) -> dict:
@@ -274,9 +339,8 @@ def merge_packed(packed: DataFrame, level_factor: int = 8,
         }
 
     # ONE pandas group per target shard (not per (term, shard)): a merge
-    # group is all the terms of one merged shard, looped internally --
-    # thousands of tiny per-(term,shard) applyInPandas calls measure far
-    # slower than the same splice work batched per shard.
+    # group is all the terms of one merged shard, looped internally, so the
+    # per-call cost is paid per shard rather than per segment.
     def merge_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         new_shard = int(key[0])
         out = [merge_one(term, new_shard, g)
@@ -395,12 +459,9 @@ def _purge_segments(packed: DataFrame, tomb: np.ndarray) -> DataFrame:
                 if keep.all():  # tombstones in range, none in this term
                     out.append({c: getattr(r, c) for c in cols})
                     continue
-                enc = encode_postings(dec.doc_ids[keep], dec.tfs[keep],
-                                      dec.dls[keep], float(r.enc_avgdl))
-                row = {"term": r.term, "shard_id": int(r.shard_id),
-                       "global_df": 0,
-                       "last_doc": int(enc["block_last_doc"][-1])}
-                row.update({k: enc[k] for k in _ENC_KEYS})
+                row = _tf_segment(dec.doc_ids[keep], dec.tfs[keep],
+                                  dec.dls[keep], float(r.enc_avgdl))
+                row.update(term=r.term, shard_id=int(r.shard_id))
                 out.append(row)
             if out:
                 yield pd.DataFrame(out, columns=cols)

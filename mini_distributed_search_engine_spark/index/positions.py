@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 
 from .codec import (BLOCK, block_ends_array, varint_decode, varint_encode,
                     varint_lengths)
+from .packed import encode_runs
 
 POS_SCHEMA = T.StructType([
     T.StructField("term", T.StringType(), False),
@@ -123,9 +124,11 @@ def build_packed_positions(positions: DataFrame,
                            ) -> DataFrame:
     """(doc_id, term, pos) rows -> packed per-(term, shard) segments.
 
-    One exchange on (term, shard_id); a stop-word-hot term splits across
-    doc shards, bounding every encode group (same skew story as
-    `packed.build_packed_postings`).
+    One exchange on (term, shard_id) and one sorted-run encode pass
+    (`packed.encode_runs`, rows sorted by doc_id then pos); a
+    stop-word-hot term splits across doc shards, so a task holds one Arrow
+    batch plus one group of at most shard_span docs' positions (same skew
+    story as `packed.build_packed_postings`).
 
     ``shard_bounds`` ((lo, shard_id) pairs, e.g. from
     `wand.compute_shard_bounds` over a packed TF index) assigns docs to
@@ -149,18 +152,8 @@ def build_packed_positions(positions: DataFrame,
     else:
         with_shard = positions.withColumn(
             "shard_id", (F.col("doc_id") / F.lit(shard_span)).cast("int"))
-
-    cols = [f.name for f in POS_SCHEMA.fields]
-
-    def encode_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        term, shard_id = key
-        row = {"term": term, "shard_id": int(shard_id)}
-        row.update(encode_positions(pdf["doc_id"].to_numpy(),
-                                    pdf["pos"].to_numpy()))
-        return pd.DataFrame([row], columns=cols)
-
-    return (with_shard.groupBy("term", "shard_id")
-            .applyInPandas(encode_group, POS_SCHEMA))
+    return encode_runs(with_shard, ("doc_id", "pos"), encode_positions,
+                       POS_SCHEMA)
 
 
 def unpack_positions(packed_pos: DataFrame) -> DataFrame:
