@@ -808,14 +808,16 @@ def _index_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Every slot ceded comes from the r4-green cohort (all 50 of them are
 # double-or-better green and driver-verified LAST round), so after r5 no
 # entry's newest driver row is older than r4 — the VERDICT's rotation
-# target. Verify placement after ANY registry edit:
+# target. After r5, slots 46-50 re-check the entries the one-serving-path
+# change touched (see the note on the last five). Verify placement after
+# ANY registry edit:
 #   python -c "import __spark_entry__ as E; print(list(E.queries())[:50])"
 # --------------------------------------------------------------------------
 _R5_WINDOW = (
     # 1: the single r2-latest entry anywhere (VERDICT r4 #2: "kmeans
     # first") — after r5 no entry's newest driver row predates r4
     "embed_kmeans_centroids",
-    # 2-39: the r3-latest cohort (every remaining entry outside the r4
+    # 2-34: the r3-latest cohort (every remaining entry outside the r4
     # window), in registry source order — the whole stale set re-enters,
     # EXCEPT `transcripts`, which cedes its slot to the never-driver-
     # verified purge-lifecycle entry: the transcripts source path is
@@ -824,12 +826,11 @@ _R5_WINDOW = (
     # the lowest-regression-risk re-check anywhere in the cohort
     "analytics_sessionize", "events_asof_join", "events_range_join",
     "events_value_quantiles", "events_value_quantiles_approx",
-    "events_windowed_counts", "events_json_agg", "doc_keywords",
+    "doc_keywords",
     "related_terms", "text_token_counts", "text_unigram_logppl",
     "multimodal_frame_sample", "multimodal_embed", "text_bigrams",
     "docs_sample_stratified", "docs_sample_topk_stratum",
     "analytics_pricing_summary", "analytics_top_unshipped",
-    "analytics_forecast_revenue", "analytics_windows", "analytics_rollup",
     # (multimodal_meta ceded its re-check slot to the never-driver-verified
     # packed_pfd_roundtrip late in round 5 — its module family keeps two
     # in-window entries, multimodal_frame_sample and multimodal_embed)
@@ -839,7 +840,7 @@ _R5_WINDOW = (
     "packed_incremental_roundtrip", "dedup_exact", "dedup_lsh_candidates",
     "dedup_components", "dedup_components_star", "embed_ivf_ann_topk",
     "embed_ivf_partitioned_topk",
-    # 40-45: NEW this round (packed positional index family + the full
+    # 35-40: NEW in r5 (packed positional index family + the full
     # delete lifecycle; the span and streaming-positions entries took
     # bm25_topk_and_wand's and bm25_topk_and's changed-impl slots —
     # those entries' changed code paths (the rank_candidates tail and
@@ -850,7 +851,7 @@ _R5_WINDOW = (
     "positions_packed_roundtrip", "phrase_match_packed",
     "bm25_topk_proximity_wand", "span_near_match",
     "streaming_positions_roundtrip", "index_purge_roundtrip",
-    # 46-50: implementation changed this round — a regression must not
+    # 41-45: implementation changed in r5 — a regression must not
     # pass the gate (corpus_stats threading through the exhaustive
     # scorers: bm25_topk/filtered/proximity; the rank_candidates/
     # driver-merge tail refactor of wand_topk: wand; the tightened
@@ -858,6 +859,17 @@ _R5_WINDOW = (
     "bm25_topk", "bm25_topk_filtered",
     "bm25_topk_proximity", "bm25_topk_wand",
     "text_redact_pii",
+    # 46-50: one serving path (packed kernels, with the Arrow driver
+    # merge as every ranked path's only tail): the remaining wand_topk
+    # entries whose rank tail changed, and the two cold-tier entries
+    # that never had a driver row. Their five slots come from the r3
+    # cohort above: events_windowed_counts, events_json_agg,
+    # analytics_forecast_revenue, analytics_windows and analytics_rollup
+    # — untouched code, green in the r5 window, and slated for removal
+    # with the non-search surface
+    "bm25_topk_and_wand", "bm25_topk_filtered_wand",
+    "bm25_topk_tombstoned_wand",
+    "index_archive_roundtrip", "positions_archive_roundtrip",
 )
 assert len(_R5_WINDOW) == 50 and len(set(_R5_WINDOW)) == 50
 

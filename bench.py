@@ -212,8 +212,8 @@ def main() -> None:
         for _ in range(query_runs):
             t = time.perf_counter()
             wand_topk_proximity(spark, packed_r, pos_packed, doc_stats,
-                                queries=(q,), corpus_stats=corpus_stats,
-                                final_rank="driver").collect()
+                                queries=(q,),
+                                corpus_stats=corpus_stats).collect()
             best = min(best, time.perf_counter() - t)
         per_prox[q.query_id] = round(best, 4)
 
@@ -224,10 +224,18 @@ def main() -> None:
         POS_STREAMS, TF_STREAMS, archive_packed, archive_positions,
         stream_bytes)
 
+    # the timer covers the transcode only: the archived frames are
+    # materialized inside it, their byte sums are read after it
     ta = time.perf_counter()
-    cold_tf = stream_bytes(archive_packed(packed_r), TF_STREAMS)
-    cold_pos = stream_bytes(archive_positions(pos_packed), POS_STREAMS)
+    arch_tf = archive_packed(packed_r).cache()
+    arch_pos = archive_positions(pos_packed).cache()
+    arch_tf.count()
+    arch_pos.count()
     archive_sec = round(time.perf_counter() - ta, 3)
+    cold_tf = stream_bytes(arch_tf, TF_STREAMS)
+    cold_pos = stream_bytes(arch_pos, POS_STREAMS)
+    arch_tf.unpersist()
+    arch_pos.unpersist()
     hot_tf = stream_bytes(packed_r, TF_STREAMS)
     hot_pos = stream_bytes(pos_packed, POS_STREAMS)
 

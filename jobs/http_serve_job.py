@@ -5,8 +5,11 @@ The reference serves search over HTTP from a hand-rolled webserver
 /words on webserver/Server.java:147-160). This is the Spark-native
 analogue: the same warm engine `jobs/serve_job.py` drives over stdin,
 fronted by the stdlib ThreadingHTTPServer — each request is a small warm
-Spark job; Spark schedules concurrent driver threads fine, so requests
-overlap. The hand-rolled socket/HTTP layer of the reference is exactly
+Spark job over the packed index, ranked by one driver-side merge (the
+engine has one serving path); Spark schedules concurrent driver threads
+fine, so requests overlap. Every GET route but /stats is one row of a
+route table (required params, engine call, reply key) sharing one timing
+path. The hand-rolled socket/HTTP layer of the reference is exactly
 the infrastructure SURVEY §7 absorbs into commodity layers.
 
 Routes (JSON replies):
@@ -70,6 +73,37 @@ def make_handler(engine: SearchEngine, lats):   # lats: bounded deque
     # walks it mid-append, so both sides go through one lock
     lats_lock = threading.Lock()
 
+    def search(q: dict) -> list:
+        mode = q.get("mode", "or")
+        if mode not in ("or", "and"):
+            raise ValueError("mode must be or|and")
+        return engine.search(q["q"], k=_pos_int(q, "k", 10), mode=mode,
+                             role=q.get("role"))
+
+    def hybrid(q: dict) -> list:
+        if not hasattr(engine, "_ivf"):
+            raise ValueError("hybrid leg not warmed: start with "
+                             "--embeddings/--ivf-root")
+        return engine.search_hybrid(q["q"], query_vec_id=int(q["vec"]),
+                                    k=_pos_int(q, "k", 10))
+
+    # path -> (required params, engine call, reply key); "rows" replies
+    # carry serialized result rows, every reply carries took_sec
+    routes = {
+        "/search": (("q",), search, "rows"),
+        "/phrase": (("q",), lambda q: engine.search_phrase(
+            q["q"], k=_pos_int(q, "k", 10)), "rows"),
+        "/proximity": (("q",), lambda q: engine.search_proximity(
+            q["q"], k=_pos_int(q, "k", 10)), "rows"),
+        "/near": (("q",), lambda q: engine.search_near(
+            q["q"], k=_pos_int(q, "k", 10),
+            window=_pos_int(q, "window", 8)), "rows"),
+        # vec = query embedding id from the upstream encoder
+        "/hybrid": (("q", "vec"), hybrid, "rows"),
+        "/words": ((), lambda q: engine.suggest(
+            q.get("prefix", ""), n=_pos_int(q, "n", 10)), "terms"),
+    }
+
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):        # quiet: latency is logged by us
             pass
@@ -87,85 +121,37 @@ def make_handler(engine: SearchEngine, lats):   # lats: bounded deque
             self.end_headers()
             self.wfile.write(body)
 
+        def _stats(self) -> None:
+            n, avgdl = engine._corpus_stats
+            with lats_lock:         # copy under the lock, sort after
+                window = list(lats)
+            window.sort()           # p50 of last <=10k
+            p50 = window[len(window) // 2] if window else 0.0
+            self._json(200, {"n_docs": n, "avgdl": round(avgdl, 3),
+                             "served": len(window), "p50_sec": round(p50, 4)})
+
         def do_GET(self):  # noqa: N802 (stdlib handler contract)
             u = urlparse(self.path)
             q = {k: v[0] for k, v in parse_qs(u.query).items()}
             t0 = time.perf_counter()
             try:
-                if u.path == "/search":
-                    if "q" not in q:
-                        return self._json(400, {"err": "q parameter required"})
-                    k = _pos_int(q, "k", 10)
-                    mode = q.get("mode", "or")
-                    if mode not in ("or", "and"):
-                        return self._json(400, {"err": "mode must be or|and"})
-                    rows = engine.search(q["q"], k=k, mode=mode,
-                                         role=q.get("role"))
-                    # local elapsed, THEN append: concurrent handler threads
-                    # share `lats`, so lats[-1] could be another request's
-                    took = time.perf_counter() - t0
-                    self._record(took)
-                    return self._json(200, {"rows": [_row_json(r) for r in rows],
-                                            "took_sec": round(took, 4)})
-                if u.path == "/phrase":
-                    if "q" not in q:
-                        return self._json(400, {"err": "q parameter required"})
-                    rows = engine.search_phrase(q["q"], k=_pos_int(q, "k", 10))
-                    took = time.perf_counter() - t0
-                    self._record(took)
-                    return self._json(200, {"rows": [_row_json(r) for r in rows],
-                                            "took_sec": round(took, 4)})
-                if u.path == "/proximity":
-                    if "q" not in q:
-                        return self._json(400, {"err": "q parameter required"})
-                    rows = engine.search_proximity(q["q"],
-                                                   k=_pos_int(q, "k", 10))
-                    took = time.perf_counter() - t0
-                    self._record(took)
-                    return self._json(200, {"rows": [_row_json(r) for r in rows],
-                                            "took_sec": round(took, 4)})
-                if u.path == "/near":
-                    if "q" not in q:
-                        return self._json(400, {"err": "q parameter required"})
-                    rows = engine.search_near(
-                        q["q"], k=_pos_int(q, "k", 10),
-                        window=_pos_int(q, "window", 8, cap=10_000))
-                    took = time.perf_counter() - t0
-                    self._record(took)
-                    return self._json(200, {"rows": [_row_json(r) for r in rows],
-                                            "took_sec": round(took, 4)})
-                if u.path == "/hybrid":
-                    if "q" not in q or "vec" not in q:
-                        return self._json(
-                            400, {"err": "q and vec parameters required "
-                                         "(vec = query embedding id from "
-                                         "the upstream encoder)"})
-                    if not hasattr(engine, "_ivf"):
-                        return self._json(
-                            400, {"err": "hybrid leg not warmed: start "
-                                         "with --embeddings/--ivf-root"})
-                    rows = engine.search_hybrid(
-                        q["q"], query_vec_id=int(q["vec"]),
-                        k=_pos_int(q, "k", 10))
-                    took = time.perf_counter() - t0
-                    self._record(took)
-                    return self._json(200, {"rows": [_row_json(r) for r in rows],
-                                            "took_sec": round(took, 4)})
-                if u.path == "/words":
-                    terms = engine.suggest(q.get("prefix", ""),
-                                           n=_pos_int(q, "n", 10))
-                    self._record(time.perf_counter() - t0)
-                    return self._json(200, {"terms": terms})
                 if u.path == "/stats":
-                    n, avgdl = engine._corpus_stats
-                    with lats_lock:         # copy under the lock, sort after
-                        window = list(lats)
-                    window.sort()           # p50 of last <=10k
-                    p50 = window[len(window) // 2] if window else 0.0
-                    return self._json(200, {
-                        "n_docs": n, "avgdl": round(avgdl, 3),
-                        "served": len(window), "p50_sec": round(p50, 4)})
-                return self._json(404, {"err": f"no route {u.path}"})
+                    return self._stats()
+                if u.path not in routes:
+                    return self._json(404, {"err": f"no route {u.path}"})
+                need, call, key = routes[u.path]
+                missing = [p for p in need if p not in q]
+                if missing:
+                    return self._json(400, {"err": " and ".join(missing)
+                                             + " parameter(s) required"})
+                out = call(q)
+                if key == "rows":
+                    out = [_row_json(r) for r in out]
+                # local elapsed, THEN append: concurrent handler threads
+                # share `lats`, so lats[-1] could be another request's
+                took = time.perf_counter() - t0
+                self._record(took)
+                return self._json(200, {key: out, "took_sec": round(took, 4)})
             except ValueError as e:       # bad k/n etc.
                 return self._json(400, {"err": str(e)})
             except Exception as e:        # keep serving on engine errors
@@ -235,12 +221,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
     ap.add_argument("--port", type=int, default=8077)
-    ap.add_argument("--exhaustive", action="store_true",
-                    help="serve from the uncompressed index instead of packed")
-    ap.add_argument("--bucketed", default=None, metavar="PATH",
-                    help="root of a write_index_bucketed layout: the "
-                         "exhaustive/analytics legs read the term-bucketed "
-                         "catalog tables (zero-exchange term joins)")
     ap.add_argument("--packed-bucketed", default=None, metavar="PATH",
                     help="root of a write_packed_bucketed layout: the "
                          "packed cache is the shard-bucketed scan as-is "
@@ -257,8 +237,7 @@ def main() -> None:
 
     spark = get_spark("mdse-http-serve")
     t0 = time.perf_counter()
-    engine = SearchEngine(spark, args.index, use_packed=not args.exhaustive,
-                          bucketed_path=args.bucketed,
+    engine = SearchEngine(spark, args.index,
                           packed_bucketed_path=args.packed_bucketed)
     engine.search("warmup probe", k=1)    # prime codegen + the join path
     if args.embeddings:

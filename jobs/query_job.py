@@ -2,7 +2,12 @@
 
 Usage:
   spark-submit --py-files mdse.zip jobs/query_job.py \\
-      --index /data/index_root --query "spark shuffle" [--k 10] [--exhaustive]
+      --index /data/index_root --query "spark shuffle" [--k 10] \\
+      [--mode or|and|phrase]
+
+Ranked modes serve from the packed index (`merged` stage) through
+`wand_topk`; phrase mode from the packed positions (`positions_packed`
+stage, built with `StagedIndexBuild.run(positions=True)`).
 """
 
 from __future__ import annotations
@@ -13,9 +18,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from mini_distributed_search_engine_spark.query.bm25 import (
-    Query, bm25_topk, bm25_topk_conjunctive)
-from mini_distributed_search_engine_spark.query.phrase import phrase_match
+from mini_distributed_search_engine_spark.query.bm25 import Query
+from mini_distributed_search_engine_spark.query.phrase import (
+    phrase_match_packed)
 from mini_distributed_search_engine_spark.query.wand import wand_topk
 from mini_distributed_search_engine_spark.session import get_spark
 
@@ -25,32 +30,24 @@ def main() -> None:
     ap.add_argument("--index", required=True)
     ap.add_argument("--query", required=True, action="append")
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--exhaustive", action="store_true",
-                    help="use the uncompressed exhaustive path instead of WAND")
     ap.add_argument("--mode", choices=["or", "and", "phrase"], default="or",
                     help="or = BM25 union, and = conjunctive intersection, "
-                         "phrase = exact phrase over the positions stage")
+                         "phrase = exact phrase over the packed positions")
     args = ap.parse_args()
 
     spark = get_spark("mdse-query")
     queries = tuple(Query(f"q{i:02d}", q, k=args.k)
                     for i, q in enumerate(args.query, 1))
-    doc_stats = spark.read.parquet(f"{args.index}/stats/doc_stats")
     if args.mode == "phrase":
-        pos = spark.read.parquet(f"{args.index}/positions/data")
-        out = phrase_match(spark, pos, queries=queries)
+        pos = spark.read.parquet(f"{args.index}/positions_packed/data")
+        out = phrase_match_packed(spark, pos, queries)
         for r in out.orderBy("query_id", "rank").collect():
             print(f"{r['query_id']}\trank={r['rank']}\tdoc={r['doc_id']}\tn_occ={r['n_occ']}")
         return
-    if args.exhaustive:
-        tf = spark.read.parquet(f"{args.index}/term_doc_tf/data")
-        ts = spark.read.parquet(f"{args.index}/stats/term_stats")
-        fn = bm25_topk_conjunctive if args.mode == "and" else bm25_topk
-        out = fn(spark, tf, ts, doc_stats, queries=queries)
-    else:
-        packed = spark.read.parquet(f"{args.index}/merged/data")
-        out = wand_topk(spark, packed, doc_stats, queries=queries,
-                        conjunctive=args.mode == "and")
+    doc_stats = spark.read.parquet(f"{args.index}/stats/doc_stats")
+    packed = spark.read.parquet(f"{args.index}/merged/data")
+    out = wand_topk(spark, packed, doc_stats, queries=queries,
+                    conjunctive=args.mode == "and")
     for r in out.orderBy("query_id", "rank").collect():
         print(f"{r['query_id']}\trank={r['rank']}\tdoc={r['doc_id']}\tscore={r['score']}")
 

@@ -12,7 +12,7 @@ Protocol (one request per line, TSV-ish, results to stdout):
   <text>                         OR-mode BM25 top-10
   or|and <k> <text>              ranked BM25 (union / conjunctive)
   role <role> <k> <text>         BM25 restricted to docs of a role
-  phrase <k> <text>              exact phrase match (positions stage)
+  phrase <k> <text>              exact phrase match (packed positions)
   proximity <k> <text>           BM25 + pairwise-closeness bonus
   near <k> <window> <text>       all terms within a token window
   suggest <n> <prefix>           autocomplete by descending df
@@ -128,12 +128,6 @@ def serve(engine: SearchEngine, inp=sys.stdin, out=sys.stdout) -> list[float]:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
-    ap.add_argument("--exhaustive", action="store_true",
-                    help="serve from the uncompressed index instead of packed")
-    ap.add_argument("--bucketed", default=None, metavar="PATH",
-                    help="root of a write_index_bucketed layout: the "
-                         "exhaustive/analytics legs read the term-bucketed "
-                         "catalog tables (zero-exchange term joins)")
     ap.add_argument("--packed-bucketed", default=None, metavar="PATH",
                     help="root of a write_packed_bucketed layout: the "
                          "packed cache is the shard-bucketed scan as-is "
@@ -142,8 +136,7 @@ def main() -> None:
 
     spark = get_spark("mdse-serve")
     t0 = time.perf_counter()
-    engine = SearchEngine(spark, args.index, use_packed=not args.exhaustive,
-                          bucketed_path=args.bucketed,
+    engine = SearchEngine(spark, args.index,
                           packed_bucketed_path=args.packed_bucketed)
     # prime codegen/Arrow workers so the FIRST user request isn't the one
     # paying JIT cost (the reference Searcher warms its IDF cache the same

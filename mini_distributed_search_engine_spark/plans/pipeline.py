@@ -319,9 +319,10 @@ class StagedIndexBuild:
         shutil.rmtree(final, ignore_errors=True)
         tmp.rename(final)
         # drop any cached plan built over the OLD files at this path (a
-        # live SearchEngine in this session caches merged/positions by
-        # plan identity — without this, its AND every later read of the
-        # path would silently serve pre-purge data from the cache)
+        # live SearchEngine in this session caches merged and
+        # positions_packed by plan identity — without this, its AND every
+        # later read of the path would silently serve pre-purge data from
+        # the cache)
         self.spark.catalog.refreshByPath(str(final))
 
     def _heal_swaps(self) -> None:

@@ -4,7 +4,10 @@ Replaces the reference's Searcher HTTP endpoint (`jobs/Searcher.java:128-317`:
 per-request KVS point lookups + driver-side heap). Construction warms the
 session the way Searcher's startup warmed its IDF cache
 (Searcher.java:64-81,126): the packed index and stats are cached once; each
-`search()` is then a small Spark job.
+`search()` is then a small Spark job. There is one serving path: every
+query runs a packed kernel (WAND/MaxScore, phrase, span or proximity) per
+doc-range shard, and ranked queries are merged into the global top-k on
+the driver from one Arrow collect of the per-shard candidates.
 
     eng = SearchEngine(spark, index_root)           # from a StagedIndexBuild
     eng.search("spark shuffle", k=10)               # -> list of result rows
@@ -17,80 +20,53 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .bm25 import Query, bm25_topk, bm25_topk_conjunctive
-from .phrase import phrase_match
+from .bm25 import Query
+from .phrase import phrase_match_packed
 from .wand import compute_shard_bounds, wand_topk
 
 
 class SearchEngine:
     def __init__(self, spark: SparkSession, index_root: str,
-                 use_packed: bool = True,
-                 bucketed_path: str | None = None,
                  packed_bucketed_path: str | None = None):
-        """``bucketed_path``: root of a `write_index_bucketed` layout. When
-        given, the engine's term_doc_tf / term_stats come from the TERM-
-        BUCKETED catalog tables (re-registered in this session from the
-        `_bucketed.json` descriptor), so any full-width term-equality join
-        between them — IDF attach on an unpruned term set, posting-vs-
-        stats audits, tfidf over the whole vocabulary — plans with ZERO
-        exchange on either side (test-asserted). The per-query packed WAND
-        path is unaffected; this feeds the exhaustive/analytics legs.
-
-        ``packed_bucketed_path``: root of a `write_packed_bucketed` layout.
-        The packed cache is then the shard_id-bucketed scan AS-IS — no
-        warmup `repartition(shard_id)` (a one-time O(index) shuffle per
+        """``packed_bucketed_path``: root of a `write_packed_bucketed`
+        layout. The packed cache is then the shard_id-bucketed scan AS-IS —
+        no warmup `repartition(shard_id)` (a one-time O(index) shuffle per
         engine start otherwise); bucketing carries through the
         InMemoryRelation, so per-query WAND stays exchange-free too
-        (both plan-asserted)."""
+        (both test-asserted)."""
         self.spark = spark
-        self.use_packed = use_packed
-        self._bucketed_tables: tuple[str, str] | None = None
-        if bucketed_path is not None:
-            from ..index.build import register_bucketed
-            names = register_bucketed(spark, bucketed_path)
-            tf_tbl = next(
-                (n for n in names if n.endswith("_term_doc_tf")), None)
-            ts_tbl = next(
-                (n for n in names if n.endswith("_term_stats")), None)
-            if tf_tbl is None or ts_tbl is None:
-                raise ValueError(
-                    f"no term-bucketed term_doc_tf/term_stats tables under "
-                    f"{bucketed_path} (tables: {names}); write them with "
-                    "write_index_bucketed()")
-            self._bucketed_tables = (tf_tbl, ts_tbl)
         self.doc_stats = spark.read.parquet(f"{index_root}/stats/doc_stats")
         self._stats_row = self.doc_stats.collect()[0]  # warm once
         self._corpus_stats = (int(self._stats_row["n_docs"]),
                               float(self._stats_row["avgdl"]))
-        if use_packed:
-            # Cache hash-partitioned on shard_id: the per-query
-            # groupBy(shard_id).applyInPandas then needs NO exchange (the
-            # cached partitioning already satisfies its clustered
-            # distribution), so a warm query is one shuffle-free scan stage
-            # plus the tiny global-rank stage. With a shard-bucketed
-            # at-rest layout the warmup repartition shuffle goes away too.
-            if packed_bucketed_path is not None:
-                from ..index.build import register_bucketed
-                names = register_bucketed(spark, packed_bucketed_path)
-                # pick the shard-clustered table, not blindly the first
-                # descriptor entry (layouts may share a root; pointing
-                # --packed-bucketed at a term-bucketed-only root should
-                # fail HERE, not later inside compute_shard_bounds)
-                packed_tbl = next(
-                    (n for n in names if "shard_id" in
-                     [f.name for f in spark.table(n).schema.fields]), None)
-                if packed_tbl is None:
-                    raise ValueError(
-                        f"no shard_id-bucketed table under "
-                        f"{packed_bucketed_path} (tables: {names}); "
-                        "write one with write_packed_bucketed()")
-                self.packed = spark.table(packed_tbl).cache()
-            else:
-                n = spark.sparkContext.defaultParallelism
-                self.packed = (spark.read
-                               .parquet(f"{index_root}/merged/data")
-                               .repartition(n, "shard_id").cache())
-            self.packed.count()
+        # Cache hash-partitioned on shard_id: the per-query
+        # groupBy(shard_id).applyInPandas then needs NO exchange (the
+        # cached partitioning already satisfies its clustered
+        # distribution), so a warm query is one shuffle-free scan stage
+        # whose candidates the driver merges. With a shard-bucketed
+        # at-rest layout the warmup repartition shuffle goes away too.
+        if packed_bucketed_path is not None:
+            from ..index.build import register_bucketed
+            names = register_bucketed(spark, packed_bucketed_path)
+            # pick the shard-clustered table, not blindly the first
+            # descriptor entry (layouts may share a root; pointing
+            # --packed-bucketed at a term-bucketed-only root should
+            # fail HERE, not later inside compute_shard_bounds)
+            packed_tbl = next(
+                (n for n in names if "shard_id" in
+                 [f.name for f in spark.table(n).schema.fields]), None)
+            if packed_tbl is None:
+                raise ValueError(
+                    f"no shard_id-bucketed table under "
+                    f"{packed_bucketed_path} (tables: {names}); "
+                    "write one with write_packed_bucketed()")
+            self.packed = spark.table(packed_tbl).cache()
+        else:
+            n = spark.sparkContext.defaultParallelism
+            self.packed = (spark.read
+                           .parquet(f"{index_root}/merged/data")
+                           .repartition(n, "shard_id").cache())
+        self.packed.count()
         # per-shard doc lower bounds: computed LAZILY on the first
         # role-filtered query and memoized (wand.compute_shard_bounds note)
         # — unfiltered engines never pay the bounds aggregation at all,
@@ -98,44 +74,22 @@ class SearchEngine:
         self._shard_bounds: list | None = None
         self.docs = spark.read.parquet(f"{index_root}/docs/data")
         self._index_root = index_root
-        self._positions: DataFrame | None = None
         self._positions_packed: DataFrame | None = None
         self._tombstones: set[int] = set()
         import threading
         self._tombstones_lock = threading.Lock()
-        if not use_packed:
-            self._ensure_tf()
 
     def _ensure_term_stats(self) -> DataFrame:
         if not hasattr(self, "term_stats"):
-            if self._bucketed_tables is not None:
-                # catalog table, left uncached: the fresh-session test
-                # asserts the zero-exchange plan straight off the files
-                # (bucketing does survive InMemoryRelation — the packed
-                # path relies on that — but these analytics-side tables
-                # are scanned rarely enough that pinning them is not
-                # worth the executor memory)
-                self.term_stats = self.spark.table(self._bucketed_tables[1])
-            else:
-                self.term_stats = self.spark.read.parquet(
-                    f"{self._index_root}/stats/term_stats").cache()
-                self.term_stats.count()
+            self.term_stats = self.spark.read.parquet(
+                f"{self._index_root}/stats/term_stats").cache()
+            self.term_stats.count()
         return self.term_stats
-
-    def _ensure_tf(self) -> None:
-        if not hasattr(self, "tf"):
-            if self._bucketed_tables is not None:
-                self.tf = self.spark.table(self._bucketed_tables[0])
-            else:
-                self.tf = self.spark.read.parquet(
-                    f"{self._index_root}/term_doc_tf/data").cache()
-                self.tf.count()
-            self._ensure_term_stats()
 
     def delete_docs(self, doc_ids) -> int:
         """Record query-time tombstones: the given doc_ids stop appearing
-        in every subsequent search (masked inside the WAND kernel /
-        filtered out of the exhaustive and phrase paths) WITHOUT touching
+        in every subsequent search (masked inside the packed kernels and
+        out of the hybrid semantic leg) WITHOUT touching
         the at-rest index — a delete is O(1) metadata, the LSM write
         discipline. Fold the accumulated set into the index with
         `packed.purge_docs` (and `positions.purge_positions` for the
@@ -173,12 +127,13 @@ class SearchEngine:
         t = self._tombstones
         return sorted(t) if t else None
 
-    # Above this many live tombstones, DataFrame-side masking switches
-    # from a literal NOT IN (Catalyst folds it into the scan filter, zero
-    # extra exchange) to a broadcast anti-join: a literal list that grows
-    # without bound across /delete requests bloats the plan and can hit
-    # codegen/driver limits long before purge_docs compacts (ADVICE r4).
-    # The packed path is unaffected — its mask rides the task closure.
+    # Above this many live tombstones, DataFrame-side masking (the hybrid
+    # semantic leg) switches from a literal NOT IN (Catalyst folds it into
+    # the scan filter, zero extra exchange) to a broadcast anti-join: a
+    # literal list that grows without bound across /delete requests bloats
+    # the plan and can hit codegen/driver limits long before purge_docs
+    # compacts (ADVICE r4). The packed kernels' mask rides the task
+    # closure instead.
     _TOMB_ISIN_MAX = 2048
 
     def _mask_tomb(self, df: DataFrame, col: str, tomb: list[int]) -> DataFrame:
@@ -191,13 +146,11 @@ class SearchEngine:
 
     def search_batch(self, queries: tuple[Query, ...],
                      hydrate: bool = False, mode: str = "or",
-                     role: str | None = None,
-                     final_rank: str = "window") -> DataFrame:
-        """``final_rank="driver"`` (packed paths only; ignored by the
-        exhaustive fallback) heap-merges the per-shard top-k driver-side
-        instead of the global rank window — one fewer exchange + stage
-        per request, rank-identical (see wand.wand_topk). Eager, so meant
-        for serving calls that collect immediately."""
+                     role: str | None = None) -> DataFrame:
+        """Rank a batch of queries with one packed-kernel job whose
+        per-shard top-k the driver merges (`wand.rank_candidates`). Eager:
+        the job runs at call time and the result is a driver-local frame
+        (joined to the doc store when ``hydrate``)."""
         if mode not in ("or", "and", "proximity"):
             raise ValueError(
                 f"mode must be 'or', 'and' or 'proximity', got {mode!r}")
@@ -206,62 +159,32 @@ class SearchEngine:
             if role is not None:
                 raise ValueError("mode='proximity' does not compose with "
                                  "role= yet; filter the results instead")
-            out = self._search_proximity(queries, tomb, final_rank)
-            return self._hydrate(out, "score") if hydrate else out
-        conjunctive = mode == "and"
-        if role is not None:
-            # metadata-filtered retrieval: the allowed doc_ids are sharded
-            # alongside the packed segments (wand.wand_topk allowed_docs —
-            # cogrouped per doc-range shard, masked before scoring), so a
-            # role= query serves from the SAME compressed index as every
-            # other query; no second uncompressed index copy stays hot.
-            from pyspark.sql import functions as F
-            allowed = self.docs.where(F.col("role") == role).select("doc_id")
-            if tomb is not None and not self.use_packed:
-                # exhaustive path has no kernel mask: shrink the allowed
-                # side instead (same semantics — blocked docs can't rank)
-                allowed = self._mask_tomb(allowed, "doc_id", tomb)
-            if self.use_packed:
+            from .proximity import wand_topk_proximity
+            out = wand_topk_proximity(
+                self.spark, self.packed, self._packed_positions_df(),
+                self.doc_stats, queries=queries,
+                corpus_stats=self._corpus_stats, blocked_ids=tomb)
+        else:
+            allowed = None
+            if role is not None:
+                # metadata-filtered retrieval: the allowed doc_ids are
+                # sharded alongside the packed segments (wand.wand_topk
+                # allowed_docs — cogrouped per doc-range shard, masked
+                # before scoring), so a role= query serves from the SAME
+                # compressed index as every other query
+                from pyspark.sql import functions as F
+                allowed = self.docs.where(F.col("role") == role) \
+                    .select("doc_id")
                 if self._shard_bounds is None:
                     self._shard_bounds = compute_shard_bounds(self.packed)
-                out = wand_topk(self.spark, self.packed, self.doc_stats,
-                                queries=queries,
-                                corpus_stats=self._corpus_stats,
-                                conjunctive=conjunctive,
-                                allowed_docs=allowed,
-                                shard_bounds=self._shard_bounds,
-                                blocked_ids=tomb,
-                                final_rank=final_rank)
-            elif conjunctive:
-                raise ValueError(
-                    "role filter with mode='and' needs the packed index")
-            else:
-                self._ensure_tf()
-                out = bm25_topk(self.spark, self.tf, self.term_stats,
-                                self.doc_stats, queries=queries,
-                                allowed_docs=allowed,
-                                corpus_stats=self._corpus_stats)
-        elif self.use_packed:
             out = wand_topk(self.spark, self.packed, self.doc_stats,
                             queries=queries,
                             corpus_stats=self._corpus_stats,
-                            conjunctive=conjunctive,
-                            blocked_ids=tomb,
-                            final_rank=final_rank)
-        else:
-            tf = self.tf if tomb is None else self._mask_tomb(
-                self.tf, "doc_id", tomb)
-            if conjunctive:
-                out = bm25_topk_conjunctive(self.spark, tf, self.term_stats,
-                                            self.doc_stats, queries=queries,
-                                            corpus_stats=self._corpus_stats)
-            else:
-                out = bm25_topk(self.spark, tf, self.term_stats,
-                                self.doc_stats, queries=queries,
-                                corpus_stats=self._corpus_stats)
-        if hydrate:
-            out = self._hydrate(out, "score")
-        return out
+                            conjunctive=mode == "and",
+                            allowed_docs=allowed,
+                            shard_bounds=self._shard_bounds,
+                            blocked_ids=tomb)
+        return self._hydrate(out, "score") if hydrate else out
 
     def _hydrate(self, out: DataFrame, score_col: str) -> DataFrame:
         """Attach display metadata to a rank list. LEFT join: a fused
@@ -278,14 +201,10 @@ class SearchEngine:
 
     def search(self, text: str, k: int = 10, hydrate: bool = True,
                mode: str = "or", role: str | None = None) -> list:
-        # single-query serving: the driver heap merge replaces the global
-        # rank window (one fewer exchange + stage; we collect right away,
-        # so the eager semantics cost nothing)
-        fr = "driver" if self.use_packed else "window"
         df = self.search_batch((Query("q", text, k=k),), hydrate=hydrate,
-                               mode=mode, role=role, final_rank=fr)
+                               mode=mode, role=role)
         # client-side sort of <= k rows: an orderBy would plan a sort job
-        # even over the driver path's LocalRelation
+        # even over the driver merge's LocalRelation
         return sorted(df.collect(), key=lambda r: r["rank"])
 
     def warm_hybrid(self, embeddings_path: str, ivf_root: str,
@@ -380,90 +299,41 @@ class SearchEngine:
             out = self._hydrate(out, "rrf")
         return out.orderBy("rank").collect()
 
-    def _search_proximity(self, queries: tuple[Query, ...],
-                          tomb: list[int] | None,
-                          final_rank: str) -> DataFrame:
-        """Proximity-boosted ranking (BM25 + pairwise min-distance bonus)
-        over the warm indexes: the packed path cogroups the cached TF
-        segments with the packed positional segments per doc-range shard
-        (tombstones masked inside the kernel); the exhaustive fallback is
-        the declarative row-path with the same masks."""
-        if self.use_packed:
-            from .proximity import wand_topk_proximity
-            return wand_topk_proximity(
-                self.spark, self.packed, self._packed_positions_df(),
-                self.doc_stats, queries=queries,
-                corpus_stats=self._corpus_stats, blocked_ids=tomb,
-                final_rank=final_rank)
-        from .proximity import bm25_topk_proximity
-        self._ensure_tf()
-        tf, pos = self.tf, self._positions_df()
-        if tomb is not None:
-            tf = self._mask_tomb(tf, "doc_id", tomb)
-            pos = self._mask_tomb(pos, "doc_id", tomb)
-        return bm25_topk_proximity(self.spark, tf, self.term_stats,
-                                   self.doc_stats, pos, queries=queries,
-                                   corpus_stats=self._corpus_stats)
-
-    def _positions_df(self) -> DataFrame:
-        """Positional index: the pipeline's committed 'positions' stage if
-        present, else built once from the doc store and cached."""
-        if self._positions is None:
-            import os
-            stage = f"{self._index_root}/positions/data"
-            if os.path.isdir(stage):
-                self._positions = self.spark.read.parquet(stage).cache()
-            else:
-                from ..functions.analyzer import term_positions_pandas
-                self._positions = term_positions_pandas(
-                    self.docs, "text").cache()
-            self._positions.count()
-        return self._positions
-
     def _packed_positions_df(self) -> DataFrame:
         """Packed positional segments: the pipeline's committed
         'positions_packed' stage if present (already co-sharded with the
-        merged TF layout), else packed once from the row positions
-        CO-SHARDED with the live packed TF index via its shard bounds
-        (the alignment contract `wand_topk_proximity` requires)."""
+        merged TF layout), else packed once — from the committed row
+        'positions' stage, or analyzed from the doc store — CO-SHARDED
+        with the live packed TF index via its shard bounds (the alignment
+        contract `wand_topk_proximity` requires). Only the packed result
+        is cached: the row positions are read once, to pack."""
         if self._positions_packed is None:
             import os
             stage = f"{self._index_root}/positions_packed/data"
             if os.path.isdir(stage):
                 self._positions_packed = self.spark.read.parquet(stage).cache()
-            elif self.use_packed:
+            else:
                 from ..index.positions import build_packed_positions
+                rows = f"{self._index_root}/positions/data"
+                if os.path.isdir(rows):
+                    pos = self.spark.read.parquet(rows)
+                else:
+                    from ..functions.analyzer import term_positions_pandas
+                    pos = term_positions_pandas(self.docs, "text")
                 if self._shard_bounds is None:
                     self._shard_bounds = compute_shard_bounds(self.packed)
                 self._positions_packed = build_packed_positions(
-                    self._positions_df(),
-                    shard_bounds=self._shard_bounds).cache()
-            else:
-                # exhaustive engine: no TF shards to co-shard with;
-                # standalone doc-range sharding is fine for the
-                # positional-only kernels (phrase/span)
-                from ..index.positions import build_packed_positions
-                self._positions_packed = build_packed_positions(
-                    self._positions_df()).cache()
+                    pos, shard_bounds=self._shard_bounds).cache()
             self._positions_packed.count()
         return self._positions_packed
 
     def search_phrase(self, text: str, k: int = 10) -> list:
-        """Exact phrase search; rows (rank, doc_id, n_occ). Packed
-        engines serve from the compressed positional segments (per-shard
-        anchor-intersection kernel, tombstones masked in-kernel); the
-        rest use the declarative row path."""
-        tomb = self._tomb()
-        if self.use_packed:
-            from .phrase import phrase_match_packed
-            df = phrase_match_packed(self.spark, self._packed_positions_df(),
-                                     (Query("q", text, k=k),),
-                                     blocked_ids=tomb)
-        else:
-            pos = self._positions_df()
-            if tomb is not None:
-                pos = self._mask_tomb(pos, "doc_id", tomb)
-            df = phrase_match(self.spark, pos, (Query("q", text, k=k),))
+        """Exact phrase search; rows (rank, doc_id, n_occ), served from
+        the packed positional segments (per-shard anchor-intersection
+        kernel, tombstones masked in-kernel)."""
+        df = phrase_match_packed(self.spark, self._packed_positions_df(),
+                                 (Query("q", text, k=k),),
+                                 blocked_ids=self._tomb())
         return df.orderBy("rank").collect()
 
     def search_near(self, text: str, k: int = 10, window: int = 8) -> list:
@@ -483,9 +353,8 @@ class SearchEngine:
         docs whose query terms sit near each other outrank scattered
         matches. Serving twin of the batch `bm25_topk_proximity` /
         `wand_topk_proximity` entries."""
-        fr = "driver" if self.use_packed else "window"
         df = self.search_batch((Query("q", text, k=k),), hydrate=hydrate,
-                               mode="proximity", final_rank=fr)
+                               mode="proximity")
         return sorted(df.collect(), key=lambda r: r["rank"])
 
     def suggest(self, prefix: str, n: int = 10) -> list[str]:

@@ -100,13 +100,13 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
                         stem: bool = True, w: float = PROX_W,
                         round_scores: int | None = 6,
                         corpus_stats: tuple[int, float] | None = None,
-                        blocked_ids=None,
-                        final_rank: str = "window") -> DataFrame:
+                        blocked_ids=None) -> DataFrame:
     """`bm25_topk_proximity` served from the COMPRESSED indexes: packed
     TF segments (`index/packed.py`) cogrouped per doc-range shard with
     packed positional segments (`index/positions.py`). Rank-identical to
     the declarative row path (test-enforced; same rounded-score-desc,
-    doc-id-asc discipline), one Spark job warm.
+    doc-id-asc discipline), one Spark job warm, ranked by the driver-side
+    merge of `wand.rank_candidates` (eager, like `wand.wand_topk`).
 
     REQUIRES the two packed tables to share the shard_id mapping — build
     the positional side with ``build_packed_positions(shard_bounds=
@@ -130,7 +130,7 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
     """
     from ..index.packed import _as_sorted_ids
     from ..index.positions import _PSeg
-    from .wand import _shard_topk, rank_candidates, CAND_SCHEMA
+    from .wand import _empty_ranked, _shard_topk, rank_candidates, CAND_SCHEMA
 
     qrows = analyzed_query_terms(queries, stem=stem)
     if corpus_stats is None:
@@ -139,8 +139,7 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
     n_docs, avgdl = corpus_stats
     term_list = sorted({t for _, t, _ in qrows})
     if not term_list:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double")
+        return _empty_ranked(spark)
     per_query: dict[str, tuple[list, int]] = {}
     for query_id, term, k in qrows:
         per_query.setdefault(query_id, ([], k))
@@ -218,5 +217,4 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
     cands = (sel_tf.groupBy("shard_id")
              .cogroup(sel_pos.groupBy("shard_id"))
              .applyInPandas(shard_fn, CAND_SCHEMA))
-    return rank_candidates(spark, cands, round_scores, final_rank,
-                           {q: k for q, (_, k) in per_query.items()})
+    return rank_candidates(spark, cands, round_scores)

@@ -3,9 +3,10 @@
 Distributed shape: query terms -> literal IN-list prune of the packed
 segments (row-group/cache-batch pruning) -> one Arrow group per doc-shard
 (shards partition the doc space, so per-shard exact top-k union-ed then
-globally ranked is exact) -> global rank window. One Spark job: idf inputs
-(per-term global df) are stored IN the segments, and corpus stats
-(n_docs, avgdl) are a one-row collect at call time.
+globally ranked is exact) -> one Arrow collect of the candidates, merged
+into the global top-k on the driver. One Spark job: idf inputs (per-term
+global df) are stored IN the segments, and corpus stats (n_docs, avgdl)
+are a one-row collect at call time.
 
 Inside a shard (numpy, no per-posting Python): term-at-a-time MaxScore with
 BLOCK-MAX skipping. Terms sorted by upper bound U_t = idf_t * ub_norm_t from
@@ -21,7 +22,7 @@ terms decoding ONLY the blocks that contain surviving candidates (per-block
 byte offsets stored at encode time). The eps guard plus ranking on rounded
 scores with the (score DESC, doc_id ASC) tie-break keeps results
 engine-invariant under float association noise. Proven rank-identical to
-the exhaustive DataFrame path in tests/test_wand.py.
+the exhaustive `bm25.bm25_topk` scorer in tests/test_wand.py.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -411,7 +412,7 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
               shard_bounds: list[tuple[int, int]] | None = None,
               eager_decode: bool = False,
               blocked_ids=None,
-              final_rank: str = "window") -> DataFrame:
+              final_rank: str = "driver") -> DataFrame:
     """Exact BM25 top-k via per-shard MaxScore over the packed index.
 
     Output schema identical to `bm25.bm25_topk`:
@@ -439,21 +440,15 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
     (8 bytes per id) instead of a cogroup; composes with
     ``allowed_docs``.
 
-    ``final_rank`` picks the global-rank strategy over the per-shard
-    candidates (<= shards x k rows either way):
-    * ``"window"`` (default): a Window.partitionBy(query_id) rank — stays
-      lazy/composable, costs one exchange + stage per request.
-    * ``"driver"``: collect the candidates and merge driver-side with the
-      IDENTICAL (rounded score desc, doc_id asc) ordering — the reference
-      Searcher's own shape (`jobs/Searcher.java:234-244`, a PriorityQueue
-      over fetched postings) at metadata scale. One fewer stage per warm
-      query; rank-identity to the window path is test-enforced. EAGER
-      (runs the job at call time) — meant for serving, where the caller
-      collects immediately anyway.
+    The global rank over the per-shard candidates is the driver-side merge
+    of `rank_candidates` — the reference Searcher's own shape
+    (`jobs/Searcher.java:234-244`, a PriorityQueue over fetched postings)
+    at metadata scale. EAGER: the candidate job runs at call time and the
+    result is a driver-local frame. ``final_rank`` accepts only
+    ``"driver"`` (kept so existing callers that name it keep working).
     """
-    if final_rank not in ("window", "driver"):
-        raise ValueError(f"final_rank must be 'window' or 'driver', "
-                         f"got {final_rank!r}")
+    if final_rank != "driver":
+        raise ValueError(f"final_rank must be 'driver', got {final_rank!r}")
     qrows = analyzed_query_terms(queries, stem=stem)
     if corpus_stats is None:
         stats = doc_stats.collect()[0]
@@ -461,8 +456,7 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
     n_docs, avgdl = corpus_stats
     term_list = sorted({t for _, t, _ in qrows})
     if not term_list:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double")
+        return _empty_ranked(spark)
     sel = packed.where(F.col("term").isin(term_list))
     per_query: dict[str, tuple[list, int]] = {}
     for query_id, term, k in qrows:
@@ -522,72 +516,56 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
             return fn(pdf)
 
         cands = sel.groupBy("shard_id").applyInPandas(fn_typed, CAND_SCHEMA)
-    return rank_candidates(spark, cands, round_scores, final_rank,
-                           {q: k for q, (_, k) in per_query.items()})
+    return rank_candidates(spark, cands, round_scores)
 
 
 def rank_candidates(spark: SparkSession, cands: DataFrame,
-                    round_scores: int | None, final_rank: str,
-                    ks: dict[str, int]) -> DataFrame:
+                    round_scores: int | None) -> DataFrame:
     """Shared tail of every packed-kernel retrieval path: round the
-    per-shard candidates' scores, then produce the global per-query
-    top-k — either as the lazy rank window or the driver-side heap merge
-    (see `wand_topk`'s ``final_rank``)."""
-    if final_rank not in ("window", "driver"):
-        raise ValueError(f"final_rank must be 'window' or 'driver', "
-                         f"got {final_rank!r}")
+    per-shard candidates' scores, then merge them driver-side into the
+    global per-query top-k (see `_driver_rank`)."""
     score = F.round(F.col("score"), round_scores) if round_scores is not None \
         else F.col("score")
-    scored = cands.withColumn("score", score)
-    if final_rank == "driver":
-        return _driver_rank(spark, scored, ks)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id").asc())
-    out = (scored.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "score")
+    return _driver_rank(spark, cands.withColumn("score", score))
 
 
-def _driver_rank(spark: SparkSession, scored: DataFrame,
-                 ks: dict[str, int]) -> DataFrame:
-    """Collect per-shard candidates (metadata-scale: <= shards x k rows,
-    scores already rounded) and produce the global top-k per query with
-    the engine-wide (score desc, doc_id asc) ordering — the final rank
-    without the per-request exchange + window stage."""
-    rows = scored.select("query_id", "doc_id", "score").collect()
-    by_q: dict[str, list] = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(
-            (-float(r["score"]), int(r["doc_id"])))
-    out_q: list[str] = []
-    out_r: list[int] = []
-    out_d: list[int] = []
-    out_s: list[float] = []
-    for q, cand in by_q.items():
-        cand.sort()
-        for rank, (neg, doc) in enumerate(cand[:ks.get(q, 0)], start=1):
-            out_q.append(q)
-            out_r.append(rank)
-            out_d.append(doc)
-            out_s.append(-neg)
+def _empty_ranked(spark: SparkSession) -> DataFrame:
+    """An empty (query_id, rank, doc_id, score) frame that collects on the
+    driver alone. An EMPTY pandas frame falls off the Arrow path
+    (LogicalRDD with defaultParallelism empty partitions — a 32-task job
+    per collect, as is createDataFrame([], schema)); a one-row
+    LocalRelation filtered to WHERE false constant-folds to an empty
+    LocalRelation instead (driver-only collect, ~0.05 s vs ~0.4 s
+    measured)."""
+    one = pd.DataFrame({"query_id": ["x"],
+                        "rank": pd.Series([1], dtype="int32"),
+                        "doc_id": pd.Series([0], dtype="int64"),
+                        "score": pd.Series([0.0], dtype="float64")})
+    return (spark.createDataFrame(one, schema=_RANKED_SCHEMA)
+            .where(F.lit(False)))
+
+
+def _driver_rank(spark: SparkSession, scored: DataFrame) -> DataFrame:
+    """Collect the per-shard candidates as one Arrow batch (metadata-scale:
+    <= shards x k rows per query, scores already rounded) and rank them
+    with the engine-wide (score desc, doc_id asc) ordering: one stable
+    sort on (query_id, score desc, doc_id asc), a per-query running count
+    as the rank, and each row kept while its rank is within its query's
+    k (carried on every candidate row) — the reference Searcher's
+    driver-side heap (`jobs/Searcher.java:234-244`) without a per-row
+    Python loop or a per-request exchange."""
+    pdf = scored.select("query_id", "doc_id", "score", "k").toPandas()
+    if pdf.empty:
+        return _empty_ranked(spark)
+    pdf = pdf.sort_values(["query_id", "score", "doc_id"],
+                          ascending=[True, False, True], ignore_index=True)
+    rank = pdf.groupby("query_id", sort=False).cumcount() + 1
+    keep = rank <= pdf["k"]
     # pandas input -> Arrow LocalRelation: a list input would round-trip
     # through sc.parallelize and every downstream collect would schedule a
-    # defaultParallelism-task job (measured ~0.3 s vs ~0.02 s for the
-    # LocalRelation — more than the exchange this mode exists to save).
-    # An EMPTY pandas frame falls off the Arrow path (LogicalRDD with
-    # defaultParallelism empty partitions — a 32-task job per collect, as
-    # is createDataFrame([], schema)); a one-row LocalRelation filtered
-    # to WHERE false constant-folds to an empty LocalRelation instead
-    # (driver-only collect, ~0.05 s vs ~0.4 s measured).
-    if not out_q:
-        one = pd.DataFrame({"query_id": ["x"],
-                            "rank": pd.Series([1], dtype="int32"),
-                            "doc_id": pd.Series([0], dtype="int64"),
-                            "score": pd.Series([0.0], dtype="float64")})
-        return (spark.createDataFrame(one, schema=_RANKED_SCHEMA)
-                .where(F.lit(False)))
-    pdf = pd.DataFrame({"query_id": pd.Series(out_q, dtype="str"),
-                        "rank": pd.Series(out_r, dtype="int32"),
-                        "doc_id": pd.Series(out_d, dtype="int64"),
-                        "score": pd.Series(out_s, dtype="float64")})
-    return spark.createDataFrame(pdf, schema=_RANKED_SCHEMA)
+    # defaultParallelism-task job (measured ~0.3 s vs ~0.02 s)
+    out = pd.DataFrame({"query_id": pdf["query_id"][keep],
+                        "rank": rank[keep].astype("int32"),
+                        "doc_id": pdf["doc_id"][keep],
+                        "score": pdf["score"][keep]})
+    return spark.createDataFrame(out, schema=_RANKED_SCHEMA)

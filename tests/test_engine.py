@@ -1,5 +1,6 @@
-"""SearchEngine end-to-end over a StagedIndexBuild root, packed vs
-exhaustive parity, and the skew bound on packed segment sizes."""
+"""SearchEngine end-to-end over a StagedIndexBuild root, parity with the
+exhaustive library scorers over the same root's row stages, and the skew
+bound on packed segment sizes."""
 
 from __future__ import annotations
 
@@ -9,8 +10,12 @@ from pyspark.sql import functions as F
 from mini_distributed_search_engine_spark.index.build import build_index
 from mini_distributed_search_engine_spark.index.packed import build_packed_postings
 from mini_distributed_search_engine_spark.plans.pipeline import StagedIndexBuild
-from mini_distributed_search_engine_spark.query.bm25 import Query
+from mini_distributed_search_engine_spark.query.bm25 import (
+    Query, bm25_topk, bm25_topk_conjunctive)
 from mini_distributed_search_engine_spark.query.engine import SearchEngine
+from mini_distributed_search_engine_spark.query.phrase import phrase_match
+from mini_distributed_search_engine_spark.query.proximity import (
+    bm25_topk_proximity)
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
 
@@ -24,15 +29,43 @@ def index_root(spark, tmp_path_factory):
     return str(root)
 
 
+def _ranked(df):
+    return sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
+                  for r in df.collect())
+
+
+def _row_stages(spark, root, tomb=()):
+    """The root's row stages (term_doc_tf, term_stats, doc_stats) as the
+    library scorers' input, tombstoned docs removed from the postings by
+    a left-anti join (corpus stats stay global, as in the engine)."""
+    tf = spark.read.parquet(f"{root}/term_doc_tf/data")
+    if tomb:
+        tf = tf.join(spark.createDataFrame([(int(d),) for d in tomb],
+                                           "doc_id long"),
+                     "doc_id", "left_anti")
+    return (tf, spark.read.parquet(f"{root}/stats/term_stats"),
+            spark.read.parquet(f"{root}/stats/doc_stats"))
+
+
+def _row_positions(spark, root):
+    """Row positions for the reference scorers: the committed 'positions'
+    stage if the root has one, else analyzed from the doc store (the same
+    input the engine packs from)."""
+    import os
+    from mini_distributed_search_engine_spark.functions.analyzer import (
+        term_positions_pandas)
+    if os.path.isdir(f"{root}/positions/data"):
+        return spark.read.parquet(f"{root}/positions/data")
+    return term_positions_pandas(spark.read.parquet(f"{root}/docs/data"),
+                                 "text")
+
+
 def test_engine_packed_matches_exhaustive(spark, index_root):
     qs = (Query("a", "apple banana"), Query("b", "spark index"),
           Query("c", "running search", k=25))
-    packed_eng = SearchEngine(spark, index_root, use_packed=True)
-    exact_eng = SearchEngine(spark, index_root, use_packed=False)
-    a = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in packed_eng.search_batch(qs).collect())
-    b = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in exact_eng.search_batch(qs).collect())
+    eng = SearchEngine(spark, index_root)
+    a = _ranked(eng.search_batch(qs))
+    b = _ranked(bm25_topk(spark, *_row_stages(spark, index_root), queries=qs))
     assert a == b and len(a) > 0
 
 
@@ -63,16 +96,13 @@ def test_packed_segments_bounded_under_skew(spark):
 
 
 def test_engine_and_mode_and_phrase(spark, index_root):
-    """mode='and' agrees between packed and exhaustive and is a subset of
-    OR; search_phrase returns occurrence-ranked rows matching a manual
-    recount on the hydrated text."""
-    packed_eng = SearchEngine(spark, index_root, use_packed=True)
-    exact_eng = SearchEngine(spark, index_root, use_packed=False)
+    """mode='and' agrees with the exhaustive conjunctive scorer and is a
+    subset of OR; search_phrase returns occurrence-ranked rows."""
+    packed_eng = SearchEngine(spark, index_root)
     qs = (Query("a", "apple banana", k=100), Query("b", "running search", k=100))
-    a = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in packed_eng.search_batch(qs, mode="and").collect())
-    b = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in exact_eng.search_batch(qs, mode="and").collect())
+    a = _ranked(packed_eng.search_batch(qs, mode="and"))
+    b = _ranked(bm25_topk_conjunctive(spark, *_row_stages(spark, index_root),
+                                      queries=qs))
     assert a == b
     and_docs = {(q, d) for q, _, d, _ in a}
     or_docs = {(r["query_id"], r["doc_id"])
@@ -147,59 +177,14 @@ def test_engine_role_filtered_search(spark, index_root):
     assert all(r["role"] == "user" for r in and_rows)
     and_ids = {r["doc_id"] for r in and_rows}
     assert and_ids <= {r["doc_id"] for r in rows}  # AND subset of OR
-    # the exhaustive engine still refuses AND + role (no kernel to mask in)
-    tf_eng = SearchEngine(spark, index_root, use_packed=False)
-    with pytest.raises(ValueError, match="role"):
-        tf_eng.search("apple", mode="and", role="user")
-    # and the packed + exhaustive OR paths rank-agree under the filter
-    tf_rows = tf_eng.search("apple banana", k=50, role="user")
+    # and the engine rank-agrees with the exhaustive scorer's semi-join
+    # filter
+    allowed = eng.docs.where(F.col("role") == "user").select("doc_id")
+    want = bm25_topk(spark, *_row_stages(spark, index_root),
+                     queries=(Query("q", "apple banana", k=50),),
+                     allowed_docs=allowed)
     assert [(r["rank"], r["doc_id"], r["score"]) for r in rows] == \
-        [(r["rank"], r["doc_id"], r["score"]) for r in tf_rows]
-
-
-def test_engine_bucketed_mode_zero_exchange(spark, index_root, tmp_path):
-    """Engine mode over the bucketed catalog tables (VERDICT r3 #5): a
-    fresh session re-registers from the descriptor, search results match
-    the plain exhaustive engine, and the full-width IDF-attach join over
-    the engine's own frames plans with zero term exchange."""
-    from mini_distributed_search_engine_spark.index.build import (
-        write_index_bucketed)
-    tf = spark.read.parquet(f"{index_root}/term_doc_tf/data")
-    ts = spark.read.parquet(f"{index_root}/stats/term_stats")
-    names = write_index_bucketed(tf, ts, "eng_bucketed", str(tmp_path),
-                                 buckets=8)
-    try:
-        # fresh-session simulation: drop the writer's catalog entries;
-        # the engine must rebuild them from _bucketed.json
-        for n in names:
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
-        eng = SearchEngine(spark, index_root, use_packed=False,
-                           bucketed_path=str(tmp_path))
-        plain = SearchEngine(spark, index_root, use_packed=False)
-        qs = (Query("a", "apple banana"), Query("b", "spark index", k=25))
-        a = sorted((r["query_id"], r["rank"], r["doc_id"],
-                    round(r["score"], 6))
-                   for r in eng.search_batch(qs).collect())
-        b = sorted((r["query_id"], r["rank"], r["doc_id"],
-                    round(r["score"], 6))
-                   for r in plain.search_batch(qs).collect())
-        assert a == b and len(a) > 0
-        # the zero-exchange contract, on the engine's own frames
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = (eng.tf.join(eng.term_stats, "term")
-                      .groupBy("term")
-                      .agg(F.sum(F.col("tf") * F.col("df")).alias("w")))
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan, plan
-            assert plan.count("Exchange hashpartitioning(term") == 0, plan
-            assert "Bucketed: true" in plan, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        for n in names:
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
+        sorted((r["rank"], r["doc_id"], r["score"]) for r in want.collect())
 
 
 def _fake_embeddings(spark, n: int, path: str, dim: int = 8):
@@ -244,8 +229,8 @@ def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
     """write_packed_bucketed + SearchEngine(packed_bucketed_path=...):
     rank parity with the plain engine, the cached packed frame is the
     bucketed scan with NO exchange anywhere in its plan (the warmup
-    repartition shuffle is gone), and the per-query WAND stage stays
-    exchange-free on shard_id through the InMemoryRelation."""
+    repartition shuffle is gone), and the per-query WAND job stays
+    exchange-free on shard_id through the InMemoryRelation: one stage."""
     from mini_distributed_search_engine_spark.index.build import (
         write_packed_bucketed)
     packed = spark.read.parquet(f"{index_root}/merged/data")
@@ -260,15 +245,22 @@ def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
         assert "Exchange" not in cache_plan, cache_plan
         assert "Bucketed: true" in cache_plan, cache_plan
         qs = (Query("a", "apple banana"), Query("b", "spark index", k=25))
-        qdf = eng.search_batch(qs)
-        qplan = qdf._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning(shard_id" not in qplan, qplan
+        # search_batch runs its candidate job eagerly and returns a
+        # driver-local frame, so the check is on the job it ran: an
+        # exchange on shard_id would add a shuffle-map stage
+        sc = spark.sparkContext
+        sc.setJobGroup("packed_bucketed_query", "one warm query")
+        try:
+            qdf = eng.search_batch(qs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup("packed_bucketed_query")
+        stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+        assert len(jobs) == 1 and len(stages) == 1, (jobs, stages)
         plain = SearchEngine(spark, index_root)
-        a = sorted((r["query_id"], r["rank"], r["doc_id"],
-                    round(r["score"], 6)) for r in qdf.collect())
-        b = sorted((r["query_id"], r["rank"], r["doc_id"],
-                    round(r["score"], 6))
-                   for r in plain.search_batch(qs).collect())
+        a = _ranked(qdf)
+        b = _ranked(plain.search_batch(qs))
         assert a == b and len(a) > 0
         # the filtered path works over the bucketed cache too
         rows = eng.search("apple banana", k=20, role="user")
@@ -309,23 +301,21 @@ def test_search_hybrid_rejects_unknown_vec(spark, index_root, tmp_path):
 
 
 def test_engine_delete_docs_masks_every_path(spark, index_root):
-    """Tombstoned docs vanish from packed, exhaustive, role-filtered and
-    phrase results without touching the at-rest index; the packed and
-    exhaustive paths stay rank-identical under the same tombstones."""
-    packed_eng = SearchEngine(spark, index_root, use_packed=True)
-    exact_eng = SearchEngine(spark, index_root, use_packed=False)
+    """Tombstoned docs vanish from ranked, role-filtered and phrase
+    results without touching the at-rest index; the engine stays
+    rank-identical to the exhaustive scorer over the tombstone-filtered
+    postings."""
+    packed_eng = SearchEngine(spark, index_root)
     base = packed_eng.search("apple banana", k=10, hydrate=False)
     assert base, "fixture must rank something"
     victims = [base[0]["doc_id"], base[1]["doc_id"]] if len(base) > 1 \
         else [base[0]["doc_id"]]
     assert packed_eng.delete_docs(victims) == len(victims)
-    exact_eng.delete_docs(victims)
 
     qs = (Query("a", "apple banana"), Query("b", "spark index"))
-    a = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in packed_eng.search_batch(qs).collect())
-    b = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in exact_eng.search_batch(qs).collect())
+    a = _ranked(packed_eng.search_batch(qs))
+    b = _ranked(bm25_topk(spark, *_row_stages(spark, index_root, victims),
+                          queries=qs))
     assert a == b and a
     assert not {d for _, _, d, _ in a} & set(victims)
 
@@ -343,24 +333,23 @@ def test_engine_delete_docs_masks_every_path(spark, index_root):
 
     # a fresh engine on the same root sees everything again (deletes are
     # engine-local metadata until purge_docs compaction)
-    fresh = SearchEngine(spark, index_root, use_packed=True)
+    fresh = SearchEngine(spark, index_root)
     again = fresh.search("apple banana", k=10, hydrate=False)
     assert {r["doc_id"] for r in again} & set(victims)
 
 
 def test_engine_proximity_and_packed_phrase(spark, index_root):
     """mode='proximity' agrees between the packed cogroup kernel and the
-    declarative row path; search_phrase serves identically from the packed
+    declarative row scorer; search_phrase serves from the packed
     positional segments (built lazily, co-sharded with the live TF
-    layout) and from the row positions table."""
-    packed_eng = SearchEngine(spark, index_root, use_packed=True)
-    exact_eng = SearchEngine(spark, index_root, use_packed=False)
+    layout) identically to the row phrase scorer."""
+    packed_eng = SearchEngine(spark, index_root)
+    pos = _row_positions(spark, index_root)
     qs = (Query("a", "apple banana"), Query("b", "spark index"),
           Query("c", "running search", k=25), Query("d", "apple"))
-    a = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in packed_eng.search_batch(qs, mode="proximity").collect())
-    b = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
-               for r in exact_eng.search_batch(qs, mode="proximity").collect())
+    a = _ranked(packed_eng.search_batch(qs, mode="proximity"))
+    b = _ranked(bm25_topk_proximity(spark, *_row_stages(spark, index_root),
+                                    pos, queries=qs))
     assert a == b and len(a) > 0
     # serving entry: ranked, hydrated, and >= the plain BM25 score for the
     # same doc (the bonus is non-negative)
@@ -374,14 +363,15 @@ def test_engine_proximity_and_packed_phrase(spark, index_root):
     # phrase: packed kernel == declarative rows
     pp = [(r["rank"], r["doc_id"], r["n_occ"])
           for r in packed_eng.search_phrase("apple banana", k=20)]
-    pe = [(r["rank"], r["doc_id"], r["n_occ"])
-          for r in exact_eng.search_phrase("apple banana", k=20)]
+    pe = [(r["rank"], r["doc_id"], r["n_occ"]) for r in phrase_match(
+        spark, pos, (Query("q", "apple banana", k=20),))
+        .orderBy("rank").collect()]
     assert pp == pe
 
 
 def test_engine_proximity_respects_tombstones(spark, index_root):
     """Deleted docs disappear from proximity and packed-phrase results."""
-    eng = SearchEngine(spark, index_root, use_packed=True)
+    eng = SearchEngine(spark, index_root)
     base = eng.search_proximity("apple banana", k=10, hydrate=False)
     assert base
     victim = base[0]["doc_id"]
@@ -395,7 +385,8 @@ def test_engine_proximity_respects_tombstones(spark, index_root):
 def test_pipeline_positions_packed_stage(spark, tmp_path_factory):
     """StagedIndexBuild(positions=True) commits a positions_packed stage
     co-sharded with the merged TF layout; the engine serves proximity and
-    phrase from it with answers identical to the stage-less fallback."""
+    phrase from it with answers identical to the row scorers over the
+    root's row stages."""
     from mini_distributed_search_engine_spark.index.positions import (
         unpack_positions)
     root = tmp_path_factory.mktemp("eng_pos_idx")
@@ -410,15 +401,17 @@ def test_pipeline_positions_packed_stage(spark, tmp_path_factory):
     got = sorted((r["doc_id"], r["term"], r["pos"])
                  for r in unpack_positions(packed).collect())
     assert got == want
-    eng = SearchEngine(spark, str(root), use_packed=True)
+    eng = SearchEngine(spark, str(root))
     assert eng._packed_positions_df() is not None
     # served from the committed stage (co-sharded by construction)
     rows_p = eng.search_proximity("apple banana", k=5, hydrate=False)
     rows_f = eng.search_phrase("apple banana", k=5)
-    exact = SearchEngine(spark, str(root), use_packed=False)
+    q = (Query("q", "apple banana", k=5),)
+    want_p = bm25_topk_proximity(spark, *_row_stages(spark, str(root)),
+                                 rows, queries=q)
     assert ([(r["rank"], r["doc_id"], round(r["score"], 6)) for r in rows_p]
-            == [(r["rank"], r["doc_id"], round(r["score"], 6)) for r in
-                exact.search_proximity("apple banana", k=5, hydrate=False)])
+            == sorted((r["rank"], r["doc_id"], round(r["score"], 6))
+                      for r in want_p.collect()))
     assert ([(r["rank"], r["doc_id"], r["n_occ"]) for r in rows_f]
-            == [(r["rank"], r["doc_id"], r["n_occ"]) for r in
-                exact.search_phrase("apple banana", k=5)])
+            == sorted((r["rank"], r["doc_id"], r["n_occ"])
+                      for r in phrase_match(spark, rows, q).collect()))

@@ -130,10 +130,6 @@ def test_proximity_packed_rank_identity(spark, built, shard_span):
     got = _key_rows(wand_topk_proximity(
         spark, tf_packed, pos_packed, idx.doc_stats, queries=PROX_QUERIES))
     assert got == want
-    got_drv = _key_rows(wand_topk_proximity(
-        spark, tf_packed, pos_packed, idx.doc_stats, queries=PROX_QUERIES,
-        final_rank="driver"))
-    assert got_drv == want
 
 
 def test_proximity_packed_cosharded_merged(spark, built):

@@ -1,5 +1,6 @@
 """MaxScore/WAND over the packed index must be rank-identical to the
-exhaustive DataFrame path, across shard spans, merge levels, and skew."""
+exhaustive DataFrame scorer, across shard spans, merge levels, and skew;
+its driver-side rank merge must match a pure-Python reference."""
 
 from __future__ import annotations
 
@@ -126,17 +127,55 @@ def test_wand_filtered_conjunctive(spark, built):
         assert g[3] == pytest.approx(w[3], abs=1e-6)
 
 
-def test_driver_rank_identity(spark, built):
-    """final_rank='driver' (per-shard top-k heap-merged driver-side, the
-    serving mode) must produce exactly the window path's (query_id, rank,
-    doc_id, score) rows — same rounded-score-desc, doc-id-asc discipline."""
+def test_driver_rank_matches_sorted_reference(spark, built):
+    """rank_candidates — the Arrow driver merge every packed path ends in —
+    against a pure-Python sorted() reference on hand-made per-shard
+    candidates: equal rounded scores from different shards tie-break by
+    doc_id ascending, a k beyond the candidate count keeps every
+    candidate, a query with no candidates is absent, and an all-empty
+    batch is an empty frame with the ranked schema."""
+    from functools import reduce
+    from mini_distributed_search_engine_spark.query.wand import (
+        _RANKED_SCHEMA, CAND_SCHEMA, rank_candidates)
+    shards = [
+        # shard 0: q1's highest doc_id first, so the merge must reorder
+        [("q1", 40, 2.5000001, 3), ("q1", 3, 1.0, 3),
+         ("q2", 9, 0.7, 10)],
+        # shard 1: scores that round to q1's 2.5 at 6 places
+        [("q1", 12, 2.5000004, 3), ("q1", 7, 2.4999999, 3),
+         ("q2", 5, 0.3, 10)],
+        # shard 2: q2 has 3 candidates in all, k=10 keeps them all
+        [("q2", 1, 0.3, 10), ("q1", 2, 0.2, 3)],
+    ]
+    # a batch query "q3" found no candidates on any shard: no rows at all
+
+    def reference(rows):
+        by_q: dict = {}
+        for q, d, s, k in rows:
+            by_q.setdefault(q, []).append((-round(s, 6), d, k))
+        out = []
+        for q, cand in by_q.items():
+            for rank, (neg, d, k) in enumerate(sorted(cand)[:cand[0][2]], 1):
+                out.append((q, rank, d, -neg))
+        return sorted(out)
+
+    cands = reduce(lambda a, b: a.union(b),
+                   [spark.createDataFrame(rows, CAND_SCHEMA)
+                    for rows in shards])
+    got = _collect_ranked(rank_candidates(spark, cands, 6))
+    want = reference([r for rows in shards for r in rows])
+    assert got == want
+    assert [g[2] for g in got if g[0] == "q1"] == [7, 12, 40]
+    assert [g[2] for g in got if g[0] == "q2"] == [9, 1, 5]
+    assert not [g for g in got if g[0] == "q3"]
+
+    empty = rank_candidates(
+        spark, spark.createDataFrame([], CAND_SCHEMA), 6)
+    assert empty.schema == _RANKED_SCHEMA
+    assert empty.collect() == []
+
     idx, avgdl = built
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=64)
-    want = _collect_ranked(wand_topk(spark, packed, idx.doc_stats,
-                                     queries=QUERIES))
-    got = _collect_ranked(wand_topk(spark, packed, idx.doc_stats,
-                                    queries=QUERIES, final_rank="driver"))
-    assert got == want
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="final_rank"):
         wand_topk(spark, packed, idx.doc_stats, queries=QUERIES,
-                  final_rank="heap")
+                  final_rank="window")

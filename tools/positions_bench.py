@@ -142,8 +142,7 @@ def main() -> None:
             br = min(br, time.perf_counter() - t)
             t = time.perf_counter()
             wand_topk_proximity(spark, tf_packed, pos_packed, doc_stats,
-                                queries=(q,), corpus_stats=corpus,
-                                final_rank="driver").collect()
+                                queries=(q,), corpus_stats=corpus).collect()
             bp = min(bp, time.perf_counter() - t)
         px_rows[q.query_id] = round(br, 4)
         px_packed[q.query_id] = round(bp, 4)
