@@ -1,5 +1,5 @@
 """DuckDB oracles for the training-data-pipeline operators
-(dedup / similarity / text analysis / multimodal metadata).
+(dedup / similarity / text analysis).
 
 Cross-engine portability contracts (mirrored by functions/dedup.py etc.):
   * md5 hex is identical in Spark and DuckDB.
@@ -489,37 +489,3 @@ def sql_doc_fingerprint(k: int = 3) -> str:
     return f"""
 WITH {_shingles_cte(k)}
 SELECT doc_id, min(md5(shingle)) AS fingerprint FROM sh GROUP BY doc_id"""
-
-
-def sql_frame_sample(stride: int = 4) -> str:
-    # mirrors functions/multimodal.py::sample_frames over the fake media
-    # (payload = utf-8 text bytes): frame count from md5 hex chars 9-12,
-    # frame id = md5(text || ':' || idx)
-    return f"""
-WITH base AS (SELECT doc_id, text,
-                     ('0x' || substr(md5(text), 9, 4))::BIGINT % 32 + 1 AS n
-              FROM documents),
-idx AS (SELECT doc_id, text, unnest(generate_series(0, (n - 1)::BIGINT)) AS i
-        FROM base)
-SELECT doc_id, CAST(i AS INT) AS frame_idx,
-       md5(text || ':' || i) AS frame_md5
-FROM idx WHERE i % {stride} = 0"""
-
-
-def sql_embed_media(dim: int = 8) -> str:
-    return f"""
-WITH dims AS (SELECT unnest(generate_series(0, {dim - 1})) AS j)
-SELECT doc_id, CAST(j AS INT) AS dim,
-       (('0x' || substr(md5(j || '|' || text), 1, 8))::BIGINT % 10000)
-           / 10000.0 AS value
-FROM documents CROSS JOIN dims"""
-
-
-def sql_multimodal_meta() -> str:
-    return """
-SELECT doc_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       md5(text) AS content_md5,
-       CAST(('0x' || substr(md5(text), 1, 4))::BIGINT % 1920 + 1 AS INT) AS width,
-       CAST(('0x' || substr(md5(text), 5, 4))::BIGINT % 1080 + 1 AS INT) AS height
-FROM documents"""

@@ -214,7 +214,6 @@ def compute_shard_bounds(packed: DataFrame) -> list[tuple[int, int]]:
 def _shard_topk(queries_meta: list[tuple[str, list[str], int]],
                 n_docs: int, avgdl: float, round_scores: int | None,
                 conjunctive: bool = False, filtered: bool = False,
-                eager_decode: bool = False,
                 blocked: np.ndarray | None = None,
                 bound_slack=None, pool_rerank=None):
     """applyInPandas fn: one doc-shard's segments -> per-query top-k
@@ -256,13 +255,6 @@ def _shard_topk(queries_meta: list[tuple[str, list[str], int]],
         segs: dict[str, _Seg] = {}
         for r in pdf.itertuples(index=False):
             segs[r.term] = _Seg(r, n_docs, avgdl)
-        if eager_decode:
-            # A/B knob (tools/wand_ab.py): decode every selected segment up
-            # front — disables lazy block decode AND block-max pruning (the
-            # `_full is None` guard), isolating the offset path's overhead
-            # on corpora where pruning is inert (near-constant dl)
-            for s in segs.values():
-                s.full()
         out_q, out_d, out_s = [], [], []
         for query_id, qterms, k in queries_meta:
             terms = [(t, segs[t]) for t in qterms if t in segs]
@@ -410,7 +402,6 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
               conjunctive: bool = False,
               allowed_docs: DataFrame | None = None,
               shard_bounds: list[tuple[int, int]] | None = None,
-              eager_decode: bool = False,
               blocked_ids=None,
               final_rank: str = "driver") -> DataFrame:
     """Exact BM25 top-k via per-shard MaxScore over the packed index.
@@ -472,7 +463,6 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
     fn = _shard_topk(queries_meta, n_docs, avgdl, round_scores,
                      conjunctive=conjunctive,
                      filtered=allowed_docs is not None,
-                     eager_decode=eager_decode,
                      blocked=blocked)
 
     if allowed_docs is not None:

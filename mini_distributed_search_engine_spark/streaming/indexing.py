@@ -379,9 +379,7 @@ class StreamingIndexer:
         # per-batch lineage row (north rule: every stage leaves lineage):
         # batch id, docs appended, segment bytes written, wall time
         wall_ms = int((time.time() - t_start) * 1000)
-        seg_bytes = sum(f.stat().st_size
-                        for f in (self.root / seg_dir).rglob("*")
-                        if f.is_file())
+        seg_bytes = self._dir_bytes(seg_dir, pos_dir)
         lineage = self.spark.createDataFrame(
             [(f"batch_{batch_id}", "stream_append", int(start), seg_dir, "",
               int(n_new), int(seg_bytes), wall_ms, time.time())],
@@ -392,6 +390,12 @@ class StreamingIndexer:
         for p in dead:
             shutil.rmtree(self.root / p, ignore_errors=True)
         shutil.rmtree(old_tot_dir, ignore_errors=True)
+
+    def _dir_bytes(self, *dirs: str | None) -> int:
+        """Summed file bytes of the named root directories (None skipped):
+        a step's TF segment dir plus, on a positional root, its pos dir."""
+        return sum(f.stat().st_size for d in dirs if d is not None
+                   for f in (self.root / d).rglob("*") if f.is_file())
 
     def compact(self, tombstones=None) -> dict:
         """Consolidate the manifest into one generation directory.
@@ -536,12 +540,10 @@ class StreamingIndexer:
                      "sum_dl": int(meta["sum_dl"]) - dl_del})
         self._save_meta(meta)
         wall_ms = int((time.time() - t0) * 1000)
-        seg_bytes = sum(f.stat().st_size
-                        for f in (self.root / out_dir).rglob("*")
-                        if f.is_file())
+        seg_bytes = self._dir_bytes(out_dir, new_entry.get("pos_path"))
         lineage = self.spark.createDataFrame(
             [(f"compact_g{gen}", "compact", -1, out_dir, "",
-              int(n_segments), int(seg_bytes), wall_ms, time.time())],
+              int(meta["n_docs"]), int(seg_bytes), wall_ms, time.time())],
             LINEAGE_SCHEMA)
         lineage.write.mode("append").parquet(str(self.root / "_lineage"))
         for p in dead:

@@ -3,9 +3,17 @@ stages and produce an index identical to a fresh build (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import itertools
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
+from types import SimpleNamespace
+
+import pyarrow.parquet as pq
+import pytest
 
 from mini_distributed_search_engine_spark.index.packed import unpack_to_rows
+from mini_distributed_search_engine_spark.plans import pipeline
 from mini_distributed_search_engine_spark.plans.pipeline import StagedIndexBuild
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
@@ -140,6 +148,88 @@ def test_root_purge_lifecycle(spark, tmp_path):
     eng2.delete_docs(sorted(survivors)[:3])
     assert eng2.checkpoint_tombstones() == 3
     assert len(b.pending_tombstones()) == 3
+
+
+# every (stage, sub) directory purge() rewrites on a positional root, in
+# swap order: 9 _swap_in calls per purge
+_PURGE_SWAPS = (("docs", "data"), ("term_doc_tf", "data"),
+                ("term_doc_tf", "dl"), ("positions", "data"),
+                ("packed", "data"), ("merged", "data"),
+                ("positions_packed", "data"),
+                ("stats", "term_stats"), ("stats", "doc_stats"))
+_CRASH_POINTS = ("before_rmtree", "before_rename")
+
+
+def _stage_rows(root: Path) -> dict:
+    """Every purged stage's rows, order-free (read with pyarrow: no Spark
+    job per comparison)."""
+    return {(stage, sub): sorted(map(repr, pq.read_table(
+        str(root / stage / sub)).to_pylist()))
+        for stage, sub in _PURGE_SWAPS}
+
+
+@pytest.fixture(scope="module")
+def purge_crashes(spark, tmp_path_factory):
+    """One positional build with pending tombstones, purged once with the
+    root copied at both crash points of every _swap_in call: after the tmp
+    write, before the final dir is removed; and after the removal, before
+    the rename. A copy is the on-disk state a process killed at that point
+    leaves behind. Each copy is then healed by a plain purge(), four at a
+    time (the jobs are tiny, so one at a time leaves the cores idle).
+    Yields the healed build per crash point, and the rows of the clean
+    purge."""
+    base = tmp_path_factory.mktemp("purge_crash")
+    root = base / "root"
+    b = StagedIndexBuild(spark, str(root), run_id="crash")
+    b.run(spark.createDataFrame(synthesize_transcripts_pdf(12, seed=13)),
+          shard_span=16, merge_factor=4, positions=True)
+    b.record_tombstones([r["doc_id"] for r in b.read("docs", "data")
+                         .where("doc_id % 5 = 0").collect()])
+    copies = {}
+    swaps = itertools.count()
+
+    def rmtree(path, ignore_errors=False):
+        path = Path(path)
+        tmp = path.with_name(path.name + ".purge_tmp")
+        if tmp.is_dir():    # the final-dir removal of a written swap
+            k = next(swaps)
+            for point in _CRASH_POINTS:
+                if point == "before_rename":
+                    shutil.rmtree(path, ignore_errors=ignore_errors)
+                copies[k, point] = base / f"{k}_{point}"
+                shutil.copytree(root, copies[k, point])
+            return None
+        return shutil.rmtree(path, ignore_errors=ignore_errors)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "shutil", SimpleNamespace(rmtree=rmtree))
+        b.purge()
+    assert len(copies) == 2 * len(_PURGE_SWAPS)
+
+    def heal(copy: Path) -> StagedIndexBuild:
+        b = StagedIndexBuild(spark, str(copy))
+        assert b._tombstone_files()     # the crash left them pending
+        b.purge()
+        return b
+
+    with ThreadPoolExecutor(4) as pool:
+        healed = dict(zip(copies, pool.map(heal, copies.values(),
+                                           timeout=600)))
+    yield healed, _stage_rows(root)
+    shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.mark.parametrize("point", _CRASH_POINTS)
+@pytest.mark.parametrize("swap", range(len(_PURGE_SWAPS)))
+def test_purge_crash_matrix(purge_crashes, swap, point):
+    """A purge() killed at either rename step of any one of its swaps is
+    healed by the next purge(): every stage equals a clean purge's and the
+    pending tombstones are cleared."""
+    healed, clean = purge_crashes
+    b = healed[swap, point]
+    assert not list(b.root.glob("*/*.purge_tmp"))
+    assert b.pending_tombstones() == []
+    assert _stage_rows(b.root) == clean
 
 
 def test_compact_index_job_cli(spark, tmp_path, monkeypatch, capsys):

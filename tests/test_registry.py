@@ -1,0 +1,21 @@
+"""Driver-contract registry shape, checked without a Spark session: every
+query has a DuckDB oracle under the same key, the driver window leads both
+registries, and no entry of the removed non-search surface is left."""
+
+from __future__ import annotations
+
+import __spark_entry__ as E
+
+
+def test_queries_and_oracles_share_keys_in_order():
+    assert list(E.queries()) == list(E.oracle_sql())
+
+
+def test_driver_window_leads_the_registry():
+    assert list(E.queries())[:50] == list(E._R5_WINDOW)
+
+
+def test_no_non_search_entries():
+    stale = [k for k in E.queries()
+             if k.startswith(("analytics_", "events_", "multimodal_"))]
+    assert stale == []

@@ -84,6 +84,13 @@ def test_same_checkpoint_restart_skips_batches(spark, roots):
     assert after["generation"] == before["generation"]
 
 
+def _lineage_row(spark, root: Path, run_id: str):
+    rows = (spark.read.parquet(str(root / "_lineage"))
+            .where(f"run_id = '{run_id}'").collect())
+    assert len(rows) == 1, rows
+    return rows[0]
+
+
 def test_streaming_lineage_rows(spark, roots):
     """Each committed batch leaves one lineage row with its byte cost."""
     lineage = spark.read.parquet(str(roots / "idx" / "_lineage")).collect()
@@ -94,6 +101,29 @@ def test_streaming_lineage_rows(spark, roots):
     assert stages["batch_1"]["doc_count"] == 20
     assert 0 < stages["batch_1"]["bytes"] < stages["batch_0"]["bytes"]
     assert all(r["wall_ms"] > 0 for r in lineage)
+
+    # on a positional root each step also writes a pos_gN directory: the
+    # batch and compact rows count the bytes of both directories
+    pos_root = roots / "idx_pos"
+    indexer = StreamingIndexer(spark, str(pos_root), shard_span=SPAN,
+                               with_positions=True)
+    pdf = synthesize_transcripts_pdf(30, seed=55)    # 120 turns
+    for i, (a, b) in enumerate([(0, 100), (100, len(pdf))]):
+        indexer.process_batch(spark.createDataFrame(pdf.iloc[a:b]), i)
+        entry = indexer._meta()["manifest"][-1]
+        assert entry["pos_path"].startswith("pos_g")
+        assert _lineage_row(spark, pos_root, f"batch_{i}")["bytes"] == (
+            _dir_bytes(pos_root / entry["path"])
+            + _dir_bytes(pos_root / entry["pos_path"]))
+    res = indexer.compact(tombstones=[3, 50])
+    meta = indexer._meta()
+    entry = meta["manifest"][0]
+    row = _lineage_row(spark, pos_root, f"compact_g{meta['generation']}")
+    assert meta["n_docs"] == len(pdf) - 2
+    assert row["doc_count"] == meta["n_docs"]
+    assert row["bytes"] == res["bytes"] == (
+        _dir_bytes(pos_root / entry["path"])
+        + _dir_bytes(pos_root / entry["pos_path"]))
 
 
 def test_compaction_consolidates_manifest(spark, roots):
@@ -146,9 +176,13 @@ def test_compaction_consolidates_manifest(spark, roots):
     assert sorted(p.name for p in idx_root.glob("totals_g*")) == \
         [f"totals_g{meta2['generation']}"]
     assert snapshot() == before
-    # compaction leaves a lineage row with its cost
+    # compaction leaves a lineage row with its cost: the live doc count
+    # and the bytes of the directory it wrote
     lin = spark.read.parquet(str(idx_root / "_lineage"))
     assert lin.where("stage = 'compact'").count() == 1
+    row = _lineage_row(spark, idx_root, f"compact_g{meta2['generation']}")
+    assert row["doc_count"] == meta2["n_docs"] == n
+    assert row["bytes"] == _dir_bytes(idx_root / meta2["manifest"][0]["path"])
 
     assert indexer.compact() == {"compacted": False, "entries": 1}
 

@@ -1,5 +1,5 @@
 """Training-data ops: dedup finds planted duplicates; ANN recall vs brute
-force; multimodal plumbing round-trips."""
+force."""
 
 from __future__ import annotations
 
@@ -7,8 +7,6 @@ import pytest
 
 from mini_distributed_search_engine_spark.functions import dedup as D
 from mini_distributed_search_engine_spark.functions import similarity as S
-from mini_distributed_search_engine_spark.functions.multimodal import (
-    attach_fake_media, decode_media, extract_media_meta)
 
 
 @pytest.fixture(scope="module")
@@ -104,16 +102,6 @@ def test_kmeans_recovers_planted_clusters(spark):
     assert len({got[0], got[1], got[2]}) == 3
 
 
-def test_multimodal_plumbing(spark, dup_docs):
-    media = attach_fake_media(dup_docs)
-    meta = {r["doc_id"]: r for r in extract_media_meta(media).collect()}
-    assert meta[0]["n_bytes"] == len(dup_docs.collect()[0]["text"].encode())
-    assert meta[0]["content_md5"] == meta[1]["content_md5"]
-    assert 1 <= meta[0]["width"] <= 1920 and 1 <= meta[0]["height"] <= 1080
-    with pytest.raises(NotImplementedError):
-        decode_media(b"xx", "image/png", fake=False)
-
-
 def test_near_dup_lsh_recall_and_precision(spark):
     """The bucketed near-dup path must (a) return only TRUE pairs — every
     reported pair appears in brute force with the same cosine (candidates
@@ -157,33 +145,6 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     # uncapped: the hot shingles pair EVERY doc combination
     uncapped = D.ngram_jaccard_pairs(docs, threshold=0.1).collect()
     assert len(uncapped) == 45
-
-
-def test_multimodal_frames_and_embed(spark, dup_docs):
-    import hashlib
-    media = attach_fake_media(dup_docs)
-    from mini_distributed_search_engine_spark.functions.multimodal import (
-        embed_media, sample_frames)
-    frames = sample_frames(media, stride=4).collect()
-    assert frames, "no frames sampled"
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-        # frame binary is the digest whose hex is frame_md5
-        assert bytes(r["frame"]).hex() == r["frame_md5"]
-    # deterministic fan-out: identical payloads sample identical frames
-    texts = {r["doc_id"]: r["text"] for r in dup_docs.collect()}
-    f0 = sorted((r["frame_idx"], r["frame_md5"]) for r in by_doc[0])
-    f1 = sorted((r["frame_idx"], r["frame_md5"]) for r in by_doc[1])
-    assert f0 == f1  # docs 0 and 1 are exact dups
-    payload = texts[0].encode()
-    n = int(hashlib.md5(payload).hexdigest()[8:12], 16) % 32 + 1
-    assert [i for i, _ in f0] == list(range(0, n, 4))
-
-    emb = embed_media(media, dim=8).collect()
-    assert len(emb) == 8 * dup_docs.count()
-    vec = {r["dim"]: r["value"] for r in emb if r["doc_id"] == 0}
-    assert all(0.0 <= vec[j] < 1.0 for j in range(8))
 
 
 def test_token_counts_literal(spark):
