@@ -18,7 +18,7 @@ over byte groups. No per-value Python.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
@@ -82,9 +82,9 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return vals
 
 
-@dataclass(frozen=True)
-class PackedPostings:
-    """One (term, shard) posting segment, decoded view."""
+class PackedPostings(NamedTuple):
+    """One (term, shard) posting segment, decoded view (doc ids first, the
+    order every segment family's decode returns)."""
     doc_ids: np.ndarray  # int64 ascending
     tfs: np.ndarray      # int64
     dls: np.ndarray      # int64

@@ -46,14 +46,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .codec import varint_decode, varint_encode
+from .packed import PACKED_SCHEMA, TF_FAMILY, _tf_segment
+from .positions import POS_FAMILY, POS_SCHEMA, _abs_positions, encode_positions
 
 PFD_BLOCK = 128
 _MAX_B = 32  # packed-width cap; wider values ride the exception path
 
-# the value-stream (blob) columns of each segment family — the single
-# source of truth for every transcode/size-accounting entrypoint
-TF_STREAMS = ("doc_gaps", "tfs", "dls")
-POS_STREAMS = ("doc_gaps", "pos_counts", "pos_deltas")
+# the value-stream (blob) columns of each segment family, as the families
+# declare them — what every transcode/size-accounting entrypoint reads
+TF_STREAMS = TF_FAMILY.streams
+POS_STREAMS = POS_FAMILY.streams
 
 
 def stream_bytes(df, streams) -> int:
@@ -336,8 +338,6 @@ def restore_packed(archived: DataFrame) -> DataFrame:
     restore to the canonical 128-block equivalent — same postings blobs,
     same scores, sound block-max bounds, just re-blocked skip metadata
     (logical identity + rank-identity test-enforced)."""
-    from .packed import PACKED_SCHEMA, _tf_segment
-
     _require_columns(
         archived,
         required=[f.name for f in PFD_ARCHIVE_SCHEMA.fields],
@@ -396,8 +396,6 @@ def restore_positions(archived: DataFrame) -> DataFrame:
     segments, canonical re-block for spliced ones, exactly like
     `restore_packed` (no enc_avgdl needed: positional block metadata is a
     function of the occurrence rows alone)."""
-    from .positions import POS_SCHEMA, _abs_positions, encode_positions
-
     _require_columns(
         archived,
         required=[f.name for f in PFD_POS_ARCHIVE_SCHEMA.fields],

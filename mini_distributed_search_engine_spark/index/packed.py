@@ -18,7 +18,8 @@ group) union-ed then globally ranked is exact.
 
 from __future__ import annotations
 
-from typing import Callable
+import operator
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -26,8 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .codec import (BLOCK, block_ends_array, decode_postings, encode_postings,
-                    splice_gap_streams, tf_norm)
+from .codec import (block_ends_array, decode_postings, encode_postings,
+                    splice_gap_streams)
 
 PACKED_SCHEMA = T.StructType([
     T.StructField("term", T.StringType(), False),
@@ -252,110 +253,226 @@ def build_packed_postings_local(tf_dl: DataFrame, avgdl: float,
     return _attach_totals(whole.unionByName(spliced), src)
 
 
-def merge_packed(packed: DataFrame, level_factor: int = 8,
-                 salt_buckets: int = 1) -> DataFrame:
-    """One hierarchical merge level: coalesce up to ``level_factor`` adjacent
-    doc-shards of each term into one segment via gap-stream splicing.
+class SegmentFamily(NamedTuple):
+    """One segment format as the lifecycle operators see it.
 
-    new shard_id = old shard_id DIV level_factor. Exactly reproduces what a
-    full re-encode would produce (gaps are identical by construction); block
-    metadata concatenates unchanged — block boundaries simply stay where the
-    original runs put them (byte offsets are shifted to the merged stream).
+    `merge_segments`, `purge_segments`, `splice_boundary` and
+    `append_segments` are written once and read everything that differs
+    between the TF (`TF_FAMILY`) and the positional
+    (`positions.POS_FAMILY`) segments from here: both are doc-gap-led
+    varint streams with per-128-doc block metadata, so a merge splices
+    the gap stream, concatenates the other two streams and the array
+    columns, and shifts the block byte-END offsets."""
+    schema: T.StructType
+    # the value blobs, doc_gaps first (the stream a merge splices), then
+    # the family's two (a merge concatenates them)
+    streams: tuple[str, str, str]
+    # per-block byte END offsets into each of ``streams``, same order
+    ends: tuple[str, str, str]
+    # how a merge folds a scalar column across a term's runs; scalars
+    # not named here keep the first run's value
+    folds: dict[str, Callable]
+    # the three stream blobs -> decoded arrays, doc ids first
+    decode: Callable[..., tuple]
+    # (segment row, its decode, keep mask over its docs) -> the non-key
+    # columns of a segment holding only the kept docs
+    reencode: Callable[..., dict]
+
+    @property
+    def cols(self) -> list[str]:
+        return [f.name for f in self.schema.fields]
+
+
+TF_FAMILY = SegmentFamily(
+    schema=PACKED_SCHEMA,
+    streams=("doc_gaps", "tfs", "dls"),
+    ends=("block_gap_ends", "block_tf_ends", "block_dl_ends"),
+    # bound rescale uses max(1, avgdl_now/enc_avgdl): taking the MIN of
+    # merged runs' enc_avgdl over-corrects the other runs' bounds, which
+    # keeps them sound (larger upper bound, never smaller)
+    folds={"df": operator.add, "max_tf_norm": max, "enc_avgdl": min},
+    decode=decode_postings,
+    # a purge re-encode keeps the segment's own enc_avgdl, so block-max
+    # bounds stay sound under the reader's drift rescale
+    reencode=lambda r, dec, keep: _tf_segment(
+        dec.doc_ids[keep], dec.tfs[keep], dec.dls[keep],
+        float(r.enc_avgdl)))
+
+
+def merge_segments(segments: DataFrame, family: SegmentFamily,
+                   level_factor: int) -> DataFrame:
+    """One hierarchical merge level: coalesce up to ``level_factor``
+    adjacent doc-shards of each term into one segment via gap-stream
+    splicing.
+
+    new shard_id = old shard_id DIV level_factor. Exactly reproduces the
+    value streams a full re-encode would produce (gaps are identical by
+    construction, every other stream is per-doc); block metadata
+    concatenates unchanged — block boundaries simply stay where the
+    original runs put them (byte offsets are shifted to the merged
+    stream).
 
     Memory: grouping is per TARGET shard, so one pandas task holds every
     term's segment blobs for level_factor * shard_span docs of postings —
-    at the defaults (8 * 1M postings, each a handful of varint bytes) tens
-    of MB per task. If that bound is too big (huge shard_span on
-    memory-tight executors), pass ``salt_buckets > 1``: groups become
-    (target shard, hash(term) % salt) — per-task memory drops by the salt
-    factor while keeping the batched-splice win, since a term's segments
-    always share a salt bucket (splice correctness is per TERM, never
-    across terms). Grouping per (term, shard) instead would bound memory
-    at shard_span but pay one applyInPandas call and one pandas frame per
-    segment — the per-group cost `encode_runs` avoids for the encoders
-    (an encode holds one Arrow batch plus one group).
+    at the defaults (8 * 1M postings, each a handful of varint bytes)
+    tens of MB per task. Grouping per (term, shard) instead would bound
+    memory at shard_span but pay one applyInPandas call and one pandas
+    frame per segment — the per-group cost `encode_runs` avoids for the
+    encoders (an encode holds one Arrow batch plus one group).
     """
+    cols = family.cols
+    arrays = [f.name for f in family.schema.fields
+              if isinstance(f.dataType, T.ArrayType)]
 
-    def merge_one(term, new_shard, g: pd.DataFrame) -> dict:
+    def merge_one(new_shard: int, g: pd.DataFrame) -> dict:
         # first_doc tiebreak: an incremental append can put TWO segments in
         # the same (term, shard) -- old and new doc ranges are disjoint, so
         # first_doc orders the splice correctly
         g = g.sort_values(["shard_id", "first_doc"])
-        rows = list(g.itertuples(index=False))
-        acc = rows[0]
-        out_gaps = bytes(acc.doc_gaps)
-        tfs = bytearray(bytes(acc.tfs))
-        dls = bytearray(bytes(acc.dls))
-        block_last = list(acc.block_last_doc)
-        block_max = list(acc.block_max_tf_norm)
-        gap_ends = [block_ends_array(bytes(acc.block_gap_ends))]
-        tf_ends = [block_ends_array(bytes(acc.block_tf_ends))]
-        dl_ends = [block_ends_array(bytes(acc.block_dl_ends))]
-        df = int(acc.df)
+        acc, *rest = g.itertuples(index=False)
+        out = {c: getattr(acc, c) for c in cols}
+        gaps = bytes(acc.doc_gaps)
+        blobs = [bytearray(getattr(acc, c)) for c in family.streams[1:]]
+        ends = [[block_ends_array(bytes(getattr(acc, c)))]
+                for c in family.ends]
+        lists = {c: list(getattr(acc, c)) for c in arrays}
         last_doc = int(acc.last_doc)
-        max_norm = float(acc.max_tf_norm)
-        # bound rescale uses max(1, avgdl_now/enc_avgdl): taking the MIN of
-        # merged runs' enc_avgdl over-corrects the other runs' bounds, which
-        # keeps them sound (larger upper bound, never smaller)
-        enc_avgdl = float(acc.enc_avgdl)
-        for r in rows[1:]:
+        for r in rest:
             if int(r.first_doc) <= last_doc:
                 # guards build_packed_postings_local misuse: splicing is
                 # only valid when runs cover disjoint ascending doc ranges
                 raise ValueError(
-                    f"interleaved posting runs for term={term!r} "
+                    f"interleaved posting runs for term={acc.term!r} "
                     f"shard={acc.shard_id}: run starting at "
                     f"{r.first_doc} overlaps previous end {last_doc} "
                     "(input not doc-range partitioned?)")
             r_gaps = bytes(r.doc_gaps)
-            out_gaps = splice_gap_streams(0, out_gaps, last_doc,
-                                          int(r.first_doc), r_gaps)
+            gaps = splice_gap_streams(0, gaps, last_doc, int(r.first_doc),
+                                      r_gaps)
             # r's first varint was rewritten as a gap; its byte offsets
             # shift by the accumulated prefix plus that length delta —
-            # together: the combined length minus r's own stream length
-            shift = len(out_gaps) - len(r_gaps)
-            gap_ends.append(block_ends_array(bytes(r.block_gap_ends)) + shift)
-            tf_ends.append(block_ends_array(bytes(r.block_tf_ends)) + len(tfs))
-            dl_ends.append(block_ends_array(bytes(r.block_dl_ends)) + len(dls))
-            tfs += bytes(r.tfs)
-            dls += bytes(r.dls)
-            block_last += list(r.block_last_doc)
-            block_max += list(r.block_max_tf_norm)
-            df += int(r.df)
+            # together: the combined length minus r's own stream length.
+            # The other streams' offsets shift by their prefix length.
+            shifts = [len(gaps) - len(r_gaps)] + [len(b) for b in blobs]
+            for part, c, shift in zip(ends, family.ends, shifts):
+                part.append(block_ends_array(bytes(getattr(r, c))) + shift)
+            for b, c in zip(blobs, family.streams[1:]):
+                b += bytes(getattr(r, c))
+            for c in arrays:
+                lists[c] += list(getattr(r, c))
+            for c, fold in family.folds.items():
+                out[c] = fold(out[c], getattr(r, c))
             last_doc = int(r.last_doc)
-            max_norm = max(max_norm, float(r.max_tf_norm))
-            enc_avgdl = min(enc_avgdl, float(r.enc_avgdl))
-        return {
-            "term": term, "shard_id": int(new_shard), "df": df,
-            "global_df": int(acc.global_df),
-            "first_doc": int(acc.first_doc), "last_doc": last_doc,
-            "doc_gaps": out_gaps, "tfs": bytes(tfs), "dls": bytes(dls),
-            "block_last_doc": block_last, "block_max_tf_norm": block_max,
-            "max_tf_norm": max_norm,
-            "block_gap_ends": np.concatenate(gap_ends).astype("<i8").tobytes(),
-            "block_tf_ends": np.concatenate(tf_ends).astype("<i8").tobytes(),
-            "block_dl_ends": np.concatenate(dl_ends).astype("<i8").tobytes(),
-            "enc_avgdl": enc_avgdl,
-        }
+        out.update(zip(family.streams, [gaps, *map(bytes, blobs)]))
+        out.update((c, np.concatenate(part).astype("<i8").tobytes())
+                   for c, part in zip(family.ends, ends))
+        out.update(lists, shard_id=new_shard, last_doc=last_doc)
+        return out
 
     # ONE pandas group per target shard (not per (term, shard)): a merge
     # group is all the terms of one merged shard, looped internally, so the
     # per-call cost is paid per shard rather than per segment.
     def merge_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        new_shard = int(key[0])
-        out = [merge_one(term, new_shard, g)
-               for term, g in pdf.groupby("term", sort=False)]
-        return pd.DataFrame(out, columns=[f.name for f in PACKED_SCHEMA.fields])
+        out = [merge_one(int(key[0]), g)
+               for _, g in pdf.groupby("term", sort=False)]
+        return pd.DataFrame(out, columns=cols)
 
-    lv = packed.withColumn("_new_shard",
-                           (F.col("shard_id") / F.lit(level_factor)).cast("int"))
-    if salt_buckets > 1:
-        lv = lv.withColumn("_salt",
-                           F.pmod(F.xxhash64("term"), F.lit(salt_buckets)))
-        return (lv.groupBy("_new_shard", "_salt")
-                .applyInPandas(merge_shard, PACKED_SCHEMA))
-    return (lv.groupBy("_new_shard")
-            .applyInPandas(merge_shard, PACKED_SCHEMA))
+    return (segments
+            .withColumn("_new_shard",
+                        (F.col("shard_id") / F.lit(level_factor)).cast("int"))
+            .groupBy("_new_shard").applyInPandas(merge_shard, family.schema))
+
+
+def splice_boundary(old: DataFrame, new: DataFrame, bshard: int,
+                    family: SegmentFamily) -> DataFrame:
+    """``new``'s segments with the boundary shard ``bshard`` — the one
+    shard where old and new doc ranges meet — spliced onto ``old``'s copy
+    of it: a level-1 merge of both copies of that shard (a byte splice),
+    plus ``new``'s shards above it. Every new doc must follow every old
+    one. Shared by `append_segments` and the streaming sink, which reads
+    ``old`` from the last manifest entry only."""
+    cols = family.cols
+    at_b = F.col("shard_id") == bshard
+    both = old.where(at_b).select(*cols).unionByName(
+        new.where(at_b).select(*cols))
+    return merge_segments(both, family, level_factor=1).unionByName(
+        new.where(F.col("shard_id") > bshard).select(*cols))
+
+
+def append_segments(old: DataFrame, new_rows: DataFrame, new_seg: DataFrame,
+                    family: SegmentFamily) -> DataFrame:
+    """Incremental index append: fold ``new_seg`` (the segments encoded
+    from ``new_rows``, same shard_span) into ``old`` without re-encoding
+    the old segments. Every segment passes through untouched except the
+    single boundary shard, which `splice_boundary` byte-splices, so an
+    append costs O(new data + one shard), not a rewrite of the index."""
+    old_top = old.agg(F.max("shard_id").alias("s"),
+                      F.max("last_doc").alias("d")).collect()[0]
+    bshard = old_top["s"]
+    if bshard is None:  # appending to an empty index
+        return new_seg
+    # Validate the append-only precondition: new doc_ids below the old
+    # index's covered range would land duplicate (term, shard) segments in
+    # shards BELOW bshard, flow through unmerged, and silently corrupt
+    # queries. Cheap check (two tiny aggs) — fail loudly instead.
+    new_min = new_rows.agg(F.min("doc_id")).collect()[0][0]
+    if new_min is not None and int(new_min) <= int(old_top["d"]):
+        raise ValueError(
+            f"append requires append-only doc identity: new min doc_id "
+            f"{new_min} <= existing max doc {old_top['d']} (interleaved "
+            "posting runs) — rebuild instead of appending")
+    return (old.where(F.col("shard_id") != bshard).select(*family.cols)
+            .unionByName(splice_boundary(old, new_seg, bshard, family)))
+
+
+def _tombstoned(tomb: np.ndarray, r, family: SegmentFamily):
+    """The range gate of every tombstone pass: two binary searches decide
+    whether segment ``r``'s [first_doc, last_doc] holds a tombstone, so a
+    segment outside every tombstone pays no decode. Returns None when no
+    doc of the segment is tombstoned, else (its decode, the mask of its
+    tombstoned docs)."""
+    lo = np.searchsorted(tomb, int(r.first_doc), side="left")
+    hi = np.searchsorted(tomb, int(r.last_doc), side="right")
+    if lo == hi:
+        return None
+    dec = family.decode(*(bytes(getattr(r, c)) for c in family.streams))
+    hit = np.isin(dec[0], tomb[lo:hi])
+    return (dec, hit) if hit.any() else None
+
+
+def purge_segments(segments: DataFrame, tomb: np.ndarray,
+                   family: SegmentFamily) -> DataFrame:
+    """The purge mapInPandas pass: remove the sorted doc ids ``tomb`` from
+    the segments. A segment without a tombstoned doc passes through
+    byte-untouched (test-enforced), a fully deleted one drops out (a
+    fully deleted term with it), the rest re-encode their surviving docs.
+    Stored TF global_df is left STALE — `purge_docs` recomputes it via
+    with_global_df; the streaming compactor writes its own totals table.
+
+    Scale: the tombstone array rides the task closure (8 bytes per delete
+    — a million deletes is 8 MB)."""
+    cols = family.cols
+
+    def gen(batches):
+        for pdf in batches:
+            out = []
+            for r in pdf.itertuples(index=False):
+                hits = _tombstoned(tomb, r, family)
+                if hits is None:
+                    out.append({c: getattr(r, c) for c in cols})
+                elif not hits[1].all():
+                    row = family.reencode(r, hits[0], ~hits[1])
+                    row.update(term=r.term, shard_id=int(r.shard_id))
+                    out.append(row)
+            if out:
+                yield pd.DataFrame(out, columns=cols)
+
+    return segments.mapInPandas(gen, family.schema)
+
+
+def merge_packed(packed: DataFrame, level_factor: int = 8) -> DataFrame:
+    """One hierarchical merge level of TF segments (`merge_segments`)."""
+    return merge_segments(packed, TF_FAMILY, level_factor)
 
 
 def append_packed(old_packed: DataFrame, new_term_doc_tf: DataFrame,
@@ -367,66 +484,35 @@ def append_packed(old_packed: DataFrame, new_term_doc_tf: DataFrame,
     Requires append-only doc identity: every new doc_id exceeds every old
     doc_id (the stable-docID discipline gives this for appended
     conversations, which sort after existing ones). New postings are
-    encoded into segments with the same shard_span; the union is then run
-    through a level_factor=1 merge, which is an identity for untouched
-    shards and a byte splice for the one boundary shard where old and new
-    doc ranges meet; term totals (the idf input) are recomputed over the
-    segment table. Posting bytes are identical to a full rebuild (gaps
-    depend only on docIDs/tfs/dls); only the advisory block-max metadata
-    reflects encode-time avgdl, which the query path no longer relies on
-    (wand.py derives exact bounds from decoded norms).
+    encoded into segments with the same shard_span and folded in by
+    `append_segments` (an identity for untouched shards, a byte splice
+    for the one boundary shard); term totals (the idf input) are
+    recomputed over the segment table. Posting bytes are identical to a
+    full rebuild (gaps depend only on docIDs/tfs/dls); only the advisory
+    block-max metadata reflects encode-time avgdl, which the query path
+    no longer relies on (wand.py derives exact bounds from decoded norms).
     """
     new_seg = build_packed_postings(new_term_doc_tf, avgdl,
                                     shard_span=shard_span)
-    cols = [f.name for f in PACKED_SCHEMA.fields]
-    unioned = old_packed.select(*cols).unionByName(new_seg.select(*cols))
-    # Only the single boundary shard (where old and new doc ranges meet) can
-    # hold duplicate (term, shard) segments — splice just that shard and
-    # pass every other segment through untouched, so an append costs
-    # O(new data + one shard), not a rewrite of the whole index.
-    old_top = old_packed.agg(F.max("shard_id").alias("s"),
-                             F.max("last_doc").alias("d")).collect()[0]
-    bshard = old_top["s"]
-    if bshard is None:  # appending to an empty index
-        return with_global_df(new_seg)
-    # Validate the append-only precondition: new doc_ids below the old
-    # index's covered range would land duplicate (term, shard) segments in
-    # shards BELOW bshard, flow through `untouched` unmerged, and silently
-    # corrupt queries. Cheap check (two tiny aggs) — fail loudly instead.
-    new_min = new_term_doc_tf.agg(F.min("doc_id")).collect()[0][0]
-    if new_min is not None and int(new_min) <= int(old_top["d"]):
-        raise ValueError(
-            f"append_packed requires append-only doc identity: new min "
-            f"doc_id {new_min} <= existing max doc {old_top['d']} "
-            "(interleaved posting runs) — rebuild instead of appending")
-    untouched = unioned.where(F.col("shard_id") != F.lit(bshard))
-    spliced = merge_packed(unioned.where(F.col("shard_id") == F.lit(bshard)),
-                           level_factor=1)
-    return with_global_df(untouched.unionByName(spliced))
+    return with_global_df(
+        append_segments(old_packed, new_term_doc_tf, new_seg, TF_FAMILY))
 
 
 def purge_docs(packed: DataFrame, doc_ids) -> DataFrame:
     """Physical tombstone purge: remove the given doc_ids' postings from a
-    packed index, re-encoding ONLY the segments whose [first_doc, last_doc]
-    range contains a tombstone; every other segment's blobs pass through
-    byte-untouched (test-enforced). Term totals (global_df, the idf input)
-    are recomputed over the segment table via the usual broadcast join.
+    packed index, re-encoding ONLY the segments that hold a tombstoned doc
+    (`purge_segments`); every other segment's blobs pass through
+    byte-untouched. Term totals (global_df, the idf input) are recomputed
+    over the segment table via the usual broadcast join.
 
     This is the delete half of the LSM lifecycle: a deployment records
     deletes as a tombstone doc-id set beside the index (O(1) metadata per
     delete) and folds them in here at compaction time. The reference has
     no delete path at all (its Indexer is build-once); this is deployment
     surface the Spark engine adds.
-
-    Scale: the tombstone array rides the task closure into one
-    mapInPandas pass (8 bytes per delete — a million deletes is 8 MB);
-    per segment, two np.searchsorted binary searches decide intersection,
-    so untouched segments pay zero decode work. Segments whose every
-    posting is deleted disappear, and a fully-deleted term disappears
-    with its segments. Re-encode keeps each segment's own enc_avgdl, so
-    block-max bounds stay sound under the reader's drift rescale.
     """
-    return with_global_df(_purge_segments(packed, _as_sorted_ids(doc_ids)))
+    return with_global_df(
+        purge_segments(packed, _as_sorted_ids(doc_ids), TF_FAMILY))
 
 
 def _as_sorted_ids(doc_ids) -> np.ndarray:
@@ -436,61 +522,23 @@ def _as_sorted_ids(doc_ids) -> np.ndarray:
     return np.unique(np.fromiter((int(d) for d in doc_ids), dtype=np.int64))
 
 
-def _purge_segments(packed: DataFrame, tomb: np.ndarray) -> DataFrame:
-    """The purge mapInPandas pass alone: raw segments out, stored
-    global_df left STALE — `purge_docs` recomputes it via with_global_df;
-    the streaming compactor writes its own totals table instead."""
-    cols = [f.name for f in PACKED_SCHEMA.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                lo = np.searchsorted(tomb, int(r.first_doc), side="left")
-                hi = np.searchsorted(tomb, int(r.last_doc), side="right")
-                if lo == hi:  # no tombstone inside this segment's doc range
-                    out.append({c: getattr(r, c) for c in cols})
-                    continue
-                dec = decode_postings(bytes(r.doc_gaps), bytes(r.tfs),
-                                      bytes(r.dls))
-                keep = ~np.isin(dec.doc_ids, tomb[lo:hi])
-                if not keep.any():
-                    continue  # segment fully deleted
-                if keep.all():  # tombstones in range, none in this term
-                    out.append({c: getattr(r, c) for c in cols})
-                    continue
-                row = _tf_segment(dec.doc_ids[keep], dec.tfs[keep],
-                                  dec.dls[keep], float(r.enc_avgdl))
-                row.update(term=r.term, shard_id=int(r.shard_id))
-                out.append(row)
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-    return packed.mapInPandas(gen, PACKED_SCHEMA)
-
-
 def tombstone_doc_stats(packed: DataFrame, doc_ids) -> tuple[int, int]:
     """Exact (doc count, sum of dl) of the tombstoned docs PRESENT in the
     index — the corpus-stat delta a purge applies (n_docs and sum_dl both
-    shrink; avgdl is their ratio). One pass with the same binary-search
-    range gate as the purge itself: segments whose doc range misses every
-    tombstone are skipped without decoding; intersecting ones decode and
-    emit their tombstoned (doc_id, dl) pairs, deduped across terms (a
-    doc's dl is the same in every posting) before the final count/sum."""
+    shrink; avgdl is their ratio). One pass with the purge's range gate
+    (`_tombstoned`): segments whose doc range misses every tombstone are
+    skipped without decoding; intersecting ones decode and emit their
+    tombstoned (doc_id, dl) pairs, deduped across terms (a doc's dl is the
+    same in every posting) before the final count/sum."""
     tomb = _as_sorted_ids(doc_ids)
 
     def gen(batches):
         for pdf in batches:
             outs = []
             for r in pdf.itertuples(index=False):
-                lo = np.searchsorted(tomb, int(r.first_doc), side="left")
-                hi = np.searchsorted(tomb, int(r.last_doc), side="right")
-                if lo == hi:
-                    continue
-                dec = decode_postings(bytes(r.doc_gaps), bytes(r.tfs),
-                                      bytes(r.dls))
-                hit = np.isin(dec.doc_ids, tomb[lo:hi])
-                if hit.any():
+                hits = _tombstoned(tomb, r, TF_FAMILY)
+                if hits is not None:
+                    dec, hit = hits
                     outs.append(pd.DataFrame({"doc_id": dec.doc_ids[hit],
                                               "dl": dec.dls[hit]}))
             if outs:

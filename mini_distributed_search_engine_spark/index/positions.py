@@ -39,6 +39,8 @@ packed tables per shard with no row-level join.
 
 from __future__ import annotations
 
+import operator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -47,7 +49,9 @@ from pyspark.sql import types as T
 
 from .codec import (BLOCK, block_ends_array, varint_decode, varint_encode,
                     varint_lengths)
-from .packed import encode_runs
+from .packed import (DEFAULT_SHARD_SPAN, SegmentFamily, _as_sorted_ids,
+                     append_segments, encode_runs, merge_segments,
+                     purge_segments)
 
 POS_SCHEMA = T.StructType([
     T.StructField("term", T.StringType(), False),
@@ -66,8 +70,6 @@ POS_SCHEMA = T.StructType([
     T.StructField("block_cnt_ends", T.BinaryType(), False),
     T.StructField("block_pos_ends", T.BinaryType(), False),
 ])
-
-DEFAULT_SHARD_SPAN = 1 << 20
 
 
 def encode_positions(doc_ids: np.ndarray, poss: np.ndarray) -> dict:
@@ -200,6 +202,22 @@ def _abs_positions(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return c - np.repeat(prefix, counts)
 
 
+def _keep_docs(r, dec: tuple, keep: np.ndarray) -> dict:
+    """Re-encode a decoded segment's ``keep``-masked docs."""
+    docs, counts, flat = dec
+    return encode_positions(np.repeat(docs[keep], counts[keep]),
+                            flat[np.repeat(keep, counts)])
+
+
+POS_FAMILY = SegmentFamily(
+    schema=POS_SCHEMA,
+    streams=("doc_gaps", "pos_counts", "pos_deltas"),
+    ends=("block_gap_ends", "block_cnt_ends", "block_pos_ends"),
+    folds={"df": operator.add, "n_pos": operator.add},
+    decode=_decode_all,
+    reencode=_keep_docs)
+
+
 class _PSeg:
     """One positional (term, shard) segment with lazy block decode.
 
@@ -310,143 +328,29 @@ class _PSeg:
 
 def merge_packed_positions(packed_pos: DataFrame,
                            level_factor: int = 8) -> DataFrame:
-    """One hierarchical merge level for positional segments — the same
-    byte-splice discipline as `packed.merge_packed`: adjacent doc-shards
-    of a term coalesce with O(bytes) work (only the right-hand run's
-    first doc gap is rewritten; counts and position deltas concatenate
-    unchanged because every doc's delta stream is self-contained), block
-    metadata concatenates with shifted byte offsets. new shard_id =
-    old shard_id DIV level_factor; exactly reproduces a full re-encode
-    (test-enforced)."""
-    from .codec import splice_gap_streams
-
-    cols = [f.name for f in POS_SCHEMA.fields]
-
-    def merge_one(term, new_shard, g: pd.DataFrame) -> dict:
-        g = g.sort_values(["shard_id", "first_doc"])
-        rows = list(g.itertuples(index=False))
-        acc = rows[0]
-        out_gaps = bytes(acc.doc_gaps)
-        cnts = bytearray(bytes(acc.pos_counts))
-        poss = bytearray(bytes(acc.pos_deltas))
-        block_last = list(acc.block_last_doc)
-        gap_ends = [block_ends_array(bytes(acc.block_gap_ends))]
-        cnt_ends = [block_ends_array(bytes(acc.block_cnt_ends))]
-        pos_ends = [block_ends_array(bytes(acc.block_pos_ends))]
-        df = int(acc.df)
-        n_pos = int(acc.n_pos)
-        last_doc = int(acc.last_doc)
-        for r in rows[1:]:
-            if int(r.first_doc) <= last_doc:
-                raise ValueError(
-                    f"interleaved positional runs for term={term!r} "
-                    f"shard={acc.shard_id}: run starting at {r.first_doc} "
-                    f"overlaps previous end {last_doc}")
-            r_gaps = bytes(r.doc_gaps)
-            out_gaps = splice_gap_streams(0, out_gaps, last_doc,
-                                          int(r.first_doc), r_gaps)
-            shift = len(out_gaps) - len(r_gaps)
-            gap_ends.append(block_ends_array(bytes(r.block_gap_ends)) + shift)
-            cnt_ends.append(block_ends_array(bytes(r.block_cnt_ends))
-                            + len(cnts))
-            pos_ends.append(block_ends_array(bytes(r.block_pos_ends))
-                            + len(poss))
-            cnts += bytes(r.pos_counts)
-            poss += bytes(r.pos_deltas)
-            block_last += list(r.block_last_doc)
-            df += int(r.df)
-            n_pos += int(r.n_pos)
-            last_doc = int(r.last_doc)
-        return {
-            "term": term, "shard_id": int(new_shard), "df": df,
-            "n_pos": n_pos, "first_doc": int(acc.first_doc),
-            "last_doc": last_doc, "doc_gaps": out_gaps,
-            "pos_counts": bytes(cnts), "pos_deltas": bytes(poss),
-            "block_last_doc": block_last,
-            "block_gap_ends": np.concatenate(gap_ends).astype("<i8").tobytes(),
-            "block_cnt_ends": np.concatenate(cnt_ends).astype("<i8").tobytes(),
-            "block_pos_ends": np.concatenate(pos_ends).astype("<i8").tobytes(),
-        }
-
-    def merge_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        new_shard = int(key[0])
-        out = [merge_one(term, new_shard, g)
-               for term, g in pdf.groupby("term", sort=False)]
-        return pd.DataFrame(out, columns=cols)
-
-    lv = packed_pos.withColumn(
-        "_new_shard", (F.col("shard_id") / F.lit(level_factor)).cast("int"))
-    return lv.groupBy("_new_shard").applyInPandas(merge_shard, POS_SCHEMA)
+    """One hierarchical merge level of positional segments
+    (`packed.merge_segments`): counts and position deltas concatenate
+    unchanged because every doc's delta stream is self-contained; exactly
+    reproduces a full re-encode's streams (test-enforced)."""
+    return merge_segments(packed_pos, POS_FAMILY, level_factor)
 
 
 def purge_positions(packed_pos: DataFrame, doc_ids) -> DataFrame:
-    """Physical tombstone purge for positional segments — the delete half
-    of the LSM lifecycle, mirroring `packed.purge_docs`: two binary
-    searches decide whether a segment's [first_doc, last_doc] range
-    intersects the tombstones; untouched segments pass through
-    byte-identical (test-enforced), intersecting ones re-encode their
-    surviving docs' positions, fully-deleted segments disappear. Run it
-    at compaction time beside the TF purge so phrase/proximity stop
-    matching deleted docs once the query-time tombstone set resets."""
-    from .packed import _as_sorted_ids
-
-    tomb = _as_sorted_ids(doc_ids)
-    cols = [f.name for f in POS_SCHEMA.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                lo = np.searchsorted(tomb, int(r.first_doc), side="left")
-                hi = np.searchsorted(tomb, int(r.last_doc), side="right")
-                if lo == hi:  # no tombstone inside this segment's range
-                    out.append({c: getattr(r, c) for c in cols})
-                    continue
-                docs, counts, flat = _decode_all(
-                    bytes(r.doc_gaps), bytes(r.pos_counts),
-                    bytes(r.pos_deltas))
-                keep = ~np.isin(docs, tomb[lo:hi])
-                if not keep.any():
-                    continue  # segment fully deleted
-                if keep.all():  # tombstones in range, none in this term
-                    out.append({c: getattr(r, c) for c in cols})
-                    continue
-                row = {"term": r.term, "shard_id": int(r.shard_id)}
-                row.update(encode_positions(
-                    np.repeat(docs[keep], counts[keep]),
-                    flat[np.repeat(keep, counts)]))
-                out.append(row)
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-    return packed_pos.mapInPandas(gen, POS_SCHEMA)
+    """Physical tombstone purge for positional segments
+    (`packed.purge_segments`). Run it at compaction time beside the TF
+    purge so phrase/proximity stop matching deleted docs once the
+    query-time tombstone set resets."""
+    return purge_segments(packed_pos, _as_sorted_ids(doc_ids), POS_FAMILY)
 
 
 def append_packed_positions(old_packed: DataFrame, new_positions: DataFrame,
                             shard_span: int = DEFAULT_SHARD_SPAN
                             ) -> DataFrame:
-    """Incremental positional append, mirroring `packed.append_packed`:
-    fold NEW docs' positions into an existing packed positional index
-    without re-encoding old segments. Requires append-only doc identity
-    (every new doc_id exceeds every old one — the stable-docID
-    discipline); only the single boundary shard where old and new doc
-    ranges meet is spliced (a byte splice via the level_factor=1 merge),
-    every other segment passes through untouched."""
-    new_seg = build_packed_positions(new_positions, shard_span=shard_span)
-    cols = [f.name for f in POS_SCHEMA.fields]
-    unioned = old_packed.select(*cols).unionByName(new_seg.select(*cols))
-    old_top = old_packed.agg(F.max("shard_id").alias("s"),
-                             F.max("last_doc").alias("d")).collect()[0]
-    bshard = old_top["s"]
-    if bshard is None:  # appending to an empty index
-        return new_seg
-    new_min = new_positions.agg(F.min("doc_id")).collect()[0][0]
-    if new_min is not None and int(new_min) <= int(old_top["d"]):
-        raise ValueError(
-            f"append_packed_positions requires append-only doc identity: "
-            f"new min doc_id {new_min} <= existing max doc {old_top['d']} "
-            "(interleaved positional runs) — rebuild instead of appending")
-    untouched = unioned.where(F.col("shard_id") != F.lit(bshard))
-    spliced = merge_packed_positions(
-        unioned.where(F.col("shard_id") == F.lit(bshard)), level_factor=1)
-    return untouched.unionByName(spliced)
+    """Incremental positional append (`packed.append_segments`): fold NEW
+    docs' positions into an existing packed positional index without
+    re-encoding old segments. Requires append-only doc identity (every
+    new doc_id exceeds every old one — the stable-docID discipline)."""
+    return append_segments(
+        old_packed, new_positions,
+        build_packed_positions(new_positions, shard_span=shard_span),
+        POS_FAMILY)

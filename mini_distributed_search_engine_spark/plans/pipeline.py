@@ -17,11 +17,15 @@ is documented and test-gated in ``mini_distributed_search_engine_spark/
 storage.py`` (tests/test_storage.py).
 
 Stages:
-  docs          stable docIDs + dl                        (parquet)
-  term_doc_tf   (term, doc_id, tf, dl)                    (parquet, term-clustered)
-  stats         term_stats + doc_stats                    (parquet)
-  packed        per-(term, doc-shard) varint segments     (parquet)
-  merged        one hierarchical merge level              (parquet)
+  docs              stable docIDs + dl                    (parquet)
+  term_doc_tf       (term, doc_id, tf, dl)                (parquet, term-clustered)
+  positions         (doc_id, term, pos); positions=True   (parquet, term-clustered)
+  positions_packed  per-(term, doc-shard) positional      (parquet)
+                    segments at the merged shard span;
+                    positions=True
+  stats             term_stats + doc_stats                (parquet)
+  packed            per-(term, doc-shard) varint segments (parquet)
+  merged            one hierarchical merge level          (parquet)
 Lineage rows append to ``<root>/_lineage`` parquet per stage run.
 """
 

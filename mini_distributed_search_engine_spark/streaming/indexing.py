@@ -57,13 +57,14 @@ from pyspark.sql import functions as F
 
 from ..functions.analyzer import term_tokens_df
 from ..plans.pipeline import LINEAGE_SCHEMA
-from ..index.packed import (PACKED_SCHEMA, _as_sorted_ids,
-                            _purge_segments, build_packed_postings,
-                            merge_packed, tombstone_doc_stats,
-                            with_global_df)
+from ..index.packed import (PACKED_SCHEMA, TF_FAMILY, _as_sorted_ids,
+                            build_packed_postings, purge_segments,
+                            splice_boundary, tombstone_doc_stats)
+from ..index.positions import (POS_FAMILY, POS_SCHEMA,
+                               build_packed_positions)
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
-_COLS = [f.name for f in PACKED_SCHEMA.fields]
+_COLS = TF_FAMILY.cols
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str,
@@ -107,7 +108,8 @@ class StreamingIndexer:
     def _meta(self) -> dict:
         if self._meta_path().exists():
             return json.loads(self._meta_path().read_text())
-        return {"n_docs": 0, "sum_dl": 0, "generation": 0, "manifest": []}
+        return {"n_docs": 0, "sum_dl": 0, "next_doc_id": 0, "generation": 0,
+                "manifest": []}
 
     def _save_meta(self, meta: dict) -> None:
         tmp = self.root / "_meta.json.tmp"
@@ -115,13 +117,7 @@ class StreamingIndexer:
         tmp.rename(self._meta_path())
 
     def _manifest(self, meta: dict) -> list[dict]:
-        man = meta.get("manifest")
-        if man is None:
-            # legacy full-copy layout (pre-manifest): one entry, whole range
-            man = ([{"path": f"packed_g{meta['generation']}",
-                     "start_shard": 0}]
-                   if int(meta.get("generation", 0)) > 0 else [])
-        return man
+        return meta["manifest"]
 
     def _segments(self, man: list[dict], path_key: str = "path",
                   cols: list[str] = _COLS) -> DataFrame:
@@ -146,10 +142,8 @@ class StreamingIndexer:
         if not man:
             return self.spark.createDataFrame([], PACKED_SCHEMA)
         seg = self._segments(man)
-        totals_dir = self.root / f"totals_g{meta['generation']}"
-        if not totals_dir.is_dir():      # legacy root: derive from segments
-            return with_global_df(seg)
-        totals = self.spark.read.parquet(str(totals_dir))
+        totals = self.spark.read.parquet(
+            str(self.root / f"totals_g{meta['generation']}"))
         return (seg.drop("global_df")
                 .join(F.broadcast(totals), "term").select(*_COLS))
 
@@ -158,7 +152,6 @@ class StreamingIndexer:
         union of each manifest entry's authoritative shard range — the
         positional twin of `packed()`, readable by phrase_match_packed /
         wand_topk_proximity / span_near_match."""
-        from ..index.positions import POS_SCHEMA
         meta = self._meta()
         man = self._manifest(meta)
         if not man:
@@ -168,7 +161,7 @@ class StreamingIndexer:
                 f"index root {self.root} was not built with "
                 "with_positions=True (manifest entries lack pos_path)")
         return self._segments(man, path_key="pos_path",
-                              cols=[f.name for f in POS_SCHEMA.fields])
+                              cols=POS_FAMILY.cols)
 
     def corpus_stats(self) -> tuple[int, float]:
         m = self._meta()
@@ -211,9 +204,8 @@ class StreamingIndexer:
         # input) but must never shrink the id space — reusing a purged or
         # live id would interleave posting runs (append splice fails
         # loudly) or resurrect engine-side tombstones recorded against
-        # the old id. Legacy roots (pre-purge metas) never diverged, so
-        # n_docs is the correct default.
-        base = int(meta.get("next_doc_id", meta["n_docs"]))
+        # the old id.
+        base = int(meta["next_doc_id"])
         # docIDs continue the stable ordering WITHIN the batch; the source
         # must deliver conversations in non-decreasing order across batches
         # (append-only discipline). Single partition + local sort keeps the
@@ -270,81 +262,32 @@ class StreamingIndexer:
         avgdl = new_sum / new_n
 
         gen = int(meta["generation"])
-        new_seg = build_packed_postings(tf_dl, avgdl,
-                                        shard_span=self.shard_span)
-        seg_dir = f"segs_g{gen + 1}"
-        if not man:
-            out = new_seg
-            start = 0
-        else:
-            bshard = (base - 1) // self.shard_span  # old max covered shard
-            start = base // self.shard_span         # first shard this batch touches
-            if start == bshard:
-                # splice the one shard where old and new doc ranges meet
-                last = man[-1]
-                old_b = (self.spark.read.parquet(str(self.root / last["path"]))
-                         .where(F.col("shard_id") == bshard).select(*_COLS))
-                boundary = old_b.unionByName(
-                    new_seg.where(F.col("shard_id") == bshard).select(*_COLS))
-                out = (merge_packed(boundary, level_factor=1)
-                       .unionByName(new_seg.where(F.col("shard_id") > bshard)
-                                    .select(*_COLS)))
-            else:
-                out = new_seg
-        out.write.mode("overwrite").parquet(str(self.root / seg_dir))
-
-        pos_dir = None
+        bshard = (base - 1) // self.shard_span  # old max covered shard
+        start = base // self.shard_span         # first shard this batch touches
+        # both families: same shard math, same boundary splice — one
+        # directory per batch and family, O(batch + boundary) bytes
+        sides = [("path", "segs", TF_FAMILY,
+                  build_packed_postings(tf_dl, avgdl,
+                                        shard_span=self.shard_span))]
         if with_pos:
-            # positional twin: same shard math, same boundary splice —
-            # one pos_gN directory per batch, O(batch + boundary) bytes
-            from ..index.positions import (POS_SCHEMA,
-                                           build_packed_positions,
-                                           merge_packed_positions)
-            pcols = [f.name for f in POS_SCHEMA.fields]
-            new_pos = build_packed_positions(pos_rows,
-                                             shard_span=self.shard_span)
-            pos_dir = f"pos_g{gen + 1}"
-            if not man:
-                out_pos = new_pos
-            else:
-                bshard = (base - 1) // self.shard_span
-                if base // self.shard_span == bshard:
-                    last = man[-1]
-                    old_p = (self.spark.read
-                             .parquet(str(self.root / last["pos_path"]))
-                             .where(F.col("shard_id") == bshard)
-                             .select(*pcols))
-                    pb = old_p.unionByName(
-                        new_pos.where(F.col("shard_id") == bshard)
-                        .select(*pcols))
-                    out_pos = (merge_packed_positions(pb, level_factor=1)
-                               .unionByName(
-                                   new_pos.where(F.col("shard_id") > bshard)
-                                   .select(*pcols)))
-                else:
-                    out_pos = new_pos
-            out_pos.write.mode("overwrite").parquet(
-                str(self.root / pos_dir))
+            sides.append(("pos_path", "pos", POS_FAMILY,
+                          build_packed_positions(
+                              pos_rows, shard_span=self.shard_span)))
+        entry = {"start_shard": int(start)}
+        for key, prefix, family, out in sides:
+            if man and start == bshard:
+                # splice the one shard where old and new doc ranges meet
+                old = self.spark.read.parquet(str(self.root / man[-1][key]))
+                out = splice_boundary(old, out, bshard, family)
+            entry[key] = f"{prefix}_g{gen + 1}"
+            out.write.mode("overwrite").parquet(str(self.root / entry[key]))
 
         # totals: old totals (+) this batch's per-term posting counts
         new_tot = tf_dl.groupBy("term").agg(
             F.count(F.lit(1)).cast("long").alias("global_df"))
         old_tot_dir = self.root / f"totals_g{gen}"
-        if old_tot_dir.is_dir():
+        if man:
             old_tot = self.spark.read.parquet(str(old_tot_dir))
-            merged = (old_tot.withColumnRenamed("global_df", "a")
-                      .join(new_tot.withColumnRenamed("global_df", "b"),
-                            "term", "full_outer")
-                      .select("term",
-                              (F.coalesce("a", F.lit(0)) +
-                               F.coalesce("b", F.lit(0))).alias("global_df")))
-        elif man:   # adopted legacy root: derive old totals from segments
-            legacy = with_global_df(reduce(DataFrame.unionByName, [
-                self.spark.read.parquet(str(self.root / e["path"]))
-                .select(*_COLS) for e in man]))
-            old_tot = (legacy.select("term", "global_df")
-                       .groupBy("term").agg(F.max("global_df")
-                                            .cast("long").alias("global_df")))
             merged = (old_tot.withColumnRenamed("global_df", "a")
                       .join(new_tot.withColumnRenamed("global_df", "b"),
                             "term", "full_outer")
@@ -364,12 +307,7 @@ class StreamingIndexer:
         dead = []
         while man and int(man[-1]["start_shard"]) >= start:
             e = man.pop()
-            dead.append(e["path"])
-            if "pos_path" in e:
-                dead.append(e["pos_path"])
-        entry = {"path": seg_dir, "start_shard": int(start)}
-        if pos_dir is not None:
-            entry["pos_path"] = pos_dir
+            dead += [e[k] for k in ("path", "pos_path") if k in e]
         man.append(entry)
         meta.update({"n_docs": new_n, "sum_dl": new_sum,
                      "next_doc_id": base + n_new,
@@ -379,9 +317,10 @@ class StreamingIndexer:
         # per-batch lineage row (north rule: every stage leaves lineage):
         # batch id, docs appended, segment bytes written, wall time
         wall_ms = int((time.time() - t_start) * 1000)
-        seg_bytes = self._dir_bytes(seg_dir, pos_dir)
+        seg_bytes = self._dir_bytes(entry["path"], entry.get("pos_path"))
         lineage = self.spark.createDataFrame(
-            [(f"batch_{batch_id}", "stream_append", int(start), seg_dir, "",
+            [(f"batch_{batch_id}", "stream_append", int(start),
+              entry["path"], "",
               int(n_new), int(seg_bytes), wall_ms, time.time())],
             LINEAGE_SCHEMA)
         lineage.write.mode("append").parquet(str(self.root / "_lineage"))
@@ -404,7 +343,7 @@ class StreamingIndexer:
         into the rewrite — the purge half of the LSM delete lifecycle
         (`SearchEngine.delete_docs` masks them at query time until this
         runs). Purged segments re-encode only where a tombstone lands in
-        their doc range (`packed._purge_segments`); term totals are
+        their doc range (`packed.purge_segments`); term totals are
         rebuilt from the surviving segments, and the meta corpus stats
         (n_docs / sum_dl, hence avgdl) shrink by the stats of the
         tombstoned docs still present (`packed.tombstone_doc_stats` —
@@ -454,8 +393,7 @@ class StreamingIndexer:
                 return cur_gen + 1   # unparseable: treat as newer, keep
         for p in self.root.iterdir():
             if (p.is_dir()
-                    and p.name.startswith(("segs_g", "packed_g", "totals_g",
-                                           "pos_g"))
+                    and p.name.startswith(("segs_g", "totals_g", "pos_g"))
                     and p.name not in referenced
                     and _gen_of(p.name) <= cur_gen):
                 shutil.rmtree(p, ignore_errors=True)
@@ -489,7 +427,7 @@ class StreamingIndexer:
                 src.unpersist()
                 return {"compacted": False, "entries": len(man),
                         "purged_docs": 0}
-            _purge_segments(src, tomb) \
+            purge_segments(src, tomb, TF_FAMILY) \
                 .write.mode("overwrite").parquet(str(self.root / out_dir))
             src.unpersist()
             # read the written output back for the count and the rebuilt
@@ -507,22 +445,20 @@ class StreamingIndexer:
             seg = self._segments(man).persist()
             seg.write.mode("overwrite").parquet(str(self.root / out_dir))
             n_segments = seg.count()
-            if old_tot.is_dir():
-                # no deletes: carry totals forward under the new
-                # generation name (packed() resolves totals by
-                # generation; content is unchanged)
-                (self.spark.read.parquet(str(old_tot))
-                 .write.mode("overwrite")
-                 .parquet(str(self.root / f"totals_g{gen}")))
+            # no deletes: carry totals forward under the new generation
+            # name (packed() resolves totals by generation; content is
+            # unchanged)
+            (self.spark.read.parquet(str(old_tot))
+             .write.mode("overwrite")
+             .parquet(str(self.root / f"totals_g{gen}")))
             seg.unpersist()
         new_entry = {"path": out_dir, "start_shard": 0}
         if all("pos_path" in e for e in man):
             # positional twin of the rewrite: shard-filtered union (the
             # purge gated by the same binary-search range test), one dir
-            from ..index.positions import purge_positions
             pos_src = self.positions_packed()
             if tomb.size:
-                pos_src = purge_positions(pos_src, tomb)
+                pos_src = purge_segments(pos_src, tomb, POS_FAMILY)
             pos_out = f"pos_g{gen}"
             pos_src.write.mode("overwrite").parquet(
                 str(self.root / pos_out))
@@ -531,11 +467,6 @@ class StreamingIndexer:
                                            if "pos_path" in e]
         meta.update({"generation": gen, "updated_at": time.time(),
                      "manifest": [new_entry],
-                     # id space stays monotone across purges: stamp the
-                     # high-water mark BEFORE shrinking the live count so
-                     # the next append never reuses a doc id
-                     "next_doc_id": int(meta.get("next_doc_id",
-                                                 meta["n_docs"])),
                      "n_docs": int(meta["n_docs"]) - n_del,
                      "sum_dl": int(meta["sum_dl"]) - dl_del})
         self._save_meta(meta)

@@ -59,22 +59,3 @@ def test_local_pack_rejects_scrambled_input(spark, built):
     with pytest.raises(Exception, match="interleaved posting runs"):
         build_packed_postings_local(scrambled, avgdl, shard_span=64).count()
 
-
-def test_salted_merge_equals_unsalted(spark):
-    """salt_buckets only re-groups work; merged segments must be
-    byte-identical to the unsalted merge."""
-    from mini_distributed_search_engine_spark.index.build import build_index
-    from mini_distributed_search_engine_spark.index.packed import merge_packed
-    from mini_distributed_search_engine_spark.sources.transcripts import (
-        synthesize_transcripts_pdf)
-    tr = spark.createDataFrame(synthesize_transcripts_pdf(40, seed=55))
-    idx = build_index(tr)
-    avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
-    packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=32)
-    key = lambda df: sorted(
-        (r["term"], r["shard_id"], bytes(r["doc_gaps"]), bytes(r["tfs"]),
-         bytes(r["dls"]), bytes(r["block_gap_ends"]))
-        for r in df.collect())
-    a = key(merge_packed(packed, level_factor=4))
-    b = key(merge_packed(packed, level_factor=4, salt_buckets=7))
-    assert a == b and len(a) > 0

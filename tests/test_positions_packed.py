@@ -13,9 +13,9 @@ from mini_distributed_search_engine_spark.functions.analyzer import (
 from mini_distributed_search_engine_spark.index.build import (
     build_index, with_stable_doc_ids)
 from mini_distributed_search_engine_spark.index.packed import (
-    build_packed_postings, merge_packed)
+    TF_FAMILY, build_packed_postings, merge_packed, merge_segments)
 from mini_distributed_search_engine_spark.index.positions import (
-    build_packed_positions, unpack_positions)
+    POS_FAMILY, build_packed_positions, unpack_positions)
 from mini_distributed_search_engine_spark.query.bm25 import Query
 from mini_distributed_search_engine_spark.query.phrase import (
     phrase_match, phrase_match_packed)
@@ -218,6 +218,40 @@ def test_positions_merge_levels(spark, built):
     lvl = _key_rows(phrase_match_packed(spark, merged, PHRASE_QUERIES),
                     ("query_id", "rank", "doc_id", "n_occ"))
     assert lvl == base
+
+
+@pytest.mark.parametrize("level_factor", [1, 4])
+@pytest.mark.parametrize("family", ["tf", "positions"])
+def test_merge_streams_equal_fresh_encode(spark, built, family, level_factor):
+    """A merge concatenates the right streams: per (term, shard), the
+    merged doc_gaps and the family's two blobs, plus df / n_pos /
+    first_doc / last_doc, equal a fresh encode at span * level_factor.
+    level_factor 1 is an append boundary: docs below and above a cut in
+    the middle of a shard are encoded apart, and the merge splices the
+    two copies of that shard."""
+    idx, avgdl, pos = built
+    span = 64
+    if family == "tf":
+        rows, fam = idx.term_doc_tf, TF_FAMILY
+        encode = lambda df, s: build_packed_postings(df, avgdl, shard_span=s)
+    else:
+        rows, fam = pos, POS_FAMILY
+        encode = lambda df, s: build_packed_positions(df, shard_span=s)
+    if level_factor == 1:
+        cut = 150  # inside shard 2 (docs 128-191)
+        segs = encode(rows.where(F.col("doc_id") < cut), span).unionByName(
+            encode(rows.where(F.col("doc_id") >= cut), span))
+    else:
+        segs = encode(rows, span)
+    merged = merge_segments(segs, fam, level_factor)
+    cols = [c for c in ("term", "shard_id", *fam.streams, "df", "n_pos",
+                        "first_doc", "last_doc") if c in fam.cols]
+    key = lambda df: sorted(
+        tuple(bytes(r[c]) if c in fam.streams else r[c] for c in cols)
+        for r in df.select(*cols).collect())
+    got = key(merged)
+    assert got == key(encode(rows, span * level_factor))
+    assert len(got) < segs.count()  # some segments were really spliced
 
 
 def test_positions_purge(spark, built):

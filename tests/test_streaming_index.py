@@ -6,13 +6,17 @@ concatenated input."""
 from __future__ import annotations
 
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from mini_distributed_search_engine_spark.index.build import build_index
 from mini_distributed_search_engine_spark.index.packed import (
     build_packed_postings, unpack_to_rows)
+from mini_distributed_search_engine_spark.index.positions import (
+    unpack_positions)
 from mini_distributed_search_engine_spark.query.bm25 import Query
 from mini_distributed_search_engine_spark.query.wand import wand_topk
 from mini_distributed_search_engine_spark.sources.transcripts import (
@@ -222,6 +226,94 @@ def test_stream_with_positions_matches_batch(spark, tmp_path):
     assert all(r["doc_id"] not in set(tomb) for r in res)
     assert n_phrase >= 0  # phrase path exercised pre-compaction
     pos_rows.unpersist()
+
+
+_COMPACT_CRASHES = ("after_segs_write", "after_pos_write", "after_meta_flip")
+
+
+def _stream_state(ix: StreamingIndexer) -> dict:
+    """What a compaction must leave: the TF and positional rows, the
+    per-segment df/global_df, the meta corpus stats and id high-water
+    mark, and the set of segment/totals directories."""
+    meta = ix._meta()
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+    return {
+        "tf": rows(unpack_to_rows(ix.packed())),
+        "df": rows(ix.packed().select("term", "shard_id", "df",
+                                      "global_df")),
+        "pos": rows(unpack_positions(ix.positions_packed())),
+        "meta": {k: meta[k] for k in ("n_docs", "sum_dl", "next_doc_id")},
+        "dirs": sorted(p.name for p in ix.root.iterdir()
+                       if p.name.startswith(("segs_g", "pos_g", "totals_g"))),
+    }
+
+
+@pytest.fixture(scope="module")
+def compact_crashes(spark, tmp_path_factory):
+    """A positional stream root with two manifest entries (the second
+    batch splices the boundary shard), compacted once with tombstones
+    while the root is copied at three points: after the segs_g write;
+    after the pos_g write, before the _meta.json flip; after the flip,
+    before lineage and GC. A copy is the on-disk state a process killed
+    there leaves behind. Each copy is healed by the same
+    compact(tombstones=...) call, in a thread pool. Yields the healed
+    state per crash point and the clean compaction's state."""
+    base = tmp_path_factory.mktemp("compact_crash")
+    root = base / "root"
+    pdf = synthesize_transcripts_pdf(12, seed=21)  # 48 turns
+    ix = StreamingIndexer(spark, str(root), shard_span=16,
+                          with_positions=True)
+    for i, (lo, hi) in enumerate([(0, 20), (20, 48)]):
+        ix.process_batch(spark.createDataFrame(pdf.iloc[lo:hi]), i)
+    assert len(ix._manifest(ix._meta())) == 2
+    tomb = [3, 17, 19, 30, 45]
+    copies = {}
+
+    def snap(point: str) -> None:
+        copies[point] = base / point
+        shutil.copytree(root, copies[point])
+
+    write_parquet = DataFrameWriter.parquet
+    save_meta = StreamingIndexer._save_meta
+
+    def parquet(writer, path, *args, **kwargs):
+        write_parquet(writer, path, *args, **kwargs)
+        if Path(path).name.startswith("segs_g"):
+            snap("after_segs_write")
+        elif Path(path).name.startswith("pos_g"):
+            snap("after_pos_write")
+
+    def flip(indexer, meta):
+        save_meta(indexer, meta)
+        snap("after_meta_flip")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", parquet)
+        mp.setattr(StreamingIndexer, "_save_meta", flip)
+        assert ix.compact(tombstones=tomb)["purged_docs"] == len(tomb)
+    assert set(copies) == set(_COMPACT_CRASHES)
+    clean = _stream_state(ix)
+    assert not {r[1] for r in clean["tf"]} & set(tomb)
+
+    def heal(copy: Path) -> dict:
+        healed = StreamingIndexer(spark, str(copy), shard_span=16)
+        healed.compact(tombstones=tomb)
+        return _stream_state(healed)
+
+    with ThreadPoolExecutor(3) as pool:
+        healed = dict(zip(copies, pool.map(heal, copies.values(),
+                                           timeout=600)))
+    yield healed, clean
+    shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.mark.parametrize("point", _COMPACT_CRASHES)
+def test_compact_crash_matrix(compact_crashes, point):
+    """A compact(tombstones=...) killed after any of its writes or after
+    its meta flip is healed by the same call: rows, stats and directories
+    equal a clean compaction's."""
+    healed, clean = compact_crashes
+    assert healed[point] == clean
 
 
 def test_stream_positions_flag_mismatch_raises(spark, tmp_path):
