@@ -21,9 +21,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from mini_distributed_search_engine_spark import oracle as O
-from mini_distributed_search_engine_spark import oracle_ml as OM
-from mini_distributed_search_engine_spark.functions import dedup as D
-from mini_distributed_search_engine_spark.functions import similarity as S
 from mini_distributed_search_engine_spark.functions import textstats as TS
 from mini_distributed_search_engine_spark.index.build import build_index
 from mini_distributed_search_engine_spark.index.packed import (
@@ -309,8 +306,8 @@ def _bm25_proximity_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 adjacent-term bigrams over the analyzed corpus — phrase/
-    collocation statistics for training-data analysis. Engine path:
-    fused shifted-array pass with per-partition partial counts
+    collocation statistics over the analyzer's term sequence. Engine
+    path: fused shifted-array pass with per-partition partial counts
     (O(bigram-vocab) rows shuffled); oracle path: positional self-join —
     two algorithms, one answer."""
     from mini_distributed_search_engine_spark.functions.analyzer import (
@@ -327,27 +324,6 @@ def _text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("t2").asc())
     return (top.withColumn("rank", F.row_number().over(w).cast("int"))
             .select("rank", "t1", "t2", "cnt"))
-
-
-def _docs_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-source downsampling via a 32-bit md5 hash gate —
-    the reproducible curation-sampling primitive (src0 kept at 10%, src1
-    at 25%, everything else at 50%); a pure narrow filter at any scale."""
-    from mini_distributed_search_engine_spark.functions.sampling import (
-        stratified_sample)
-    return stratified_sample(_docs(spark, sf_dir), "source",
-                             {"src0": 10, "src1": 25}, 50,
-                             "doc_id").select("doc_id", "source", "lang")
-
-
-def _docs_sample_topk_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-BUDGET companion to the rate gate: exactly 5 docs per source,
-    chosen by deterministic hash rank (WindowGroupLimit keeps per-partition
-    top-k heaps instead of sorting whole strata)."""
-    from mini_distributed_search_engine_spark.functions.sampling import (
-        topk_per_stratum)
-    return topk_per_stratum(_docs(spark, sf_dir), "source", 5,
-                            "doc_id").select("doc_id", "source", "lang")
 
 
 def _term_suggestions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,151 +542,6 @@ def _bm25_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "conv_rank", "conv_id", "doc_id", "score"))
 
 
-_PII_AUG_SQL = ("' contact user' || CAST(doc_id AS VARCHAR) || "
-                "'@example.com call 555-123-4567 from 10.0.0.' || "
-                "CAST(doc_id % 256 AS VARCHAR)")
-
-
-def _text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing gate: the synthetic corpus contains no PII, so the
-    entry plants a deterministic email / phone / IPv4 per doc (mirrored
-    verbatim in the oracle's SQL suffix) and asserts the redacted text
-    and per-category counts match DuckDB running the identical regexes."""
-    docs = _docs(spark, sf_dir)
-    aug = docs.select("doc_id", F.concat(
-        F.coalesce(F.col("text"), F.lit("")),
-        F.lit(" contact user"), F.col("doc_id").cast("string"),
-        F.lit("@example.com call 555-123-4567 from 10.0.0."),
-        (F.col("doc_id") % 256).cast("string")).alias("text"))
-    return TS.redact_pii(aug)
-
-
-def _text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-gram benchmark decontamination: flag corpus docs sharing any word
-    3-gram with a held-out 'benchmark' slice (doc_id % 97 == 0 — a
-    deterministic self-contained stand-in for an external eval suite).
-    k=3 because the synthetic docs are ~50 tokens; the API default is the
-    published 13-gram recipe (functions/dedup.py::decontaminate)."""
-    docs = _docs(spark, sf_dir)
-    bench = docs.where(F.col("doc_id") % 97 == 0)
-    corpus = docs.where(F.col("doc_id") % 97 != 0)
-    return D.decontaminate(corpus, bench, k=3)
-
-
-def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs -> duplicate GROUPS: connected components (iterative
-    min-label propagation) over the LSH near-dup edge list; oracle is the
-    same fixpoint as a DuckDB recursive CTE."""
-    from mini_distributed_search_engine_spark.operators.components import (
-        connected_components)
-    emb = _emb(spark, sf_dir)
-    edges = S.embedding_near_dup_lsh(emb).select("vec_a", "vec_b")
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    return (connected_components(nodes, edges, a_col="vec_a", b_col="vec_b")
-            .select(F.col("node").alias("vec_id"),
-                    F.col("component").cast("long").alias("component")))
-
-
-def _dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate-group fixpoint as `dedup_components`, computed with
-    the small-star/large-star algorithm (O(log^2 n) rounds independent of
-    graph diameter — the deep-graph scale path). Identical oracle: the
-    component label is the min vec_id reachable, however it is computed."""
-    from mini_distributed_search_engine_spark.operators.components import (
-        connected_components_star)
-    emb = _emb(spark, sf_dir)
-    edges = S.embedding_near_dup_lsh(emb).select("vec_a", "vec_b")
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    return (connected_components_star(nodes, edges,
-                                      a_col="vec_a", b_col="vec_b")
-            .select(F.col("node").alias("vec_id"),
-                    F.col("component").cast("long").alias("component")))
-
-
-def _dedup_components_star_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-star/large-star CC on a DEEP graph at the gate: a
-    deterministic path fixture (chains of 128 consecutive vec_ids,
-    diameter 127) where min-label propagation would need 127 rounds — far
-    past its 25-round guard, which a pytest proves raises on this very
-    edge set. Star-CC converges in O(log^2 n) rounds regardless; the
-    oracle is the same reachability fixpoint as a recursive CTE."""
-    from mini_distributed_search_engine_spark.operators.components import (
-        connected_components_star, derived_path_edges)
-    emb = _emb(spark, sf_dir)
-    edges = derived_path_edges(emb.select("vec_id"), chain=128)
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    return (connected_components_star(nodes, edges, a_col="va", b_col="vb")
-            .select(F.col("node").alias("vec_id"),
-                    F.col("component").cast("long").alias("component")))
-
-
-def _ivf_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k against the centroid_id-partitioned AT-REST layout:
-    inverted lists are written `partitionBy("centroid_id")`, the probed
-    centroid ids become a literal IN on the scan, and Catalyst prunes
-    unprobed partition directories before any file opens (per-query IO ~
-    n_probe/n_centroids of the corpus). Oracle identical to
-    `embed_ivf_ann_topk` — the layout changes IO, not ranks."""
-    import shutil
-    import tempfile
-    emb = _emb(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="mdse_ivf_partitioned_")
-    try:
-        S.ivf_write_partitioned(S.ivf_assign(emb), root)
-        out = S.ivf_partitioned_topk(spark, root, emb)
-        # localize the 30-row result so the scratch layout can be removed
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF maintenance: build the partitioned layout from the
-    FIRST half of the embeddings, append the second half against the
-    frozen centroids (`ivf_append_partitioned` — O(new vectors), only
-    touched partition dirs gain files), then query. Same oracle as the
-    one-shot layout: the ingestion path changes, the ranks must not.
-    (The seed centroids, vec_id < n_centroids, live in the first half by
-    construction, so the frozen frame equals the oracle's.)"""
-    import shutil
-    import tempfile
-    emb = _emb(spark, sf_dir)
-    half = emb.agg(F.max("vec_id")).collect()[0][0] // 2
-    cents = S._resolve_centroids(emb, S.N_CENTROIDS, None)
-    root = tempfile.mkdtemp(prefix="mdse_ivf_append_")
-    try:
-        S.ivf_write_partitioned(
-            S.ivf_assign(emb.where(F.col("vec_id") <= half),
-                         centroids=cents), root)
-        S.ivf_append_partitioned(emb.where(F.col("vec_id") > half),
-                                 root, centroids=cents)
-        out = S.ivf_partitioned_topk(spark, root, emb, centroids=cents)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid lexical+semantic retrieval: BM25 and embedding-cosine
-    candidate lists fused with RRF (K=60)."""
-    from mini_distributed_search_engine_spark.query.hybrid import hybrid_topk
-    idx = _index(spark, sf_dir, stem=True)
-    return hybrid_topk(spark, idx.term_doc_tf, idx.term_stats,
-                       idx.doc_stats, _emb(spark, sf_dir))
-
-
-def _hybrid_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving-shaped hybrid retrieval: the semantic leg is IVF-flat ANN
-    (probe-pruned, corpus-scan-free) instead of the exact cosine pass —
-    the 100 TB fusion path. Own oracle (IVF CTEs nested in the fusion);
-    recall vs the exact-leg hybrid is pytest-bounded."""
-    from mini_distributed_search_engine_spark.query.hybrid import (
-        hybrid_ann_topk)
-    idx = _index(spark, sf_dir, stem=True)
-    return hybrid_ann_topk(spark, idx.term_doc_tf, idx.term_stats,
-                           idx.doc_stats, _emb(spark, sf_dir))
-
-
 def _doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 characteristic terms per doc by tf*ln(N/df) — the keyword-
     extraction labeling primitive, computed from the index's own tables."""
@@ -798,25 +629,25 @@ _R5_WINDOW = (
     "transcripts",
     # encoder code changed since their newest (r4) driver row
     "packed_roundtrip", "packed_purge_roundtrip", "streaming_index_roundtrip",
-    # the first five r4-latest entries, registry source order
+    # r4-latest entries, registry source order, up to the 50th slot (the
+    # last seven flame_* entries stay outside)
     "pagerank_fixed", "pagerank_converged", "doc_keywords_bucketed",
-    "text_repetition", "term_doc_tf",
+    "term_doc_tf", "bm25_topk_hydrated", "phrase_match",
+    "term_doc_tf_nostem", "bm25_topk_and", "tfidf_blend_topk",
+    "term_suggestions", "tfidf_rerank_topk", "bm25_topk_nostem",
+    "flame_groupby_salted", "flame_parallelize", "flame_scan_filter_project",
+    "flame_wordcount", "flame_distinct", "flame_join", "flame_fold",
+    "flame_groupby",
     # carried over from the previous window
-    "embed_kmeans_centroids", "doc_keywords", "related_terms",
-    "text_token_counts", "text_unigram_logppl", "text_bigrams",
-    "docs_sample_stratified", "docs_sample_topk_stratum",
-    "text_lang_id", "text_quality", "doc_fingerprint", "packed_pfd_roundtrip",
+    "doc_keywords", "related_terms", "text_bigrams", "packed_pfd_roundtrip",
     "docs_stable_ids", "term_stats", "doc_stats",
     "bm25_topk_collapsed", "term_positions", "index_lineage",
-    "packed_incremental_roundtrip", "dedup_exact", "dedup_lsh_candidates",
-    "dedup_components", "dedup_components_star", "embed_ivf_ann_topk",
-    "embed_ivf_partitioned_topk",
+    "packed_incremental_roundtrip",
     "positions_packed_roundtrip", "phrase_match_packed",
     "bm25_topk_proximity_wand", "span_near_match",
     "streaming_positions_roundtrip", "index_purge_roundtrip",
     "bm25_topk", "bm25_topk_filtered",
     "bm25_topk_proximity", "bm25_topk_wand",
-    "text_redact_pii",
     "bm25_topk_and_wand", "bm25_topk_filtered_wand",
     "bm25_topk_tombstoned_wand",
     # never had a driver row
@@ -849,19 +680,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # NEW round 4: doc-bucketed layout twin (zero-exchange window)
         "doc_keywords_bucketed": _doc_keywords_bucketed,
         "related_terms": _related_terms,
-        "text_token_counts": lambda s, d: TS.token_counts(_docs(s, d)),
-        # NEW round 4: PII scrubbing + repetition quality gate
-        "text_redact_pii": _text_redact_pii,
-        "text_repetition": lambda s, d: TS.repetition_stats(_docs(s, d)),
-        "text_unigram_logppl": lambda s, d: TS.unigram_logppl(
-            _index(s, d, stem=True).term_doc_tf),
-        # NEW round 3: collocation stats + deterministic curation sampling
+        # NEW round 3: collocation stats
         "text_bigrams": _text_bigrams,
-        "docs_sample_stratified": _docs_sample_stratified,
-        "docs_sample_topk_stratum": _docs_sample_topk_stratum,
-        "text_lang_id": lambda s, d: TS.lang_id(_docs(s, d)),
-        "text_quality": lambda s, d: TS.quality_score(_docs(s, d)),
-        "doc_fingerprint": lambda s, d: TS.doc_fingerprint(_docs(s, d)),
         # --- part 3: core fulltext pipeline (double-green; kept fresh) ---
         "transcripts": _q_transcripts,
         "docs_stable_ids": _q_docs(stem=True),
@@ -906,27 +726,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # NEW round 5: stream-maintained positional index, same oracle
         # family as term_positions
         "streaming_positions_roundtrip": _streaming_positions_roundtrip,
-        "hybrid_rrf_topk": _hybrid_topk,
-        # NEW round 4: IVF-ANN semantic leg (the serving-path fusion)
-        "hybrid_rrf_ann_topk": _hybrid_ann_topk,
-        "dedup_exact": lambda s, d: D.exact_dedup(_docs(s, d)),
-        "dedup_lsh_candidates": lambda s, d: D.lsh_candidate_pairs(
-            D.minhash_signatures(_docs(s, d))),
-        "dedup_components": _dedup_components,
-        # NEW round 3: deep-diameter CC path, same fixpoint oracle
-        "dedup_components_star": _dedup_components_star,
-        # NEW round 4: star-CC on a deep-diameter (127) path fixture
-        "dedup_components_star_deep": _dedup_components_star_deep,
-        "embed_ivf_ann_topk": lambda s, d: S.ivf_ann_topk(_emb(s, d)),
-        # NEW round 3: partition-pruned at-rest IVF layout, same rank oracle
-        "embed_ivf_partitioned_topk": _ivf_partitioned_topk,
-        # NEW round 4: incremental IVF append, same rank oracle again
-        "embed_ivf_append_topk": _ivf_append_topk,
-        # iterative Lloyd loop, oracle = the same loop unrolled as SQL CTEs
-        "embed_kmeans_centroids": lambda s, d: (
-            S.kmeans_fit(_emb(s, d))
-            .select(F.col("centroid_id").cast("int").alias("centroid_id"),
-                    F.posexplode("c_emb").alias("dim", "value"))),
         "term_doc_tf_nostem": _q_term_doc_tf(stem=False),
         "bm25_topk_and": _bm25_and,
         "tfidf_blend_topk": _tfidf_blend,
@@ -949,27 +748,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "flame_count": flame.count_rows,
         "flame_mappartitions": flame.mappartitions_token_count,
         "flame_save_roundtrip": flame.save_roundtrip,
-        # training-data pipeline ops (dedup / similarity / text)
-        "dedup_minhash_sigs": lambda s, d: D.minhash_signatures(_docs(s, d)),
-        "dedup_ngram_jaccard": lambda s, d: D.ngram_jaccard_pairs(_docs(s, d)),
-        "dedup_simhash": lambda s, d: D.simhash(_docs(s, d)),
-        # NEW round 4: n-gram benchmark decontamination (broadcast bench side)
-        "text_decontaminate": _text_decontaminate,
-        "embed_cosine_topk": lambda s, d: S.cosine_topk(_emb(s, d)),
-        "embed_lsh_ann_topk": lambda s, d: S.lsh_ann_topk(_emb(s, d)),
-        # brute-force embed_near_dup was demoted to a pytest-only recall
-        # oracle in round 3 (tests/test_training_ops.py) — its LSH twin is
-        # the production path and holds the gate row.
-        "embed_near_dup_lsh": lambda s, d: S.embedding_near_dup_lsh(_emb(s, d)),
     })
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def oracle_sql() -> dict[str, str]:
@@ -979,16 +758,7 @@ def oracle_sql() -> dict[str, str]:
         "doc_keywords": O.sql_doc_keywords(stem=True),
         "doc_keywords_bucketed": O.sql_doc_keywords(stem=True),
         "related_terms": O.sql_related_terms(stem=True),
-        "text_token_counts": OM.sql_token_counts(),
-        "text_redact_pii": OM.sql_redact_pii(aug_suffix_sql=_PII_AUG_SQL),
-        "text_repetition": OM.sql_repetition_stats(),
-        "text_unigram_logppl": O.sql_unigram_logppl(stem=True),
         "text_bigrams": O.sql_text_bigrams(stem=True),
-        "docs_sample_stratified": OM.sql_stratified_sample(),
-        "docs_sample_topk_stratum": OM.sql_topk_per_stratum(),
-        "text_lang_id": OM.sql_lang_id(),
-        "text_quality": OM.sql_quality_score(),
-        "doc_fingerprint": OM.sql_doc_fingerprint(),
         "transcripts": O.sql_transcripts(),
         "docs_stable_ids": O.sql_docs(stem=True),
         "term_doc_tf": O.sql_term_doc_tf(stem=True),
@@ -1033,17 +803,6 @@ def oracle_sql() -> dict[str, str]:
             stem=True, purge_where="doc_id % 13 <> 0"),
         "streaming_index_roundtrip": O.sql_term_doc_tf_dl(stem=True),
         "streaming_positions_roundtrip": O.sql_term_positions(stem=True),
-        "hybrid_rrf_topk": OM.sql_hybrid_topk(),
-        "hybrid_rrf_ann_topk": OM.sql_hybrid_topk(ann=True),
-        "dedup_exact": OM.sql_dedup_exact(),
-        "dedup_lsh_candidates": OM.sql_lsh_candidates(),
-        "dedup_components": OM.sql_dedup_components(),
-        "dedup_components_star": OM.sql_dedup_components(),
-        "dedup_components_star_deep": OM.sql_components_deep_path(),
-        "embed_ivf_ann_topk": OM.sql_ivf_ann_topk(),
-        "embed_ivf_partitioned_topk": OM.sql_ivf_ann_topk(),
-        "embed_ivf_append_topk": OM.sql_ivf_ann_topk(),
-        "embed_kmeans_centroids": OM.sql_kmeans_centroids(),
         "term_doc_tf_nostem": O.sql_term_doc_tf(stem=False),
         "bm25_topk_and": O.sql_bm25_topk_conjunctive(stem=True),
         "tfidf_blend_topk": O.sql_tfidf_blend_topk(stem=True),
@@ -1109,11 +868,4 @@ def oracle_sql() -> dict[str, str]:
             "SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS cnt, "
             "sum(l_quantity) AS sum_qty FROM lineitem "
             "GROUP BY l_returnflag, l_linestatus"),
-        "dedup_minhash_sigs": OM.sql_minhash_signatures(),
-        "dedup_ngram_jaccard": OM.sql_ngram_jaccard(),
-        "dedup_simhash": OM.sql_simhash(),
-        "text_decontaminate": OM.sql_decontaminate(),
-        "embed_cosine_topk": OM.sql_cosine_topk(),
-        "embed_lsh_ann_topk": OM.sql_lsh_ann_topk(),
-        "embed_near_dup_lsh": OM.sql_embedding_near_dup_lsh(),
     })

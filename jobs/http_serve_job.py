@@ -17,7 +17,6 @@ Routes (JSON replies):
   GET /phrase?q=<text>&k=10                            exact phrase match
   GET /proximity?q=<text>&k=10                         BM25 + closeness bonus
   GET /near?q=<text>&k=10&window=8                     all terms within window
-  GET /hybrid?q=<text>&vec=<id>&k=10                   BM25 + IVF-ANN RRF
   GET /words?prefix=<p>&n=10                           autocomplete by df
   GET /stats                                           corpus stats + p50
   POST /delete?ids=1,2,3                               tombstone doc ids
@@ -54,7 +53,7 @@ from mini_distributed_search_engine_spark.session import get_spark
 def _row_json(r) -> dict:
     d = r.asDict()
     return {k: d[k] for k in
-            ("rank", "doc_id", "score", "rrf", "n_occ", "min_span",
+            ("rank", "doc_id", "score", "n_occ", "min_span",
              "conv_id", "turn_idx", "role", "snippet") if k in d}
 
 
@@ -80,13 +79,6 @@ def make_handler(engine: SearchEngine, lats):   # lats: bounded deque
         return engine.search(q["q"], k=_pos_int(q, "k", 10), mode=mode,
                              role=q.get("role"))
 
-    def hybrid(q: dict) -> list:
-        if not hasattr(engine, "_ivf"):
-            raise ValueError("hybrid leg not warmed: start with "
-                             "--embeddings/--ivf-root")
-        return engine.search_hybrid(q["q"], query_vec_id=int(q["vec"]),
-                                    k=_pos_int(q, "k", 10))
-
     # path -> (required params, engine call, reply key); "rows" replies
     # carry serialized result rows, every reply carries took_sec
     routes = {
@@ -98,8 +90,6 @@ def make_handler(engine: SearchEngine, lats):   # lats: bounded deque
         "/near": (("q",), lambda q: engine.search_near(
             q["q"], k=_pos_int(q, "k", 10),
             window=_pos_int(q, "window", 8)), "rows"),
-        # vec = query embedding id from the upstream encoder
-        "/hybrid": (("q", "vec"), hybrid, "rows"),
         "/words": ((), lambda q: engine.suggest(
             q.get("prefix", ""), n=_pos_int(q, "n", 10)), "terms"),
     }
@@ -225,23 +215,13 @@ def main() -> None:
                     help="root of a write_packed_bucketed layout: the "
                          "packed cache is the shard-bucketed scan as-is "
                          "(no warmup repartition shuffle)")
-    ap.add_argument("--embeddings", default=None, metavar="PARQUET",
-                    help="embeddings table (vec_id, embedding) aligned to "
-                         "doc ids — enables the /hybrid route")
-    ap.add_argument("--ivf-root", default=None, metavar="PATH",
-                    help="centroid_id-partitioned IVF layout root (written "
-                         "at warmup if absent; requires --embeddings)")
     args = ap.parse_args()
-    if bool(args.embeddings) != bool(args.ivf_root):
-        ap.error("--embeddings and --ivf-root go together")
 
     spark = get_spark("mdse-http-serve")
     t0 = time.perf_counter()
     engine = SearchEngine(spark, args.index,
                           packed_bucketed_path=args.packed_bucketed)
     engine.search("warmup probe", k=1)    # prime codegen + the join path
-    if args.embeddings:
-        engine.warm_hybrid(args.embeddings, args.ivf_root)
     srv = serve_http(engine, args.port)
     print(f"ready\tport={srv.server_address[1]}\t"
           f"warmup={round(time.perf_counter() - t0, 2)}s", flush=True)

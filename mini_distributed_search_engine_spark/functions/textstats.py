@@ -1,121 +1,13 @@
-"""Text-analysis operators: language ID, quality scoring, fingerprinting.
-
-All JVM-side (codegen'd expressions), all DuckDB-oracle-able. Token counting
-lives in `operators/flame.py::mappartitions_token_count` (doubles as the
-mapInPandas operator demo).
+"""Keyword operators over the index's own tables: per-doc top-n
+characteristic terms (`doc_keywords`) and PMI related-term discovery
+(`related_terms`). Both read `term_doc_tf`/`term_stats`, run JVM-side and
+have DuckDB oracles (`oracle.sql_doc_keywords`/`sql_related_terms`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .analyzer import normalize_text
-from .dedup import word_shingles
-
-# tiny per-language function-word lists for the heuristic voter
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "a", "of", "and", "to", "in", "is", "you", "that", "it"),
-    "de": ("der", "die", "das", "und", "ist", "nicht", "ein", "zu", "ich"),
-    "fr": ("le", "la", "les", "et", "est", "une", "je", "que", "pas"),
-    "es": ("el", "la", "los", "y", "es", "una", "que", "no", "por"),
-}
-
-
-def token_stats(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """(doc_id, n_tokens, tok) exploded base for the ops below."""
-    return (docs.select(F.col(id_col).alias("doc_id"),
-                        F.split(normalize_text(F.col(text_col)), r"\s+").alias("toks"))
-            .select("doc_id", F.size("toks").alias("n_tokens"),
-                    F.explode("toks").alias("tok"))
-            .where(F.col("tok") != ""))
-
-
-# GPT-2-style pre-tokenizer shape, lookahead-free so Java regex (Spark) and
-# RE2 (DuckDB) agree: optional leading space + a letter run / digit run /
-# punctuation run. Both engines use leftmost-first alternation here.
-BPE_TOKEN_RE = r" ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+"
-
-
-def token_counts(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """(doc_id, n_ws_tokens, n_bpe_tokens): whitespace token count plus a
-    BPE-ish pre-tokenizer count (the unit LLM-pipeline budgets are priced
-    in). Pure codegen'd expressions (split / regexp_extract_all / size) —
-    no Python in the hot path, null text counts as zero tokens."""
-    txt = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    ws = F.size(F.filter(F.split(F.trim(txt), r"\s+"),
-                         lambda x: x != F.lit("")))
-    bpe = F.size(F.regexp_extract_all(txt, F.lit(BPE_TOKEN_RE), F.lit(0)))
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       ws.cast("long").alias("n_ws_tokens"),
-                       bpe.cast("long").alias("n_bpe_tokens"))
-
-
-# PII surface a curation pipeline must scrub before training. Patterns are
-# deliberately dialect-portable (no lookarounds): Java regex (Spark) and
-# RE2 (DuckDB) agree on \b, \d, character classes and bounded repetition,
-# so the oracle can run the IDENTICAL expressions. Applied in order on the
-# evolving string; the replacement tokens contain no digits or '@', so a
-# later pattern can never match inside an earlier redaction.
-PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
-    ("email", r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}", "[EMAIL]"),
-    ("phone", r"\b\d{3}-\d{3}-\d{4}\b", "[PHONE]"),
-    # valid octets only (0-255): a naive \d{1,3} quad also eats semver-ish
-    # strings like '1.2.3.400' — over-redaction the curation funnel should
-    # not inflict on non-PII text (ADVICE r4). The 0* prefix keeps
-    # zero-padded quads ('192.168.001.007', syslog/firewall exports)
-    # redacted — recall-biased where it IS an address, strict where the
-    # trailing octet overflows (no '400').
-    ("ipv4", r"\b0*(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)"
-             r"(\.0*(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)){3}\b", "[IPV4]"),
-)
-
-
-def redact_pii(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    """(doc_id, text_redacted, n_email, n_phone, n_ipv4): PII-scrubbed
-    text plus per-category match counts (counted on the ORIGINAL text, so
-    overlapping categories each report their own hits). Pure codegen'd
-    regexp_replace / regexp_extract_all — a narrow map with no shuffle,
-    the ideal 100 TB shape; run it before anything trains on the text."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    red = txt
-    counts = []
-    for name, pat, tok in PII_PATTERNS:
-        counts.append(F.size(F.regexp_extract_all(txt, F.lit(pat), F.lit(0)))
-                      .cast("long").alias(f"n_{name}"))
-        red = F.regexp_replace(red, pat, tok)
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       red.alias("text_redacted"), *counts)
-
-
-def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """(doc_id, n_words, dup_word_frac, dup_bigram_frac): within-document
-    repetition ratios (1 - distinct/total over words and word bigrams) —
-    the classic boilerplate/degenerate-text quality gate (Gopher-style
-    repetition filters). Entirely array expressions over the normalized
-    token array (split / array_distinct / transform): one narrow pass,
-    no explode, no shuffle."""
-    toks = F.filter(F.split(normalize_text(F.col(text_col)), r"\s+"),
-                    lambda x: x != F.lit(""))
-    bigrams = F.transform(
-        F.when(F.size(toks) >= 2, F.sequence(F.lit(1), F.size(toks) - 1))
-        .otherwise(F.array().cast("array<int>")),
-        lambda i: F.concat_ws(" ", F.element_at(toks, i),
-                              F.element_at(toks, i + 1)))
-    n = F.size(toks)
-    nd = F.size(F.array_distinct(toks))
-    nb = F.size(bigrams)
-    nbd = F.size(F.array_distinct(bigrams))
-    frac = lambda total, distinct: F.when(
-        total > 0, F.round(1.0 - distinct / total, 6)).otherwise(F.lit(0.0))
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       n.cast("long").alias("n_words"),
-                       frac(n, nd).alias("dup_word_frac"),
-                       frac(nb, nbd).alias("dup_bigram_frac"))
 
 
 def doc_keywords(term_doc_tf: DataFrame, term_stats: DataFrame,
@@ -169,80 +61,3 @@ def related_terms(term_doc_tf: DataFrame, term_stats: DataFrame,
                     F.round(F.log(F.col("n_ab") * F.lit(float(n_docs))
                                   / (F.col("n_a") * F.col("n_b"))), 6)
                     .alias("pmi")))
-
-
-def unigram_logppl(term_doc_tf: DataFrame) -> DataFrame:
-    """(doc_id, n_terms, log_ppl): per-doc log-perplexity under the
-    corpus's own unigram LM — log_ppl = -avg over token occurrences of
-    ln p(term), p(term) = corpus tf / total tf. The CCNet/Gopher-style
-    quality signal: boilerplate and keyword-stuffed docs score LOW
-    (predictable), lorem-ipsum-like noise scores HIGH. Two aggregations
-    over the existing TF table (corpus term totals broadcast back), all
-    JVM-side, rounded to 6dp."""
-    totals = term_doc_tf.groupBy("term").agg(
-        F.sum("tf").cast("double").alias("ctf"))
-    grand = totals.agg(F.sum("ctf").alias("g"))
-    scored = (term_doc_tf.join(totals, "term").crossJoin(F.broadcast(grand))
-              .select("doc_id", "tf",
-                      (F.col("tf") * -F.log(F.col("ctf") / F.col("g")))
-                      .alias("nll")))
-    return (scored.groupBy("doc_id")
-            .agg(F.sum("tf").cast("long").alias("n_terms"),
-                 F.round(F.sum("nll") / F.sum("tf"), 6).alias("log_ppl")))
-
-
-def lang_id(docs: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
-    """(doc_id, lang_pred, hits): function-word voting; ties broken by lang
-    name ascending; zero hits -> 'und'.
-
-    Single pass over the exploded tokens: one broadcast join against the
-    tiny (marker, lang) table votes for every language at once (a marker
-    shared by two languages matches twice, same as independent counts) —
-    not one scan per language."""
-    toks = token_stats(docs, id_col, text_col)
-    marker_rows = [(m, lang) for lang, ms in sorted(LANG_MARKERS.items())
-                   for m in ms]
-    markers = docs.sparkSession.createDataFrame(
-        marker_rows, "tok string, lang_pred string")
-    votes = (toks.join(F.broadcast(markers), "tok")
-             .groupBy("doc_id", "lang_pred")
-             .agg(F.count("*").cast("long").alias("hits")))
-    from pyspark.sql import Window
-    w = Window.partitionBy("doc_id").orderBy(F.col("hits").desc(),
-                                             F.col("lang_pred").asc())
-    best = (votes.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1).drop("rn"))
-    ids = docs.select(F.col(id_col).alias("doc_id"))
-    return (ids.join(best, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("lang_pred", F.lit("und")).alias("lang_pred"),
-                    F.coalesce("hits", F.lit(0)).cast("long").alias("hits")))
-
-
-def quality_score(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """(doc_id, n_tokens, uniq_ratio, mean_tok_len, quality): simple
-    length/diversity-based quality heuristic, deterministic and rounded."""
-    toks = token_stats(docs, id_col, text_col)
-    agg = toks.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_tokens"),
-        F.countDistinct("tok").cast("long").alias("n_uniq"),
-        F.avg(F.length("tok")).alias("mean_len"))
-    return agg.select(
-        "doc_id", "n_tokens",
-        F.round(F.col("n_uniq") / F.col("n_tokens"), 6).alias("uniq_ratio"),
-        F.round(F.col("mean_len"), 6).alias("mean_tok_len"),
-        F.round(F.least(F.col("n_tokens") / F.lit(50.0), F.lit(1.0))
-                * (F.col("n_uniq") / F.col("n_tokens")), 6).alias("quality"))
-
-
-def doc_fingerprint(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """(doc_id, fingerprint): winnowing-style content fingerprint = the
-    lexicographic min of the doc's k-gram shingle md5s. Identical prose
-    re-orderings differ; shared passages collide — the cheap first-pass
-    near-dup key."""
-    sh = word_shingles(docs, k, id_col, text_col)
-    return (sh.withColumn("h", F.md5("shingle"))
-            .groupBy("doc_id").agg(F.min("h").alias("fingerprint")))

@@ -216,7 +216,7 @@ def write_index_bucketed(term_doc_tf: DataFrame, term_stats: DataFrame,
 
     ``with_doc_bucketed=True`` additionally writes term_doc_tf bucketed by
     DOC_ID (``{prefix}_term_doc_tf_by_doc``): the per-doc analytics family
-    (doc_keywords' top-n window, related_terms, unigram_logppl groupBys)
+    (doc_keywords' top-n window, related_terms' groupBys)
     then plans with ZERO doc_id exchange — the O(postings) re-shuffle that
     otherwise sits in front of every per-doc window (VERDICT r3 finding;
     mapInPandas output partitioning is opaque to Catalyst, so only an

@@ -222,18 +222,6 @@ SELECT query_id, conv_rank, conv_id, doc_id, score
 FROM ranked WHERE conv_rank <= {topn}"""
 
 
-def sql_unigram_logppl(stem: bool = True) -> str:
-    # mirrors textstats.unigram_logppl over the analyzer CTEs
-    return analyzed_terms_ctes(stem) + """
-, tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf FROM sel GROUP BY 1, 2),
-tot AS (SELECT term, CAST(sum(tf) AS DOUBLE) AS ctf FROM tf GROUP BY 1),
-g AS (SELECT sum(ctf) AS g FROM tot)
-SELECT doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_terms,
-       round(sum(tf.tf * -ln(tot.ctf / g.g)) / sum(tf.tf), 6) AS log_ppl
-FROM tf JOIN tot USING (term) CROSS JOIN g
-GROUP BY doc_id"""
-
-
 def sql_term_suggestions(stem: bool = True, prefix: str = "s",
                          limit: int = 20) -> str:
     return analyzed_terms_ctes(stem) + f"""

@@ -88,11 +88,10 @@ class SearchEngine:
 
     def delete_docs(self, doc_ids) -> int:
         """Record query-time tombstones: the given doc_ids stop appearing
-        in every subsequent search (masked inside the packed kernels and
-        out of the hybrid semantic leg) WITHOUT touching
-        the at-rest index — a delete is O(1) metadata, the LSM write
-        discipline. Fold the accumulated set into the index with
-        `packed.purge_docs` (and `positions.purge_positions` for the
+        in every subsequent search (masked inside the packed kernels)
+        WITHOUT touching the at-rest index — a delete is O(1) metadata,
+        the LSM write discipline. Fold the accumulated set into the index
+        with `packed.purge_docs` (and `positions.purge_positions` for the
         positional side) at compaction time, then start a fresh engine
         on the purged index. Returns the total live tombstone count.
 
@@ -126,23 +125,6 @@ class SearchEngine:
         delete_docs (see its docstring)."""
         t = self._tombstones
         return sorted(t) if t else None
-
-    # Above this many live tombstones, DataFrame-side masking (the hybrid
-    # semantic leg) switches from a literal NOT IN (Catalyst folds it into
-    # the scan filter, zero extra exchange) to a broadcast anti-join: a
-    # literal list that grows without bound across /delete requests bloats
-    # the plan and can hit codegen/driver limits long before purge_docs
-    # compacts (ADVICE r4). The packed kernels' mask rides the task
-    # closure instead.
-    _TOMB_ISIN_MAX = 2048
-
-    def _mask_tomb(self, df: DataFrame, col: str, tomb: list[int]) -> DataFrame:
-        from pyspark.sql import functions as F
-        if len(tomb) <= self._TOMB_ISIN_MAX:
-            return df.where(~F.col(col).isin(tomb))
-        ids = F.broadcast(self.spark.createDataFrame(
-            [(int(t),) for t in tomb], f"{col} long"))
-        return df.join(ids, col, "left_anti")
 
     def search_batch(self, queries: tuple[Query, ...],
                      hydrate: bool = False, mode: str = "or",
@@ -187,11 +169,10 @@ class SearchEngine:
         return self._hydrate(out, "score") if hydrate else out
 
     def _hydrate(self, out: DataFrame, score_col: str) -> DataFrame:
-        """Attach display metadata to a rank list. LEFT join: a fused
-        hybrid list may carry a vec_id with no doc row if the embeddings
-        table drifted from the doc store — better a null-snippet row (the
-        inconsistency stays visible) than silently dropped ranks. For
-        BM25 lists every doc_id exists, so left == inner there."""
+        """Attach display metadata to a rank list. LEFT join: every ranked
+        doc_id has a doc row, so left == inner; should the doc store ever
+        drift from the index, a null-snippet row keeps the inconsistency
+        visible instead of silently dropping a rank."""
         from pyspark.sql import functions as F
         meta = self.docs.select("doc_id", "conv_id", "turn_idx", "role",
                                 F.substring("text", 1, 80).alias("snippet"))
@@ -206,98 +187,6 @@ class SearchEngine:
         # client-side sort of <= k rows: an orderBy would plan a sort job
         # even over the driver merge's LocalRelation
         return sorted(df.collect(), key=lambda r: r["rank"])
-
-    def warm_hybrid(self, embeddings_path: str, ivf_root: str,
-                    n_centroids: int = 8, n_probe: int = 2) -> None:
-        """Warm the semantic leg for `search_hybrid`: cache the embeddings
-        table, resolve the IVF centroids ONCE (localized — k x dim doubles),
-        and materialize the centroid_id-partitioned inverted lists at
-        ``ivf_root``. An existing layout is reused ONLY if its
-        `_ivf_meta.json` matches (same embeddings path, centroid count,
-        vector count) — a stale or foreign layout would silently serve
-        wrong candidates, so anything else is rewritten. After this, a
-        hybrid request is two small warm jobs (probe-pruned semantic scan
-        + packed-WAND lexical scan) plus the O(candidates) fusion."""
-        import json
-        import os
-        from pathlib import Path
-        from ..functions import similarity as S
-        if hasattr(self, "_emb"):
-            # re-warm: release the previous embeddings cache (a different
-            # path is a different logical plan — the new .cache() would
-            # not replace it, leaking executor memory per re-warm)
-            self._emb.unpersist()
-        emb = self.spark.read.parquet(embeddings_path)
-        self._emb = emb.cache()
-        n_vecs = int(self._emb.count())
-        cents = S._resolve_centroids(self._emb, n_centroids, None)
-        rows = [(int(r["centroid_id"]), [float(x) for x in r["c_emb"]])
-                for r in cents.collect()]
-        self._cents = self.spark.createDataFrame(
-            rows, "centroid_id int, c_emb array<double>")
-        meta = {"embeddings_path": os.path.abspath(embeddings_path),
-                "n_centroids": n_centroids, "n_vecs": n_vecs}
-        meta_path = Path(ivf_root) / "_ivf_meta.json"
-        reusable = (meta_path.exists()
-                    and json.loads(meta_path.read_text()) == meta)
-        if not reusable:
-            S.ivf_write_partitioned(
-                S.ivf_assign(self._emb, n_centroids, self._cents), ivf_root)
-            meta_path.write_text(json.dumps(meta))
-        # resolve the partitioned scan once: per-request re-reads would pay
-        # file-listing/schema resolution again; the probe filter still
-        # partition-prunes this (uncached — caching would materialize
-        # every partition and defeat the pruning)
-        self._ivf_df = self.spark.read.parquet(ivf_root)
-        self._ivf = (ivf_root, n_centroids, n_probe)
-
-    def search_hybrid(self, text: str, query_vec_id: int, k: int = 10,
-                      k_each: int = 20, hydrate: bool = True) -> list:
-        """Warm hybrid retrieval: packed-WAND BM25 lexical candidates +
-        IVF-ANN semantic candidates (the query's embedding looked up by
-        ``query_vec_id`` — embeddings come from an upstream encoder, so a
-        serving text has a precomputed vector id), fused with RRF. Same
-        fusion as `hybrid.hybrid_ann_topk` (shared `_fuse`); requires
-        `warm_hybrid` first. Unknown vec ids raise ValueError (-> HTTP
-        400) instead of silently degrading to a lexical-only ranking."""
-        if not hasattr(self, "_ivf"):
-            raise RuntimeError("call warm_hybrid(embeddings_path, ivf_root) "
-                               "before search_hybrid")
-        from ..functions import similarity as S
-        from .hybrid import RRF_K, _fuse
-        ivf_root, n_centroids, n_probe = self._ivf
-        # unknown vec ids surface as ValueError from the semantic leg's
-        # probe collect (similarity.ivf_partitioned_topk) — no extra
-        # per-request validation scan on the serving path
-        b = (self.search_batch((Query("q", text, k=k_each),), hydrate=False)
-             .select("query_id", "doc_id", "rank"))
-        c = S.ivf_partitioned_topk(self.spark, ivf_root, self._emb,
-                                   query_ids=(query_vec_id,), k=k_each,
-                                   n_centroids=n_centroids, n_probe=n_probe,
-                                   centroids=self._cents,
-                                   corpus_df=self._ivf_df)
-        tomb = self._tomb()
-        if tomb is not None:
-            # the semantic leg ranks vec_ids == doc_ids; tombstoned docs
-            # must not ride in through it (the lexical leg is masked
-            # inside search_batch). Re-rank the survivors so their RRF
-            # weights match a fresh engine on the purged index — a
-            # filtered-out rank-1 must promote rank-2 to 1/(RRF_K+1),
-            # not leave a gap. (The leg still supplies one fewer
-            # candidate per tombstone in its top-k_each; exact parity
-            # would push the mask inside the IVF scan, not worth it for
-            # the purge-soon tombstone window.)
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-            c = (self._mask_tomb(c, "vec_id", tomb)
-                 .withColumn("rank", F.row_number().over(
-                     Window.partitionBy("query_vec_id")
-                     .orderBy(F.col("cos").desc(), F.col("vec_id").asc()))))
-        out = _fuse(self.spark, b, c, (("q", text, query_vec_id),),
-                    k, RRF_K)
-        if hydrate:
-            out = self._hydrate(out, "rrf")
-        return out.orderBy("rank").collect()
 
     def _packed_positions_df(self) -> DataFrame:
         """Packed positional segments: the pipeline's committed

@@ -60,16 +60,15 @@ CAND_SCHEMA = T.StructType([
 class _Seg:
     """One (term, shard) segment with LAZY decode.
 
-    Nothing is decoded at construction (new index format): MaxScore term
-    ordering and the stop test use the STORED block-max metadata, rescaled
-    soundly for avgdl drift after incremental appends (tf_norm is increasing
-    in avgdl, and tf_norm(a_now) <= tf_norm(a_enc) * max(1, a_now/a_enc),
+    Nothing is decoded at construction: MaxScore term ordering and the
+    stop test use the STORED block-max metadata, rescaled soundly for
+    avgdl drift after incremental appends (tf_norm is increasing in
+    avgdl, and tf_norm(a_now) <= tf_norm(a_enc) * max(1, a_now/a_enc),
     always <= K1+1 — see codec.encode_postings). Posting bytes are decoded
     on demand: `full()` for driver terms, single 128-posting `block()`
     slices (via the stored per-block byte offsets) for lookup-only terms —
     a hot term consulted only at k candidate docs decodes ~k blocks instead
-    of up to shard_span postings. Old-format segments (no byte offsets)
-    fall back to eager full decode with exact derived bounds.
+    of up to shard_span postings.
     """
     __slots__ = ("idf", "df", "first_doc", "ub_norm", "avgdl",
                  "_gaps", "_tfb", "_dlb", "_block_last", "_block_ub",
@@ -86,21 +85,11 @@ class _Seg:
         self._dlb = bytes(r.dls)
         self._block_last = np.asarray(r.block_last_doc, dtype=np.int64)
         self._full = None
-        gap_ends = getattr(r, "block_gap_ends", None)
-        if gap_ends is None or (enc_avgdl := float(
-                getattr(r, "enc_avgdl", 0.0) or 0.0)) <= 0.0:
-            # old format: no offsets to skip with — decode eagerly, derive
-            # exact bounds from the decoded norms (original behavior)
-            self._gap_ends = self._tf_ends = self._dl_ends = None
-            docs, norms = self.full()
-            self.ub_norm = float(norms.max()) if norms.size else 0.0
-            self._block_ub = None
-            return
-        scale = max(1.0, avgdl / enc_avgdl)
+        scale = max(1.0, avgdl / float(r.enc_avgdl))
         self.ub_norm = min(K1 + 1.0, float(r.max_tf_norm) * scale)
         self._block_ub = np.minimum(
             K1 + 1.0, np.asarray(r.block_max_tf_norm, dtype=np.float64) * scale)
-        self._gap_ends = block_ends_array(bytes(gap_ends))
+        self._gap_ends = block_ends_array(bytes(r.block_gap_ends))
         self._tf_ends = block_ends_array(bytes(r.block_tf_ends))
         self._dl_ends = block_ends_array(bytes(r.block_dl_ends))
 
@@ -153,7 +142,7 @@ class _Seg:
         out = np.zeros(docs.size, dtype=np.float64)
         if not self._block_last.size:
             return out
-        if self._full is None and self._gap_ends is not None:
+        if self._full is None:
             bidx = np.searchsorted(self._block_last, docs)
             ok = (docs >= self.first_doc) & (bidx < self._block_last.size)
             need = np.unique(bidx[ok])
@@ -181,11 +170,6 @@ class _Seg:
         max of the block that would contain it, 0 outside the segment's doc
         range. No decode."""
         out = np.zeros(docs.size, dtype=np.float64)
-        if self._block_ub is None:  # old format: derived per-segment max
-            ok = (docs >= self.first_doc) & (docs <= (
-                int(self._block_last[-1]) if self._block_last.size else -1))
-            out[ok] = self.ub_norm
-            return out
         bidx = np.searchsorted(self._block_last, docs)
         ok = (docs >= self.first_doc) & (bidx < self._block_last.size)
         out[ok] = self._block_ub[bidx[ok]]

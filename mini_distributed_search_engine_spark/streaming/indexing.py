@@ -465,18 +465,26 @@ class StreamingIndexer:
             new_entry["pos_path"] = pos_out
         dead = [e["path"] for e in man] + [e["pos_path"] for e in man
                                            if "pos_path" in e]
+        n_docs = int(meta["n_docs"]) - n_del
+        seg_bytes = self._dir_bytes(out_dir, new_entry.get("pos_path"))
+        # the lineage row goes in BEFORE the flip, keyed by generation: a
+        # process killed after the flip already has it, and a heal of a
+        # kill between this write and the flip re-runs the same generation
+        # and finds it. (If an append commits that generation number
+        # instead, the abandoned compaction's row stays: one row too many,
+        # never one missing.)
+        run_id = f"compact_g{gen}"
+        lin_dir = self.root / "_lineage"
+        if not (lin_dir.is_dir() and self.spark.read.parquet(str(lin_dir))
+                .where(F.col("run_id") == run_id).limit(1).count()):
+            self.spark.createDataFrame(
+                [(run_id, "compact", -1, out_dir, "", n_docs, int(seg_bytes),
+                  int((time.time() - t0) * 1000), time.time())],
+                LINEAGE_SCHEMA).write.mode("append").parquet(str(lin_dir))
         meta.update({"generation": gen, "updated_at": time.time(),
-                     "manifest": [new_entry],
-                     "n_docs": int(meta["n_docs"]) - n_del,
+                     "manifest": [new_entry], "n_docs": n_docs,
                      "sum_dl": int(meta["sum_dl"]) - dl_del})
         self._save_meta(meta)
-        wall_ms = int((time.time() - t0) * 1000)
-        seg_bytes = self._dir_bytes(out_dir, new_entry.get("pos_path"))
-        lineage = self.spark.createDataFrame(
-            [(f"compact_g{gen}", "compact", -1, out_dir, "",
-              int(meta["n_docs"]), int(seg_bytes), wall_ms, time.time())],
-            LINEAGE_SCHEMA)
-        lineage.write.mode("append").parquet(str(self.root / "_lineage"))
         for p in dead:
             shutil.rmtree(self.root / p, ignore_errors=True)
         shutil.rmtree(old_tot, ignore_errors=True)

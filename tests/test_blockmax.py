@@ -8,11 +8,9 @@ from __future__ import annotations
 from types import SimpleNamespace
 
 import numpy as np
-import pytest
 
 from mini_distributed_search_engine_spark.index.codec import (
-    BLOCK, block_ends_array, decode_postings, encode_postings, tf_norm,
-    varint_decode)
+    BLOCK, block_ends_array, encode_postings, tf_norm, varint_decode)
 from mini_distributed_search_engine_spark.query.wand import _Seg
 
 
@@ -105,19 +103,3 @@ def test_seg_bounds_sound_under_avgdl_drift():
         assert seg.ub_norm + 1e-12 >= float(true.max())
         ub = seg.block_ub_at(doc_ids)
         assert np.all(ub + 1e-12 >= true)
-
-
-def test_seg_old_format_falls_back_to_eager_decode():
-    rng = np.random.default_rng(41)
-    n = 200
-    doc_ids = np.sort(rng.choice(3_000, size=n, replace=False)).astype(np.int64)
-    tfs = np.ones(n, dtype=np.int64)
-    dls = np.full(n, 30, dtype=np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, avgdl=30.0)
-    row = _row_from_enc(enc)
-    del row.block_gap_ends, row.block_tf_ends, row.block_dl_ends, row.enc_avgdl
-    seg = _Seg(row, n_docs=1_000, avgdl=30.0)
-    assert seg._full is not None  # eager
-    true = tf_norm(tfs, dls, 30.0)
-    assert seg.ub_norm == pytest.approx(float(true.max()))
-    assert np.allclose(seg.lookup(doc_ids), true)

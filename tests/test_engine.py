@@ -187,43 +187,6 @@ def test_engine_role_filtered_search(spark, index_root):
         sorted((r["rank"], r["doc_id"], r["score"]) for r in want.collect())
 
 
-def _fake_embeddings(spark, n: int, path: str, dim: int = 8):
-    import numpy as np
-    rng = np.random.default_rng(7)
-    rows = [(i, [float(x) for x in rng.standard_normal(dim)])
-            for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def test_engine_hybrid_matches_batch_hybrid(spark, index_root, tmp_path):
-    """The WARM hybrid serving path (packed-WAND lexical + partitioned-IVF
-    semantic, fused per request) must produce exactly the batch
-    `hybrid_ann_topk` fusion on the same corpus — the serving path changes
-    the physical plan, not the candidates or the RRF arithmetic."""
-    from mini_distributed_search_engine_spark.query.hybrid import (
-        hybrid_ann_topk)
-    emb_path = str(tmp_path / "emb")
-    emb = _fake_embeddings(spark, 200, emb_path)
-    eng = SearchEngine(spark, index_root)
-    eng.warm_hybrid(emb_path, str(tmp_path / "ivf"))
-    got = eng.search_hybrid("apple banana", query_vec_id=3, k=10,
-                            hydrate=False)
-    idx = build_index(
-        spark.createDataFrame(synthesize_transcripts_pdf(50, seed=21)))
-    want = hybrid_ann_topk(spark, idx.term_doc_tf, idx.term_stats,
-                           idx.doc_stats, emb,
-                           pairs=(("q", "apple banana", 3),), k=10).collect()
-    idx.unpersist()
-    g = [(r["rank"], r["doc_id"], r["rrf"]) for r in got]
-    w = sorted((r["rank"], r["doc_id"], r["rrf"]) for r in want)
-    assert g == w and len(g) > 0
-    # hydrated variant carries display metadata
-    hyd = eng.search_hybrid("apple banana", query_vec_id=3, k=5)
-    assert hyd and {"conv_id", "snippet", "rrf"} <= set(hyd[0].asDict())
-
-
 def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
                                                   tmp_path):
     """write_packed_bucketed + SearchEngine(packed_bucketed_path=...):
@@ -267,37 +230,6 @@ def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
         assert rows and all(r["role"] == "user" for r in rows)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def test_search_hybrid_rejects_unknown_vec(spark, index_root, tmp_path):
-    """An unknown query_vec_id must raise ValueError (-> HTTP 400), not
-    silently degrade to a lexical-only ranking; and warm_hybrid must
-    rebuild a layout whose _ivf_meta.json does not match."""
-    import json
-    from pathlib import Path
-    emb_path = str(tmp_path / "emb2")
-    _fake_embeddings(spark, 200, emb_path)
-    eng = SearchEngine(spark, index_root)
-    ivf_root = str(tmp_path / "ivf2")
-    eng.warm_hybrid(emb_path, ivf_root)
-    with pytest.raises(ValueError, match="not found in"):
-        eng.search_hybrid("apple", query_vec_id=99_999)
-    # stale-layout guard: tamper with the meta -> re-warm rewrites it
-    meta_p = Path(ivf_root) / "_ivf_meta.json"
-    m = json.loads(meta_p.read_text())
-    assert m["n_vecs"] == 200
-    meta_p.write_text(json.dumps({**m, "n_vecs": 1}))
-    eng.warm_hybrid(emb_path, ivf_root)      # mismatched meta -> rewrite
-    assert json.loads(meta_p.read_text())["n_vecs"] == 200
-    rows = eng.search_hybrid("apple banana", query_vec_id=3, k=5)
-    assert rows
-    # tombstones mask the hybrid path too, and the semantic-leg survivors
-    # are re-ranked (contiguous ranks, no RRF-weight gap)
-    victim = rows[0]["doc_id"]
-    eng.delete_docs([victim])
-    after = eng.search_hybrid("apple banana", query_vec_id=3, k=5)
-    assert victim not in {r["doc_id"] for r in after}
-    assert sorted(r["rank"] for r in after) == list(range(1, len(after) + 1))
 
 
 def test_engine_delete_docs_masks_every_path(spark, index_root):

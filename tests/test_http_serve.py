@@ -24,15 +24,6 @@ def http_base(spark, tmp_path_factory):
     StagedIndexBuild(spark, str(root), run_id="http").run(
         tr, shard_span=64, merge_factor=4)
     engine = SearchEngine(spark, str(root))
-    # warm the hybrid leg: deterministic fake embeddings aligned to the
-    # fixture's 160 doc ids (vec_id == doc_id)
-    import numpy as np
-    rng = np.random.default_rng(5)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.standard_normal(8)])
-         for i in range(160)], "vec_id long, embedding array<float>")
-    emb.write.parquet(str(root / "emb"))
-    engine.warm_hybrid(str(root / "emb"), str(root / "ivf"))
     srv = serve_http(engine, port=0)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -59,16 +50,6 @@ def test_words_and_stats_routes(http_base):
     assert code == 200 and body["n_docs"] > 0 and body["served"] >= 1
 
 
-def test_hybrid_route(http_base):
-    code, body = _get(f"{http_base}/hybrid?q=apple+banana&vec=3&k=5")
-    assert code == 200
-    assert body["rows"] and body["rows"][0]["rank"] == 1
-    assert {"doc_id", "rrf", "conv_id", "snippet"} <= set(body["rows"][0])
-    with pytest.raises(urllib.error.HTTPError) as e:
-        _get(f"{http_base}/hybrid?q=apple")      # missing vec
-    assert e.value.code == 400
-
-
 def test_bad_requests_get_4xx_not_500(http_base):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(f"{http_base}/search?k=5")          # missing q
@@ -76,9 +57,10 @@ def test_bad_requests_get_4xx_not_500(http_base):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(f"{http_base}/search?q=x&mode=nope")
     assert e.value.code == 400
-    with pytest.raises(urllib.error.HTTPError) as e:
-        _get(f"{http_base}/nope")
-    assert e.value.code == 404
+    for path in ("/nope", "/hybrid?q=x&vec=1"):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(f"{http_base}{path}")
+        assert e.value.code == 404
 
 
 def test_delete_route(http_base):

@@ -180,25 +180,6 @@ def test_proximity_cosharding_guard(spark, built):
                             idx.doc_stats, queries=PROX_QUERIES).collect()
 
 
-def test_redact_pii_zero_padded_ip(spark):
-    """Zero-padded quads (syslog/firewall exports) still redact; octet
-    overflow ('1.2.3.400') stays untouched."""
-    from mini_distributed_search_engine_spark.functions.textstats import (
-        redact_pii)
-    docs = spark.createDataFrame(
-        [(0, "src 192.168.001.007 dropped"),
-         (1, "at 010.001.001.007 end"),
-         (2, "semver 1.2.3.400 is fine"),
-         (3, "plain 10.1.1.7 here")],
-        "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in redact_pii(docs).collect()}
-    assert "[IPV4]" in rows[0]["text_redacted"] and rows[0]["n_ipv4"] == 1
-    assert "[IPV4]" in rows[1]["text_redacted"] and rows[1]["n_ipv4"] == 1
-    assert rows[2]["text_redacted"] == "semver 1.2.3.400 is fine"
-    assert rows[2]["n_ipv4"] == 0
-    assert "[IPV4]" in rows[3]["text_redacted"]
-
-
 def test_positions_merge_levels(spark, built):
     """Hierarchical positional merges: byte-splice levels reproduce the
     rows exactly and the phrase kernel stays rank-identical."""

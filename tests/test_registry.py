@@ -15,7 +15,14 @@ def test_driver_window_leads_the_registry():
     assert list(E.queries())[:50] == list(E._R5_WINDOW)
 
 
+CURATION_TEXT_OPS = ("text_token_counts", "text_redact_pii", "text_repetition",
+                     "text_unigram_logppl", "text_lang_id", "text_quality",
+                     "text_decontaminate", "doc_fingerprint")
+
+
 def test_no_non_search_entries():
     stale = [k for k in E.queries()
-             if k.startswith(("analytics_", "events_", "multimodal_"))]
+             if k.startswith(("analytics_", "events_", "multimodal_",
+                              "dedup_", "embed_", "hybrid_", "docs_sample_"))
+             or k in CURATION_TEXT_OPS]
     assert stale == []

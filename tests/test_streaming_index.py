@@ -234,7 +234,8 @@ _COMPACT_CRASHES = ("after_segs_write", "after_pos_write", "after_meta_flip")
 def _stream_state(ix: StreamingIndexer) -> dict:
     """What a compaction must leave: the TF and positional rows, the
     per-segment df/global_df, the meta corpus stats and id high-water
-    mark, and the set of segment/totals directories."""
+    mark, the set of segment/totals directories, and one lineage row per
+    committed append and compaction (its deterministic columns)."""
     meta = ix._meta()
     rows = lambda df: sorted(tuple(r) for r in df.collect())
     return {
@@ -245,6 +246,8 @@ def _stream_state(ix: StreamingIndexer) -> dict:
         "meta": {k: meta[k] for k in ("n_docs", "sum_dl", "next_doc_id")},
         "dirs": sorted(p.name for p in ix.root.iterdir()
                        if p.name.startswith(("segs_g", "pos_g", "totals_g"))),
+        "lineage": rows(ix.spark.read.parquet(str(ix.root / "_lineage"))
+                        .select("shard_id", "stage", "doc_count")),
     }
 
 
@@ -254,7 +257,7 @@ def compact_crashes(spark, tmp_path_factory):
     batch splices the boundary shard), compacted once with tombstones
     while the root is copied at three points: after the segs_g write;
     after the pos_g write, before the _meta.json flip; after the flip,
-    before lineage and GC. A copy is the on-disk state a process killed
+    before GC. A copy is the on-disk state a process killed
     there leaves behind. Each copy is healed by the same
     compact(tombstones=...) call, in a thread pool. Yields the healed
     state per crash point and the clean compaction's state."""
@@ -310,8 +313,8 @@ def compact_crashes(spark, tmp_path_factory):
 @pytest.mark.parametrize("point", _COMPACT_CRASHES)
 def test_compact_crash_matrix(compact_crashes, point):
     """A compact(tombstones=...) killed after any of its writes or after
-    its meta flip is healed by the same call: rows, stats and directories
-    equal a clean compaction's."""
+    its meta flip is healed by the same call: rows, stats, directories and
+    lineage equal a clean compaction's."""
     healed, clean = compact_crashes
     assert healed[point] == clean
 

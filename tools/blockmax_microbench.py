@@ -8,8 +8,9 @@ upper-bound slack still covers every candidate); this bench isolates the
 operator's behavior from that corpus artifact.
 
 Compares the SAME _shard_topk on identical segment bytes:
-  lazy  = with per-block byte offsets (selective bulk block decode)
-  eager = offsets stripped -> old-format fallback (decode every segment)
+  lazy  = per-block byte offsets (selective bulk block decode)
+  eager = every segment fully decoded at construction (the pre-block-max
+          decode cost; same stored bounds)
 Asserts rank-identity, reports wall time and decode counts. Pure
 numpy/pandas — no SparkSession.
 
@@ -86,16 +87,24 @@ def main() -> None:
         fn(pdf)
     lazy = (time.perf_counter() - t0) / args.reps
 
-    pdf2 = pdf.drop(columns=["block_gap_ends", "block_tf_ends",
-                             "block_dl_ends", "enc_avgdl"])
-    fn2 = W._shard_topk(meta, args.n, avgdl, 6)
-    fn2(pdf2)
-    t0 = time.perf_counter()
-    for _ in range(args.reps):
-        fn2(pdf2)
-    eager = (time.perf_counter() - t0) / args.reps
+    orig_init = W._Seg.__init__
 
-    a, b = fn(pdf), fn2(pdf2)
+    def eager_init(self, r, n_docs, avgdl):
+        orig_init(self, r, n_docs, avgdl)
+        self.full()
+
+    W._Seg.__init__ = eager_init
+    try:
+        fn2 = W._shard_topk(meta, args.n, avgdl, 6)
+        b = fn2(pdf)
+        t0 = time.perf_counter()
+        for _ in range(args.reps):
+            fn2(pdf)
+        eager = (time.perf_counter() - t0) / args.reps
+    finally:
+        W._Seg.__init__ = orig_init
+
+    a = fn(pdf)
     same = (sorted(map(tuple, a.itertuples(index=False)))
             == sorted(map(tuple, b.itertuples(index=False))))
     assert same, "block-max path is not rank-identical to eager decode"

@@ -1,10 +1,8 @@
 """Scale-up evidence run: the FULL staged pipeline (docs -> fused TF ->
 stats -> partition-local pack -> merge) over millions of turns, then the
-query set against the built root, with a block-max A/B: the same packed
-index queried (a) with the per-block byte offsets (lazy/selective decode)
-and (b) with the offset columns stripped, which drops wand's _Seg into the
-eager full-decode fallback — i.e. the pre-block-max behavior — on identical
-bytes. Prints one JSON line.
+query set against the built root (block-max WAND with lazy block decode;
+`tools/blockmax_microbench.py` holds the lazy-vs-eager decode A/B), the
+delete lifecycle and the cold-tier archive. Prints one JSON line.
 
 Usage: python tools/scale_bench.py [--turns 2000000] [--cpus 32]
        [--root /dev/shm/mdse_scale] [--span 1048576]
@@ -38,7 +36,7 @@ QUERIES = (
     Query("q10", "index query retrieval ranking"),
     # asymmetric rare+hot queries: a high-idf term fills theta with k docs,
     # then the hot terms' upper bounds fall below it -> the lazy path never
-    # decodes their (huge) posting lists, the eager path always does
+    # decodes their (huge) posting lists
     Query("q11", "gyroscopic the you are"),
     Query("q12", "relational apple the you"),
 )
@@ -90,7 +88,6 @@ def main() -> None:
             out[q.query_id] = round(best, 4)
         return out
 
-    # one cached table at a time so the A/B variants don't fight for memory
     full = merged.repartition(args.cpus, "shard_id").cache()
     full.count()
     run_set(full, reps=1)  # warm code paths
@@ -100,16 +97,6 @@ def main() -> None:
               corpus_stats=corpus).collect()
     batch_sec = round(time.perf_counter() - t, 4)
     full.unpersist()
-
-    # the A/B control: identical segments minus the offset columns ->
-    # wand's old-format fallback (eager full decode, derived bounds)
-    stripped = (merged.drop("block_gap_ends", "block_tf_ends",
-                            "block_dl_ends", "enc_avgdl")
-                .repartition(args.cpus, "shard_id").cache())
-    stripped.count()
-    run_set(stripped, reps=1)
-    lat_eager = run_set(stripped)
-    stripped.unpersist()
 
     # ---- delete lifecycle at scale (VERDICT r4 #7): tombstone 1% of the
     # docs, fold them in with purge_docs, re-query the purged index.
@@ -188,9 +175,7 @@ def main() -> None:
         "stage_wall_ms": stage_ms,
         "shard_span": args.span,
         "queries_blockmax": lat_block,
-        "queries_eager": lat_eager,
         "p50_blockmax": med(lat_block),
-        "p50_eager": med(lat_eager),
         "batch_sec": batch_sec,
         "batch_per_query_sec": round(batch_sec / len(QUERIES), 4),
         "purge": purge,

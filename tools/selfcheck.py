@@ -17,7 +17,7 @@ import __spark_entry__ as E
 from mini_distributed_search_engine_spark.session import get_spark
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings")
+          "lineitem", "documents")
 
 
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
