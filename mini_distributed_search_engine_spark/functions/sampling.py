@@ -1,7 +1,7 @@
-"""Deterministic sampling primitives for corpus curation.
+"""Deterministic sampling primitives over a document frame.
 
-A training-data funnel routinely downsamples over-represented strata
-(a crawl source, a language, a license bucket) to a target mix. Doing
+Downsampling over-represented strata (a crawl source, a language, a
+host) to a target mix is a common step before indexing or evaluation. Doing
 that with `df.sample()` is non-reproducible across runs and cluster
 layouts; the scale-correct primitive is a HASH GATE — keep a row iff a
 stable hash of its key falls under the stratum's rate. That is a pure
@@ -11,8 +11,8 @@ reference's seeded `sample(p)` lacks, flame/FlameRDD.java:70 — sampling
 there depends on RNG stream order per worker).
 
 The hash is the first 32 bits of md5 over the key rendered as a string,
-which both Spark and DuckDB can compute byte-identically — so the gate
-query is fully oracle-checkable.
+which both Spark and DuckDB can compute byte-identically — so a gate
+query can be checked against plain SQL.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 def hash32(key: Column) -> Column:
     """First 32 md5 bits of the stringified key as a long — THE hash every
-    sampling primitive (and every oracle SQL mirroring one) must use;
+    sampling primitive (and any SQL mirroring one) must use;
     DuckDB twin: ('0x' || substr(md5(CAST(key AS VARCHAR)), 1, 8))::BIGINT."""
     return F.conv(F.substring(F.md5(key.cast("string")), 1, 8),
                   16, 10).cast("long")

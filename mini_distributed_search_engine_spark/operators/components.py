@@ -1,12 +1,11 @@
-"""Connected components by iterative min-label propagation — the step
-that turns near-duplicate PAIRS into duplicate GROUPS (transitive
-closure), so corpus dedup can keep one canonical doc per component
-instead of reasoning about an edge list.
+"""Connected components by iterative min-label propagation — the
+transitive closure of an edge list (link-graph edges, or any id pairs)
+into groups labeled by their minimum node id.
 
 Algorithm: every node starts labeled with its own id; each round a node
 takes the min of its label and its neighbors' labels; converged when no
-label changes. Rounds needed = graph diameter (near-dup clusters are
-shallow — a handful of rounds). Each round is one join + one groupBy
+label changes. Rounds needed = graph diameter (shallow clusters take a
+handful of rounds). Each round is one join + one groupBy
 (map-side partial min), then `localCheckpoint` — which, unlike persist,
 TRUNCATES the lineage, so plan depth and analysis cost stay constant no
 matter how many rounds run, and there is no unpersist bookkeeping (the
@@ -15,16 +14,13 @@ previous round's label rides along in the same frame, so convergence is
 one filter+count on checkpointed data — no extra join. The driver only
 ever sees one integer per round (the changed-label count).
 
-Round count = graph DIAMETER, which is fine for shallow near-dup
-clusters; for deep graphs `connected_components_star` below implements
-the small-star/large-star algorithm (Kiveris et al., "Connected
+Round count = graph DIAMETER, which is fine for shallow clusters; for
+deep graphs `connected_components_star` below implements the
+small-star/large-star algorithm (Kiveris et al., "Connected
 Components in MapReduce and Beyond") whose round count is O(log^2 n)
 independent of diameter — pytest proves both agree on a 60-node path
-graph the propagation version needs 59 rounds for.
-
-The DuckDB oracle computes the same fixpoint as a recursive CTE
-(min label over the reachability set), so convergence is value-checked,
-not just assumed.
+graph the propagation version needs 59 rounds for, and both match a
+union-find ground truth on random graphs.
 """
 
 from __future__ import annotations
@@ -62,7 +58,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                 return labels.select("node", F.col("label").alias("component"))
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds; "
-            "graph diameter exceeds expectations for near-dup clusters"
+            "graph diameter exceeds expectations for shallow clusters"
             " — use connected_components_star for deep graphs")
     finally:
         sym.unpersist()
@@ -104,8 +100,7 @@ def derived_path_edges(ids: DataFrame, id_col: str = "vec_id",
     ids (edge i -> i+1 unless i+1 starts a new chain), diameter chain-1.
     Min-label propagation needs diameter rounds (its guard raises at 25);
     small-star/large-star contracts the same chains in O(log^2 n) rounds —
-    this edge set makes that advantage a gate-checkable fact, not just a
-    pytest claim. The +1 self-join is an equi-join (one shuffle on the id),
+    this edge set makes that advantage a checkable fact. The +1 self-join is an equi-join (one shuffle on the id),
     never an all-pairs product."""
     a = ids.select(F.col(id_col).alias("va"))
     b = ids.select(F.col(id_col).alias("vb"))

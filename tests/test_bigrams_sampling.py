@@ -1,4 +1,5 @@
-"""Bigram fused pass vs the positional-self-join spec."""
+"""Bigram fused pass vs the positional-self-join spec; hash-gate sample
+determinism under repartitioning (the property `df.sample` lacks)."""
 
 from __future__ import annotations
 
@@ -6,6 +7,8 @@ from pyspark.sql import functions as F
 
 from mini_distributed_search_engine_spark.functions.analyzer import (
     bigram_counts_pandas, term_positions_pandas)
+from mini_distributed_search_engine_spark.functions.sampling import (
+    stratified_sample)
 
 
 def _docs(spark):
@@ -36,3 +39,41 @@ def test_bigrams_match_positional_self_join(spark):
     # doc 2: "quick brown fox quick brown fox" -> (quick,brown) twice
     assert got[("quick", "brown")] >= 3
 
+
+def test_stratified_sample_deterministic_across_partitioning(spark):
+    docs = spark.range(2000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("src"), (F.col("id") % 4).cast("string"))
+        .alias("source"))
+    rates = {"src0": 10, "src1": 25}
+    one = {r["doc_id"] for r in stratified_sample(
+        docs.coalesce(1), "source", rates, 50, "doc_id").collect()}
+    many = {r["doc_id"] for r in stratified_sample(
+        docs.repartition(16), "source", rates, 50, "doc_id").collect()}
+    assert one == many                     # layout-independent membership
+    by_src = {s: sum(1 for d in one if d % 4 == int(s[-1]))
+              for s in ("src0", "src1", "src2", "src3")}
+    # 500 docs per stratum; hash gate keeps ~rate% of each
+    assert 25 <= by_src["src0"] <= 80      # ~10% of 500
+    assert 85 <= by_src["src1"] <= 170     # ~25% of 500
+    assert 200 <= by_src["src2"] <= 300    # ~50% of 500
+
+
+def test_topk_per_stratum_exact_budget_and_deterministic(spark):
+    from mini_distributed_search_engine_spark.functions.sampling import (
+        topk_per_stratum)
+    docs = spark.range(1000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("src"), (F.col("id") % 3).cast("string"))
+        .alias("source"))
+    one = {(r["source"], r["doc_id"]) for r in topk_per_stratum(
+        docs.coalesce(1), "source", 7, "doc_id").collect()}
+    many = {(r["source"], r["doc_id"]) for r in topk_per_stratum(
+        docs.repartition(16), "source", 7, "doc_id").collect()}
+    assert one == many                       # layout-independent choice
+    for s in ("src0", "src1", "src2"):
+        assert sum(1 for src, _ in one if src == s) == 7   # exact budget
+    # the WindowGroupLimit rewrite keeps per-partition heaps, not sorts
+    plan = (topk_per_stratum(docs, "source", 7, "doc_id")
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "WindowGroupLimit" in plan

@@ -50,8 +50,7 @@ def test_star_converges_fast_on_deep_path_and_matches(spark):
 
 
 def test_derived_path_edges_deep_fixture(spark):
-    """The gate's deep-diameter fixture (dedup_components_star_deep):
-    chains of 128 consecutive ids over a 300-id space. Propagation's
+    """The deep-diameter fixture: chains of 128 consecutive ids over a 300-id space. Propagation's
     default 25-round guard must trip (diameter 127); star-CC must
     converge and label every node with its chain's minimum."""
     from pyspark.sql import functions as F
