@@ -497,7 +497,9 @@ def _streaming_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         indexer.compact()
         rows = unpack_to_rows(indexer.packed())
         # localize (sf0.01-scale result) so the scratch root can be removed
-        return spark.createDataFrame(rows.collect(), rows.schema)
+        out = spark.createDataFrame(rows.collect(), rows.schema)
+        indexer.unpersist()
+        return out
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -519,7 +521,9 @@ def _streaming_positions_roundtrip(spark: SparkSession,
         indexer = _drain_sf_stream(spark, sf_dir, root, with_positions=True)
         indexer.compact()
         rows = unpack_positions(indexer.positions_packed())
-        return spark.createDataFrame(rows.collect(), rows.schema)
+        out = spark.createDataFrame(rows.collect(), rows.schema)
+        indexer.unpersist()
+        return out
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -19,6 +19,7 @@ group) union-ed then globally ranked is exact.
 from __future__ import annotations
 
 import operator
+from contextlib import contextmanager
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -184,6 +185,17 @@ def with_global_df(segments: DataFrame) -> DataFrame:
     return (segments.drop("global_df").join(F.broadcast(totals), "term")
             .withColumnRenamed("_gdf", "global_df")
             .select(*[f.name for f in PACKED_SCHEMA.fields]))
+
+
+def serving_layout(segments: DataFrame) -> DataFrame:
+    """The served index: ``segments`` hash-partitioned on shard_id over
+    defaultParallelism and cached (lazily: the first action builds it).
+    A per-shard kernel's ``groupBy("shard_id")`` then finds its clustered
+    distribution already met, so a warm query is one exchange-free scan
+    stage; two tables in this layout (TF and positions) cogroup per shard
+    without an exchange too."""
+    n = segments.sparkSession.sparkContext.defaultParallelism
+    return segments.repartition(n, "shard_id").cache()
 
 
 def build_packed_postings_local(tf_dl: DataFrame, avgdl: float,
@@ -440,6 +452,42 @@ def _tombstoned(tomb: np.ndarray, r, family: SegmentFamily):
     return (dec, hit) if hit.any() else None
 
 
+def _purger(tomb: np.ndarray, family: SegmentFamily, counted: bool):
+    """The purge pass's mapInPandas body (see `purge_segments`). With
+    ``counted`` (TF family) every input segment leaves one row instead:
+    flagged ``live`` when it survives (untouched or re-encoded), a fully
+    deleted one with its original columns and live false, and each with
+    the tombstoned docs it held as ``gone_docs``/``gone_dls`` (null when
+    none) — so the segment columns keep their non-null schema."""
+    cols = family.cols
+    names = cols + ["live", "gone_docs", "gone_dls"] if counted else cols
+
+    def gen(batches):
+        for pdf in batches:
+            out = []
+            for r in pdf.itertuples(index=False):
+                row = {c: getattr(r, c) for c in cols}
+                if counted:
+                    row.update(live=True, gone_docs=None, gone_dls=None)
+                hits = _tombstoned(tomb, r, family)
+                if hits is not None:
+                    dec, hit = hits
+                    if counted:
+                        row.update(gone_docs=dec.doc_ids[hit],
+                                   gone_dls=dec.dls[hit])
+                    if not hit.all():
+                        row.update(family.reencode(r, dec, ~hit))
+                    elif counted:
+                        row["live"] = False
+                    else:
+                        continue
+                out.append(row)
+            if out:
+                yield pd.DataFrame(out, columns=names)
+
+    return gen
+
+
 def purge_segments(segments: DataFrame, tomb: np.ndarray,
                    family: SegmentFamily) -> DataFrame:
     """The purge mapInPandas pass: remove the sorted doc ids ``tomb`` from
@@ -451,23 +499,41 @@ def purge_segments(segments: DataFrame, tomb: np.ndarray,
 
     Scale: the tombstone array rides the task closure (8 bytes per delete
     — a million deletes is 8 MB)."""
-    cols = family.cols
+    return segments.mapInPandas(_purger(tomb, family, counted=False),
+                                family.schema)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                hits = _tombstoned(tomb, r, family)
-                if hits is None:
-                    out.append({c: getattr(r, c) for c in cols})
-                elif not hits[1].all():
-                    row = family.reencode(r, hits[0], ~hits[1])
-                    row.update(term=r.term, shard_id=int(r.shard_id))
-                    out.append(row)
-            if out:
-                yield pd.DataFrame(out, columns=cols)
 
-    return segments.mapInPandas(gen, family.schema)
+_COUNTED_SCHEMA = T.StructType(
+    PACKED_SCHEMA.fields
+    + [T.StructField("live", T.BooleanType(), False),
+       T.StructField("gone_docs", T.ArrayType(T.LongType()), True),
+       T.StructField("gone_dls", T.ArrayType(T.LongType()), True)])
+
+
+@contextmanager
+def purge_counting(segments: DataFrame, doc_ids):
+    """`purge_segments` over TF segments that counts what it removes in
+    the SAME decode pass. Yields (the purged segments, n_del, dl_del):
+    the exact doc count and dl sum of the tombstoned docs present in the
+    index — the corpus-stat delta a purge applies (n_docs and sum_dl both
+    shrink; avgdl is their ratio). A doc's dl is the same in every
+    posting, so its pairs dedup across terms. The pass's output stays
+    persisted inside the ``with`` block: the count runs it once and a
+    write of the purged segments reads the cache instead of decoding
+    again."""
+    tomb = _as_sorted_ids(doc_ids)
+    swept = segments.mapInPandas(_purger(tomb, TF_FAMILY, counted=True),
+                                 _COUNTED_SCHEMA).persist()
+    try:
+        row = (swept.select(F.inline(F.arrays_zip("gone_docs", "gone_dls")))
+               .distinct()
+               .agg(F.count("*").alias("n"),
+                    F.coalesce(F.sum("gone_dls"), F.lit(0)).alias("s"))
+               .collect()[0])
+        yield (swept.where("live").select(*TF_FAMILY.cols),
+               int(row["n"]), int(row["s"]))
+    finally:
+        swept.unpersist()
 
 
 def merge_packed(packed: DataFrame, level_factor: int = 8) -> DataFrame:
@@ -518,39 +584,8 @@ def purge_docs(packed: DataFrame, doc_ids) -> DataFrame:
 def _as_sorted_ids(doc_ids) -> np.ndarray:
     """Normalize an iterable of doc ids to the sorted unique int64 array
     every tombstone path keys its binary searches on (shared by
-    purge_docs / tombstone_doc_stats / wand_topk's blocked mask)."""
+    purge_docs / purge_counting / wand_topk's blocked mask)."""
     return np.unique(np.fromiter((int(d) for d in doc_ids), dtype=np.int64))
-
-
-def tombstone_doc_stats(packed: DataFrame, doc_ids) -> tuple[int, int]:
-    """Exact (doc count, sum of dl) of the tombstoned docs PRESENT in the
-    index — the corpus-stat delta a purge applies (n_docs and sum_dl both
-    shrink; avgdl is their ratio). One pass with the purge's range gate
-    (`_tombstoned`): segments whose doc range misses every tombstone are
-    skipped without decoding; intersecting ones decode and emit their
-    tombstoned (doc_id, dl) pairs, deduped across terms (a doc's dl is the
-    same in every posting) before the final count/sum."""
-    tomb = _as_sorted_ids(doc_ids)
-
-    def gen(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                hits = _tombstoned(tomb, r, TF_FAMILY)
-                if hits is not None:
-                    dec, hit = hits
-                    outs.append(pd.DataFrame({"doc_id": dec.doc_ids[hit],
-                                              "dl": dec.dls[hit]}))
-            if outs:
-                # partition-local dedup before the exchange: a doc hit by
-                # many terms in this batch shrinks to one row here, the
-                # global distinct() then only reconciles across partitions
-                yield pd.concat(outs, ignore_index=True).drop_duplicates()
-
-    pairs = packed.mapInPandas(gen, "doc_id long, dl long").distinct()
-    row = pairs.agg(F.count("*").alias("n"),
-                    F.coalesce(F.sum("dl"), F.lit(0)).alias("s")).collect()[0]
-    return int(row["n"]), int(row["s"])
 
 
 def unpack_to_rows(packed: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze
@@ -64,6 +64,18 @@ def analyzed_query_terms(queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
     return rows
 
 
+def term_in(terms) -> Column:
+    """``term IN (...)`` over string literals, parsed from ONE SQL
+    expression: `Column.isin` makes a py4j round-trip per literal, which
+    a batch of a few hundred distinct query terms pays on every call. The
+    parser builds the same `In` predicate, so parquet and in-memory batch
+    pruning (PushedFilters) is unchanged. Each literal is escaped for
+    Spark's default string-literal syntax (backslash escapes)."""
+    lits = ["'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            for t in terms]
+    return F.expr(f"`term` IN ({', '.join(lits)})") if lits else F.lit(False)
+
+
 def _bm25_raw_scores(spark: SparkSession, term_doc_tf: DataFrame,
                      term_stats: DataFrame, doc_stats: DataFrame,
                      qrows: list, allowed_docs: DataFrame | None = None,
@@ -89,9 +101,9 @@ def _bm25_raw_scores(spark: SparkSession, term_doc_tf: DataFrame,
     # cache batches by min/max stats — the Spark-native analogue of the
     # reference's per-term KVS point lookup (Searcher.java:163).
     term_list = sorted({t for _, t, _ in qrows})
-    pruned = term_doc_tf.where(F.col("term").isin(term_list))
+    pruned = term_doc_tf.where(term_in(term_list))
     sel = pruned.join(F.broadcast(qterms), "term")
-    sel = sel.join(F.broadcast(term_stats.where(F.col("term").isin(term_list))),
+    sel = sel.join(F.broadcast(term_stats.where(term_in(term_list))),
                    "term")
     if allowed_docs is not None:
         sel = sel.join(allowed_docs.select("doc_id"), "doc_id", "semi")
@@ -190,9 +202,9 @@ def bm25_topk_conjunctive(spark: SparkSession, term_doc_tf: DataFrame,
     ndf = F.broadcast(spark.createDataFrame(
         list(nterms.items()), "query_id string, nterms int"))
 
-    pruned = term_doc_tf.where(F.col("term").isin(term_list))
+    pruned = term_doc_tf.where(term_in(term_list))
     sel = pruned.join(F.broadcast(qterms), "term")
-    sel = sel.join(F.broadcast(term_stats.where(F.col("term").isin(term_list))),
+    sel = sel.join(F.broadcast(term_stats.where(term_in(term_list))),
                    "term")
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5)))

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..index.packed import serving_layout
 from .bm25 import Query
 from .phrase import phrase_match_packed
 from .wand import compute_shard_bounds, wand_topk
@@ -39,12 +40,11 @@ class SearchEngine:
         self._stats_row = self.doc_stats.collect()[0]  # warm once
         self._corpus_stats = (int(self._stats_row["n_docs"]),
                               float(self._stats_row["avgdl"]))
-        # Cache hash-partitioned on shard_id: the per-query
-        # groupBy(shard_id).applyInPandas then needs NO exchange (the
-        # cached partitioning already satisfies its clustered
-        # distribution), so a warm query is one shuffle-free scan stage
-        # whose candidates the driver merges. With a shard-bucketed
-        # at-rest layout the warmup repartition shuffle goes away too.
+        # Cache hash-partitioned on shard_id (`packed.serving_layout`,
+        # the layout a streaming root serves too): a warm query is one
+        # shuffle-free scan stage whose candidates the driver merges.
+        # With a shard-bucketed at-rest layout the warmup repartition
+        # shuffle goes away too.
         if packed_bucketed_path is not None:
             from ..index.build import register_bucketed
             names = register_bucketed(spark, packed_bucketed_path)
@@ -62,10 +62,8 @@ class SearchEngine:
                     "write one with write_packed_bucketed()")
             self.packed = spark.table(packed_tbl).cache()
         else:
-            n = spark.sparkContext.defaultParallelism
-            self.packed = (spark.read
-                           .parquet(f"{index_root}/merged/data")
-                           .repartition(n, "shard_id").cache())
+            self.packed = serving_layout(
+                spark.read.parquet(f"{index_root}/merged/data"))
         self.packed.count()
         # per-shard doc lower bounds: computed LAZILY on the first
         # role-filtered query and memoized (wand.compute_shard_bounds note)

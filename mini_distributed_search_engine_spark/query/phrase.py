@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze
-from .bm25 import Query
+from .bm25 import Query, term_in
 
 # Phrase query set over the sf documents vocabulary: common bigram, rare
 # trigram, repeated-term bigram, absent-term phrase (empty), single term
@@ -66,7 +66,7 @@ def phrase_match(spark: SparkSession, positions: DataFrame,
         "query_id string, n int, k int"))
 
     term_list = sorted({t for _, _, t in qrows})
-    pruned = positions.where(F.col("term").isin(term_list))
+    pruned = positions.where(term_in(term_list))
     adj = (pruned.join(qdf, "term")
            .withColumn("anchor", F.col("pos") - F.col("i")))
     anchors = (adj.groupBy("query_id", "doc_id", "anchor")
@@ -121,7 +121,7 @@ def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
         if slots:
             metas[q.query_id] = (slots, q.k)
     term_list = sorted({t for _, _, t in qrows})
-    sel = packed_pos.where(F.col("term").isin(term_list))
+    sel = packed_pos.where(term_in(term_list))
 
     blocked = None
     if blocked_ids is not None:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .bm25 import (DEFAULT_QUERY_SET, Query, _bm25_raw_scores,
-                   analyzed_query_terms)
+                   analyzed_query_terms, term_in)
 
 PROX_W = 1.0  # bonus weight: one adjacent pair ~ one strong BM25 term
 
@@ -57,7 +57,7 @@ def bm25_topk_proximity(spark: SparkSession, term_doc_tf: DataFrame,
 
     term_list = sorted({t for _, t, _ in qrows})
     qterms = spark.createDataFrame(qrows, "query_id string, term string, k int")
-    qpos = (positions.where(F.col("term").isin(term_list))
+    qpos = (positions.where(term_in(term_list))
             .join(F.broadcast(qterms.select("query_id", "term")), "term")
             .select("query_id", "doc_id", "term", "pos"))
     a = qpos.select("query_id", "doc_id", F.col("term").alias("t1"),
@@ -212,8 +212,8 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
         psegs = {r.term: _PSeg(r) for r in right.itertuples(index=False)}
         return base(left, psegs)
 
-    sel_tf = packed.where(F.col("term").isin(term_list))
-    sel_pos = packed_pos.where(F.col("term").isin(term_list))
+    sel_tf = packed.where(term_in(term_list))
+    sel_pos = packed_pos.where(term_in(term_list))
     cands = (sel_tf.groupBy("shard_id")
              .cogroup(sel_pos.groupBy("shard_id"))
              .applyInPandas(shard_fn, CAND_SCHEMA))

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .bm25 import Query, analyzed_query_terms
+from .bm25 import Query, analyzed_query_terms, term_in
 
 DEFAULT_WINDOW = 8
 
@@ -103,7 +103,7 @@ def span_near_match(spark: SparkSession, packed_pos: DataFrame,
         per_query.setdefault(query_id, ([], k))
         per_query[query_id][0].append(term)
     term_list = sorted({t for _, t, _ in qrows})
-    sel = packed_pos.where(F.col("term").isin(term_list))
+    sel = packed_pos.where(term_in(term_list))
 
     blocked = None
     if blocked_ids is not None:

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import term_tokens_df
-from .bm25 import Query, analyzed_query_terms
+from .bm25 import Query, analyzed_query_terms, term_in
 
 N_EST = 1500          # Searcher.java:77 — corpus size baked into the IDF
 THRESHOLD = 0.4       # Searcher.java:199
@@ -75,9 +75,9 @@ def tfidf_blend_topk(spark: SparkSession, term_doc_tf: DataFrame,
         qrows = [("__none__", "__none__", 0)]
     qterms = spark.createDataFrame(qrows, "query_id string, term string, k int")
     term_list = sorted({t for _, t, _ in qrows})
-    pruned = term_doc_tf.where(F.col("term").isin(term_list))
+    pruned = term_doc_tf.where(term_in(term_list))
     sel = (pruned.join(F.broadcast(qterms), "term")
-           .join(F.broadcast(term_stats.where(F.col("term").isin(term_list))),
+           .join(F.broadcast(term_stats.where(term_in(term_list))),
                  "term"))
     contrib = ((F.lit(1.0) + F.log10(F.col("tf")))
                * F.log10(F.lit(1.0) + F.lit(float(N_EST)) / F.col("df")))

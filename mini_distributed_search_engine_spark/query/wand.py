@@ -38,7 +38,8 @@ from pyspark.sql import types as T
 from ..index.packed import _as_sorted_ids
 from ..index.codec import (BLOCK, K1, block_ends_array, decode_postings,
                            tf_norm, varint_decode)
-from .bm25 import DEFAULT_QUERY_SET, Query, analyzed_query_terms
+from .bm25 import (DEFAULT_QUERY_SET, Query, analyzed_query_terms,
+                   term_in)
 
 _RANKED_SCHEMA = T.StructType([
     T.StructField("query_id", T.StringType(), False),
@@ -432,7 +433,7 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
     term_list = sorted({t for _, t, _ in qrows})
     if not term_list:
         return _empty_ranked(spark)
-    sel = packed.where(F.col("term").isin(term_list))
+    sel = packed.where(term_in(term_list))
     per_query: dict[str, tuple[list, int]] = {}
     for query_id, term, k in qrows:
         per_query.setdefault(query_id, ([], k))

@@ -17,10 +17,18 @@ older entry to shards < b (the spliced boundary shard supersedes the old
 copy), and entries whose range becomes empty are pruned from the manifest
 and deleted from disk (bounded storage). Term totals (the BM25 idf input)
 are a vocabulary-sized side table rewritten per batch (O(vocab) << O(index)
-bytes). `packed()` reassembles the index as a UNION of shard-range-filtered
-manifest reads with the totals broadcast-joined on — readable by the same
-wand_topk / SearchEngine path, parity with a one-shot batch build is
-test-enforced (tests/test_streaming_index.py).
+bytes). `packed()` serves the index as a UNION of shard-range-filtered
+manifest reads with the totals broadcast-joined on, in the same cached,
+shard_id-partitioned layout `SearchEngine` serves (`packed.serving_layout`)
+— readable by the same wand_topk path, parity with a one-shot batch build
+is test-enforced (tests/test_streaming_index.py). The served frames
+(`packed()`, `positions_packed()`, `doc_stats_df()`) are built once per
+COMMITTED GENERATION and memoized, the way the reference Searcher loads
+its IDF table once (Searcher.java:64-81,126): a warm read is one Spark job
+over the cache, not a re-plan of every manifest read and the totals join.
+Each meta flip unpersists the superseded frames before GC deletes their
+files, and a reader that sees the committed meta change (another writer
+on the root) rebuilds.
 
 Exactly-once across restarts: the generation only advances after the new
 segment parquet is fully written, and foreachBatch re-delivers an
@@ -35,17 +43,19 @@ check); each batch's docIDs continue from the running total.
 
 LSM-style COMPACTION bounds read amplification: each append leaves one
 manifest entry (one parquet dir, one plan branch in ``packed()``), so a
-root fed by thousands of micro-batches pays O(batches) driver-plan and
-file-listing cost per query. ``compact()`` rewrites the authoritative
-union into a single directory and resets the manifest to one entry —
-O(index) I/O once, run when len(manifest) crosses an ops threshold
-(``stream_index_job.py --compact-after K``).
+root fed by thousands of micro-batches pays O(batches) driver-plan,
+file-listing and cache-build cost per served generation. ``compact()``
+rewrites the authoritative union into a single directory and resets the
+manifest to one entry — O(index) I/O once, run when len(manifest)
+crosses an ops threshold (``stream_index_job.py --compact-after K``).
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
+import threading
 import time
 from functools import reduce
 from pathlib import Path
@@ -58,8 +68,8 @@ from pyspark.sql import functions as F
 from ..functions.analyzer import term_tokens_df
 from ..plans.pipeline import LINEAGE_SCHEMA
 from ..index.packed import (PACKED_SCHEMA, TF_FAMILY, _as_sorted_ids,
-                            build_packed_postings, purge_segments,
-                            splice_boundary, tombstone_doc_stats)
+                            build_packed_postings, purge_counting,
+                            purge_segments, serving_layout, splice_boundary)
 from ..index.positions import (POS_FAMILY, POS_SCHEMA,
                                build_packed_positions)
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
@@ -100,6 +110,12 @@ class StreamingIndexer:
         self.with_positions = with_positions
         self.root.mkdir(parents=True, exist_ok=True)
         self._checkpoint_id: str | None = None
+        # the committed generation's served frames (see `_served`): one
+        # (meta key, {name: frame}) tuple, rebound whole and never mutated,
+        # so concurrent readers always see a complete memo; the lock
+        # serializes the builders and the meta-flip release
+        self._memo: tuple[tuple | None, dict] = (None, {})
+        self._memo_lock = threading.Lock()
 
     # -- state ------------------------------------------------------------
     def _meta_path(self) -> Path:
@@ -134,25 +150,71 @@ class StreamingIndexer:
             parts.append(df.select(*cols))
         return reduce(DataFrame.unionByName, parts)
 
-    def packed(self) -> DataFrame:
-        """The current index: union of each manifest entry's authoritative
-        shard range, with per-term totals (idf input) joined on broadcast."""
+    @staticmethod
+    def _meta_key(meta: dict) -> tuple:
+        return int(meta["generation"]), meta.get("updated_at")
+
+    def _served(self, name: str, build) -> DataFrame:
+        """The committed generation's frame ``name``: ``build(meta)`` on
+        first use, then memoized until the committed meta (generation +
+        updated_at) changes — a flip by this indexer releases the memo
+        itself (`unpersist`), one by another writer on the root is
+        seen here, and the superseded frames are unpersisted."""
         meta = self._meta()
+        key, frames = self._memo
+        if key == self._meta_key(meta) and name in frames:
+            return frames[name]
+        with self._memo_lock:
+            meta = self._meta()
+            key, frames = self._memo
+            if key != self._meta_key(meta):
+                for df in frames.values():
+                    df.unpersist()
+                frames = {}
+            if name not in frames:
+                frames = {**frames, name: build(meta)}
+                self._memo = (self._meta_key(meta), frames)
+            return frames[name]
+
+    def unpersist(self) -> None:
+        """Drop and unpersist the served frames. Each meta flip calls it
+        before GC deletes the files behind them; a caller done reading a
+        root calls it to free the cache."""
+        with self._memo_lock:
+            _, frames = self._memo
+            self._memo = (None, {})
+        for df in frames.values():
+            df.unpersist()
+
+    def packed(self) -> DataFrame:
+        """The committed generation's served index: union of each manifest
+        entry's authoritative shard range, per-term totals (idf input)
+        joined on broadcast, in the cached shard_id-partitioned serving
+        layout (`packed.serving_layout`). Built once per generation; the
+        first read after a flip builds the cache, later reads are one
+        exchange-free Spark job."""
+        return self._served("packed", self._build_packed)
+
+    def _build_packed(self, meta: dict) -> DataFrame:
         man = self._manifest(meta)
         if not man:
             return self.spark.createDataFrame([], PACKED_SCHEMA)
-        seg = self._segments(man)
         totals = self.spark.read.parquet(
             str(self.root / f"totals_g{meta['generation']}"))
-        return (seg.drop("global_df")
-                .join(F.broadcast(totals), "term").select(*_COLS))
+        return serving_layout(self._segments(man).drop("global_df")
+                              .join(F.broadcast(totals), "term")
+                              .select(*_COLS))
 
     def positions_packed(self) -> DataFrame:
-        """The current packed positional index (with_positions roots):
-        union of each manifest entry's authoritative shard range — the
-        positional twin of `packed()`, readable by phrase_match_packed /
+        """The committed generation's packed positional index
+        (with_positions roots): union of each manifest entry's
+        authoritative shard range, memoized like `packed()` and in the
+        same layout, so the proximity kernel's per-shard cogroup of the
+        two needs no exchange. Readable by phrase_match_packed /
         wand_topk_proximity / span_near_match."""
-        meta = self._meta()
+        return self._served("positions", self._build_positions)
+
+    def _build_positions(self, meta: dict) -> DataFrame:
         man = self._manifest(meta)
         if not man:
             return self.spark.createDataFrame([], POS_SCHEMA)
@@ -160,18 +222,21 @@ class StreamingIndexer:
             raise ValueError(
                 f"index root {self.root} was not built with "
                 "with_positions=True (manifest entries lack pos_path)")
-        return self._segments(man, path_key="pos_path",
-                              cols=POS_FAMILY.cols)
+        return serving_layout(self._segments(man, path_key="pos_path",
+                                             cols=POS_FAMILY.cols))
+
+    @staticmethod
+    def _corpus_stats(meta: dict) -> tuple[int, float]:
+        n = int(meta["n_docs"])
+        return n, (meta["sum_dl"] / n if n else 0.0)
 
     def corpus_stats(self) -> tuple[int, float]:
-        m = self._meta()
-        n = int(m["n_docs"])
-        return n, (m["sum_dl"] / n if n else 0.0)
+        return self._corpus_stats(self._meta())
 
     def doc_stats_df(self) -> DataFrame:
-        n, avgdl = self.corpus_stats()
-        return self.spark.createDataFrame([(n, avgdl)],
-                                          "n_docs long, avgdl double")
+        return self._served("doc_stats", lambda meta: (
+            self.spark.createDataFrame([self._corpus_stats(meta)],
+                                       "n_docs long, avgdl double")))
 
     # -- the sink ---------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -309,26 +374,50 @@ class StreamingIndexer:
             e = man.pop()
             dead += [e[k] for k in ("path", "pos_path") if k in e]
         man.append(entry)
+        # per-batch lineage row (north rule: every stage leaves lineage):
+        # batch id, docs appended, segment bytes written, wall time —
+        # BEFORE the flip (`_write_lineage`): a kill after the flip skips
+        # the replay by the batch-id mark, so the row must already exist
+        self._write_lineage(
+            f"batch_{batch_id}", "stream_append", int(start), entry["path"],
+            int(n_new), self._dir_bytes(entry["path"], entry.get("pos_path")),
+            int((time.time() - t_start) * 1000))
         meta.update({"n_docs": new_n, "sum_dl": new_sum,
                      "next_doc_id": base + n_new,
                      "generation": gen + 1, "batch_id": int(batch_id),
                      "manifest": man, "updated_at": time.time()})
         self._save_meta(meta)
-        # per-batch lineage row (north rule: every stage leaves lineage):
-        # batch id, docs appended, segment bytes written, wall time
-        wall_ms = int((time.time() - t_start) * 1000)
-        seg_bytes = self._dir_bytes(entry["path"], entry.get("pos_path"))
-        lineage = self.spark.createDataFrame(
-            [(f"batch_{batch_id}", "stream_append", int(start),
-              entry["path"], "",
-              int(n_new), int(seg_bytes), wall_ms, time.time())],
-            LINEAGE_SCHEMA)
-        lineage.write.mode("append").parquet(str(self.root / "_lineage"))
+        self.unpersist()
         # committed: garbage-collect superseded files (safe to re-crash
         # here — they are no longer referenced by the manifest)
         for p in dead:
             shutil.rmtree(self.root / p, ignore_errors=True)
         shutil.rmtree(old_tot_dir, ignore_errors=True)
+
+    def _write_lineage(self, run_id: str, stage: str, shard_id: int,
+                       path: str, doc_count: int, nbytes: int,
+                       wall_ms: int) -> None:
+        """One ``_lineage`` row (LINEAGE_SCHEMA) in its own parquet file
+        named by ``run_id``. Appends and compactions write it BEFORE their
+        meta flip, so a process killed after the flip already has it; a
+        rerun of the same step before the flip rewrites the same file
+        (temp file + rename), so a step has exactly one row, with no
+        read of the existing rows."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _parse_datatype_string
+
+        schema = to_arrow_schema(_parse_datatype_string(LINEAGE_SCHEMA))
+        row = (run_id, stage, shard_id, path, "", doc_count, nbytes,
+               wall_ms, time.time())
+        lin_dir = self.root / "_lineage"
+        lin_dir.mkdir(exist_ok=True)
+        # dot-prefixed: Spark's reader skips it until the rename
+        tmp = lin_dir / f".{run_id}.parquet.tmp"
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(schema.names, row))], schema=schema), str(tmp))
+        os.replace(tmp, lin_dir / f"{run_id}.parquet")
 
     def _dir_bytes(self, *dirs: str | None) -> int:
         """Summed file bytes of the named root directories (None skipped):
@@ -346,10 +435,11 @@ class StreamingIndexer:
         their doc range (`packed.purge_segments`); term totals are
         rebuilt from the surviving segments, and the meta corpus stats
         (n_docs / sum_dl, hence avgdl) shrink by the stats of the
-        tombstoned docs still present (`packed.tombstone_doc_stats` —
-        exact for every doc with at least one posting; a doc whose text
-        analyzed to zero terms is undetectable from postings alone and
-        its n_docs slot survives, see the inline note). With tombstones
+        tombstoned docs still present, counted in the purge's own decode
+        pass (`packed.purge_counting` — exact for every doc with at least
+        one posting; a doc whose text analyzed to zero terms is
+        undetectable from postings alone and its n_docs slot survives, see
+        the inline note). With tombstones
         that actually purge something, compaction proceeds even on a
         single-entry manifest; a no-op delete file on an already-compacted
         root returns without the O(index) rewrite. The docID space stays
@@ -358,11 +448,12 @@ class StreamingIndexer:
 
         Appends are O(batch) but leave one manifest entry (= one parquet
         directory, one plan branch in ``packed()``) per micro-batch, so an
-        index fed by thousands of batches pays O(batches) driver-plan and
-        file-listing cost per query. Compaction is the LSM counterpart:
-        rewrite the authoritative union into a single directory, reset the
-        manifest to one entry, and GC superseded files. Costs O(index) I/O
-        once; call it when ``len(manifest)`` crosses an ops threshold.
+        index fed by thousands of batches pays O(batches) driver-plan,
+        file-listing and cache-build cost per served generation.
+        Compaction is the LSM counterpart: rewrite the authoritative union
+        into a single directory, reset the manifest to one entry, and GC
+        superseded files. Costs O(index) I/O once; call it when
+        ``len(manifest)`` crosses an ops threshold.
         Crash-safe the same way as appends: the meta commit is the atomic
         flip, GC only runs after it, and a crash between the two only
         leaves unreferenced directories — every compact() call starts with
@@ -409,30 +500,24 @@ class StreamingIndexer:
         old_tot = self.root / f"totals_g{meta['generation']}"
         n_del = dl_del = 0
         if tomb.size:
-            # ONE persisted scan feeds both the stats pass and the purge
-            # write (unpersisted, every compact-with-deletes would pay the
-            # O(index) parquet read twice)
-            src = self._segments(man).persist()
-            # exact corpus-stat delta BEFORE the purge rewrites the rows.
+            # ONE decode pass re-encodes the hit segments and counts the
+            # tombstoned docs still present — the exact corpus-stat delta.
             # Exact for every doc WITH postings; a doc whose text analyzed
             # to zero terms leaves no posting to find, so its n_docs slot
             # survives a purge (harmless drift in the avgdl denominator,
             # bounded by the postingless-doc count; a doc store would be
             # needed to detect them and this root keeps only aggregates).
-            n_del, dl_del = tombstone_doc_stats(src, tomb)
-            if n_del == 0 and len(man) <= 1:
-                # nothing to purge and no read amplification to fix
-                # (e.g. a cron re-run with an already-applied delete
-                # file): skip the O(index) rewrite entirely
-                src.unpersist()
-                return {"compacted": False, "entries": len(man),
-                        "purged_docs": 0}
-            purge_segments(src, tomb, TF_FAMILY) \
-                .write.mode("overwrite").parquet(str(self.root / out_dir))
-            src.unpersist()
+            with purge_counting(self._segments(man), tomb) as (
+                    kept, n_del, dl_del):
+                if n_del == 0 and len(man) <= 1:
+                    # nothing to purge and no read amplification to fix
+                    # (e.g. a cron re-run with an already-applied delete
+                    # file): skip the O(index) rewrite entirely
+                    return {"compacted": False, "entries": len(man),
+                            "purged_docs": 0}
+                kept.write.mode("overwrite").parquet(str(self.root / out_dir))
             # read the written output back for the count and the rebuilt
-            # totals (column-pruned scans of the new parquet — re-counting
-            # off the unpersisted purge plan would re-run the re-encode)
+            # totals (column-pruned scans of the new parquet)
             seg = self.spark.read.parquet(str(self.root / out_dir))
             n_segments = seg.count()
             # totals must shrink with the purged postings: rebuild from
@@ -456,7 +541,7 @@ class StreamingIndexer:
         if all("pos_path" in e for e in man):
             # positional twin of the rewrite: shard-filtered union (the
             # purge gated by the same binary-search range test), one dir
-            pos_src = self.positions_packed()
+            pos_src = self._segments(man, "pos_path", POS_FAMILY.cols)
             if tomb.size:
                 pos_src = purge_segments(pos_src, tomb, POS_FAMILY)
             pos_out = f"pos_g{gen}"
@@ -469,22 +554,17 @@ class StreamingIndexer:
         seg_bytes = self._dir_bytes(out_dir, new_entry.get("pos_path"))
         # the lineage row goes in BEFORE the flip, keyed by generation: a
         # process killed after the flip already has it, and a heal of a
-        # kill between this write and the flip re-runs the same generation
-        # and finds it. (If an append commits that generation number
+        # kill before the flip re-runs the same generation and rewrites
+        # the same file. (If an append commits that generation number
         # instead, the abandoned compaction's row stays: one row too many,
         # never one missing.)
-        run_id = f"compact_g{gen}"
-        lin_dir = self.root / "_lineage"
-        if not (lin_dir.is_dir() and self.spark.read.parquet(str(lin_dir))
-                .where(F.col("run_id") == run_id).limit(1).count()):
-            self.spark.createDataFrame(
-                [(run_id, "compact", -1, out_dir, "", n_docs, int(seg_bytes),
-                  int((time.time() - t0) * 1000), time.time())],
-                LINEAGE_SCHEMA).write.mode("append").parquet(str(lin_dir))
+        self._write_lineage(f"compact_g{gen}", "compact", -1, out_dir, n_docs,
+                            seg_bytes, int((time.time() - t0) * 1000))
         meta.update({"generation": gen, "updated_at": time.time(),
                      "manifest": [new_entry], "n_docs": n_docs,
                      "sum_dl": int(meta["sum_dl"]) - dl_del})
         self._save_meta(meta)
+        self.unpersist()
         for p in dead:
             shutil.rmtree(self.root / p, ignore_errors=True)
         shutil.rmtree(old_tot, ignore_errors=True)

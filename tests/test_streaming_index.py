@@ -6,6 +6,7 @@ concatenated input."""
 from __future__ import annotations
 
 import shutil
+import sys
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
@@ -17,6 +18,7 @@ from mini_distributed_search_engine_spark.index.packed import (
     build_packed_postings, unpack_to_rows)
 from mini_distributed_search_engine_spark.index.positions import (
     unpack_positions)
+from mini_distributed_search_engine_spark.query import wand
 from mini_distributed_search_engine_spark.query.bm25 import Query
 from mini_distributed_search_engine_spark.query.wand import wand_topk
 from mini_distributed_search_engine_spark.sources.transcripts import (
@@ -372,3 +374,197 @@ def test_stream_positions_survive_flagless_reopen(spark, tmp_path):
     n_docs_with_pos = (unpack_positions(second.positions_packed())
                        .select("doc_id").distinct().count())
     assert n_docs_with_pos == second._meta()["n_docs"]
+
+
+def test_append_killed_after_meta_flip_keeps_its_lineage(spark, tmp_path):
+    """An append killed right after its _meta.json flip is committed, and
+    its replay is skipped by the batch-id mark: its lineage row must
+    already be there, exactly once."""
+    pdf = synthesize_transcripts_pdf(6, seed=31)  # 24 turns
+    root = tmp_path / "idx"
+    ix = StreamingIndexer(spark, str(root), shard_span=16)
+    ix.process_batch(spark.createDataFrame(pdf.iloc[:12]), 0)
+    batch1 = spark.createDataFrame(pdf.iloc[12:])
+    save_meta = StreamingIndexer._save_meta
+
+    def killed(indexer, meta):
+        save_meta(indexer, meta)
+        raise RuntimeError("killed after the meta flip")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(StreamingIndexer, "_save_meta", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            ix.process_batch(batch1, 1)
+    reopened = StreamingIndexer(spark, str(root), shard_span=16)
+    reopened.process_batch(batch1, 1)  # the redelivery
+    meta = reopened._meta()
+    assert meta["batch_id"] == 1 and meta["n_docs"] == len(pdf)
+    run_ids = [r["run_id"] for r in
+               spark.read.parquet(str(root / "_lineage")).collect()]
+    assert sorted(run_ids) == ["batch_0", "batch_1"]
+
+
+@pytest.fixture(scope="module")
+def served_root(spark, tmp_path_factory):
+    """A positional stream root with two manifest entries, and the turns
+    of a third batch that continues it."""
+    base = tmp_path_factory.mktemp("served")
+    pdf = synthesize_transcripts_pdf(12, seed=21)  # 48 turns
+    ix = StreamingIndexer(spark, str(base / "root"), shard_span=16,
+                          with_positions=True)
+    for i, (lo, hi) in enumerate([(0, 20), (20, 36)]):
+        ix.process_batch(spark.createDataFrame(pdf.iloc[lo:hi]), i)
+    yield base / "root", pdf.iloc[36:]
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def _plan_nodes(plan):
+    """Node names of a physical plan down to its cache scans (a cached
+    relation's own build plan is not part of the query's work)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(plan.inputPlan())
+        return
+    yield plan.nodeName()
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_warm_stream_read_is_one_exchange_free_job(spark, served_root,
+                                                   monkeypatch):
+    """Over the served cache a warm wand_topk is one Spark job that runs
+    one stage: the candidate plan scans the cache with no exchange. The
+    proximity kernel's cogroup of the two served frames is exchange-free
+    too (co-partitioned on shard_id)."""
+    from mini_distributed_search_engine_spark.query import proximity
+
+    ix = StreamingIndexer(spark, str(served_root[0]), shard_span=16)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+
+    def read():
+        return wand_topk(spark, ix.packed(), ix.doc_stats_df(),
+                         queries=QUERIES, corpus_stats=ix.corpus_stats())
+
+    cold = rows(read())  # builds the cache
+    plans = []
+
+    def spy(real):
+        def rank(spark_, cands, *args):
+            plans.append(list(_plan_nodes(
+                cands._jdf.queryExecution().executedPlan())))
+            return real(spark_, cands, *args)
+        return rank
+
+    monkeypatch.setattr(wand, "_driver_rank", spy(wand._driver_rank))
+    sc = spark.sparkContext
+    sc.setJobGroup("warm_stream_read", "one warm streaming read")
+    try:
+        warm = rows(read())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup("warm_stream_read")
+    # the cache build's shuffle stays in the lineage as a skipped stage
+    ran = [s for j in jobs for s in st.getJobInfo(j).stageIds
+           if st.getStageInfo(s) and st.getStageInfo(s).numCompletedTasks]
+    assert len(jobs) == 1 and len(ran) == 1, (jobs, ran)
+    assert warm == cold and warm
+    assert "InMemoryTableScan" in plans[0], plans[0]
+    assert not [n for n in plans[0] if "Exchange" in n], plans[0]
+
+    proximity.wand_topk_proximity(
+        spark, ix.packed(), ix.positions_packed(), ix.doc_stats_df(),
+        queries=QUERIES, corpus_stats=ix.corpus_stats())
+    assert plans[1].count("InMemoryTableScan") == 2, plans[1]
+    assert not [n for n in plans[1] if "Exchange" in n], plans[1]
+    ix.unpersist()
+
+
+def test_served_frames_follow_each_commit(spark, served_root, tmp_path):
+    """packed() / positions_packed() / doc_stats_df() are memoized per
+    committed generation: repeated reads return the same frames; after an
+    append, a tombstone compaction, or another writer's commit they are
+    new frames equal to a fresh indexer's, and the superseded ones are no
+    longer cached."""
+    root = tmp_path / "root"
+    shutil.copytree(served_root[0], root)
+    ix = StreamingIndexer(spark, str(root), shard_span=16)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+
+    def served():
+        return ix.packed(), ix.positions_packed(), ix.doc_stats_df()
+
+    def fresh_rows():
+        fresh = StreamingIndexer(spark, str(root), shard_span=16)
+        try:
+            return [rows(f) for f in (fresh.packed(), fresh.positions_packed(),
+                                      fresh.doc_stats_df())]
+        finally:
+            fresh.unpersist()
+
+    first = served()
+    assert all(a is b for a, b in zip(first, served()))
+    assert first[0].is_cached and first[1].is_cached
+    seen = [rows(f) for f in first]
+    assert seen == fresh_rows()
+    for commit in (
+            lambda: ix.process_batch(
+                spark.createDataFrame(served_root[1]), 2),
+            lambda: ix.compact(tombstones=[3, 17, 40]),
+            lambda: StreamingIndexer(spark, str(root), shard_span=16)
+            .compact(tombstones=[5])):
+        before = served()
+        rows(before[0])  # a read materializes the cache
+        commit()
+        after = served()
+        assert not before[0].is_cached and not before[1].is_cached
+        assert after[0].is_cached and after[1].is_cached
+        now = [rows(f) for f in after]
+        assert now == fresh_rows() and now != seen
+        seen = now
+    ix.unpersist()
+
+
+def test_racing_readers_share_one_build(spark, served_root, monkeypatch):
+    """Readers racing on a cold memo build each served frame once and all
+    get that frame: a lost update would build (and cache) it twice."""
+    ix = StreamingIndexer(spark, str(served_root[0]), shard_span=16)
+    builds = []
+    build = StreamingIndexer._build_packed
+
+    def counted(indexer, meta):
+        builds.append(meta["generation"])
+        return build(indexer, meta)
+
+    monkeypatch.setattr(StreamingIndexer, "_build_packed", counted)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futs = [pool.submit(lambda: (ix.packed(), ix.positions_packed()))
+                    for _ in range(32)]
+            got = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(builds) == 1
+    assert len({id(p) for p, _ in got}) == 1
+    assert len({id(q) for _, q in got}) == 1
+    ix.unpersist()
+
+
+def test_compact_builds_no_cache(spark, served_root, tmp_path, monkeypatch):
+    """compact() reads the manifest through the uncached segment union:
+    it never builds a served frame."""
+    root = tmp_path / "root"
+    shutil.copytree(served_root[0], root)
+    df_type = type(spark.range(1))
+    real_cache, cached = df_type.cache, []
+
+    def cache(df):
+        cached.append(df)
+        return real_cache(df)
+
+    monkeypatch.setattr(df_type, "cache", cache)
+    ix = StreamingIndexer(spark, str(root), shard_span=16)
+    assert ix.compact(tombstones=[3, 30])["compacted"]
+    assert cached == [] and ix._memo == (None, {})

@@ -179,3 +179,20 @@ def test_driver_rank_matches_sorted_reference(spark, built):
     with pytest.raises(ValueError, match="final_rank"):
         wand_topk(spark, packed, idx.doc_stats, queries=QUERIES,
                   final_rank="window")
+
+
+def test_term_in_escapes_literals_and_pushes_down(spark, tmp_path):
+    """The term prune is one parsed IN over escaped literals: a term with
+    a quote or a backslash matches itself only, and the predicate still
+    reaches the parquet scan as a pushed In filter."""
+    from mini_distributed_search_engine_spark.query.bm25 import term_in
+
+    odd = ["it's", "a\\b", "c\\'d", "'"]
+    path = str(tmp_path / "terms")
+    spark.createDataFrame([(t,) for t in odd + ["its", "ab", "x"]],
+                          "term string").write.parquet(path)
+    sel = spark.read.parquet(path).where(term_in(odd + ["absent"]))
+    assert sorted(r["term"] for r in sel.collect()) == sorted(odd)
+    plan = sel._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [In(term," in plan, plan
+    assert spark.read.parquet(path).where(term_in([])).count() == 0
