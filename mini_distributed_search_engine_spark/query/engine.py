@@ -187,41 +187,39 @@ class SearchEngine:
         return sorted(df.collect(), key=lambda r: r["rank"])
 
     def _packed_positions_df(self) -> DataFrame:
-        """Packed positional segments: the pipeline's committed
-        'positions_packed' stage if present (already co-sharded with the
-        merged TF layout), else packed once — from the committed row
-        'positions' stage, or analyzed from the doc store — CO-SHARDED
-        with the live packed TF index via its shard bounds (the alignment
-        contract `wand_topk_proximity` requires). Only the packed result
-        is cached: the row positions are read once, to pack."""
+        """Packed positional segments in the serving layout
+        (`packed.serving_layout`, like the TF cache): the pipeline's
+        committed 'positions_packed' stage (co-sharded with the merged TF
+        layout by construction), else packed once from the doc store,
+        CO-SHARDED with the live packed TF index via its shard bounds (the
+        alignment contract `wand_topk_proximity` requires). Both caches
+        are hash-partitioned on shard_id, so a warm phrase, near or
+        proximity query is one exchange-free job."""
         if self._positions_packed is None:
             import os
             stage = f"{self._index_root}/positions_packed/data"
             if os.path.isdir(stage):
-                self._positions_packed = self.spark.read.parquet(stage).cache()
+                pos = self.spark.read.parquet(stage)
             else:
+                from ..functions.analyzer import term_positions_pandas
                 from ..index.positions import build_packed_positions
-                rows = f"{self._index_root}/positions/data"
-                if os.path.isdir(rows):
-                    pos = self.spark.read.parquet(rows)
-                else:
-                    from ..functions.analyzer import term_positions_pandas
-                    pos = term_positions_pandas(self.docs, "text")
                 if self._shard_bounds is None:
                     self._shard_bounds = compute_shard_bounds(self.packed)
-                self._positions_packed = build_packed_positions(
-                    pos, shard_bounds=self._shard_bounds).cache()
+                pos = build_packed_positions(
+                    term_positions_pandas(self.docs, "text"),
+                    shard_bounds=self._shard_bounds)
+            self._positions_packed = serving_layout(pos)
             self._positions_packed.count()
         return self._positions_packed
 
     def search_phrase(self, text: str, k: int = 10) -> list:
         """Exact phrase search; rows (rank, doc_id, n_occ), served from
         the packed positional segments (per-shard anchor-intersection
-        kernel, tombstones masked in-kernel)."""
+        kernel, tombstones masked in-kernel, driver merge)."""
         df = phrase_match_packed(self.spark, self._packed_positions_df(),
                                  (Query("q", text, k=k),),
                                  blocked_ids=self._tomb())
-        return df.orderBy("rank").collect()
+        return sorted(df.collect(), key=lambda r: r["rank"])
 
     def search_near(self, text: str, k: int = 10, window: int = 8) -> list:
         """Span/near search: docs where EVERY query term occurs within a
@@ -232,7 +230,7 @@ class SearchEngine:
         df = span_near_match(self.spark, self._packed_positions_df(),
                              (Query("q", text, k=k),), window=window,
                              blocked_ids=self._tomb())
-        return df.orderBy("rank").collect()
+        return sorted(df.collect(), key=lambda r: r["rank"])
 
     def search_proximity(self, text: str, k: int = 10,
                          hydrate: bool = True) -> list:

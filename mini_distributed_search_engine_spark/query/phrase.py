@@ -13,6 +13,9 @@ user expects, built Spark-first:
   join against the (term-pruned) positions table + two small aggregations;
   no per-row Python anywhere.
 * ranking: phrase-occurrence count DESC, doc_id ASC (deterministic).
+* serving: `phrase_match_packed` answers the same query from the packed
+  positional segments through `positional_topk`, the per-shard kernel
+  it shares with span/near, ending in the driver merge.
 
 Repeated-term phrases work because each position row joins every (i, t)
 slot it can fill and the anchor group counts DISTINCT slots.
@@ -20,11 +23,19 @@ slot it can fill and the anchor group counts DISTINCT slots.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.analyzer import analyze
+from ..index.positions import _PSeg
 from .bm25 import Query, term_in
+from .wand import (_as_blocked, _driver_rank, _empty_ranked, _in_sorted,
+                   _ranked_schema)
 
 # Phrase query set over the sf documents vocabulary: common bigram, rare
 # trigram, repeated-term bigram, absent-term phrase (empty), single term
@@ -56,8 +67,7 @@ def phrase_match(spark: SparkSession, positions: DataFrame,
     """Top-k docs per phrase query: (query_id, rank, doc_id, n_occ)."""
     qrows = phrase_terms(queries, stem=stem)
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, n_occ long")
+        return _empty_ranked(spark, _ranked_schema("n_occ", T.LongType()))
     qdf = F.broadcast(spark.createDataFrame(
         qrows, "query_id string, i int, term string"))
     meta = F.broadcast(spark.createDataFrame(
@@ -82,62 +92,39 @@ def phrase_match(spark: SparkSession, positions: DataFrame,
     return out.select("query_id", "rank", "doc_id", "n_occ")
 
 
-def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
-                        queries: tuple[Query, ...] = PHRASE_QUERY_SET,
-                        stem: bool = True,
-                        blocked_ids=None) -> DataFrame:
-    """`phrase_match` served from the PACKED positional index
-    (`index/positions.py`): rank-identical to the declarative row path
-    (test-enforced), but the scan is per-(term, doc-shard) varint blobs
-    pruned to the query terms by literal IN-list — no O(occurrence) row
-    join anywhere.
+def positional_topk(spark: SparkSession, packed_pos: DataFrame,
+                    per_query: dict, value: str, ascending: bool,
+                    blocked_ids=None) -> DataFrame:
+    """The one kernel of the packed positional queries (phrase, near):
+    (query_id, rank, doc_id, <value>) per query, ranked by ``value`` in
+    the given direction, ties by doc_id asc.
 
-    Distributed shape mirrors `wand.wand_topk`: one Arrow group per
+    ``per_query`` maps query_id -> (terms, k, match). Distributed shape
+    mirrors `wand.wand_topk`: the query terms' literal IN-list prunes the
+    packed positional segments (`index/positions.py`), one Arrow group per
     doc-range shard (shards partition the doc space, so per-shard exact
-    top-k union-ed then globally ranked is exact). Inside a shard: the
-    candidate docs are the intersection of the distinct phrase terms'
-    doc lists (gap streams only — positions stay encoded), then each
-    candidate's anchors are the intersection over slots i of
-    (positions(t_i) - i), decoding ONLY the position blocks that hold
-    candidates. ``blocked_ids`` (query-time tombstones) drops candidates
-    before any position decode, same LSM discipline as `wand_topk`.
+    top-k merged globally is exact). Inside a shard the candidate docs
+    are the intersection of the distinct terms' doc lists (gap streams
+    only — positions stay encoded); ``blocked_ids`` (query-time
+    tombstones) drop candidates before any position decode, the same LSM
+    discipline as `wand_topk`; then only the position blocks holding
+    candidates decode (`_PSeg.lists_for`) and ``match(plists, j)`` —
+    plists maps each term to its per-candidate position arrays — gives
+    candidate j's value, or None when it does not match. The per-shard
+    top-k candidates end in the driver merge `wand._driver_rank`.
     """
-    import functools
+    if not per_query:
+        return _empty_ranked(spark, _ranked_schema(value, T.LongType()))
+    blocked = _as_blocked(blocked_ids)
+    sign = 1 if ascending else -1
 
-    import numpy as np
-    import pandas as pd
-
-    from ..index.packed import _as_sorted_ids
-    from ..index.positions import _PSeg
-    from .wand import _in_sorted
-
-    qrows = phrase_terms(queries, stem=stem)
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, n_occ long")
-    metas = {}  # query_id -> (slots [(i, term)], k)
-    for q in queries:
-        slots = [(i, t) for qq, i, t in qrows if qq == q.query_id]
-        if slots:
-            metas[q.query_id] = (slots, q.k)
-    term_list = sorted({t for _, _, t in qrows})
-    sel = packed_pos.where(term_in(term_list))
-
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
-
-    out_schema = ("query_id string, doc_id long, n_occ long, k int")
-
-    def shard_fn(pdf):
+    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         segs = {r.term: _PSeg(r) for r in pdf.itertuples(index=False)}
-        out_q, out_d, out_n, out_k = [], [], [], []
-        for query_id, (slots, k) in metas.items():
-            uniq = sorted({t for _, t in slots})
+        out_q, out_d, out_v, out_k = [], [], [], []
+        for query_id, (terms, k, match) in per_query.items():
+            uniq = sorted(set(terms))
             if any(t not in segs for t in uniq) or k <= 0:
-                continue  # a term absent from this shard -> no phrase here
+                continue  # a term absent from this shard -> no match here
             cand = functools.reduce(
                 np.intersect1d, (segs[t].docs() for t in uniq))
             if blocked is not None and cand.size:
@@ -145,43 +132,65 @@ def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
             if cand.size == 0:
                 continue
             plists = {t: segs[t].lists_for(cand) for t in uniq}
-            occ_d, occ_n = [], []
-            for j in range(cand.size):
-                anchors = plists[slots[0][1]][j] - slots[0][0]
-                for i, t in slots[1:]:
-                    if anchors.size == 0:
-                        break
-                    anchors = np.intersect1d(anchors, plists[t][j] - i,
-                                             assume_unique=True)
-                if anchors.size:
-                    occ_d.append(int(cand[j]))
-                    occ_n.append(int(anchors.size))
-            if not occ_d:
+            hits = [(cand[j], v) for j in range(cand.size)
+                    if (v := match(plists, j)) is not None]
+            if not hits:
                 continue
-            nd = np.array(occ_d, dtype=np.int64)
-            nn = np.array(occ_n, dtype=np.int64)
-            take = min(k, nd.size)
-            order = np.lexsort((nd, -nn))[:take]
-            out_q += [query_id] * take
-            out_k += [k] * take
+            nd, nv = np.array(hits, dtype=np.int64).T
+            order = np.lexsort((nd, sign * nv))[:k]
+            out_q += [query_id] * order.size
+            out_k += [k] * order.size
             out_d.append(nd[order])
-            out_n.append(nn[order])
-        if not out_q:
-            return pd.DataFrame({"query_id": pd.Series(dtype="str"),
-                                 "doc_id": pd.Series(dtype="int64"),
-                                 "n_occ": pd.Series(dtype="int64"),
-                                 "k": pd.Series(dtype="int32")})
-        return pd.DataFrame({"query_id": out_q,
-                             "doc_id": np.concatenate(out_d),
-                             "n_occ": np.concatenate(out_n),
+            out_v.append(nv[order])
+        empty = [np.empty(0, dtype=np.int64)]
+        return pd.DataFrame({"query_id": pd.Series(out_q, dtype=object),
+                             "doc_id": np.concatenate(out_d or empty),
+                             value: np.concatenate(out_v or empty),
                              "k": np.array(out_k, dtype="int32")})
 
-    cands = sel.groupBy("shard_id").applyInPandas(shard_fn, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("n_occ").desc(),
-                                               F.col("doc_id").asc())
-    out = (cands.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "n_occ")
+    term_list = sorted({t for terms, _, _ in per_query.values()
+                        for t in terms})
+    cands = (packed_pos.where(term_in(term_list)).groupBy("shard_id")
+             .applyInPandas(shard_fn, f"query_id string, doc_id long, "
+                                      f"{value} long, k int"))
+    return _driver_rank(spark, cands, value, ascending)
+
+
+def _phrase_match(slots: list[tuple[int, str]]):
+    """`positional_topk` match for one phrase: the number of anchors p
+    with slot term t_i at p + i for every slot i, or None when zero."""
+    def match(plists, j):
+        i0, t0 = slots[0]
+        anchors = plists[t0][j] - i0
+        for i, t in slots[1:]:
+            if anchors.size == 0:
+                break
+            anchors = np.intersect1d(anchors, plists[t][j] - i,
+                                     assume_unique=True)
+        return anchors.size or None
+    return match
+
+
+def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
+                        queries: tuple[Query, ...] = PHRASE_QUERY_SET,
+                        stem: bool = True,
+                        blocked_ids=None) -> DataFrame:
+    """`phrase_match` served from the PACKED positional index through
+    `positional_topk`: rank-identical to the declarative row path
+    (test-enforced), but the scan is per-(term, doc-shard) varint blobs
+    pruned to the query terms — no O(occurrence) row join anywhere. Each
+    candidate's anchors are the intersection over slots i of
+    (positions(t_i) - i); the per-shard top-k by n_occ desc, doc_id asc
+    ends in the driver merge, so the call runs its one Spark job eagerly
+    and returns a driver-local frame."""
+    per_query = {}
+    for q in queries:
+        slots = list(enumerate(analyze(q.text, stem=stem)))
+        if slots:
+            per_query[q.query_id] = ([t for _, t in slots], q.k,
+                                     _phrase_match(slots))
+    return positional_topk(spark, packed_pos, per_query, "n_occ", False,
+                           blocked_ids)
 
 
 def phrase_count_pandas(docs_terms: list[list[str]], phrase_text: str,

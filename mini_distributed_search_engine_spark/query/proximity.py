@@ -128,9 +128,9 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
     ``blocked_ids``: query-time tombstones, dropped at candidate decode
     (same LSM discipline as `wand_topk`).
     """
-    from ..index.packed import _as_sorted_ids
     from ..index.positions import _PSeg
-    from .wand import _empty_ranked, _shard_topk, rank_candidates, CAND_SCHEMA
+    from .wand import (CAND_SCHEMA, _as_blocked, _empty_ranked, _shard_topk,
+                       rank_candidates)
 
     qrows = analyzed_query_terms(queries, stem=stem)
     if corpus_stats is None:
@@ -145,12 +145,6 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
         per_query.setdefault(query_id, ([], k))
         per_query[query_id][0].append(term)
     queries_meta = [(q, ts, k) for q, (ts, k) in per_query.items()]
-
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
 
     def bonus_rerank(query_id, present_terms, docs, scores, psegs):
         """Exact pairwise-min-distance bonus for the surviving pool
@@ -172,7 +166,7 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
     # ONE kernel with wand: _shard_topk's disjunctive MaxScore branch,
     # prune tests widened by the bonus slack, pool reranked exactly
     base = _shard_topk(queries_meta, n_docs, avgdl, round_scores,
-                       blocked=blocked,
+                       blocked=_as_blocked(blocked_ids),
                        bound_slack=lambda m: w * m * (m - 1) / 2.0,
                        pool_rerank=bonus_rerank)
 

@@ -16,23 +16,21 @@ Beyond the reference (its count-only index cannot express windows,
 `jobs/Indexer.java:309-415`); standard IR surface a transcript-search
 user expects ("error" near "timeout").
 
-Distributed shape: identical to `phrase.phrase_match_packed` — literal
-term IN-list prunes the packed positional segments, one Arrow group per
-doc-range shard, candidate docs intersect on gap streams alone, only
-the position blocks holding candidates decode, per-shard top-k then the
-global rank window (shards partition the doc space, so this is exact).
+Distributed shape: the one positional kernel `phrase.positional_topk`
+it shares with phrase search — literal term IN-list prunes the packed
+positional segments, one Arrow group per doc-range shard, candidate docs
+intersect on gap streams alone, only the position blocks holding
+candidates decode, per-shard top-k then the driver merge
+`wand._driver_rank` (shards partition the doc space, so this is exact).
 """
 
 from __future__ import annotations
 
-import functools
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from .bm25 import Query, analyzed_query_terms, term_in
+from .bm25 import Query, analyzed_query_terms
+from .phrase import positional_topk
 
 DEFAULT_WINDOW = 8
 
@@ -80,86 +78,36 @@ def _min_span(lists: list[np.ndarray]) -> int:
     return int(best)
 
 
+def _near_match(terms: list[str], window: int):
+    """`positional_topk` match for one near query: the candidate's
+    min_span over the distinct terms, or None when it is not < window."""
+    uniq = sorted(set(terms))
+
+    def match(plists, j):
+        span = _min_span([plists[t][j] for t in uniq])
+        return span if span < window else None
+    return match
+
+
 def span_near_match(spark: SparkSession, packed_pos: DataFrame,
                     queries: tuple[Query, ...] = SPAN_QUERY_SET,
                     window: int = DEFAULT_WINDOW,
                     stem: bool = True,
                     blocked_ids=None) -> DataFrame:
     """Top-k near-matches per query: (query_id, rank, doc_id, min_span),
-    min_span < window, ranked (min_span ASC, doc_id ASC).
+    min_span < window, ranked (min_span ASC, doc_id ASC). Eager, like
+    `phrase.phrase_match_packed`: one Spark job, a driver-local result.
 
     ``blocked_ids``: query-time tombstones, dropped before any position
     decode (same LSM discipline as the phrase/WAND kernels)."""
-    from ..index.packed import _as_sorted_ids
-    from ..index.positions import _PSeg
-    from .wand import _in_sorted
-
-    qrows = analyzed_query_terms(queries, stem=stem)
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, min_span long")
     per_query: dict[str, tuple[list, int]] = {}
-    for query_id, term, k in qrows:
-        per_query.setdefault(query_id, ([], k))
-        per_query[query_id][0].append(term)
-    term_list = sorted({t for _, t, _ in qrows})
-    sel = packed_pos.where(term_in(term_list))
-
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
-
-    w_lim = int(window)
-
-    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        segs = {r.term: _PSeg(r) for r in pdf.itertuples(index=False)}
-        out_q, out_d, out_s, out_k = [], [], [], []
-        for query_id, (terms, k) in per_query.items():
-            uniq = sorted(set(terms))
-            if any(t not in segs for t in uniq) or k <= 0:
-                continue  # a term absent from this shard -> no match here
-            cand = functools.reduce(
-                np.intersect1d, (segs[t].docs() for t in uniq))
-            if blocked is not None and cand.size:
-                cand = cand[~_in_sorted(cand, blocked)]
-            if cand.size == 0:
-                continue
-            plists = {t: segs[t].lists_for(cand) for t in uniq}
-            hits_d, hits_s = [], []
-            for j in range(cand.size):
-                span = _min_span([plists[t][j] for t in uniq])
-                if span < w_lim:
-                    hits_d.append(int(cand[j]))
-                    hits_s.append(span)
-            if not hits_d:
-                continue
-            nd = np.array(hits_d, dtype=np.int64)
-            ns = np.array(hits_s, dtype=np.int64)
-            take = min(k, nd.size)
-            order = np.lexsort((nd, ns))[:take]
-            out_q += [query_id] * take
-            out_k += [k] * take
-            out_d.append(nd[order])
-            out_s.append(ns[order])
-        if not out_q:
-            return pd.DataFrame({"query_id": pd.Series(dtype="str"),
-                                 "doc_id": pd.Series(dtype="int64"),
-                                 "min_span": pd.Series(dtype="int64"),
-                                 "k": pd.Series(dtype="int32")})
-        return pd.DataFrame({"query_id": out_q,
-                             "doc_id": np.concatenate(out_d),
-                             "min_span": np.concatenate(out_s),
-                             "k": np.array(out_k, dtype="int32")})
-
-    cands = sel.groupBy("shard_id").applyInPandas(
-        shard_fn, "query_id string, doc_id long, min_span long, k int")
-    win = Window.partitionBy("query_id").orderBy(F.col("min_span").asc(),
-                                                 F.col("doc_id").asc())
-    out = (cands.withColumn("rank", F.row_number().over(win))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "min_span")
+    for query_id, term, k in analyzed_query_terms(queries, stem=stem):
+        per_query.setdefault(query_id, ([], k))[0].append(term)
+    return positional_topk(
+        spark, packed_pos,
+        {q: (ts, k, _near_match(ts, int(window)))
+         for q, (ts, k) in per_query.items()},
+        "min_span", True, blocked_ids)
 
 
 def span_count_pandas(docs_terms: list[list[str]], query_text: str,

@@ -41,12 +41,20 @@ from ..index.codec import (BLOCK, K1, block_ends_array, decode_postings,
 from .bm25 import (DEFAULT_QUERY_SET, Query, analyzed_query_terms,
                    term_in)
 
-_RANKED_SCHEMA = T.StructType([
-    T.StructField("query_id", T.StringType(), False),
-    T.StructField("rank", T.IntegerType(), False),
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("score", T.DoubleType(), False),
-])
+
+def _ranked_schema(value: str = "score",
+                   dtype: T.DataType = T.DoubleType()) -> T.StructType:
+    """(query_id, rank, doc_id, <value>): the shape every ranked packed
+    path returns; ``value`` is its rank key (score, n_occ or min_span)."""
+    return T.StructType([
+        T.StructField("query_id", T.StringType(), False),
+        T.StructField("rank", T.IntegerType(), False),
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField(value, dtype, False),
+    ])
+
+
+_RANKED_SCHEMA = _ranked_schema()
 
 CAND_SCHEMA = T.StructType([
     T.StructField("query_id", T.StringType(), False),
@@ -184,6 +192,15 @@ def _in_sorted(docs: np.ndarray, allowed: np.ndarray) -> np.ndarray:
         return np.zeros(docs.size, dtype=bool)
     pos = np.minimum(np.searchsorted(allowed, docs), allowed.size - 1)
     return allowed[pos] == docs
+
+
+def _as_blocked(blocked_ids) -> np.ndarray | None:
+    """Query-time tombstones as the sorted int64 array the kernels mask
+    candidates with (`_in_sorted`), or None when there are none."""
+    if blocked_ids is None:
+        return None
+    ids = _as_sorted_ids(blocked_ids)
+    return ids if ids.size else None
 
 
 def compute_shard_bounds(packed: DataFrame) -> list[tuple[int, int]]:
@@ -440,15 +457,10 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
         per_query[query_id][0].append(term)
     queries_meta = [(q, ts, k) for q, (ts, k) in per_query.items()]
 
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
     fn = _shard_topk(queries_meta, n_docs, avgdl, round_scores,
                      conjunctive=conjunctive,
                      filtered=allowed_docs is not None,
-                     blocked=blocked)
+                     blocked=_as_blocked(blocked_ids))
 
     if allowed_docs is not None:
         # Per-shard doc lower bounds: tiny (one row per shard after the agg
@@ -496,44 +508,44 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
 
 def rank_candidates(spark: SparkSession, cands: DataFrame,
                     round_scores: int | None) -> DataFrame:
-    """Shared tail of every packed-kernel retrieval path: round the
+    """Tail of the scored packed paths (WAND, proximity): round the
     per-shard candidates' scores, then merge them driver-side into the
-    global per-query top-k (see `_driver_rank`)."""
+    global per-query top-k (`_driver_rank`, the merge the positional
+    kernel ends in too)."""
     score = F.round(F.col("score"), round_scores) if round_scores is not None \
         else F.col("score")
     return _driver_rank(spark, cands.withColumn("score", score))
 
 
-def _empty_ranked(spark: SparkSession) -> DataFrame:
-    """An empty (query_id, rank, doc_id, score) frame that collects on the
-    driver alone. An EMPTY pandas frame falls off the Arrow path
-    (LogicalRDD with defaultParallelism empty partitions — a 32-task job
-    per collect, as is createDataFrame([], schema)); a one-row
-    LocalRelation filtered to WHERE false constant-folds to an empty
-    LocalRelation instead (driver-only collect, ~0.05 s vs ~0.4 s
-    measured)."""
-    one = pd.DataFrame({"query_id": ["x"],
-                        "rank": pd.Series([1], dtype="int32"),
-                        "doc_id": pd.Series([0], dtype="int64"),
-                        "score": pd.Series([0.0], dtype="float64")})
-    return (spark.createDataFrame(one, schema=_RANKED_SCHEMA)
-            .where(F.lit(False)))
+def _empty_ranked(spark: SparkSession,
+                  schema: T.StructType = _RANKED_SCHEMA) -> DataFrame:
+    """An empty ranked frame (``schema``) that collects on the driver
+    alone. An EMPTY pandas frame falls off the Arrow path (LogicalRDD with
+    defaultParallelism empty partitions — a 32-task job per collect, as
+    is an empty list input); a one-row LocalRelation filtered to WHERE
+    false constant-folds to an empty LocalRelation instead (driver-only
+    collect, ~0.05 s vs ~0.4 s measured)."""
+    one = pd.DataFrame({f.name: ["x" if f.dataType == T.StringType() else 0]
+                        for f in schema.fields})
+    return spark.createDataFrame(one, schema=schema).where(F.lit(False))
 
 
-def _driver_rank(spark: SparkSession, scored: DataFrame) -> DataFrame:
-    """Collect the per-shard candidates as one Arrow batch (metadata-scale:
-    <= shards x k rows per query, scores already rounded) and rank them
-    with the engine-wide (score desc, doc_id asc) ordering: one stable
-    sort on (query_id, score desc, doc_id asc), a per-query running count
+def _driver_rank(spark: SparkSession, cands: DataFrame,
+                 value: str = "score", ascending: bool = False) -> DataFrame:
+    """Collect the per-shard candidates (query_id, doc_id, <value>, k) as
+    one Arrow batch (metadata-scale: <= shards x k rows per query, scores
+    already rounded) and rank them by ``value`` in the given direction,
+    ties broken by doc_id asc: one stable sort, a per-query running count
     as the rank, and each row kept while its rank is within its query's
     k (carried on every candidate row) — the reference Searcher's
     driver-side heap (`jobs/Searcher.java:234-244`) without a per-row
     Python loop or a per-request exchange."""
-    pdf = scored.select("query_id", "doc_id", "score", "k").toPandas()
+    schema = _ranked_schema(value, cands.schema[value].dataType)
+    pdf = cands.select("query_id", "doc_id", value, "k").toPandas()
     if pdf.empty:
-        return _empty_ranked(spark)
-    pdf = pdf.sort_values(["query_id", "score", "doc_id"],
-                          ascending=[True, False, True], ignore_index=True)
+        return _empty_ranked(spark, schema)
+    pdf = pdf.sort_values(["query_id", value, "doc_id"],
+                          ascending=[True, ascending, True], ignore_index=True)
     rank = pdf.groupby("query_id", sort=False).cumcount() + 1
     keep = rank <= pdf["k"]
     # pandas input -> Arrow LocalRelation: a list input would round-trip
@@ -542,5 +554,5 @@ def _driver_rank(spark: SparkSession, scored: DataFrame) -> DataFrame:
     out = pd.DataFrame({"query_id": pdf["query_id"][keep],
                         "rank": rank[keep].astype("int32"),
                         "doc_id": pdf["doc_id"][keep],
-                        "score": pdf["score"][keep]})
-    return spark.createDataFrame(out, schema=_RANKED_SCHEMA)
+                        value: pdf[value][keep]})
+    return spark.createDataFrame(out, schema=schema)

@@ -314,18 +314,24 @@ def test_engine_proximity_respects_tombstones(spark, index_root):
     assert victim not in {r["doc_id"] for r in ph}
 
 
-def test_pipeline_positions_packed_stage(spark, tmp_path_factory):
+@pytest.fixture(scope="module")
+def pos_root(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("eng_pos_idx")
+    tr = spark.createDataFrame(synthesize_transcripts_pdf(50, seed=21))
+    status = StagedIndexBuild(spark, str(root), run_id="engp").run(
+        tr, shard_span=64, merge_factor=4, positions=True)
+    assert status["positions_packed"] == "built"
+    return root
+
+
+def test_pipeline_positions_packed_stage(spark, pos_root):
     """StagedIndexBuild(positions=True) commits a positions_packed stage
     co-sharded with the merged TF layout; the engine serves proximity and
     phrase from it with answers identical to the row scorers over the
     root's row stages."""
     from mini_distributed_search_engine_spark.index.positions import (
         unpack_positions)
-    root = tmp_path_factory.mktemp("eng_pos_idx")
-    tr = spark.createDataFrame(synthesize_transcripts_pdf(50, seed=21))
-    status = StagedIndexBuild(spark, str(root), run_id="engp").run(
-        tr, shard_span=64, merge_factor=4, positions=True)
-    assert status["positions_packed"] == "built"
+    root = pos_root
     # stage contents == row positions
     rows = spark.read.parquet(f"{root}/positions/data")
     packed = spark.read.parquet(f"{root}/positions_packed/data")
@@ -347,3 +353,44 @@ def test_pipeline_positions_packed_stage(spark, tmp_path_factory):
     assert ([(r["rank"], r["doc_id"], r["n_occ"]) for r in rows_f]
             == sorted((r["rank"], r["doc_id"], r["n_occ"])
                       for r in phrase_match(spark, rows, q).collect()))
+
+
+def _jobs_and_stages_run(spark, group, call):
+    """(jobs, stages that ran tasks) of ``call()`` under a job group. A
+    cached frame's build stage stays in every later job's stage list as a
+    skipped stage, so only stages with completed tasks count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    ran = [s for j in jobs for s in st.getJobInfo(j).stageIds
+           if st.getStageInfo(s) and st.getStageInfo(s).numCompletedTasks]
+    return len(jobs), len(ran)
+
+
+def test_warm_ranked_routes_are_one_job(spark, pos_root):
+    """On a positions=True root every warm ranked route is one Spark job
+    that runs one stage: phrase and near end in the driver merge like
+    WAND and proximity, and the positional cache shares the TF cache's
+    shard_id layout, so no route shuffles. A phrase with no indexable
+    term runs no job at all."""
+    eng = SearchEngine(spark, str(pos_root))
+    routes = {
+        "search": lambda: eng.search("apple banana", k=5, hydrate=False),
+        "phrase": lambda: eng.search_phrase("apple banana", k=5),
+        "near": lambda: eng.search_near("apple banana", k=5),
+        "proximity": lambda: eng.search_proximity("apple banana", k=5,
+                                                  hydrate=False),
+    }
+    for name, call in routes.items():
+        assert call(), name  # warm: builds the caches, ranks something
+        assert _jobs_and_stages_run(
+            spark, f"warm_route_{name}", call) == (1, 1), name
+    assert eng.search_phrase("the of", k=5) == []
+    assert _jobs_and_stages_run(
+        spark, "warm_route_empty_phrase",
+        lambda: eng.search_phrase("the of", k=5)) == (0, 0)

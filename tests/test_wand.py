@@ -133,10 +133,14 @@ def test_driver_rank_matches_sorted_reference(spark, built):
     candidates: equal rounded scores from different shards tie-break by
     doc_id ascending, a k beyond the candidate count keeps every
     candidate, a query with no candidates is absent, and an all-empty
-    batch is an empty frame with the ranked schema."""
+    batch is an empty frame with the ranked schema. The same merge ranks
+    a long value ascending (near's min_span), and its empty frame names
+    that value column."""
     from functools import reduce
+    from pyspark.sql import types as T
     from mini_distributed_search_engine_spark.query.wand import (
-        _RANKED_SCHEMA, CAND_SCHEMA, rank_candidates)
+        _RANKED_SCHEMA, CAND_SCHEMA, _driver_rank, _ranked_schema,
+        rank_candidates)
     shards = [
         # shard 0: q1's highest doc_id first, so the merge must reorder
         [("q1", 40, 2.5000001, 3), ("q1", 3, 1.0, 3),
@@ -172,6 +176,25 @@ def test_driver_rank_matches_sorted_reference(spark, built):
     empty = rank_candidates(
         spark, spark.createDataFrame([], CAND_SCHEMA), 6)
     assert empty.schema == _RANKED_SCHEMA
+    assert empty.collect() == []
+
+    # a long value ranked ascending (span's min_span): equal spans from
+    # different shards tie-break by doc_id ascending, as for scores
+    span_schema = "query_id string, doc_id long, min_span long, k int"
+    spans = [[("s1", 30, 2, 3), ("s1", 4, 5, 3), ("s2", 8, 0, 1)],
+             [("s1", 11, 2, 3), ("s1", 2, 7, 3), ("s2", 6, 0, 1)]]
+    cands = reduce(lambda a, b: a.union(b),
+                   [spark.createDataFrame(rows, span_schema)
+                    for rows in spans])
+    got = sorted(tuple(r) for r in
+                 _driver_rank(spark, cands, "min_span", True).collect())
+    assert got == [("s1", 1, 11, 2), ("s1", 2, 30, 2), ("s1", 3, 4, 5),
+                   ("s2", 1, 6, 0)]
+    empty = _driver_rank(spark, spark.createDataFrame([], span_schema),
+                         "min_span", True)
+    assert empty.schema == _ranked_schema("min_span", T.LongType())
+    assert [f.name for f in empty.schema.fields] == [
+        "query_id", "rank", "doc_id", "min_span"]
     assert empty.collect() == []
 
     idx, avgdl = built
