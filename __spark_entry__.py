@@ -31,12 +31,11 @@ from mini_distributed_search_engine_spark.operators.pagerank import (
     pagerank_converged_query, pagerank_converged_sql, pagerank_fixed_query,
     pagerank_fixed_sql)
 from mini_distributed_search_engine_spark.query.bm25 import (
-    AND_QUERY_SET, DEFAULT_QUERY_SET, bm25_topk, bm25_topk_conjunctive)
+    AND_QUERY_SET, DEFAULT_QUERY_SET, bm25_topk)
 from mini_distributed_search_engine_spark.functions.analyzer import (
     term_positions_pandas)
 from mini_distributed_search_engine_spark.index.build import (
     with_stable_doc_ids)
-from mini_distributed_search_engine_spark.query.phrase import phrase_match
 from mini_distributed_search_engine_spark.query.tfidf import (
     RERANK_QUERY_SET, tfidf_blend_topk, tfidf_rerank_topk)
 from mini_distributed_search_engine_spark.query.wand import wand_topk
@@ -100,16 +99,6 @@ def _bm25(stem: bool):
     return q
 
 
-def _bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-filtered retrieval: BM25 top-k restricted to docs whose
-    role = 'user' (semi-join on the term-pruned postings; corpus stats
-    stay global — standard filtered-search semantics)."""
-    idx = _index(spark, sf_dir, stem=True)
-    allowed = idx.docs.where(F.col("role") == "user").select("doc_id")
-    return bm25_topk(spark, idx.term_doc_tf, idx.term_stats, idx.doc_stats,
-                     allowed_docs=allowed)
-
-
 def _bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-index MaxScore/WAND path; oracle = the same BM25 SQL as the
     exhaustive path (rank-identity across physical plans is the point)."""
@@ -123,8 +112,8 @@ def _bm25_filtered_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered retrieval SERVED FROM THE COMPRESSED INDEX: the
     allowed doc set (role = 'user') is sharded alongside the packed
     segments and masked inside the MaxScore kernel before scoring — no
-    fallback to the uncompressed postings. Same oracle as
-    `bm25_topk_filtered`: the physical path changes, the ranks must not."""
+    fallback to the uncompressed postings. Oracle = BM25 over the role's
+    docs with GLOBAL corpus stats."""
     idx = _index(spark, sf_dir, stem=True)
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=256)
@@ -151,28 +140,6 @@ def _bm25_tombstoned_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=256)
     return wand_topk(spark, packed, idx.doc_stats,
                      blocked_ids=_tomb_ids(idx))
-
-
-def _bm25_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Proximity-boosted retrieval: BM25 + pairwise min-distance bonus
-    over the positional index (query/proximity.py) — term closeness
-    breaks ties, docs with scattered terms rank below docs with adjacent
-    ones. Single-term matches keep OR semantics (bonus 0)."""
-    from mini_distributed_search_engine_spark.query.proximity import (
-        bm25_topk_proximity)
-    idx = _index(spark, sf_dir, stem=True)
-    docs = with_stable_doc_ids(transcripts_from_documents(spark, sf_dir))
-    pos = term_positions_pandas(docs, "text", stem=True)
-    return bm25_topk_proximity(spark, idx.term_doc_tf, idx.term_stats,
-                               idx.doc_stats, pos)
-
-
-def _bm25_and(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conjunctive (AND) retrieval: doc must contain every analyzed query
-    term — the declarative posting-list-intersection path."""
-    idx = _index(spark, sf_dir, stem=True)
-    return bm25_topk_conjunctive(spark, idx.term_doc_tf, idx.term_stats,
-                                 idx.doc_stats)
 
 
 def _bm25_and_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,13 +189,6 @@ def _positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return term_positions_pandas(docs, "text", stem=True)
 
 
-def _phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact phrase search over the positional index (beyond the reference,
-    whose count-only index cannot answer phrase queries)."""
-    docs = with_stable_doc_ids(transcripts_from_documents(spark, sf_dir))
-    return phrase_match(spark, term_positions_pandas(docs, "text", stem=True))
-
-
 def _positions_packed(spark: SparkSession, sf_dir: str,
                       shard_bounds=None):
     """Shared builder: positional rows -> packed per-(term, doc-shard)
@@ -268,7 +228,7 @@ def _positions_archive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phrase_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEW round 5: phrase search served from the PACKED positional index
     (per-shard anchor-intersection kernel, candidate-block-only position
-    decode) — same oracle as the declarative `phrase_match`."""
+    decode); oracle = the phrase occurrences of the row positions."""
     from mini_distributed_search_engine_spark.query.phrase import (
         phrase_match_packed)
     return phrase_match_packed(spark, _positions_packed(spark, sf_dir))
@@ -290,8 +250,8 @@ def _bm25_proximity_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes — packed TF segments cogrouped per doc-range shard with
     positional segments co-sharded via shard_bounds (exercising the
     alignment contract), MaxScore pruning carrying the bonus slack, exact
-    pairwise-min-distance rerank of the surviving pool. Same oracle as
-    the declarative `bm25_topk_proximity`."""
+    pairwise-min-distance rerank of the surviving pool; oracle = BM25 +
+    the pairwise bonus over the row positions."""
     from mini_distributed_search_engine_spark.query.proximity import (
         wand_topk_proximity)
     from mini_distributed_search_engine_spark.query.wand import (
@@ -634,14 +594,15 @@ _R5_WINDOW = (
     # encoder code changed since their newest (r4) driver row
     "packed_roundtrip", "packed_purge_roundtrip", "streaming_index_roundtrip",
     # r4-latest entries, registry source order, up to the 50th slot (the
-    # last seven flame_* entries stay outside)
+    # last three flame_* entries stay outside)
     "pagerank_fixed", "pagerank_converged", "doc_keywords_bucketed",
-    "term_doc_tf", "bm25_topk_hydrated", "phrase_match",
-    "term_doc_tf_nostem", "bm25_topk_and", "tfidf_blend_topk",
+    "term_doc_tf", "bm25_topk_hydrated",
+    "term_doc_tf_nostem", "tfidf_blend_topk",
     "term_suggestions", "tfidf_rerank_topk", "bm25_topk_nostem",
     "flame_groupby_salted", "flame_parallelize", "flame_scan_filter_project",
     "flame_wordcount", "flame_distinct", "flame_join", "flame_fold",
-    "flame_groupby",
+    "flame_groupby", "flame_intersection", "flame_cogroup", "flame_sample",
+    "flame_take",
     # carried over from the previous window
     "doc_keywords", "related_terms", "text_bigrams", "packed_pfd_roundtrip",
     "docs_stable_ids", "term_stats", "doc_stats",
@@ -650,8 +611,7 @@ _R5_WINDOW = (
     "positions_packed_roundtrip", "phrase_match_packed",
     "bm25_topk_proximity_wand", "span_near_match",
     "streaming_positions_roundtrip", "index_purge_roundtrip",
-    "bm25_topk", "bm25_topk_filtered",
-    "bm25_topk_proximity", "bm25_topk_wand",
+    "bm25_topk", "bm25_topk_wand",
     "bm25_topk_and_wand", "bm25_topk_filtered_wand",
     "bm25_topk_tombstoned_wand",
     # never had a driver row
@@ -693,19 +653,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "term_stats": _q_term_stats(stem=True),
         "doc_stats": _q_doc_stats(stem=True),
         "bm25_topk": _bm25(stem=True),
-        "bm25_topk_filtered": _bm25_filtered,
         # NEW round 4: same filter semantics served from the packed index
         "bm25_topk_filtered_wand": _bm25_filtered_wand,
         # NEW round 4: tombstoned retrieval (deletes visible pre-compaction)
         "bm25_topk_tombstoned_wand": _bm25_tombstoned_wand,
-        # NEW round 4: proximity-boosted ranking over the positional index
-        "bm25_topk_proximity": _bm25_proximity,
         "bm25_topk_collapsed": _bm25_collapsed,
         "bm25_topk_wand": _bm25_wand,
         "bm25_topk_and_wand": _bm25_and_wand,
         "bm25_topk_hydrated": _bm25_hydrated,
         "term_positions": _positions,
-        "phrase_match": _phrase,
         # NEW round 5: packed positional index family
         "positions_packed_roundtrip": _positions_packed_roundtrip,
         # NEW round 5: positional cold tier (PFD archive -> restore)
@@ -731,7 +687,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # family as term_positions
         "streaming_positions_roundtrip": _streaming_positions_roundtrip,
         "term_doc_tf_nostem": _q_term_doc_tf(stem=False),
-        "bm25_topk_and": _bm25_and,
         "tfidf_blend_topk": _tfidf_blend,
         "term_suggestions": _term_suggestions,
         "tfidf_rerank_topk": _tfidf_rerank,
@@ -769,21 +724,17 @@ def oracle_sql() -> dict[str, str]:
         "term_stats": O.sql_term_stats(stem=True),
         "doc_stats": O.sql_doc_stats(stem=True),
         "bm25_topk": O.sql_bm25_topk(stem=True),
-        "bm25_topk_filtered": O.sql_bm25_topk(
-            stem=True, doc_filter_sql="fd.role = 'user'"),
         "bm25_topk_filtered_wand": O.sql_bm25_topk(
             stem=True, doc_filter_sql="fd.role = 'user'"),
         "bm25_topk_tombstoned_wand": O.sql_bm25_topk(
             stem=True, doc_filter_sql="fd.doc_id % 13 <> 0"),
-        "bm25_topk_proximity": O.sql_bm25_topk_proximity(stem=True),
         "bm25_topk_collapsed": O.sql_bm25_collapsed(stem=True),
         "bm25_topk_wand": O.sql_bm25_topk(stem=True),
-        # (uses AND_QUERY_SET, like bm25_topk_and — rare/common term mixes
-        # where the intersection is a strict subset of the union)
+        # (uses AND_QUERY_SET — rare/common term mixes where the
+        # intersection is a strict subset of the union)
         "bm25_topk_and_wand": O.sql_bm25_topk_conjunctive(stem=True),
         "bm25_topk_hydrated": O.sql_bm25_topk_hydrated(stem=True),
         "term_positions": O.sql_term_positions(stem=True),
-        "phrase_match": O.sql_phrase_match(stem=True),
         # round 5: the packed positional family reuses the row-layout
         # oracles — the physical format must be invisible to the answer
         "positions_packed_roundtrip": O.sql_term_positions(stem=True),
@@ -808,7 +759,6 @@ def oracle_sql() -> dict[str, str]:
         "streaming_index_roundtrip": O.sql_term_doc_tf_dl(stem=True),
         "streaming_positions_roundtrip": O.sql_term_positions(stem=True),
         "term_doc_tf_nostem": O.sql_term_doc_tf(stem=False),
-        "bm25_topk_and": O.sql_bm25_topk_conjunctive(stem=True),
         "tfidf_blend_topk": O.sql_tfidf_blend_topk(stem=True),
         "term_suggestions": O.sql_term_suggestions(stem=True),
         "tfidf_rerank_topk": O.sql_tfidf_rerank_topk(stem=True),

@@ -3,14 +3,14 @@
 The reference serves search over HTTP from a hand-rolled webserver
 (Integration/src/cis5550/jobs/Searcher.java:128-317 routes /search and
 /words on webserver/Server.java:147-160). This is the Spark-native
-analogue: the same warm engine `jobs/serve_job.py` drives over stdin,
-fronted by the stdlib ThreadingHTTPServer — each request is a small warm
-Spark job over the packed index, ranked by one driver-side merge (the
-engine has one serving path); Spark schedules concurrent driver threads
-fine, so requests overlap. Every GET route but /stats is one row of a
-route table (required params, engine call, reply key) sharing one timing
-path. The hand-rolled socket/HTTP layer of the reference is exactly
-the infrastructure SURVEY §7 absorbs into commodity layers.
+analogue: one warm engine fronted by the stdlib ThreadingHTTPServer —
+each request is a small warm Spark job over the packed index, ranked by
+one driver-side merge (the engine has one serving path); Spark schedules
+concurrent driver threads fine, so requests overlap. Every GET route
+but /stats is one row of a route table (required params, engine call,
+reply key) sharing one timing path. The hand-rolled socket/HTTP layer of
+the reference is exactly the infrastructure SURVEY §7 absorbs into
+commodity layers.
 
 Routes (JSON replies):
   GET /search?q=<text>&k=10&mode=or|and[&role=<role>]  ranked BM25
@@ -58,8 +58,7 @@ def _row_json(r) -> dict:
 
 
 def _pos_int(q: dict, key: str, default: int, cap: int = 10_000) -> int:
-    """Parse a positive bounded int query param; ValueError -> a 400 (the
-    stdin serve_job applies the same rule to its role queries)."""
+    """Parse a positive bounded int query param; ValueError -> a 400."""
     v = int(q.get(key, str(default)))
     if not 0 < v <= cap:
         raise ValueError(f"{key} must be in 1..{cap}, got {v}")

@@ -17,8 +17,9 @@ the doc space).
 Reference anchor: the posting-string format this family replaces is the
 reference's one-giant-string-per-term index (`jobs/Indexer.java:309-415`,
 "url:tf, url:tf" — no positions at all); phrase and proximity are our
-extensions, so the parity bar is our own declarative row path
-(rank-identity test-enforced; DuckDB-oracle gated).
+extensions, so the parity bar is the DuckDB oracle (gated) and the
+pure-Python references `phrase_count_pandas` / `proximity_scores_pandas`
+(rank-identity test-enforced).
 
 Blob layout per (term, shard) segment, all LEB128 varint (codec.py):
 

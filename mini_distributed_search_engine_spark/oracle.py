@@ -243,9 +243,9 @@ def sql_bm25_topk(stem: bool = True,
                   queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
                   doc_filter_sql: str | None = None,
                   purge_where: str | None = None) -> str:
-    # doc_filter_sql (e.g. "fd.role = 'user'") mirrors bm25_topk's
-    # allowed_docs semi-join: results restricted to the filtered docs,
-    # corpus stats (idf/avgdl) stay global.
+    # doc_filter_sql (e.g. "fd.role = 'user'") mirrors wand_topk's
+    # allowed_docs mask: results restricted to the filtered docs, corpus
+    # stats (idf/avgdl) stay global.
     # purge_where (e.g. "doc_id % 13 <> 0") instead removes the docs from
     # the CORPUS itself — tf, df, n_docs and avgdl are all computed over
     # the survivors, mirroring a physical `StagedIndexBuild.purge()`
@@ -288,8 +288,9 @@ FROM ranked WHERE rank <= k"""
 def sql_bm25_topk_proximity(stem: bool = True,
                             queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
                             w: float = 1.0) -> str:
-    """Mirror of query/proximity.py::bm25_topk_proximity: BM25 + w * sum
-    over unordered query-term pairs of 1/(1 + min |pos_a - pos_b|).
+    """Oracle of the packed proximity kernel
+    (query/proximity.py::wand_topk_proximity): BM25 + w * sum over
+    unordered query-term pairs of 1/(1 + min |pos_a - pos_b|).
     Composes the analyzer chain with the positional chain (CTE names are
     disjoint by construction) and LEFT-joins the bonus so single-term
     matches keep OR semantics with bonus 0."""
@@ -341,7 +342,9 @@ FROM ranked WHERE rank <= k"""
 
 def sql_bm25_topk_conjunctive(stem: bool = True,
                               queries: tuple[Query, ...] = AND_QUERY_SET) -> str:
-    """AND semantics: doc must contain every analyzed query term."""
+    """AND semantics: doc must contain every analyzed query term. Oracle
+    of the packed intersection kernel
+    (query/wand.py::wand_topk(conjunctive=True))."""
     return analyzed_terms_ctes(stem) + f"""
 , tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf FROM sel GROUP BY 1, 2),
 dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
@@ -434,6 +437,8 @@ SELECT rank, t1, t2, cnt FROM ranked WHERE rank <= {topn}"""
 
 def sql_phrase_match(stem: bool = True,
                      queries: tuple = PHRASE_QUERY_SET) -> str:
+    """Phrase occurrences per doc, ranked n_occ desc, doc_id asc: oracle
+    of the packed phrase kernel (query/phrase.py::phrase_match_packed)."""
     qrows = phrase_terms(queries, stem=stem)
     qpos = ", ".join(f"({_sql_str(q)}, {i}, {_sql_str(t)})"
                      for q, i, t in qrows)

@@ -76,20 +76,23 @@ def term_in(terms) -> Column:
     return F.expr(f"`term` IN ({', '.join(lits)})") if lits else F.lit(False)
 
 
-def _bm25_raw_scores(spark: SparkSession, term_doc_tf: DataFrame,
-                     term_stats: DataFrame, doc_stats: DataFrame,
-                     qrows: list, allowed_docs: DataFrame | None = None,
-                     corpus_stats: tuple[int, float] | None = None
-                     ) -> DataFrame:
-    """(query_id, k, doc_id, raw_score): the shared BM25 scoring core —
-    literal term IN-list prune, broadcast query/stats joins, partial-agg
-    contribution sum. bm25_topk ranks this directly; the proximity
-    variant adds its bonus before ranking.
+def bm25_topk(spark: SparkSession, term_doc_tf: DataFrame,
+              term_stats: DataFrame, doc_stats: DataFrame,
+              queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
+              stem: bool = True,
+              round_scores: int | None = 6,
+              corpus_stats: tuple[int, float] | None = None) -> DataFrame:
+    """Exact BM25 top-k for a query set: the exhaustive OR reference the
+    packed kernels are checked against.
 
-    ``corpus_stats=(n_docs, avgdl)`` (e.g. cached by SearchEngine at
-    warmup) skips the per-call one-row doc_stats collect — without it
-    every exhaustive query pays a blocking driver job before the real
-    scan even starts (same contract as wand.wand_topk)."""
+    Returns (query_id, rank, doc_id, score); score rounded to
+    ``round_scores`` decimals for cross-engine comparison.
+
+    ``corpus_stats=(n_docs, avgdl)`` skips the per-call one-row
+    doc_stats collect (same contract as wand.wand_topk)."""
+    qrows = analyzed_query_terms(queries, stem=stem)
+    if not qrows:
+        qrows = [("__none__", "__none__", 0)]
     qterms = spark.createDataFrame(qrows, "query_id string, term string, k int")
     if corpus_stats is None:
         stats = doc_stats.collect()[0]
@@ -105,43 +108,13 @@ def _bm25_raw_scores(spark: SparkSession, term_doc_tf: DataFrame,
     sel = pruned.join(F.broadcast(qterms), "term")
     sel = sel.join(F.broadcast(term_stats.where(term_in(term_list))),
                    "term")
-    if allowed_docs is not None:
-        sel = sel.join(allowed_docs.select("doc_id"), "doc_id", "semi")
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5)))
     tf_part = (F.col("tf") * (K1 + 1.0)) / (
         F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl))))
-    return (sel.withColumn("contrib", idf * tf_part)
-            .groupBy("query_id", "k", "doc_id")
-            .agg(F.sum("contrib").alias("raw_score")))
-
-
-def bm25_topk(spark: SparkSession, term_doc_tf: DataFrame,
-              term_stats: DataFrame, doc_stats: DataFrame,
-              queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
-              stem: bool = True,
-              round_scores: int | None = 6,
-              allowed_docs: DataFrame | None = None,
-              corpus_stats: tuple[int, float] | None = None) -> DataFrame:
-    """Exact BM25 top-k for a query set.
-
-    Returns (query_id, rank, doc_id, score); score rounded to
-    ``round_scores`` decimals for cross-engine comparison (ranking is done on
-    the unrounded float64).
-
-    ``allowed_docs`` (a frame with a doc_id column) restricts results to a
-    metadata-filtered doc subset (e.g. role = 'user') via a semi-join on
-    the PRUNED postings — the filter meets the postings after the term
-    IN-list already cut the scan to query terms, so its cost is
-    O(matching postings), not O(index). Corpus statistics (idf, avgdl)
-    stay corpus-global, the standard filtered-search semantics. At scale
-    a selective doc filter broadcasts; a broad one falls back to a
-    shuffle join on doc_id, which AQE sizes at runtime."""
-    qrows = analyzed_query_terms(queries, stem=stem)
-    if not qrows:
-        qrows = [("__none__", "__none__", 0)]
-    scored = _bm25_raw_scores(spark, term_doc_tf, term_stats, doc_stats,
-                              qrows, allowed_docs, corpus_stats=corpus_stats)
+    scored = (sel.withColumn("contrib", idf * tf_part)
+              .groupBy("query_id", "k", "doc_id")
+              .agg(F.sum("contrib").alias("raw_score")))
     # Rank on the ROUNDED score when rounding is requested: float association
     # order differs between engines/plans, so two structurally-near-tied docs
     # can swap raw order by 1 ulp — ranking on the rounded value plus the
@@ -168,64 +141,6 @@ AND_QUERY_SET: tuple[Query, ...] = (
     Query("a04", "dup zzzznotaterm", k=500),   # absent term -> empty
     Query("a05", "window", k=20),               # single term == OR semantics
 )
-
-
-def bm25_topk_conjunctive(spark: SparkSession, term_doc_tf: DataFrame,
-                          term_stats: DataFrame, doc_stats: DataFrame,
-                          queries: tuple[Query, ...] = AND_QUERY_SET,
-                          stem: bool = True,
-                          round_scores: int | None = 6,
-                          corpus_stats: tuple[int, float] | None = None
-                          ) -> DataFrame:
-    """Conjunctive (AND) BM25 top-k: a doc qualifies only if it contains
-    EVERY analyzed query term (posting-list intersection semantics); ranking
-    among qualifying docs is the same BM25 sum with the same tie-break.
-
-    Same broadcast-semi-join plan as `bm25_topk` plus a per-(query, doc)
-    matched-term count compared against the query's term count — the
-    declarative form of an intersection; the packed-index path
-    (`wand.wand_topk(..., conjunctive=True)`) does the literal sorted-array
-    intersection inside shards.
-    """
-    qrows = analyzed_query_terms(queries, stem=stem)
-    if not qrows:
-        qrows = [("__none__", "__none__", 0)]
-    qterms = spark.createDataFrame(qrows, "query_id string, term string, k int")
-    if corpus_stats is None:
-        stats = doc_stats.collect()[0]
-        corpus_stats = (int(stats["n_docs"]), float(stats["avgdl"]))
-    n_docs, avgdl = corpus_stats
-    term_list = sorted({t for _, t, _ in qrows})
-    nterms = {}
-    for q, _, _ in qrows:
-        nterms[q] = nterms.get(q, 0) + 1
-    ndf = F.broadcast(spark.createDataFrame(
-        list(nterms.items()), "query_id string, nterms int"))
-
-    pruned = term_doc_tf.where(term_in(term_list))
-    sel = pruned.join(F.broadcast(qterms), "term")
-    sel = sel.join(F.broadcast(term_stats.where(term_in(term_list))),
-                   "term")
-    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    tf_part = (F.col("tf") * (K1 + 1.0)) / (
-        F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl))))
-    scored = (sel.withColumn("contrib", idf * tf_part)
-              .groupBy("query_id", "k", "doc_id")
-              .agg(F.sum("contrib").alias("raw_score"),
-                   # (term, doc_id) is unique in term_doc_tf, so the row
-                   # count IS the distinct matched-term count
-                   F.count(F.lit(1)).cast("int").alias("nhit"))
-              .join(ndf, "query_id")
-              .where(F.col("nhit") == F.col("nterms")))
-    score = F.round(F.col("raw_score"), round_scores) if round_scores is not None \
-        else F.col("raw_score")
-    scored = scored.withColumn("score", score)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id").asc())
-    out = (scored.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "score")
 
 
 def bm25_scores_pandas(docs_terms: list[list[str]], query_terms: list[str],

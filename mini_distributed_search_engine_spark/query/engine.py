@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..index.packed import serving_layout
+from ..plans.pipeline import StagedIndexBuild
 from .bm25 import Query
 from .phrase import phrase_match_packed
 from .wand import compute_shard_bounds, wand_topk
@@ -73,9 +74,14 @@ class SearchEngine:
         self.docs = spark.read.parquet(f"{index_root}/docs/data")
         self._index_root = index_root
         self._positions_packed: DataFrame | None = None
-        self._tombstones: set[int] = set()
+        # checkpointed deletes of an earlier engine on this root stay
+        # masked; with no `_tombstones/` directory this runs no job
+        self._tombstones: set[int] = set(
+            StagedIndexBuild(spark, index_root).pending_tombstones())
+        self._checkpointed = frozenset(self._tombstones)
         import threading
         self._tombstones_lock = threading.Lock()
+        self._checkpoint_lock = threading.Lock()
 
     def _ensure_term_stats(self) -> DataFrame:
         if not hasattr(self, "term_stats"):
@@ -105,17 +111,20 @@ class SearchEngine:
             return len(self._tombstones)
 
     def checkpoint_tombstones(self) -> int:
-        """Persist the live query-time tombstone set beside the index
-        root (`StagedIndexBuild.record_tombstones` — O(deletes) metadata,
-        no index byte touched), so deletes survive an engine restart and
-        the next compaction (`StagedIndexBuild.purge()`) folds them into
-        every at-rest stage. Returns the count written this call."""
-        tomb = self._tomb()
-        if not tomb:
-            return 0
-        from ..plans.pipeline import StagedIndexBuild
-        StagedIndexBuild(self.spark, self._index_root).record_tombstones(tomb)
-        return len(tomb)
+        """Persist the live query-time tombstones not yet on disk beside
+        the index root (`StagedIndexBuild.record_tombstones` — O(deletes)
+        metadata, no index byte touched), so deletes survive an engine
+        restart (a new engine starts from the root's pending set) and the
+        next compaction (`StagedIndexBuild.purge()`) folds them into every
+        at-rest stage. Returns the count written this call."""
+        with self._checkpoint_lock:
+            new = self._tombstones - self._checkpointed
+            if not new:
+                return 0
+            StagedIndexBuild(self.spark,
+                             self._index_root).record_tombstones(new)
+            self._checkpointed = self._checkpointed | new
+            return len(new)
 
     def _tomb(self) -> list[int] | None:
         """Sorted tombstone snapshot for the query paths (None when
@@ -236,8 +245,7 @@ class SearchEngine:
                          hydrate: bool = True) -> list:
         """Proximity-boosted search (BM25 + pairwise min-distance bonus):
         docs whose query terms sit near each other outrank scattered
-        matches. Serving twin of the batch `bm25_topk_proximity` /
-        `wand_topk_proximity` entries."""
+        matches, served by `proximity.wand_topk_proximity`."""
         df = self.search_batch((Query("q", text, k=k),), hydrate=hydrate,
                                mode="proximity")
         return sorted(df.collect(), key=lambda r: r["rank"])

@@ -7,18 +7,14 @@ user expects, built Spark-first:
 
 * index: ``term_positions_df`` rows (doc_id, term, pos), pos over the
   POST-ANALYZER term sequence (stop/junk removed first, Lucene-style).
-* query: phrase [t0..tn] matches at anchor p iff t_i is at p+i for all i.
-  Declaratively: broadcast (i, t_i) -> join positions -> anchor = pos - i
-  -> an anchor with all n+1 distinct i's is a phrase occurrence. One wide
-  join against the (term-pruned) positions table + two small aggregations;
-  no per-row Python anywhere.
+* query: phrase [t0..tn] matches at anchor p iff t_i is at p+i for all i:
+  the anchors of a doc are the intersection over slots i of
+  (positions(t_i) - i), so repeated-term phrases need no special case.
 * ranking: phrase-occurrence count DESC, doc_id ASC (deterministic).
-* serving: `phrase_match_packed` answers the same query from the packed
-  positional segments through `positional_topk`, the per-shard kernel
-  it shares with span/near, ending in the driver merge.
-
-Repeated-term phrases work because each position row joins every (i, t)
-slot it can fill and the anchor group counts DISTINCT slots.
+* serving: `phrase_match_packed` answers it from the packed positional
+  segments through `positional_topk`, the per-shard kernel it shares
+  with span/near, ending in the driver merge. `phrase_count_pandas` is
+  the brute-force test reference.
 """
 
 from __future__ import annotations
@@ -27,8 +23,7 @@ import functools
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..functions.analyzer import analyze
@@ -59,37 +54,6 @@ def phrase_terms(queries: tuple[Query, ...],
         for i, t in enumerate(analyze(q.text, stem=stem)):
             rows.append((q.query_id, i, t))
     return rows
-
-
-def phrase_match(spark: SparkSession, positions: DataFrame,
-                 queries: tuple[Query, ...] = PHRASE_QUERY_SET,
-                 stem: bool = True) -> DataFrame:
-    """Top-k docs per phrase query: (query_id, rank, doc_id, n_occ)."""
-    qrows = phrase_terms(queries, stem=stem)
-    if not qrows:
-        return _empty_ranked(spark, _ranked_schema("n_occ", T.LongType()))
-    qdf = F.broadcast(spark.createDataFrame(
-        qrows, "query_id string, i int, term string"))
-    meta = F.broadcast(spark.createDataFrame(
-        [(q.query_id, len(analyze(q.text, stem=stem)), q.k) for q in queries
-         if analyze(q.text, stem=stem)],
-        "query_id string, n int, k int"))
-
-    term_list = sorted({t for _, _, t in qrows})
-    pruned = positions.where(term_in(term_list))
-    adj = (pruned.join(qdf, "term")
-           .withColumn("anchor", F.col("pos") - F.col("i")))
-    anchors = (adj.groupBy("query_id", "doc_id", "anchor")
-               .agg(F.countDistinct("i").alias("nh")))
-    occ = (anchors.join(meta, "query_id")
-           .where(F.col("nh") == F.col("n"))
-           .groupBy("query_id", "k", "doc_id")
-           .agg(F.count(F.lit(1)).cast("long").alias("n_occ")))
-    w = Window.partitionBy("query_id").orderBy(F.col("n_occ").desc(),
-                                               F.col("doc_id").asc())
-    out = (occ.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "n_occ")
 
 
 def positional_topk(spark: SparkSession, packed_pos: DataFrame,
@@ -175,9 +139,10 @@ def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
                         queries: tuple[Query, ...] = PHRASE_QUERY_SET,
                         stem: bool = True,
                         blocked_ids=None) -> DataFrame:
-    """`phrase_match` served from the PACKED positional index through
-    `positional_topk`: rank-identical to the declarative row path
-    (test-enforced), but the scan is per-(term, doc-shard) varint blobs
+    """Top-k docs per phrase query, (query_id, rank, doc_id, n_occ),
+    served from the PACKED positional index through `positional_topk`:
+    rank-identical to the DuckDB oracle and `phrase_count_pandas`
+    (test-enforced); the scan is per-(term, doc-shard) varint blobs
     pruned to the query terms — no O(occurrence) row join anywhere. Each
     candidate's anchors are the intersection over slots i of
     (positions(t_i) - i); the per-shard top-k by n_occ desc, doc_id asc

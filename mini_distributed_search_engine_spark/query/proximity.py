@@ -8,14 +8,12 @@ them scattered. Score = BM25 + w * sum over unordered query-term pairs of
 adjacent terms and decays hyperbolically, a standard pairwise-min-dist
 formulation (Rasolofo & Savoy 2003 shape).
 
-Distributed shape: the positional index is pruned to query terms with the
-same literal IN-list the BM25 scan uses, then the pair distances come
-from ONE self-join keyed on (query_id, doc_id) — fan-out per doc is
-occ(t1) x occ(t2) of QUERY terms only (bounded by the per-doc query-term
-occurrences, not the doc length), and the min/sum aggregations partial-
-aggregate map-side. The bonus then LEFT-joins onto the BM25 scores: docs
-matching a single term keep bonus 0 and rank purely by BM25 (OR
-semantics preserved).
+Served from the compressed indexes only (`wand_topk_proximity`): the
+packed TF segments cogrouped per doc-range shard with the co-sharded
+packed positional segments, one kernel with WAND's MaxScore pruning.
+Docs matching a single term keep bonus 0 and rank purely by BM25 (OR
+semantics preserved). `proximity_scores_pandas` is the brute-force
+test reference.
 """
 
 from __future__ import annotations
@@ -24,64 +22,12 @@ import itertools
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from .bm25 import (DEFAULT_QUERY_SET, Query, _bm25_raw_scores,
-                   analyzed_query_terms, term_in)
+from .bm25 import (DEFAULT_QUERY_SET, Query, analyzed_query_terms,
+                   bm25_scores_pandas, term_in)
 
 PROX_W = 1.0  # bonus weight: one adjacent pair ~ one strong BM25 term
-
-
-def bm25_topk_proximity(spark: SparkSession, term_doc_tf: DataFrame,
-                        term_stats: DataFrame, doc_stats: DataFrame,
-                        positions: DataFrame,
-                        queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
-                        stem: bool = True, w: float = PROX_W,
-                        round_scores: int | None = 6,
-                        corpus_stats: tuple[int, float] | None = None
-                        ) -> DataFrame:
-    """(query_id, rank, doc_id, score): BM25 + pairwise proximity bonus.
-
-    ``positions``: the positional index (doc_id, term, pos) — the same
-    table `phrase_match` consumes (pos over the post-analyzer sequence).
-    Rank/tie-break discipline identical to `bm25_topk` (rounded score
-    desc, doc_id asc), so results are engine-invariant and DuckDB can
-    oracle them.
-    """
-    qrows = analyzed_query_terms(queries, stem=stem)
-    if not qrows:
-        qrows = [("__none__", "__none__", 0)]
-    raw = _bm25_raw_scores(spark, term_doc_tf, term_stats, doc_stats, qrows,
-                           corpus_stats=corpus_stats)
-
-    term_list = sorted({t for _, t, _ in qrows})
-    qterms = spark.createDataFrame(qrows, "query_id string, term string, k int")
-    qpos = (positions.where(term_in(term_list))
-            .join(F.broadcast(qterms.select("query_id", "term")), "term")
-            .select("query_id", "doc_id", "term", "pos"))
-    a = qpos.select("query_id", "doc_id", F.col("term").alias("t1"),
-                    F.col("pos").alias("p1"))
-    b = qpos.select("query_id", "doc_id", F.col("term").alias("t2"),
-                    F.col("pos").alias("p2"))
-    pairmin = (a.join(b, ["query_id", "doc_id"])
-               .where(F.col("t1") < F.col("t2"))
-               .groupBy("query_id", "doc_id", "t1", "t2")
-               .agg(F.min(F.abs(F.col("p1") - F.col("p2"))).alias("d")))
-    bonus = (pairmin.groupBy("query_id", "doc_id")
-             .agg(F.sum(1.0 / (1.0 + F.col("d"))).alias("bns")))
-
-    scored = (raw.join(bonus, ["query_id", "doc_id"], "left")
-              .withColumn("raw2", F.col("raw_score")
-                          + F.lit(float(w)) * F.coalesce("bns", F.lit(0.0))))
-    score = F.round(F.col("raw2"), round_scores) if round_scores is not None \
-        else F.col("raw2")
-    scored = scored.withColumn("score", score)
-    win = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                                 F.col("doc_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(win))
-            .where(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_id", "score"))
 
 
 def _min_pair_dist(x: np.ndarray, y: np.ndarray) -> int:
@@ -101,12 +47,14 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
                         round_scores: int | None = 6,
                         corpus_stats: tuple[int, float] | None = None,
                         blocked_ids=None) -> DataFrame:
-    """`bm25_topk_proximity` served from the COMPRESSED indexes: packed
-    TF segments (`index/packed.py`) cogrouped per doc-range shard with
-    packed positional segments (`index/positions.py`). Rank-identical to
-    the declarative row path (test-enforced; same rounded-score-desc,
-    doc-id-asc discipline), one Spark job warm, ranked by the driver-side
-    merge of `wand.rank_candidates` (eager, like `wand.wand_topk`).
+    """(query_id, rank, doc_id, score): BM25 + pairwise proximity bonus,
+    served from the COMPRESSED indexes: packed TF segments
+    (`index/packed.py`) cogrouped per doc-range shard with packed
+    positional segments (`index/positions.py`). Rank-identical to the
+    DuckDB oracle and to `proximity_scores_pandas` (test-enforced; ranked
+    on the rounded score desc, doc_id asc), one Spark job warm, ranked by
+    the driver-side merge of `wand.rank_candidates` (eager, like
+    `wand.wand_topk`).
 
     REQUIRES the two packed tables to share the shard_id mapping — build
     the positional side with ``build_packed_positions(shard_bounds=
@@ -150,7 +98,7 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
         """Exact pairwise-min-distance bonus for the surviving pool
         (docs sorted ascending): positions decoded only for the blocks
         holding candidates; pair ordering (t1 < t2 by string) matches
-        the declarative/oracle formulation."""
+        the oracle formulation."""
         final = scores.copy()
         uniq = sorted(set(present_terms))
         if len(uniq) < 2 or not psegs:
@@ -212,3 +160,21 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
              .cogroup(sel_pos.groupBy("shard_id"))
              .applyInPandas(shard_fn, CAND_SCHEMA))
     return rank_candidates(spark, cands, round_scores)
+
+
+def proximity_scores_pandas(docs_terms: list[list[str]],
+                            query_terms: list[str],
+                            w: float = PROX_W) -> list[float]:
+    """Brute-force oracle (test-only): `bm25_scores_pandas` plus
+    ``w * sum 1 / (1 + min |pa - pb|)`` over the unordered distinct
+    query-term pairs a doc contains, positions being indexes into its
+    analyzed term sequence."""
+    terms = sorted(set(query_terms))
+    scores = bm25_scores_pandas(docs_terms, terms)
+    for i, doc in enumerate(docs_terms):
+        pos = {t: [p for p, u in enumerate(doc) if u == t] for t in terms}
+        for ta, tb in itertools.combinations(terms, 2):
+            if pos[ta] and pos[tb]:
+                d = min(abs(a - b) for a in pos[ta] for b in pos[tb])
+                scores[i] += w / (1.0 + d)
+    return scores

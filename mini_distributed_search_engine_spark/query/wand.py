@@ -22,7 +22,8 @@ terms decoding ONLY the blocks that contain surviving candidates (per-block
 byte offsets stored at encode time). The eps guard plus ranking on rounded
 scores with the (score DESC, doc_id ASC) tie-break keeps results
 engine-invariant under float association noise. Proven rank-identical to
-the exhaustive `bm25.bm25_topk` scorer in tests/test_wand.py.
+the exhaustive `bm25.bm25_topk` scorer (OR) and to the pure-Python
+`bm25.bm25_scores_pandas` under AND and doc filters in tests/test_wand.py.
 """
 
 from __future__ import annotations
@@ -230,8 +231,9 @@ def _shard_topk(queries_meta: list[tuple[str, list[str], int]],
     MaxScore bounds stay sound because theta is then the k-th best among
     allowed docs only, and every upper bound still dominates every doc,
     allowed included. Corpus statistics (idf, avgdl) stay global: standard
-    filtered-search semantics, rank-identical to `bm25.bm25_topk` with
-    ``allowed_docs`` (test-enforced).
+    filtered-search semantics, rank-identical to the DuckDB oracle's
+    doc filter and to `bm25.bm25_scores_pandas` over the allowed docs
+    (test-enforced).
 
     ``blocked`` (a sorted int64 array riding the closure — tombstones, so
     metadata-scale by the LSM discipline: `packed.purge_docs` folds them
@@ -412,8 +414,8 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
     (query_id, rank, doc_id, score). Pass ``corpus_stats=(n_docs, avgdl)``
     (e.g. cached by SearchEngine at warmup) to skip the doc_stats collect —
     a warm query is then a single Spark job. ``conjunctive=True`` = AND
-    semantics (sorted posting-list intersection per shard), matching
-    `bm25.bm25_topk_conjunctive`.
+    semantics (sorted posting-list intersection per shard), checked
+    against `oracle.sql_bm25_topk_conjunctive`.
 
     ``allowed_docs`` (a frame with a doc_id column, e.g. docs filtered by a
     metadata predicate) restricts results to that subset WITHOUT leaving
@@ -423,8 +425,8 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
     shard's kernel sees only its own slice of the filter — never a
     broadcast of the full allowed set, never a decode of disallowed
     postings beyond the driver term's scan. Corpus statistics stay global
-    (standard filtered-search semantics; same oracle as the exhaustive
-    `bm25.bm25_topk(allowed_docs=...)` path).
+    (standard filtered-search semantics; the DuckDB oracle is
+    `oracle.sql_bm25_topk(doc_filter_sql=...)`).
 
     ``blocked_ids`` (an iterable of doc_ids — query-time tombstones
     recorded since the last `packed.purge_docs` compaction) excludes

@@ -72,24 +72,27 @@ def test_distributed_synthesizer_matches_local(spark):
 def test_proximity_promotes_adjacent_terms(spark):
     """Two docs with IDENTICAL BM25 scores (same tf/dl): the one whose
     query terms are adjacent must outrank the scattered one, and a
-    single-term match keeps its plain BM25 rank with bonus 0."""
-    from mini_distributed_search_engine_spark.query.bm25 import Query
+    single-term match keeps its plain BM25 rank with bonus 0 — asserted
+    through the packed proximity kernel over packed frames of hand rows."""
+    from mini_distributed_search_engine_spark.index.packed import (
+        build_packed_postings)
+    from mini_distributed_search_engine_spark.index.positions import (
+        build_packed_positions)
     from mini_distributed_search_engine_spark.query.proximity import (
-        bm25_topk_proximity)
+        wand_topk_proximity)
     tf = spark.createDataFrame(
         [("apple", 0, 1, 4), ("banana", 0, 1, 4), ("pad", 0, 2, 4),
          ("apple", 1, 1, 4), ("banana", 1, 1, 4), ("pad", 1, 2, 4)],
         "term string, doc_id long, tf long, dl long")
-    ts = spark.createDataFrame([("apple", 2), ("banana", 2), ("pad", 2)],
-                               "term string, df long")
     ds = spark.createDataFrame([(2, 4.0)], "n_docs long, avgdl double")
     pos = spark.createDataFrame(
         [(0, "apple", 0), (0, "banana", 1), (0, "pad", 2), (0, "pad", 3),
          (1, "apple", 0), (1, "pad", 1), (1, "pad", 2), (1, "banana", 3)],
         "doc_id long, term string, pos int")
     out = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"])
-           for r in bm25_topk_proximity(
-               spark, tf, ts, ds, pos,
+           for r in wand_topk_proximity(
+               spark, build_packed_postings(tf, 4.0, shard_span=64),
+               build_packed_positions(pos, shard_span=64), ds,
                queries=(Query("q", "apple banana", k=5),
                         Query("s", "apple", k=5)),
                stem=False).collect()}
@@ -99,3 +102,19 @@ def test_proximity_promotes_adjacent_terms(spark):
     assert out[("q", 1)][1] - out[("q", 2)][1] == pytest.approx(0.25, abs=1e-6)
     # single-term query: equal scores, doc_id tie-break, no bonus applied
     assert out[("s", 1)][0] == 0 and out[("s", 1)][1] == out[("s", 2)][1]
+
+
+def test_proximity_scores_pandas_hand_example():
+    """The pure-Python proximity reference on the same hand docs: BM25
+    plus 0.5 for adjacent terms, 0.25 at distance 3, and no bonus for a
+    single-term query."""
+    from mini_distributed_search_engine_spark.query.proximity import (
+        proximity_scores_pandas)
+    docs = [["apple", "banana", "pad", "pad"],
+            ["apple", "pad", "pad", "banana"]]
+    pair = ["apple", "banana"]
+    bonus = [p - b for p, b in zip(proximity_scores_pandas(docs, pair),
+                                   bm25_scores_pandas(docs, pair))]
+    assert bonus == pytest.approx([0.5, 0.25], abs=1e-12)
+    assert (proximity_scores_pandas(docs, ["apple"])
+            == bm25_scores_pandas(docs, ["apple"]))

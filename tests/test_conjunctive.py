@@ -1,7 +1,6 @@
-"""Conjunctive (AND) retrieval: both the declarative path and the packed
-sorted-array-intersection path must rank-match a brute-force Python AND
-oracle, and must differ from disjunctive results where the intersection is
-a strict subset."""
+"""Conjunctive (AND) retrieval: the packed sorted-array-intersection path
+must rank-match a brute-force Python AND oracle, and must differ from
+disjunctive results where the intersection is a strict subset."""
 
 from __future__ import annotations
 
@@ -13,8 +12,7 @@ from mini_distributed_search_engine_spark.functions.analyzer import analyze
 from mini_distributed_search_engine_spark.index.build import build_index
 from mini_distributed_search_engine_spark.index.packed import (
     build_packed_postings)
-from mini_distributed_search_engine_spark.query.bm25 import (
-    Query, bm25_topk, bm25_topk_conjunctive)
+from mini_distributed_search_engine_spark.query.bm25 import Query, bm25_topk
 from mini_distributed_search_engine_spark.query.wand import wand_topk
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
@@ -33,7 +31,9 @@ def corpus(spark):
     pdf = synthesize_transcripts_pdf(80, seed=77)
     idx = build_index(spark.createDataFrame(pdf))
     docs_terms = [analyze(t) for t in pdf["text"]]
-    return idx, docs_terms
+    avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
+    packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=64)
+    return idx, docs_terms, packed
 
 
 def _oracle_and(docs_terms, qtext, k):
@@ -71,28 +71,26 @@ def _collect(df):
     return by_q
 
 
-def test_conjunctive_rank_identity_both_paths(spark, corpus):
-    idx, docs_terms = corpus
-    decl = _collect(bm25_topk_conjunctive(
-        spark, idx.term_doc_tf, idx.term_stats, idx.doc_stats, QUERIES))
-    avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
-    packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=64)
-    pk = _collect(wand_topk(spark, packed, idx.doc_stats, queries=QUERIES,
-                            conjunctive=True))
+def _packed_and(spark, idx, packed):
+    return _collect(wand_topk(spark, packed, idx.doc_stats, queries=QUERIES,
+                              conjunctive=True))
+
+
+def test_conjunctive_rank_identity_vs_oracle(spark, corpus):
+    """The packed AND kernel against the brute-force AND oracle."""
+    idx, docs_terms, packed = corpus
+    pk = _packed_and(spark, idx, packed)
     for q in QUERIES:
         exp = _oracle_and(docs_terms, q.text, q.k)
-        for name, got in (("declarative", decl), ("packed", pk)):
-            rows = got.get(q.query_id, [])
-            assert [r["doc_id"] for r in rows] == [d for d, _ in exp], \
-                (name, q.text)
-            for r, (_, s) in zip(rows, exp):
-                assert r["score"] == pytest.approx(s, abs=1e-6), (name, q.text)
+        rows = pk.get(q.query_id, [])
+        assert [r["doc_id"] for r in rows] == [d for d, _ in exp], q.text
+        for r, (_, s) in zip(rows, exp):
+            assert r["score"] == pytest.approx(s, abs=1e-6), q.text
 
 
 def test_and_is_strict_subset_of_or(spark, corpus):
-    idx, _ = corpus
-    and_q = _collect(bm25_topk_conjunctive(
-        spark, idx.term_doc_tf, idx.term_stats, idx.doc_stats, QUERIES))
+    idx, _, packed = corpus
+    and_q = _packed_and(spark, idx, packed)
     or_q = _collect(bm25_topk(
         spark, idx.term_doc_tf, idx.term_stats, idx.doc_stats, QUERIES))
     # the rare pair must actually filter: fewer AND hits than OR hits

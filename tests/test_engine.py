@@ -1,6 +1,7 @@
 """SearchEngine end-to-end over a StagedIndexBuild root, parity with the
-exhaustive library scorers over the same root's row stages, and the skew
-bound on packed segment sizes."""
+exhaustive BM25 scorer over the same root's row stages and with the
+pure-Python references over its analyzed docs, and the skew bound on
+packed segment sizes."""
 
 from __future__ import annotations
 
@@ -10,14 +11,13 @@ from pyspark.sql import functions as F
 from mini_distributed_search_engine_spark.index.build import build_index
 from mini_distributed_search_engine_spark.index.packed import build_packed_postings
 from mini_distributed_search_engine_spark.plans.pipeline import StagedIndexBuild
-from mini_distributed_search_engine_spark.query.bm25 import (
-    Query, bm25_topk, bm25_topk_conjunctive)
+from mini_distributed_search_engine_spark.query.bm25 import Query, bm25_topk
 from mini_distributed_search_engine_spark.query.engine import SearchEngine
-from mini_distributed_search_engine_spark.query.phrase import phrase_match
 from mini_distributed_search_engine_spark.query.proximity import (
-    bm25_topk_proximity)
+    proximity_scores_pandas)
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
+from ranked_reference import analyzed_docs, ranked_phrases, ranked_scores
 
 
 @pytest.fixture(scope="module")
@@ -29,35 +29,21 @@ def index_root(spark, tmp_path_factory):
     return str(root)
 
 
+@pytest.fixture(scope="module")
+def docs_terms(spark, index_root):
+    return analyzed_docs(spark.read.parquet(f"{index_root}/docs/data"))
+
+
 def _ranked(df):
     return sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
                   for r in df.collect())
 
 
-def _row_stages(spark, root, tomb=()):
+def _row_stages(spark, root):
     """The root's row stages (term_doc_tf, term_stats, doc_stats) as the
-    library scorers' input, tombstoned docs removed from the postings by
-    a left-anti join (corpus stats stay global, as in the engine)."""
-    tf = spark.read.parquet(f"{root}/term_doc_tf/data")
-    if tomb:
-        tf = tf.join(spark.createDataFrame([(int(d),) for d in tomb],
-                                           "doc_id long"),
-                     "doc_id", "left_anti")
-    return (tf, spark.read.parquet(f"{root}/stats/term_stats"),
-            spark.read.parquet(f"{root}/stats/doc_stats"))
-
-
-def _row_positions(spark, root):
-    """Row positions for the reference scorers: the committed 'positions'
-    stage if the root has one, else analyzed from the doc store (the same
-    input the engine packs from)."""
-    import os
-    from mini_distributed_search_engine_spark.functions.analyzer import (
-        term_positions_pandas)
-    if os.path.isdir(f"{root}/positions/data"):
-        return spark.read.parquet(f"{root}/positions/data")
-    return term_positions_pandas(spark.read.parquet(f"{root}/docs/data"),
-                                 "text")
+    exhaustive scorer's input."""
+    return tuple(spark.read.parquet(f"{root}/{stage}") for stage in
+                 ("term_doc_tf/data", "stats/term_stats", "stats/doc_stats"))
 
 
 def test_engine_packed_matches_exhaustive(spark, index_root):
@@ -95,14 +81,13 @@ def test_packed_segments_bounded_under_skew(spark):
     assert hot["n_shards"] > 1
 
 
-def test_engine_and_mode_and_phrase(spark, index_root):
-    """mode='and' agrees with the exhaustive conjunctive scorer and is a
-    subset of OR; search_phrase returns occurrence-ranked rows."""
+def test_engine_and_mode_and_phrase(spark, index_root, docs_terms):
+    """mode='and' agrees with the pure-Python conjunctive reference and is
+    a subset of OR; search_phrase returns occurrence-ranked rows."""
     packed_eng = SearchEngine(spark, index_root)
     qs = (Query("a", "apple banana", k=100), Query("b", "running search", k=100))
     a = _ranked(packed_eng.search_batch(qs, mode="and"))
-    b = _ranked(bm25_topk_conjunctive(spark, *_row_stages(spark, index_root),
-                                      queries=qs))
+    b = ranked_scores(docs_terms, qs, conjunctive=True)
     assert a == b
     and_docs = {(q, d) for q, _, d, _ in a}
     or_docs = {(r["query_id"], r["doc_id"])
@@ -126,41 +111,7 @@ def test_engine_suggest(spark, index_root):
     assert out == eng.suggest("s", n=5)  # stable ordering
 
 
-def test_serve_job_loop(spark, index_root):
-    """The stdin serving loop: warm engine, mixed request kinds, latencies
-    recorded, bad requests answered without killing the loop."""
-    import io
-    import sys
-    from pathlib import Path
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "jobs"))
-    from serve_job import serve
-
-    eng = SearchEngine(spark, index_root)
-    inp = io.StringIO("or 5 apple banana\n"
-                      "and 5 apple banana\n"
-                      "role user 5 apple banana\n"
-                      "role of the moderator\n"
-                      "suggest 3 s\n"
-                      "stats\n"
-                      "phrase 5 apple banana\n"
-                      "proximity 5 apple banana\n"
-                      "near 5 10 apple banana\n"
-                      "near 5 apple banana\n"
-                      "near the end of the story\n"
-                      "or notanint bad request\n"
-                      "quit\n"
-                      "or 5 never reached\n")
-    out = io.StringIO()
-    lats = serve(eng, inp=inp, out=out)
-    text = out.getvalue()
-    assert len(lats) == 9  # ...plus the plain-text 'near the end' search
-    assert "err\tusage: near" in text  # missing window != silent search
-    assert "rank=1" in text and "n_docs=" in text
-    assert "err\tValueError" in text
-    assert "never reached" not in text
-
-
-def test_engine_role_filtered_search(spark, index_root):
+def test_engine_role_filtered_search(spark, index_root, docs_terms):
     eng = SearchEngine(spark, index_root)   # packed engine: the filter is
     rows = eng.search("apple banana", k=50, role="user")  # masked IN-kernel
     assert rows, "filtered search returned nothing"
@@ -177,14 +128,14 @@ def test_engine_role_filtered_search(spark, index_root):
     assert all(r["role"] == "user" for r in and_rows)
     and_ids = {r["doc_id"] for r in and_rows}
     assert and_ids <= {r["doc_id"] for r in rows}  # AND subset of OR
-    # and the engine rank-agrees with the exhaustive scorer's semi-join
-    # filter
-    allowed = eng.docs.where(F.col("role") == "user").select("doc_id")
-    want = bm25_topk(spark, *_row_stages(spark, index_root),
-                     queries=(Query("q", "apple banana", k=50),),
-                     allowed_docs=allowed)
+    # and the engine rank-agrees with the pure-Python reference over the
+    # role's docs (corpus stats global)
+    allowed = {r["doc_id"] for r in eng.docs.where(F.col("role") == "user")
+               .select("doc_id").collect()}
+    want = ranked_scores(docs_terms, (Query("q", "apple banana", k=50),),
+                         keep=allowed)
     assert [(r["rank"], r["doc_id"], r["score"]) for r in rows] == \
-        sorted((r["rank"], r["doc_id"], r["score"]) for r in want.collect())
+        [(rank, d, s) for _, rank, d, s in want]
 
 
 def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
@@ -232,11 +183,11 @@ def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_engine_delete_docs_masks_every_path(spark, index_root):
+def test_engine_delete_docs_masks_every_path(spark, index_root, docs_terms):
     """Tombstoned docs vanish from ranked, role-filtered and phrase
     results without touching the at-rest index; the engine stays
-    rank-identical to the exhaustive scorer over the tombstone-filtered
-    postings."""
+    rank-identical to the pure-Python reference over the surviving docs
+    (corpus stats global)."""
     packed_eng = SearchEngine(spark, index_root)
     base = packed_eng.search("apple banana", k=10, hydrate=False)
     assert base, "fixture must rank something"
@@ -246,8 +197,8 @@ def test_engine_delete_docs_masks_every_path(spark, index_root):
 
     qs = (Query("a", "apple banana"), Query("b", "spark index"))
     a = _ranked(packed_eng.search_batch(qs))
-    b = _ranked(bm25_topk(spark, *_row_stages(spark, index_root, victims),
-                          queries=qs))
+    b = ranked_scores(docs_terms, qs,
+                      keep=set(range(len(docs_terms))) - set(victims))
     assert a == b and a
     assert not {d for _, _, d, _ in a} & set(victims)
 
@@ -270,18 +221,16 @@ def test_engine_delete_docs_masks_every_path(spark, index_root):
     assert {r["doc_id"] for r in again} & set(victims)
 
 
-def test_engine_proximity_and_packed_phrase(spark, index_root):
+def test_engine_proximity_and_packed_phrase(spark, index_root, docs_terms):
     """mode='proximity' agrees between the packed cogroup kernel and the
-    declarative row scorer; search_phrase serves from the packed
+    pure-Python proximity reference; search_phrase serves from the packed
     positional segments (built lazily, co-sharded with the live TF
-    layout) identically to the row phrase scorer."""
+    layout) identically to the phrase-count reference."""
     packed_eng = SearchEngine(spark, index_root)
-    pos = _row_positions(spark, index_root)
     qs = (Query("a", "apple banana"), Query("b", "spark index"),
           Query("c", "running search", k=25), Query("d", "apple"))
     a = _ranked(packed_eng.search_batch(qs, mode="proximity"))
-    b = _ranked(bm25_topk_proximity(spark, *_row_stages(spark, index_root),
-                                    pos, queries=qs))
+    b = ranked_scores(docs_terms, qs, scorer=proximity_scores_pandas)
     assert a == b and len(a) > 0
     # serving entry: ranked, hydrated, and >= the plain BM25 score for the
     # same doc (the bonus is non-negative)
@@ -292,12 +241,11 @@ def test_engine_proximity_and_packed_phrase(spark, index_root):
     assert all(r["score"] >= plain[r["doc_id"]] - 1e-9 for r in rows)
     with pytest.raises(ValueError):
         packed_eng.search_batch(qs, mode="proximity", role="user")
-    # phrase: packed kernel == declarative rows
+    # phrase: packed kernel == phrase-count reference
     pp = [(r["rank"], r["doc_id"], r["n_occ"])
           for r in packed_eng.search_phrase("apple banana", k=20)]
-    pe = [(r["rank"], r["doc_id"], r["n_occ"]) for r in phrase_match(
-        spark, pos, (Query("q", "apple banana", k=20),))
-        .orderBy("rank").collect()]
+    pe = [(rank, d, n) for _, rank, d, n in ranked_phrases(
+        docs_terms, (Query("q", "apple banana", k=20),))]
     assert pp == pe
 
 
@@ -327,8 +275,8 @@ def pos_root(spark, tmp_path_factory):
 def test_pipeline_positions_packed_stage(spark, pos_root):
     """StagedIndexBuild(positions=True) commits a positions_packed stage
     co-sharded with the merged TF layout; the engine serves proximity and
-    phrase from it with answers identical to the row scorers over the
-    root's row stages."""
+    phrase from it with answers identical to the pure-Python references
+    over the root's analyzed docs."""
     from mini_distributed_search_engine_spark.index.positions import (
         unpack_positions)
     root = pos_root
@@ -345,14 +293,12 @@ def test_pipeline_positions_packed_stage(spark, pos_root):
     rows_p = eng.search_proximity("apple banana", k=5, hydrate=False)
     rows_f = eng.search_phrase("apple banana", k=5)
     q = (Query("q", "apple banana", k=5),)
-    want_p = bm25_topk_proximity(spark, *_row_stages(spark, str(root)),
-                                 rows, queries=q)
+    terms = analyzed_docs(spark.read.parquet(f"{root}/docs/data"))
     assert ([(r["rank"], r["doc_id"], round(r["score"], 6)) for r in rows_p]
-            == sorted((r["rank"], r["doc_id"], round(r["score"], 6))
-                      for r in want_p.collect()))
+            == [(rank, d, s) for _, rank, d, s in ranked_scores(
+                terms, q, scorer=proximity_scores_pandas)])
     assert ([(r["rank"], r["doc_id"], r["n_occ"]) for r in rows_f]
-            == sorted((r["rank"], r["doc_id"], r["n_occ"])
-                      for r in phrase_match(spark, rows, q).collect()))
+            == [(rank, d, n) for _, rank, d, n in ranked_phrases(terms, q)])
 
 
 def _jobs_and_stages_run(spark, group, call):
@@ -394,3 +340,28 @@ def test_warm_ranked_routes_are_one_job(spark, pos_root):
     assert _jobs_and_stages_run(
         spark, "warm_route_empty_phrase",
         lambda: eng.search_phrase("the of", k=5)) == (0, 0)
+
+
+def test_checkpointed_deletes_survive_restart(spark, pos_root):
+    """A delete checkpointed by one engine stays masked in a second engine
+    opened on the same root (ranked, phrase and proximity routes), and a
+    checkpoint writes only the ids not already on disk."""
+    import shutil
+    a = SearchEngine(spark, str(pos_root))
+    victim = a.search_phrase("apple banana", k=10)[0]["doc_id"]
+    try:
+        a.delete_docs([victim])
+        assert a.checkpoint_tombstones() == 1
+        assert a.checkpoint_tombstones() == 0
+        b = SearchEngine(spark, str(pos_root))
+        for rows in (b.search("apple banana", k=50, hydrate=False),
+                     b.search_phrase("apple banana", k=50),
+                     b.search_proximity("apple banana", k=50,
+                                        hydrate=False)):
+            assert rows and victim not in {r["doc_id"] for r in rows}
+        b.delete_docs([victim, victim + 1])
+        assert b.checkpoint_tombstones() == 1
+        assert StagedIndexBuild(spark, str(pos_root)).pending_tombstones() \
+            == [victim, victim + 1]
+    finally:
+        shutil.rmtree(pos_root / "_tombstones", ignore_errors=True)

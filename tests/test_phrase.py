@@ -1,5 +1,5 @@
-"""Phrase search: the distributed anchor-join plan must match a brute-force
-sliding-window oracle over the analyzed term sequences."""
+"""Phrase search: the packed anchor-intersection kernel must match a
+brute-force sliding-window oracle over the analyzed term sequences."""
 
 from __future__ import annotations
 
@@ -9,9 +9,11 @@ from mini_distributed_search_engine_spark.functions.analyzer import (
     analyze, term_positions_df)
 from mini_distributed_search_engine_spark.index.build import (
     with_stable_doc_ids)
+from mini_distributed_search_engine_spark.index.positions import (
+    build_packed_positions)
 from mini_distributed_search_engine_spark.query.bm25 import Query
 from mini_distributed_search_engine_spark.query.phrase import (
-    phrase_count_pandas, phrase_match)
+    phrase_count_pandas, phrase_match_packed)
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
 
@@ -48,7 +50,8 @@ def test_positions_are_dense_per_doc(spark, corpus):
 def test_phrase_match_vs_oracle(spark, corpus):
     pos, docs_terms = corpus
     by_q = {}
-    for r in phrase_match(spark, pos, QUERIES).collect():
+    packed = build_packed_positions(pos, shard_span=64)
+    for r in phrase_match_packed(spark, packed, QUERIES).collect():
         by_q.setdefault(r["query_id"], []).append(r)
     for q in QUERIES:
         counts = phrase_count_pandas(docs_terms, q.text)

@@ -1,7 +1,7 @@
 """Packed positional index: roundtrip identity to the row layout, and the
 phrase / proximity kernels served from it must be rank-identical to the
-declarative row paths — across shard spans, co-sharded layouts (merged TF
-levels), and query-time tombstones."""
+pure-Python references over the analyzed docs — across shard spans,
+co-sharded layouts (merged TF levels), and query-time tombstones."""
 
 from __future__ import annotations
 
@@ -18,13 +18,14 @@ from mini_distributed_search_engine_spark.index.positions import (
     POS_FAMILY, build_packed_positions, unpack_positions)
 from mini_distributed_search_engine_spark.query.bm25 import Query
 from mini_distributed_search_engine_spark.query.phrase import (
-    phrase_match, phrase_match_packed)
+    phrase_match_packed)
 from mini_distributed_search_engine_spark.query.proximity import (
-    bm25_topk_proximity, wand_topk_proximity)
+    proximity_scores_pandas, wand_topk_proximity)
 from mini_distributed_search_engine_spark.query.wand import (
     compute_shard_bounds)
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
+from ranked_reference import analyzed_docs, ranked_phrases, ranked_scores
 
 PHRASE_QUERIES = (
     Query("f1", "apple banana", k=200),
@@ -54,6 +55,15 @@ def built(spark):
     pos = term_positions_pandas(docs, "text", stem=True).cache()
     pos.count()
     return idx, avgdl, pos
+
+
+@pytest.fixture(scope="module")
+def docs_terms(built):
+    return analyzed_docs(built[0].docs)
+
+
+def _survivors(docs_terms, tomb) -> set:
+    return set(range(len(docs_terms))) - set(tomb)
 
 
 def _key_rows(df, cols=("query_id", "rank", "doc_id")):
@@ -92,47 +102,47 @@ def test_positions_roundtrip_bounded_shards(spark, built):
 
 
 @pytest.mark.parametrize("shard_span", [64, 10_000])
-def test_phrase_packed_rank_identity(spark, built, shard_span):
+def test_phrase_packed_rank_identity(spark, built, docs_terms, shard_span):
     _, _, pos = built
     packed = build_packed_positions(pos, shard_span=shard_span)
-    want = _key_rows(phrase_match(spark, pos, PHRASE_QUERIES),
-                     ("query_id", "rank", "doc_id", "n_occ"))
+    want = ranked_phrases(docs_terms, PHRASE_QUERIES)
     got = _key_rows(phrase_match_packed(spark, packed, PHRASE_QUERIES),
                     ("query_id", "rank", "doc_id", "n_occ"))
     assert got == want
 
 
-def test_phrase_packed_tombstoned(spark, built):
-    """blocked_ids inside the packed phrase kernel == filtering the row
-    positions table before the declarative match."""
+def test_phrase_packed_tombstoned(spark, built, docs_terms):
+    """blocked_ids inside the packed phrase kernel == the phrase-count
+    reference over the surviving docs."""
     _, _, pos = built
     tomb = [r["doc_id"] for r in
             pos.select("doc_id").distinct().limit(7).collect()]
     packed = build_packed_positions(pos, shard_span=64)
-    want = _key_rows(phrase_match(
-        spark, pos.where(~F.col("doc_id").isin(tomb)), PHRASE_QUERIES),
-        ("query_id", "rank", "doc_id", "n_occ"))
+    want = ranked_phrases(docs_terms, PHRASE_QUERIES,
+                          keep=_survivors(docs_terms, tomb))
     got = _key_rows(phrase_match_packed(spark, packed, PHRASE_QUERIES,
                                         blocked_ids=tomb),
                     ("query_id", "rank", "doc_id", "n_occ"))
     assert got == want
 
 
+def _prox_want(docs_terms, keep=None):
+    return [r[:3] for r in ranked_scores(
+        docs_terms, PROX_QUERIES, scorer=proximity_scores_pandas, keep=keep)]
+
+
 @pytest.mark.parametrize("shard_span", [64, 10_000])
-def test_proximity_packed_rank_identity(spark, built, shard_span):
+def test_proximity_packed_rank_identity(spark, built, docs_terms, shard_span):
     idx, avgdl, pos = built
     tf_packed = build_packed_postings(idx.term_doc_tf, avgdl,
                                       shard_span=shard_span)
     pos_packed = build_packed_positions(pos, shard_span=shard_span)
-    want = _key_rows(bm25_topk_proximity(
-        spark, idx.term_doc_tf, idx.term_stats, idx.doc_stats, pos,
-        queries=PROX_QUERIES))
     got = _key_rows(wand_topk_proximity(
         spark, tf_packed, pos_packed, idx.doc_stats, queries=PROX_QUERIES))
-    assert got == want
+    assert got == _prox_want(docs_terms)
 
 
-def test_proximity_packed_cosharded_merged(spark, built):
+def test_proximity_packed_cosharded_merged(spark, built, docs_terms):
     """Positions co-sharded (via shard_bounds) with a MERGED TF layout:
     the cogroup sees aligned shards and stays rank-identical."""
     idx, avgdl, pos = built
@@ -141,28 +151,19 @@ def test_proximity_packed_cosharded_merged(spark, built):
         level_factor=4)
     pos_packed = build_packed_positions(
         pos, shard_bounds=compute_shard_bounds(tf_packed))
-    want = _key_rows(bm25_topk_proximity(
-        spark, idx.term_doc_tf, idx.term_stats, idx.doc_stats, pos,
-        queries=PROX_QUERIES))
     got = _key_rows(wand_topk_proximity(
         spark, tf_packed, pos_packed, idx.doc_stats, queries=PROX_QUERIES))
-    assert got == want
+    assert got == _prox_want(docs_terms)
 
 
-def test_proximity_packed_tombstoned(spark, built):
-    """blocked_ids in the proximity kernel == declarative proximity over
-    tombstone-filtered tf/positions with GLOBAL corpus stats."""
+def test_proximity_packed_tombstoned(spark, built, docs_terms):
+    """blocked_ids in the proximity kernel == the proximity reference over
+    the surviving docs with GLOBAL corpus stats."""
     idx, avgdl, pos = built
-    stats = idx.doc_stats.collect()[0]
-    corpus_stats = (int(stats["n_docs"]), float(stats["avgdl"]))
     tomb = [d for d in range(0, 200, 13)]
     tf_packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=64)
     pos_packed = build_packed_positions(pos, shard_span=64)
-    want = _key_rows(bm25_topk_proximity(
-        spark, idx.term_doc_tf.where(~F.col("doc_id").isin(tomb)),
-        idx.term_stats, idx.doc_stats,
-        pos.where(~F.col("doc_id").isin(tomb)),
-        queries=PROX_QUERIES, corpus_stats=corpus_stats))
+    want = _prox_want(docs_terms, keep=_survivors(docs_terms, tomb))
     got = _key_rows(wand_topk_proximity(
         spark, tf_packed, pos_packed, idx.doc_stats, queries=PROX_QUERIES,
         blocked_ids=tomb))
@@ -235,7 +236,7 @@ def test_merge_streams_equal_fresh_encode(spark, built, family, level_factor):
     assert len(got) < segs.count()  # some segments were really spliced
 
 
-def test_positions_purge(spark, built):
+def test_positions_purge(spark, built, docs_terms):
     """purge_positions removes exactly the tombstoned docs' positions and
     leaves every non-intersecting segment byte-identical."""
     from mini_distributed_search_engine_spark.index.positions import (
@@ -264,13 +265,11 @@ def test_positions_purge(spark, built):
             assert bytes(r["pos_deltas"]) == blob
             n_same += 1
     assert n_same > 0
-    # phrase over the purged pack == phrase over filtered rows
+    # phrase over the purged pack == the reference over surviving docs
     a = _key_rows(phrase_match_packed(spark, purged, PHRASE_QUERIES),
                   ("query_id", "rank", "doc_id", "n_occ"))
-    b = _key_rows(phrase_match(
-        spark, pos.where(~F.col("doc_id").isin(tomb)), PHRASE_QUERIES),
-        ("query_id", "rank", "doc_id", "n_occ"))
-    assert a == b
+    assert a == ranked_phrases(docs_terms, PHRASE_QUERIES,
+                               keep=_survivors(docs_terms, tomb))
     packed.unpersist()
 
 

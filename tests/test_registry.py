@@ -26,3 +26,13 @@ def test_no_non_search_entries():
                               "dedup_", "embed_", "hybrid_", "docs_sample_"))
              or k in CURATION_TEXT_OPS]
     assert stale == []
+
+
+def test_no_row_twin_entries():
+    """One Spark plan per query semantics: the row twins of AND, role
+    filter, proximity and phrase are gone; their packed entries stay."""
+    keys = set(E.queries())
+    assert not keys & {"bm25_topk_and", "bm25_topk_filtered",
+                       "bm25_topk_proximity", "phrase_match"}
+    assert {"bm25_topk_and_wand", "bm25_topk_filtered_wand",
+            "bm25_topk_proximity_wand", "phrase_match_packed"} <= keys

@@ -25,6 +25,7 @@ from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
 from mini_distributed_search_engine_spark.streaming.indexing import (
     StreamingIndexer, read_transcript_stream)
+from ranked_reference import analyzed_docs, ranked_scores
 
 SPAN = 64
 QUERIES = (Query("s1", "apple banana", k=30),
@@ -172,7 +173,7 @@ def test_stream_with_positions_matches_batch(spark, tmp_path):
     from mini_distributed_search_engine_spark.query.phrase import (
         phrase_match_packed)
     from mini_distributed_search_engine_spark.query.proximity import (
-        wand_topk_proximity, bm25_topk_proximity)
+        proximity_scores_pandas, wand_topk_proximity)
     from mini_distributed_search_engine_spark.query.span import (
         span_near_match)
 
@@ -197,15 +198,15 @@ def test_stream_with_positions_matches_batch(spark, tmp_path):
                      indexer.positions_packed()).collect())
     assert got == want
 
-    # proximity over the streamed pair == declarative over batch rows
-    idx = build_index(spark.createDataFrame(pdf))
+    # proximity over the streamed pair == the pure-Python reference over
+    # the batch docs
     keyed = lambda df: sorted((r["query_id"], r["rank"], r["doc_id"])
                               for r in df.collect())
     assert keyed(wand_topk_proximity(
         spark, indexer.packed(), indexer.positions_packed(),
-        indexer.doc_stats_df(), queries=QUERIES)) == keyed(
-            bm25_topk_proximity(spark, idx.term_doc_tf, idx.term_stats,
-                                idx.doc_stats, pos_rows, queries=QUERIES))
+        indexer.doc_stats_df(), queries=QUERIES)) == [
+            r[:3] for r in ranked_scores(analyzed_docs(docs), QUERIES,
+                                         scorer=proximity_scores_pandas)]
     n_phrase = len(phrase_match_packed(
         spark, indexer.positions_packed(),
         (Query("p", "apple banana", k=50),)).collect())

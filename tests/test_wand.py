@@ -1,6 +1,7 @@
 """MaxScore/WAND over the packed index must be rank-identical to the
-exhaustive DataFrame scorer, across shard spans, merge levels, and skew;
-its driver-side rank merge must match a pure-Python reference."""
+exhaustive DataFrame scorer, across shard spans, merge levels, and skew,
+and to the pure-Python BM25 reference under doc filters and AND; its
+driver-side rank merge must match a pure-Python reference."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from mini_distributed_search_engine_spark.query.bm25 import Query, bm25_topk
 from mini_distributed_search_engine_spark.query.wand import wand_topk
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
+from ranked_reference import analyzed_docs, ranked_scores
 
 QUERIES = (
     Query("w1", "apple banana fig"),
@@ -70,17 +72,16 @@ def test_merge_preserves_postings_and_results(spark, built):
 
 def test_wand_filtered_matches_exhaustive(spark, built):
     """allowed_docs threaded into the packed kernel (cogrouped per shard)
-    must rank-match the exhaustive path's semi-join filter — same global
-    corpus stats, candidates restricted to the allowed set."""
+    must rank-match the pure-Python BM25 reference restricted to the
+    allowed docs — same global corpus stats."""
     from pyspark.sql import functions as F
     idx, avgdl = built
     allowed = idx.docs.where(F.col("role") == "user").select("doc_id")
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=64)
     got = _collect_ranked(wand_topk(spark, packed, idx.doc_stats,
                                     queries=QUERIES, allowed_docs=allowed))
-    want = _collect_ranked(bm25_topk(spark, idx.term_doc_tf, idx.term_stats,
-                                     idx.doc_stats, queries=QUERIES,
-                                     allowed_docs=allowed))
+    want = ranked_scores(analyzed_docs(idx.docs), QUERIES,
+                         keep={r["doc_id"] for r in allowed.collect()})
     assert [g[:3] for g in got] == [w[:3] for w in want]
     for g, w in zip(got, want):
         assert g[3] == pytest.approx(w[3], abs=1e-6)
@@ -104,24 +105,17 @@ def test_wand_filtered_empty_allowed(spark, built):
 
 def test_wand_filtered_conjunctive(spark, built):
     """AND semantics + metadata filter: intersection docs masked by the
-    allowed set, scores from global stats — equals the exhaustive
-    conjunctive run restricted to allowed docs."""
+    allowed set, scores from global stats — equals the pure-Python
+    conjunctive reference restricted to allowed docs."""
     from pyspark.sql import functions as F
-    from mini_distributed_search_engine_spark.query.bm25 import (
-        bm25_topk_conjunctive)
     idx, avgdl = built
     allowed = idx.docs.where(F.col("role") == "user").select("doc_id")
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=64)
     qs = (Query("c1", "user assistant", k=50), Query("c2", "spark", k=50))
     got = _collect_ranked(wand_topk(spark, packed, idx.doc_stats, queries=qs,
                                     conjunctive=True, allowed_docs=allowed))
-    # exhaustive equivalent: intersect-then-score over the allowed postings
-    # (removing a doc's rows removes it from every term's list, so the
-    # intersection is exactly "allowed docs containing all terms"; stats
-    # are passed separately and stay global)
-    tf_allowed = idx.term_doc_tf.join(allowed, "doc_id", "semi")
-    want = _collect_ranked(bm25_topk_conjunctive(
-        spark, tf_allowed, idx.term_stats, idx.doc_stats, queries=qs))
+    want = ranked_scores(analyzed_docs(idx.docs), qs, conjunctive=True,
+                         keep={r["doc_id"] for r in allowed.collect()})
     assert [g[:3] for g in got] == [w[:3] for w in want]
     for g, w in zip(got, want):
         assert g[3] == pytest.approx(w[3], abs=1e-6)

@@ -2,11 +2,11 @@
 
 Quantifies round 5's headline (VERDICT r4 #1): the positional row layout
 (doc_id, term, pos parquet) vs the packed per-(term, doc-shard) varint
-segments (`index/positions.py`) — bytes at rest, and the warm query
-latency of the declarative row kernels vs the packed kernels, modes
-INTERLEAVED run-by-run, min-of-N per (query, mode) per the noisy-VM
-methodology. Rank identity between the modes is pytest-enforced
-(tests/test_positions_packed.py); this tool is size+latency only.
+segments (`index/positions.py`) in bytes at rest, and the warm latency of
+the packed phrase and proximity kernels, min-of-N per query per the
+noisy-VM methodology. Rank identity against the pure-Python references is
+pytest-enforced (tests/test_positions_packed.py); this tool is
+size+latency only.
 
 Usage: python tools/positions_bench.py [n_turns] [runs]
 Prints one JSON line.
@@ -32,9 +32,9 @@ from mini_distributed_search_engine_spark.index.positions import (
     build_packed_positions)
 from mini_distributed_search_engine_spark.query.bm25 import Query
 from mini_distributed_search_engine_spark.query.phrase import (
-    phrase_match, phrase_match_packed)
+    phrase_match_packed)
 from mini_distributed_search_engine_spark.query.proximity import (
-    bm25_topk_proximity, wand_topk_proximity)
+    wand_topk_proximity)
 from mini_distributed_search_engine_spark.query.wand import (
     compute_shard_bounds)
 from mini_distributed_search_engine_spark.session import get_spark
@@ -99,8 +99,7 @@ def main() -> None:
     rows_bytes = _dir_bytes(out / "pos_rows")
     packed_bytes = _dir_bytes(out / "pos_packed")
 
-    pos_rows = spark.read.parquet(str(out / "pos_rows")).cache()
-    n_occ = pos_rows.count()
+    n_occ = spark.read.parquet(str(out / "pos_rows")).count()
     pos_packed = (spark.read.parquet(str(out / "pos_packed"))
                   .repartition(cpus, "shard_id").cache())
     pos_packed.count()
@@ -108,44 +107,23 @@ def main() -> None:
     stats_row = doc_stats.collect()[0]
     corpus = (int(stats_row["n_docs"]), float(stats_row["avgdl"]))
 
-    # untimed warmup of all four code paths
-    phrase_match(spark, pos_rows, PHRASE_QUERIES[:1]).collect()
-    phrase_match_packed(spark, pos_packed, PHRASE_QUERIES[:1]).collect()
-    bm25_topk_proximity(spark, idx.term_doc_tf, idx.term_stats, doc_stats,
-                        pos_rows, queries=PROX_QUERIES[:1],
-                        corpus_stats=corpus).collect()
-    wand_topk_proximity(spark, tf_packed, pos_packed, doc_stats,
-                        queries=PROX_QUERIES[:1],
-                        corpus_stats=corpus).collect()
+    def min_of_runs(run, queries) -> dict:
+        run(queries[:1])               # untimed warmup
+        best = {}
+        for q in queries:
+            b = float("inf")
+            for _ in range(runs):
+                t = time.perf_counter()
+                run((q,))
+                b = min(b, time.perf_counter() - t)
+            best[q.query_id] = round(b, 4)
+        return best
 
-    ph_rows, ph_packed = {}, {}
-    for q in PHRASE_QUERIES:
-        br = bp = float("inf")
-        for _ in range(runs):          # interleaved: noise hits both modes
-            t = time.perf_counter()
-            phrase_match(spark, pos_rows, (q,)).collect()
-            br = min(br, time.perf_counter() - t)
-            t = time.perf_counter()
-            phrase_match_packed(spark, pos_packed, (q,)).collect()
-            bp = min(bp, time.perf_counter() - t)
-        ph_rows[q.query_id] = round(br, 4)
-        ph_packed[q.query_id] = round(bp, 4)
-
-    px_rows, px_packed = {}, {}
-    for q in PROX_QUERIES:
-        br = bp = float("inf")
-        for _ in range(runs):
-            t = time.perf_counter()
-            bm25_topk_proximity(spark, idx.term_doc_tf, idx.term_stats,
-                                doc_stats, pos_rows, queries=(q,),
-                                corpus_stats=corpus).collect()
-            br = min(br, time.perf_counter() - t)
-            t = time.perf_counter()
-            wand_topk_proximity(spark, tf_packed, pos_packed, doc_stats,
-                                queries=(q,), corpus_stats=corpus).collect()
-            bp = min(bp, time.perf_counter() - t)
-        px_rows[q.query_id] = round(br, 4)
-        px_packed[q.query_id] = round(bp, 4)
+    ph_packed = min_of_runs(lambda qs: phrase_match_packed(
+        spark, pos_packed, qs).collect(), PHRASE_QUERIES)
+    px_packed = min_of_runs(lambda qs: wand_topk_proximity(
+        spark, tf_packed, pos_packed, doc_stats, queries=qs,
+        corpus_stats=corpus).collect(), PROX_QUERIES)
 
     p50 = lambda d: sorted(d.values())[len(d) // 2]
     print(json.dumps({
@@ -156,10 +134,8 @@ def main() -> None:
         "bytes_per_occurrence_packed": round(packed_bytes / n_occ, 3),
         "rows_write_sec": round(rows_write_sec, 3),
         "packed_write_sec": round(packed_write_sec, 3),
-        "phrase_rows": ph_rows, "phrase_packed": ph_packed,
-        "phrase_rows_p50": p50(ph_rows), "phrase_packed_p50": p50(ph_packed),
-        "prox_rows": px_rows, "prox_packed": px_packed,
-        "prox_rows_p50": p50(px_rows), "prox_packed_p50": p50(px_packed),
+        "phrase_packed": ph_packed, "phrase_packed_p50": p50(ph_packed),
+        "prox_packed": px_packed, "prox_packed_p50": p50(px_packed),
     }))
     shutil.rmtree(out, ignore_errors=True)
 
