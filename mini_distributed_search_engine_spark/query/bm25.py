@@ -80,24 +80,18 @@ def bm25_topk(spark: SparkSession, term_doc_tf: DataFrame,
               term_stats: DataFrame, doc_stats: DataFrame,
               queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
               stem: bool = True,
-              round_scores: int | None = 6,
-              corpus_stats: tuple[int, float] | None = None) -> DataFrame:
+              round_scores: int | None = 6) -> DataFrame:
     """Exact BM25 top-k for a query set: the exhaustive OR reference the
     packed kernels are checked against.
 
     Returns (query_id, rank, doc_id, score); score rounded to
-    ``round_scores`` decimals for cross-engine comparison.
-
-    ``corpus_stats=(n_docs, avgdl)`` skips the per-call one-row
-    doc_stats collect (same contract as wand.wand_topk)."""
+    ``round_scores`` decimals for cross-engine comparison."""
     qrows = analyzed_query_terms(queries, stem=stem)
     if not qrows:
         qrows = [("__none__", "__none__", 0)]
     qterms = spark.createDataFrame(qrows, "query_id string, term string, k int")
-    if corpus_stats is None:
-        stats = doc_stats.collect()[0]
-        corpus_stats = (int(stats["n_docs"]), float(stats["avgdl"]))
-    n_docs, avgdl = corpus_stats
+    stats = doc_stats.collect()[0]
+    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
 
     # Literal IN-list on term BEFORE the joins: unlike a join, a literal
     # predicate prunes parquet row-groups (PushedFilters) and in-memory

@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# directory (checkout) or zip (`--py-files`) the package is imported from
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "mdse-spark",
               cores: int | None = None,
@@ -33,6 +36,13 @@ def get_spark(app_name: str = "mdse-spark",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(8, int(cores * 1.5))}g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers fork from the package's daemon, which stops each
+        # task re-reading pyspark.zip and the spark-core jar (see
+        # _daemon.py). The daemon starts before any task puts the py-files
+        # on sys.path, so its import root goes on the workers' PYTHONPATH.
+        .config("spark.python.daemon.module",
+                "mini_distributed_search_engine_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
         # Arrow batch size: the fused tokenize+TF pass pays a fixed
         # per-batch Python/serde cost; 40k rows/batch measured ~13% faster
         # than the 10k default on that pass (100k regresses — batches stop

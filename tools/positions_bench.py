@@ -9,12 +9,13 @@ pytest-enforced (tests/test_positions_packed.py); this tool is
 size+latency only.
 
 Usage: python tools/positions_bench.py [n_turns] [runs]
-Prints one JSON line.
+Spark runs at local[$SPARK_GRAFT_CPUS] (default 32). Prints one JSON line.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
@@ -62,7 +63,7 @@ def _dir_bytes(p: Path) -> int:
 def main() -> None:
     n_turns = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    cpus = 32
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("mdse-pos-bench", cores=cpus, shuffle_partitions=cpus)
     base = Path("/dev/shm/mdse_bench") if Path("/dev/shm").is_dir() \
         else Path(__file__).resolve().parent.parent / ".data"
