@@ -514,38 +514,6 @@ def _doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TS.doc_keywords(idx.term_doc_tf, idx.term_stats, n_docs)
 
 
-def _doc_keywords_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same keywords fixpoint and oracle as `doc_keywords`, computed over
-    the doc_id-BUCKETED at-rest layout (`write_index_bucketed(...,
-    with_doc_bucketed=True)`): the per-doc top-n window then plans with
-    ZERO doc_id exchange — the O(postings) re-shuffle VERDICT r3 flagged
-    in front of every per-doc window disappears at write time
-    (plan-asserted in tests/test_bucketed.py). The layout changes the
-    shuffle count, not the answer."""
-    import os
-    import shutil
-    import tempfile
-    from mini_distributed_search_engine_spark.index.build import (
-        write_tf_doc_bucketed)
-    idx = _index(spark, sf_dir, stem=True)
-    n_docs = int(idx.doc_stats.collect()[0]["n_docs"])
-    root = tempfile.mkdtemp(prefix="mdse_kw_bucketed_")
-    prefix = f"kwb_{os.getpid()}"       # unique per process: parallel
-    name = None                         # correctness runs share no catalog
-    try:
-        # only the by-doc table: the term-bucketed copies would be pure
-        # write cost here (this query never term-joins the bucketed TF)
-        name = write_tf_doc_bucketed(idx.term_doc_tf, prefix, root,
-                                     buckets=8)
-        out = TS.doc_keywords(spark.table(name),
-                              F.broadcast(idx.term_stats), n_docs)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        if name:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def _related_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI co-occurrence over per-doc keyword sets — related-term
     discovery with pair fan-out capped at C(topn,2) per doc."""
@@ -594,15 +562,15 @@ _R5_WINDOW = (
     # encoder code changed since their newest (r4) driver row
     "packed_roundtrip", "packed_purge_roundtrip", "streaming_index_roundtrip",
     # r4-latest entries, registry source order, up to the 50th slot (the
-    # last three flame_* entries stay outside)
-    "pagerank_fixed", "pagerank_converged", "doc_keywords_bucketed",
+    # last two flame_* entries stay outside)
+    "pagerank_fixed", "pagerank_converged",
     "term_doc_tf", "bm25_topk_hydrated",
     "term_doc_tf_nostem", "tfidf_blend_topk",
     "term_suggestions", "tfidf_rerank_topk", "bm25_topk_nostem",
     "flame_groupby_salted", "flame_parallelize", "flame_scan_filter_project",
     "flame_wordcount", "flame_distinct", "flame_join", "flame_fold",
     "flame_groupby", "flame_intersection", "flame_cogroup", "flame_sample",
-    "flame_take",
+    "flame_take", "flame_count",
     # carried over from the previous window
     "doc_keywords", "related_terms", "text_bigrams", "packed_pfd_roundtrip",
     "docs_stable_ids", "term_stats", "doc_stats",
@@ -641,8 +609,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # NEW: the reference's actual stopping rule (threshold convergence)
         "pagerank_converged": pagerank_converged_query,
         "doc_keywords": _doc_keywords,
-        # NEW round 4: doc-bucketed layout twin (zero-exchange window)
-        "doc_keywords_bucketed": _doc_keywords_bucketed,
         "related_terms": _related_terms,
         # NEW round 3: collocation stats
         "text_bigrams": _text_bigrams,
@@ -715,7 +681,6 @@ def oracle_sql() -> dict[str, str]:
         "pagerank_fixed": pagerank_fixed_sql(iters=5),
         "pagerank_converged": pagerank_converged_sql(),
         "doc_keywords": O.sql_doc_keywords(stem=True),
-        "doc_keywords_bucketed": O.sql_doc_keywords(stem=True),
         "related_terms": O.sql_related_terms(stem=True),
         "text_bigrams": O.sql_text_bigrams(stem=True),
         "transcripts": O.sql_transcripts(),

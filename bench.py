@@ -88,14 +88,12 @@ def main() -> None:
     # previous output, so the final on-disk index is exactly one build's.
     build_runs = int(os.environ.get("MDSE_BENCH_BUILD_RUNS", "3"))
     build_sec = float("inf")
-    idx = transcripts = None
+    idx = None
     for _ in range(max(1, build_runs)):
         if idx is not None:
-            idx.unpersist()          # previous run's persisted TF root...
-            transcripts.unpersist()  # ...and source must not pressure this run
+            idx.unpersist()  # the previous run's TF root and source
         t0 = time.perf_counter()
-        transcripts = synthesize_transcripts(spark, n_convs)
-        idx = build_index(transcripts)
+        idx = build_index(synthesize_transcripts(spark, n_convs))
         write_index(idx, str(out_dir))
         build_sec = min(build_sec, time.perf_counter() - t0)
     n_actual = n_convs * TURNS_PER_CONV

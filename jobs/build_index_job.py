@@ -35,20 +35,7 @@ def main() -> None:
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--positions", action="store_true",
                     help="also build the positional index stage (phrase search)")
-    ap.add_argument("--doc-bucketed", action="store_true",
-                    help="with --bucketed: also write term_doc_tf bucketed "
-                         "by doc_id (zero-exchange per-doc windows for the "
-                         "keywords/perplexity analytics family)")
-    ap.add_argument("--bucketed", type=int, default=0, metavar="BUCKETS",
-                    help="additionally write term_doc_tf/term_stats as "
-                         "term-bucketed tables under OUT/bucketed; a later "
-                         "session calls index.build.register_bucketed(spark,"
-                         " OUT/bucketed) to rebuild the catalog entries from "
-                         "the _bucketed.json descriptor and get zero-shuffle "
-                         "term joins")
     args = ap.parse_args()
-    if args.doc_bucketed and not args.bucketed:
-        ap.error("--doc-bucketed requires --bucketed BUCKETS")
 
     spark = get_spark("mdse-build")
     if args.documents:
@@ -70,16 +57,6 @@ def main() -> None:
                       positions=args.positions)
     for stage, st in status.items():
         print(f"{stage}: {st}")
-    if args.bucketed:
-        # re-register the staged pipeline's ALREADY-materialized tables
-        # bucketed — no recomputation, just a bucketed rewrite
-        from mini_distributed_search_engine_spark.index.build import (
-            write_index_bucketed)
-        names = write_index_bucketed(
-            pipe.read("term_doc_tf", "data"), pipe.read("stats", "term_stats"),
-            "mdse", f"{args.out}/bucketed", buckets=args.bucketed,
-            with_doc_bucketed=args.doc_bucketed)
-        print(f"bucketed: {', '.join(names)} ({args.bucketed} buckets)")
 
 
 if __name__ == "__main__":

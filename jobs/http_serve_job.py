@@ -210,16 +210,11 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
     ap.add_argument("--port", type=int, default=8077)
-    ap.add_argument("--packed-bucketed", default=None, metavar="PATH",
-                    help="root of a write_packed_bucketed layout: the "
-                         "packed cache is the shard-bucketed scan as-is "
-                         "(no warmup repartition shuffle)")
     args = ap.parse_args()
 
     spark = get_spark("mdse-http-serve")
     t0 = time.perf_counter()
-    engine = SearchEngine(spark, args.index,
-                          packed_bucketed_path=args.packed_bucketed)
+    engine = SearchEngine(spark, args.index)
     engine.search("warmup probe", k=1)    # prime codegen + the join path
     srv = serve_http(engine, args.port)
     print(f"ready\tport={srv.server_address[1]}\t"

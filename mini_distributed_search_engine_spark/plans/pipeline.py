@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import term_doc_tf_pandas
-from ..index.build import with_stable_doc_ids
+from ..index.build import _stable_doc_ids
 from ..index.packed import (build_packed_postings,
                             build_packed_postings_local, merge_packed)
 
@@ -117,8 +117,12 @@ class StagedIndexBuild:
             status["docs"] = "skipped"
         else:
             t0 = time.perf_counter()
-            docs = with_stable_doc_ids(transcripts)
+            docs, cached = _stable_doc_ids(transcripts)
             docs.write.mode("overwrite").parquet(str(self._dir("docs") / "data"))
+            # later stages read the docs stage back: release the input the
+            # docID pass cached, or the corpus stays cached while serving
+            for df in cached:
+                df.unpersist()
             wall = int((time.perf_counter() - t0) * 1000)
             self._lineage_simple("docs", self.read("docs", "data"), wall)
             self._commit("docs", wall)

@@ -28,14 +28,7 @@ from .wand import compute_shard_bounds, wand_topk
 
 
 class SearchEngine:
-    def __init__(self, spark: SparkSession, index_root: str,
-                 packed_bucketed_path: str | None = None):
-        """``packed_bucketed_path``: root of a `write_packed_bucketed`
-        layout. The packed cache is then the shard_id-bucketed scan AS-IS —
-        no warmup `repartition(shard_id)` (a one-time O(index) shuffle per
-        engine start otherwise); bucketing carries through the
-        InMemoryRelation, so per-query WAND stays exchange-free too
-        (both test-asserted)."""
+    def __init__(self, spark: SparkSession, index_root: str):
         self.spark = spark
         self.doc_stats = spark.read.parquet(f"{index_root}/stats/doc_stats")
         self._stats_row = self.doc_stats.collect()[0]  # warm once
@@ -44,27 +37,8 @@ class SearchEngine:
         # Cache hash-partitioned on shard_id (`packed.serving_layout`,
         # the layout a streaming root serves too): a warm query is one
         # shuffle-free scan stage whose candidates the driver merges.
-        # With a shard-bucketed at-rest layout the warmup repartition
-        # shuffle goes away too.
-        if packed_bucketed_path is not None:
-            from ..index.build import register_bucketed
-            names = register_bucketed(spark, packed_bucketed_path)
-            # pick the shard-clustered table, not blindly the first
-            # descriptor entry (layouts may share a root; pointing
-            # --packed-bucketed at a term-bucketed-only root should
-            # fail HERE, not later inside compute_shard_bounds)
-            packed_tbl = next(
-                (n for n in names if "shard_id" in
-                 [f.name for f in spark.table(n).schema.fields]), None)
-            if packed_tbl is None:
-                raise ValueError(
-                    f"no shard_id-bucketed table under "
-                    f"{packed_bucketed_path} (tables: {names}); "
-                    "write one with write_packed_bucketed()")
-            self.packed = spark.table(packed_tbl).cache()
-        else:
-            self.packed = serving_layout(
-                spark.read.parquet(f"{index_root}/merged/data"))
+        self.packed = serving_layout(
+            spark.read.parquet(f"{index_root}/merged/data"))
         self.packed.count()
         # per-shard doc lower bounds: computed LAZILY on the first
         # role-filtered query and memoized (wand.compute_shard_bounds note)

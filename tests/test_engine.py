@@ -138,51 +138,6 @@ def test_engine_role_filtered_search(spark, index_root, docs_terms):
         [(rank, d, s) for _, rank, d, s in want]
 
 
-def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
-                                                  tmp_path):
-    """write_packed_bucketed + SearchEngine(packed_bucketed_path=...):
-    rank parity with the plain engine, the cached packed frame is the
-    bucketed scan with NO exchange anywhere in its plan (the warmup
-    repartition shuffle is gone), and the per-query WAND job stays
-    exchange-free on shard_id through the InMemoryRelation: one stage."""
-    from mini_distributed_search_engine_spark.index.build import (
-        write_packed_bucketed)
-    packed = spark.read.parquet(f"{index_root}/merged/data")
-    name = write_packed_bucketed(packed, str(tmp_path), buckets=8,
-                                 table_name="t_packed_bucketed")
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")   # fresh-session story
-        eng = SearchEngine(spark, index_root,
-                           packed_bucketed_path=str(tmp_path))
-        cache_plan = eng.packed._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "Exchange" not in cache_plan, cache_plan
-        assert "Bucketed: true" in cache_plan, cache_plan
-        qs = (Query("a", "apple banana"), Query("b", "spark index", k=25))
-        # search_batch runs its candidate job eagerly and returns a
-        # driver-local frame, so the check is on the job it ran: an
-        # exchange on shard_id would add a shuffle-map stage
-        sc = spark.sparkContext
-        sc.setJobGroup("packed_bucketed_query", "one warm query")
-        try:
-            qdf = eng.search_batch(qs)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        st = sc.statusTracker()
-        jobs = st.getJobIdsForGroup("packed_bucketed_query")
-        stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
-        assert len(jobs) == 1 and len(stages) == 1, (jobs, stages)
-        plain = SearchEngine(spark, index_root)
-        a = _ranked(qdf)
-        b = _ranked(plain.search_batch(qs))
-        assert a == b and len(a) > 0
-        # the filtered path works over the bucketed cache too
-        rows = eng.search("apple banana", k=20, role="user")
-        assert rows and all(r["role"] == "user" for r in rows)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
 def test_engine_delete_docs_masks_every_path(spark, index_root, docs_terms):
     """Tombstoned docs vanish from ranked, role-filtered and phrase
     results without touching the at-rest index; the engine stays

@@ -41,7 +41,7 @@ def test_golden_postings_and_stats(spark):
     assert abs(stats["avgdl"] - 19 / 3) < 1e-12
     dfs = {r["term"]: r["df"] for r in idx.term_stats.collect()}
     assert dfs == {t: len(p) for t, p in EXPECTED_POSTINGS.items()}
-    # postings arrays are doc_id-sorted with dl denormalized
-    posting_rows = {r["term"]: r["postings"] for r in idx.postings.collect()}
-    appl = [(p["doc_id"], p["tf"], p["dl"]) for p in posting_rows["appl"]]
+    # a posting list in doc_id order carries dl on every row
+    appl = [(r["doc_id"], r["tf"], r["dl"]) for r in
+            idx.term_doc_tf.where("term = 'appl'").orderBy("doc_id").collect()]
     assert appl == [(0, 3, 10), (1, 1, 6), (2, 1, 3)]

@@ -12,11 +12,12 @@ from types import SimpleNamespace
 import pyarrow.parquet as pq
 import pytest
 
+from mini_distributed_search_engine_spark.index.build import build_index
 from mini_distributed_search_engine_spark.index.packed import unpack_to_rows
 from mini_distributed_search_engine_spark.plans import pipeline
 from mini_distributed_search_engine_spark.plans.pipeline import StagedIndexBuild
 from mini_distributed_search_engine_spark.sources.transcripts import (
-    synthesize_transcripts_pdf)
+    synthesize_transcripts, synthesize_transcripts_pdf)
 
 
 def test_pipeline_resume(spark, tmp_path):
@@ -50,6 +51,30 @@ def test_pipeline_resume(spark, tmp_path):
     packed_rows = [r for r in lin if r["stage"] == "packed" and r["run_id"] == "run2"]
     assert packed_rows and all(r["bytes"] > 0 and r["doc_count"] > 0
                                and r["term_lo"] <= r["term_hi"] for r in packed_rows)
+
+
+def test_builds_release_their_input_cache(spark, tmp_path):
+    """The docID pass persists its input; once the docs stage is written
+    (or the in-memory index is unpersisted) nothing cached is left
+    behind, and an input the caller had cached stays cached."""
+    def persistent_rdds():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persistent_rdds()
+    StagedIndexBuild(spark, str(tmp_path / "a")).run(
+        synthesize_transcripts(spark, 50), positions=True)
+    assert persistent_rdds() == before
+    idx = build_index(synthesize_transcripts(spark, 5))
+    idx.term_stats.count()
+    idx.unpersist()
+    assert persistent_rdds() == before
+
+    tr = synthesize_transcripts(spark, 50).cache()
+    try:
+        StagedIndexBuild(spark, str(tmp_path / "b")).run(tr)
+        assert tr.storageLevel.useMemory
+    finally:
+        tr.unpersist()
 
 
 def test_root_purge_lifecycle(spark, tmp_path):

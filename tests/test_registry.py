@@ -36,3 +36,12 @@ def test_no_row_twin_entries():
                        "bm25_topk_proximity", "phrase_match"}
     assert {"bm25_topk_and_wand", "bm25_topk_filtered_wand",
             "bm25_topk_proximity_wand", "phrase_match_packed"} <= keys
+
+
+def test_no_layout_twin_entries():
+    """One at-rest layout: the doc_id-bucketed twin of doc_keywords is gone,
+    doc_keywords stays, and the window slot it held went to flame_count."""
+    keys = set(E.queries())
+    assert "doc_keywords_bucketed" not in keys
+    assert "doc_keywords" in keys
+    assert "flame_count" in E._R5_WINDOW
