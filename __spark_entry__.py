@@ -35,7 +35,7 @@ from mini_distributed_search_engine_spark.query.bm25 import (
 from mini_distributed_search_engine_spark.functions.analyzer import (
     term_positions_pandas)
 from mini_distributed_search_engine_spark.index.build import (
-    with_stable_doc_ids)
+    _stable_doc_ids)
 from mini_distributed_search_engine_spark.query.tfidf import (
     RERANK_QUERY_SET, tfidf_blend_topk, tfidf_rerank_topk)
 from mini_distributed_search_engine_spark.query.wand import wand_topk
@@ -48,6 +48,18 @@ SF0001 = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: stemmed BM25 top-k on sf0.001-derived transcripts."""
     return _bm25(stem=True)(spark, SF0001)
+
+
+def _local(df: DataFrame, *owners) -> DataFrame:
+    """``df`` collected into a driver-local frame (one collect),
+    then what ``owners`` persisted for it released: an entry's result is
+    lazy over its cached index frames, and a cache left behind would be
+    found again by the next entry that builds from the same input."""
+    try:
+        return df.sparkSession.createDataFrame(df.collect(), df.schema)
+    finally:
+        for owner in owners:
+            owner.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -64,38 +76,46 @@ def _index(spark: SparkSession, sf_dir: str, stem: bool):
     return build_index(transcripts_from_documents(spark, sf_dir), stem=stem)
 
 
+def _stable_docs(spark: SparkSession, sf_dir: str
+                 ) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    return _stable_doc_ids(transcripts_from_documents(spark, sf_dir))
+
+
 def _q_docs(stem: bool):
     def q(spark, sf_dir):
         idx = _index(spark, sf_dir, stem)
-        return idx.docs.select("doc_id", "conv_id", "turn_idx", "dl")
+        return _local(idx.docs.select("doc_id", "conv_id", "turn_idx", "dl"),
+                      idx)
     return q
 
 
 def _q_term_doc_tf(stem: bool):
     def q(spark, sf_dir):
         idx = _index(spark, sf_dir, stem)
-        return idx.term_doc_tf.select("term", "doc_id", "tf")
+        return _local(idx.term_doc_tf.select("term", "doc_id", "tf"), idx)
     return q
 
 
 def _q_term_stats(stem: bool):
     def q(spark, sf_dir):
-        return _index(spark, sf_dir, stem).term_stats.select("term", "df")
+        idx = _index(spark, sf_dir, stem)
+        return _local(idx.term_stats.select("term", "df"), idx)
     return q
 
 
 def _q_doc_stats(stem: bool):
     def q(spark, sf_dir):
-        ds = _index(spark, sf_dir, stem).doc_stats
-        return ds.select("n_docs", F.round("avgdl", 9).alias("avgdl"))
+        idx = _index(spark, sf_dir, stem)
+        return _local(idx.doc_stats.select(
+            "n_docs", F.round("avgdl", 9).alias("avgdl")), idx)
     return q
 
 
 def _bm25(stem: bool):
     def q(spark, sf_dir):
         idx = _index(spark, sf_dir, stem)
-        return bm25_topk(spark, idx.term_doc_tf, idx.term_stats, idx.doc_stats,
-                         stem=stem)
+        return _local(bm25_topk(spark, idx.term_doc_tf, idx.term_stats,
+                                idx.doc_stats, stem=stem), idx)
     return q
 
 
@@ -105,7 +125,7 @@ def _bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir, stem=True)
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=256)
-    return wand_topk(spark, packed, idx.doc_stats)
+    return _local(wand_topk(spark, packed, idx.doc_stats), idx)
 
 
 def _bm25_filtered_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,7 +138,8 @@ def _bm25_filtered_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=256)
     allowed = idx.docs.where(F.col("role") == "user").select("doc_id")
-    return wand_topk(spark, packed, idx.doc_stats, allowed_docs=allowed)
+    return _local(wand_topk(spark, packed, idx.doc_stats,
+                            allowed_docs=allowed), idx)
 
 
 def _tomb_ids(idx, mod: int = 13) -> list[int]:
@@ -138,8 +159,8 @@ def _bm25_tombstoned_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir, stem=True)
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=256)
-    return wand_topk(spark, packed, idx.doc_stats,
-                     blocked_ids=_tomb_ids(idx))
+    return _local(wand_topk(spark, packed, idx.doc_stats,
+                            blocked_ids=_tomb_ids(idx)), idx)
 
 
 def _bm25_and_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,8 +169,8 @@ def _bm25_and_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir, stem=True)
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=256)
-    return wand_topk(spark, packed, idx.doc_stats, queries=AND_QUERY_SET,
-                     conjunctive=True)
+    return _local(wand_topk(spark, packed, idx.doc_stats,
+                            queries=AND_QUERY_SET, conjunctive=True), idx)
 
 
 def _bm25_hydrated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,45 +182,47 @@ def _bm25_hydrated(spark: SparkSession, sf_dir: str) -> DataFrame:
                      stem=True)
     docs = idx.docs.select("doc_id", "conv_id", "turn_idx", "role",
                            F.substring("text", 1, 80).alias("snippet"))
-    return topk.join(docs, "doc_id").select(
+    return _local(topk.join(docs, "doc_id").select(
         "query_id", "rank", "doc_id", "score", "conv_id", "turn_idx",
-        "role", "snippet")
+        "role", "snippet"), idx)
 
 
 def _tfidf_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference Searcher's OWN ranking (TF-IDF threshold 0.4 + constant
     PageRank blend, Searcher.java:189-244) — reference-parity query."""
     idx = _index(spark, sf_dir, stem=True)
-    return tfidf_blend_topk(spark, idx.term_doc_tf, idx.term_stats,
-                            DEFAULT_QUERY_SET)
+    return _local(tfidf_blend_topk(spark, idx.term_doc_tf, idx.term_stats,
+                                   DEFAULT_QUERY_SET), idx)
 
 
 def _tfidf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full Searcher result pipeline incl. the secondary title/body-match
     bucketing re-rank (Searcher.java:275-307)."""
     idx = _index(spark, sf_dir, stem=True)
-    return tfidf_rerank_topk(spark, idx.term_doc_tf, idx.term_stats,
-                             idx.docs, RERANK_QUERY_SET)
+    return _local(tfidf_rerank_topk(spark, idx.term_doc_tf, idx.term_stats,
+                                    idx.docs, RERANK_QUERY_SET), idx)
 
 
 def _positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional index rows (doc_id, term, pos) — pos over the
     post-analyzer term sequence."""
-    docs = with_stable_doc_ids(transcripts_from_documents(spark, sf_dir))
-    return term_positions_pandas(docs, "text", stem=True)
+    docs, cached = _stable_docs(spark, sf_dir)
+    return _local(term_positions_pandas(docs, "text", stem=True), *cached)
 
 
 def _positions_packed(spark: SparkSession, sf_dir: str,
-                      shard_bounds=None):
+                      shard_bounds=None
+                      ) -> tuple[DataFrame, tuple[DataFrame, ...]]:
     """Shared builder: positional rows -> packed per-(term, doc-shard)
     position segments (index/positions.py; delta+varint blobs, the same
-    compression discipline the TF postings got in round 1)."""
+    compression discipline the TF postings got in round 1), and the
+    frames the docID pass persisted for them."""
     from mini_distributed_search_engine_spark.index.positions import (
         build_packed_positions)
-    docs = with_stable_doc_ids(transcripts_from_documents(spark, sf_dir))
+    docs, cached = _stable_docs(spark, sf_dir)
     pos = term_positions_pandas(docs, "text", stem=True)
     return build_packed_positions(pos, shard_span=256,
-                                  shard_bounds=shard_bounds)
+                                  shard_bounds=shard_bounds), cached
 
 
 def _positions_packed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,7 +233,8 @@ def _positions_packed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     `term_positions`."""
     from mini_distributed_search_engine_spark.index.positions import (
         unpack_positions)
-    return unpack_positions(_positions_packed(spark, sf_dir))
+    packed, cached = _positions_packed(spark, sf_dir)
+    return _local(unpack_positions(packed), *cached)
 
 
 def _positions_archive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,8 +245,9 @@ def _positions_archive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         archive_positions, restore_positions)
     from mini_distributed_search_engine_spark.index.positions import (
         unpack_positions)
-    return unpack_positions(restore_positions(archive_positions(
-        _positions_packed(spark, sf_dir))))
+    packed, cached = _positions_packed(spark, sf_dir)
+    return _local(unpack_positions(restore_positions(archive_positions(
+        packed))), *cached)
 
 
 def _phrase_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,7 +256,8 @@ def _phrase_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode); oracle = the phrase occurrences of the row positions."""
     from mini_distributed_search_engine_spark.query.phrase import (
         phrase_match_packed)
-    return phrase_match_packed(spark, _positions_packed(spark, sf_dir))
+    packed, cached = _positions_packed(spark, sf_dir)
+    return _local(phrase_match_packed(spark, packed), *cached)
 
 
 def _span_near(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,7 +268,8 @@ def _span_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     product (an m-way join in SQL). Two algorithms, one answer."""
     from mini_distributed_search_engine_spark.query.span import (
         span_near_match)
-    return span_near_match(spark, _positions_packed(spark, sf_dir))
+    packed, cached = _positions_packed(spark, sf_dir)
+    return _local(span_near_match(spark, packed), *cached)
 
 
 def _bm25_proximity_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,9 +286,10 @@ def _bm25_proximity_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir, stem=True)
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=256)
-    pos_packed = _positions_packed(
+    pos_packed, cached = _positions_packed(
         spark, sf_dir, shard_bounds=compute_shard_bounds(packed))
-    return wand_topk_proximity(spark, packed, pos_packed, idx.doc_stats)
+    return _local(wand_topk_proximity(spark, packed, pos_packed,
+                                      idx.doc_stats), idx, *cached)
 
 
 def _text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,7 +301,7 @@ def _text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mini_distributed_search_engine_spark.functions.analyzer import (
         bigram_counts_pandas)
     from pyspark.sql import Window
-    docs = with_stable_doc_ids(transcripts_from_documents(spark, sf_dir))
+    docs, cached = _stable_docs(spark, sf_dir)
     big = bigram_counts_pandas(docs, "text", stem=True)
     # orderBy().limit() compiles to a parallel TakeOrdered over the full
     # bigram vocabulary; only the surviving 50 rows see the (then-trivial)
@@ -282,16 +310,17 @@ def _text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("t2").asc()).limit(50)
     w = Window.orderBy(F.col("cnt").desc(), F.col("t1").asc(),
                        F.col("t2").asc())
-    return (top.withColumn("rank", F.row_number().over(w).cast("int"))
-            .select("rank", "t1", "t2", "cnt"))
+    return _local(top.withColumn("rank", F.row_number().over(w).cast("int"))
+                  .select("rank", "t1", "t2", "cnt"), *cached)
 
 
 def _term_suggestions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocomplete surface (Searcher.java:319-337 '/words' + client prefix
     filter): terms by document frequency under a prefix."""
     idx = _index(spark, sf_dir, stem=True)
-    return (idx.term_stats.where(F.col("term").startswith("s"))
-            .orderBy(F.col("df").desc(), F.col("term").asc()).limit(20))
+    return _local(idx.term_stats.where(F.col("term").startswith("s"))
+                  .orderBy(F.col("df").desc(), F.col("term").asc()).limit(20),
+                  idx)
 
 
 def _groupby_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,7 +338,7 @@ def _packed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir, stem=True)
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=128)
-    return unpack_to_rows(merge_packed(packed, level_factor=4))
+    return _local(unpack_to_rows(merge_packed(packed, level_factor=4)), idx)
 
 
 def _packed_pfd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,8 +351,8 @@ def _packed_pfd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mini_distributed_search_engine_spark.index.codec_pfd import (
         build_packed_postings_pfd, unpack_packed_pfd)
     idx = _index(spark, sf_dir, stem=True)
-    return unpack_packed_pfd(
-        build_packed_postings_pfd(idx.term_doc_tf, shard_span=128))
+    return _local(unpack_packed_pfd(
+        build_packed_postings_pfd(idx.term_doc_tf, shard_span=128)), idx)
 
 
 def _index_archive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,7 +366,7 @@ def _index_archive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir, stem=True)
     avgdl = float(idx.doc_stats.collect()[0]["avgdl"])
     packed = build_packed_postings(idx.term_doc_tf, avgdl, shard_span=128)
-    return unpack_to_rows(restore_packed(archive_packed(packed)))
+    return _local(unpack_to_rows(restore_packed(archive_packed(packed))), idx)
 
 
 def _packed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,8 +380,8 @@ def _packed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     old_tf = idx.term_doc_tf.where(F.col("doc_id") < cut)
     new_tf = idx.term_doc_tf.where(F.col("doc_id") >= cut)
     old_packed = build_packed_postings(old_tf, avgdl, shard_span=128)
-    return unpack_to_rows(
-        append_packed(old_packed, new_tf, avgdl, shard_span=128))
+    return _local(unpack_to_rows(
+        append_packed(old_packed, new_tf, avgdl, shard_span=128)), idx)
 
 
 def _packed_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,7 +395,7 @@ def _packed_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = merge_packed(
         build_packed_postings(idx.term_doc_tf, avgdl, shard_span=128),
         level_factor=4)
-    return unpack_to_rows(purge_docs(packed, _tomb_ids(idx)))
+    return _local(unpack_to_rows(purge_docs(packed, _tomb_ids(idx))), idx)
 
 
 def _index_purge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,7 +540,8 @@ def _doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction labeling primitive, computed from the index's own tables."""
     idx = _index(spark, sf_dir, stem=True)
     n_docs = int(idx.doc_stats.collect()[0]["n_docs"])
-    return TS.doc_keywords(idx.term_doc_tf, idx.term_stats, n_docs)
+    return _local(TS.doc_keywords(idx.term_doc_tf, idx.term_stats, n_docs),
+                  idx)
 
 
 def _related_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,7 +549,8 @@ def _related_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovery with pair fan-out capped at C(topn,2) per doc."""
     idx = _index(spark, sf_dir, stem=True)
     n_docs = int(idx.doc_stats.collect()[0]["n_docs"])
-    return TS.related_terms(idx.term_doc_tf, idx.term_stats, n_docs)
+    return _local(TS.related_terms(idx.term_doc_tf, idx.term_stats, n_docs),
+                  idx)
 
 
 def _index_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:

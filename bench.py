@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from mini_distributed_search_engine_spark.index.build import build_index, write_index
 from mini_distributed_search_engine_spark.index.packed import (
     build_packed_postings_local, merge_packed)
+from mini_distributed_search_engine_spark.plans.pipeline import StagedIndexBuild
 from mini_distributed_search_engine_spark.query.bm25 import Query, bm25_topk
 from mini_distributed_search_engine_spark.query.wand import wand_topk
 from mini_distributed_search_engine_spark.session import get_spark
@@ -107,6 +108,27 @@ def main() -> None:
             "query_p50_sec": None, "cpus": cpus,
         }))
         return
+
+    # ---- staged build (ADDITIVE keys): `StagedIndexBuild.run` with
+    # positions, the build SearchEngine serves, from a parquet copy of the
+    # same corpus (written untimed, so the docs stage does not time the
+    # synthesizer) into a fresh root; shard span as perfbench `serve`
+    # sizes it (at least 4 merged shards per core)
+    corpus_dir = base / f"bench_corpus_{cpus}"
+    synthesize_transcripts(spark, n_convs).write.mode("overwrite").parquet(
+        str(corpus_dir))
+    staged_span = 1 << max(0, (n_actual // (cpus * 8)).bit_length() - 1)
+    staged_sec = float("inf")
+    for i in range(2):
+        staged_root = base / f"bench_staged_{cpus}_{i}"
+        shutil.rmtree(staged_root, ignore_errors=True)
+        t0 = time.perf_counter()
+        StagedIndexBuild(spark, str(staged_root)).run(
+            spark.read.parquet(str(corpus_dir)), positions=True,
+            shard_span=staged_span)
+        staged_sec = min(staged_sec, time.perf_counter() - t0)
+        shutil.rmtree(staged_root, ignore_errors=True)
+    shutil.rmtree(corpus_dir, ignore_errors=True)
 
     # ---- pack + merge (timed separately): varint segments + one merge level.
     # Partition-LOCAL encode over the doc-range-partitioned build root (no
@@ -254,6 +276,8 @@ def main() -> None:
         "build_sec": round(build_sec, 3),
         "pack_sec": round(pack_sec, 3),
         "turns_per_sec": round(n_actual / build_sec, 1),
+        "staged_build_sec": round(staged_sec, 3),
+        "staged_turns_per_sec": round(n_actual / staged_sec, 1),
         "query_p50_sec": p50,
         "queries_wand": per_query_wand,
         "query_wand_p50_sec": p50_w,

@@ -57,58 +57,37 @@ def _stable_doc_ids(transcripts: DataFrame
                     ) -> tuple[DataFrame, tuple[DataFrame, ...]]:
     """`with_stable_doc_ids` plus the frames it persisted, to unpersist
     once the docs are materialized. An input the caller had cached before
-    the call is not among them."""
+    the call is neither persisted again nor among them."""
     spark = transcripts.sparkSession
     # Persist the input first: both the pre-clustered check below and (on
     # the slow path) repartitionByRange's bound-sampling rescan the source —
     # expensive when it is a Python synthesizer or a remote scan.
     level = transcripts.storageLevel
-    src = transcripts.persist(StorageLevel.MEMORY_AND_DISK)
-    cached = () if level.useMemory or level.useDisk else (src,)
+    owned = not (level.useMemory or level.useDisk)
+    src = (transcripts.persist(StorageLevel.MEMORY_AND_DISK) if owned
+           else transcripts)
+    cached = (src,) if owned else ()
 
     # PRE-CLUSTERED FAST PATH: if the source partitions are already sorted
     # by (conv_id, turn_idx) WITHIN each partition and their key ranges are
     # disjoint and ascending ACROSS partitions (true for the deterministic
     # synthesizer and for any time/conv-ordered table written in order),
     # the range exchange is a no-op — skip it entirely. One narrow
-    # two-column pass verifies the property; the range shuffle of the full
-    # corpus (text included) was the single most memory-bandwidth-bound
-    # stage of the build, and the one that scaled worst with cores.
-    keyed = src.select(
-        F.spark_partition_id().alias("_pid"),
-        F.struct("conv_id", "turn_idx").alias("_k"))
-    stats = (keyed.groupBy("_pid")
-             .agg(F.min("_k").alias("lo"), F.max("_k").alias("hi"),
-                  F.count(F.lit(1)).alias("cnt")).collect())
-    stats.sort(key=lambda r: (r["lo"]["conv_id"], r["lo"]["turn_idx"]))
-    disjoint = all(
-        (p["hi"]["conv_id"], p["hi"]["turn_idx"])
-        < (r["lo"]["conv_id"], r["lo"]["turn_idx"])
-        for p, r in zip(stats, stats[1:]))
-    pre_clustered = False
-    if disjoint and stats:
-        # verify within-partition sortedness (narrow, two columns)
-        def sorted_check(batches):
-            import pandas as pd
-            prev = None
-            ok = True
-            for pdf in batches:
-                keys = list(zip(pdf["conv_id"], pdf["turn_idx"]))
-                if keys:
-                    if prev is not None and keys[0] < prev:
-                        ok = False
-                    if any(b < a for a, b in zip(keys, keys[1:])):
-                        ok = False
-                    prev = keys[-1]
-            yield pd.DataFrame({"ok": [ok]})
-        oks = (src.select("conv_id", "turn_idx")
-               .mapInPandas(sorted_check, "ok boolean").collect())
-        pre_clustered = all(r["ok"] for r in oks)
+    # two-column pass (one Spark job) verifies the property; the range
+    # shuffle of the full corpus (text included) was the single most
+    # memory-bandwidth-bound stage of the build, and the one that scaled
+    # worst with cores.
+    parts = _partition_key_runs(src)
+    pre_clustered = bool(parts) and all(r["ok"] for r in parts)
+    if pre_clustered:
+        parts.sort(key=lambda r: (r["lo_c"], r["lo_t"]))
+        pre_clustered = all((p["hi_c"], p["hi_t"]) < (r["lo_c"], r["lo_t"])
+                            for p, r in zip(parts, parts[1:]))
 
     if pre_clustered:
         base = src
-        counts = {r["_pid"]: r["cnt"] for r in stats}
-        order = [r["_pid"] for r in stats]  # pids in KEY order, not pid order
+        counts = {r["_pid"]: r["cnt"] for r in parts}
+        order = [r["_pid"] for r in parts]  # pids in KEY order, not pid order
     else:
         base = (
             src.repartitionByRange(spark.sparkContext.defaultParallelism,
@@ -136,6 +115,55 @@ def _stable_doc_ids(transcripts: DataFrame
         .drop("_pid", "_local", "_offset")
     )
     return out, cached
+
+
+def _partition_key_runs(src: DataFrame) -> list:
+    """One row per non-empty partition of ``src``: its partition id
+    (``_pid``), first key (``lo_c``, ``lo_t``), last key (``hi_c``,
+    ``hi_t``), row count (``cnt``) and whether its (conv_id, turn_idx)
+    keys never decrease (``ok``) — across Arrow batch boundaries too.
+    A partition with a null key is not ``ok``. One narrow mapInPandas
+    pass, one Spark job; each batch is checked by a vectorized comparison
+    of adjacent keys, not a per-row loop."""
+    keys = src.select("conv_id", "turn_idx")
+    c_type, t_type = (f.dataType.simpleString() for f in keys.schema.fields)
+
+    def runs(batches):
+        import pandas as pd
+        from pyspark import TaskContext
+
+        first = last = None
+        n, ok = 0, True
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            n += len(pdf)
+            if not ok:
+                continue
+            if pdf.isna().to_numpy().any():
+                ok, first, last = False, None, None
+                continue
+            c = pdf["conv_id"].to_numpy()
+            t = pdf["turn_idx"].to_numpy()
+            down = (c[1:] < c[:-1]) | ((c[1:] == c[:-1]) & (t[1:] < t[:-1]))
+            head = (c[0], t[0])
+            if down.any() or (last is not None and head < last):
+                ok, first, last = False, None, None
+                continue
+            first = head if first is None else first
+            last = (c[-1], t[-1])
+        if n:
+            yield pd.DataFrame({
+                "_pid": [TaskContext.get().partitionId()],
+                "lo_c": [first[0] if ok else None],
+                "lo_t": [int(first[1]) if ok else None],
+                "hi_c": [last[0] if ok else None],
+                "hi_t": [int(last[1]) if ok else None],
+                "cnt": [n], "ok": [ok]})
+
+    return keys.mapInPandas(
+        runs, f"_pid int, lo_c {c_type}, lo_t {t_type}, hi_c {c_type}, "
+              f"hi_t {t_type}, cnt long, ok boolean").collect()
 
 
 @dataclass(frozen=True)

@@ -67,7 +67,7 @@ DEFAULT_SHARD_SPAN = 1 << 20  # docs per shard; bounds any encode group size
 
 def encode_runs(rows: DataFrame, cols: tuple[str, ...],
                 encode_run: Callable[..., dict],
-                schema: T.StructType) -> DataFrame:
+                schema: T.StructType, exchange: bool = True) -> DataFrame:
     """Encode every (term, shard_id) run of ``rows`` into one segment row —
     the one encode operator behind the TF, positional and PFD builders.
 
@@ -79,6 +79,9 @@ def encode_runs(rows: DataFrame, cols: tuple[str, ...],
     applyInPandas pays one Python call and one single-row pandas frame per
     (term, shard) segment, which dominates the encode on a Zipfian
     vocabulary of rare terms; here a batch's segments leave as one frame.
+    ``exchange=False`` skips the exchange: each partition encodes the runs
+    it holds, so a (term, shard) split across partitions leaves one
+    segment per partition (`build_packed_postings_local` splices those).
 
     Memory: a run cut by an Arrow batch boundary is copied and carried
     into the next batch, so a task holds one Arrow batch
@@ -120,9 +123,10 @@ def encode_runs(rows: DataFrame, cols: tuple[str, ...],
         if pieces:
             yield pd.DataFrame([close()], columns=names)
 
-    return (rows.select("term", "shard_id", *cols)
-            .repartition("term", "shard_id")
-            .sortWithinPartitions("term", "shard_id", *cols)
+    rows = rows.select("term", "shard_id", *cols)
+    if exchange:
+        rows = rows.repartition("term", "shard_id")
+    return (rows.sortWithinPartitions("term", "shard_id", *cols)
             .mapInPandas(gen, schema))
 
 
@@ -211,51 +215,34 @@ def build_packed_postings_local(tf_dl: DataFrame, avgdl: float,
     of `build_packed_postings` — O(corpus) rows through an exchange — is
     replaced by a segment-level exchange of the few boundary shards.
 
-    Memory: one partition's posting rows are held in pandas during encode;
-    size partitions (spark.sql.files.maxPartitionBytes / input splits)
-    accordingly — the usual ~128 MB splits are fine.
+    Each partition is sorted locally and encoded by the same run-cutting
+    pass as `encode_runs`, so a task holds one Arrow batch plus one run.
 
     Byte-identical to `build_packed_postings` output (test-enforced).
     """
-    def gen(batches):
-        parts = list(batches)
-        if not parts:
-            return
-        all_ = pd.concat(parts, ignore_index=True)
-        if not len(all_):
-            return
-        all_["shard_id"] = (all_["doc_id"] // shard_span).astype("int32")
-        out = []
-        for (term, shard_id), g in all_.groupby(["term", "shard_id"],
-                                                sort=False):
-            row = _tf_segment(g["doc_id"].to_numpy(), g["tf"].to_numpy(),
-                              g["dl"].to_numpy(), avgdl)
-            row.update(term=term, shard_id=int(shard_id))
-            out.append(row)
-        yield pd.DataFrame(out, columns=[f.name for f in PACKED_SCHEMA.fields])
-
     src = tf_dl.select("term", "doc_id", "tf", "dl")
     # Boundary shards are TERM-INDEPENDENT: a shard needs splicing iff its
     # doc range spans a partition boundary — at most one shard id per
-    # boundary, found from per-partition doc ranges with one tiny agg
+    # boundary, found from per-partition doc ranges with one narrow pass
     # (no join against the blob-carrying segment rows).
-    ranges = (src.groupBy(F.spark_partition_id().alias("_pid"))
-              .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-              .collect())
-    ranges.sort(key=lambda r: r["lo"])
+    ranges = _partition_doc_ranges(src)
     for prev, r in zip(ranges, ranges[1:]):
-        if int(r["lo"]) <= int(prev["hi"]):
+        if r[0] <= prev[1]:
             raise ValueError(
                 "build_packed_postings_local requires doc-range-partitioned "
                 f"input, but partition doc ranges overlap: "
-                f"[{prev['lo']},{prev['hi']}] vs [{r['lo']},{r['hi']}] "
+                f"[{prev[0]},{prev[1]}] vs [{r[0]},{r[1]}] "
                 "(interleaved posting runs) — use build_packed_postings")
     boundary_ids = sorted({
-        int(r["lo"]) // shard_span
-        for prev, r in zip(ranges, ranges[1:])
-        if int(r["lo"]) // shard_span == int(prev["hi"]) // shard_span})
+        r[0] // shard_span for prev, r in zip(ranges, ranges[1:])
+        if r[0] // shard_span == prev[1] // shard_span})
 
-    segs = src.mapInPandas(gen, PACKED_SCHEMA)
+    with_shard = src.withColumn(
+        "shard_id", (F.col("doc_id") / F.lit(shard_span)).cast("int"))
+    segs = encode_runs(with_shard, ("doc_id", "tf", "dl"),
+                       lambda docs, tfs, dls: _tf_segment(docs, tfs, dls,
+                                                          avgdl),
+                       PACKED_SCHEMA, exchange=False)
     if not boundary_ids:
         return _attach_totals(segs, src)
     segs = segs.persist()
@@ -263,6 +250,24 @@ def build_packed_postings_local(tf_dl: DataFrame, avgdl: float,
     spliced = merge_packed(segs.where(F.col("shard_id").isin(boundary_ids)),
                            level_factor=1)
     return _attach_totals(whole.unionByName(spliced), src)
+
+
+def _partition_doc_ranges(rows: DataFrame) -> list[tuple[int, int]]:
+    """(min, max) doc_id of each non-empty partition of ``rows``, sorted:
+    one narrow pass, one Spark job."""
+    def minmax(batches):
+        lo = hi = None
+        for pdf in batches:
+            if len(pdf):
+                d = pdf["doc_id"]
+                lo = d.min() if lo is None else min(lo, d.min())
+                hi = d.max() if hi is None else max(hi, d.max())
+        if lo is not None:
+            yield pd.DataFrame({"lo": [lo], "hi": [hi]})
+
+    return sorted((int(r["lo"]), int(r["hi"])) for r in
+                  rows.select("doc_id").mapInPandas(minmax, "lo long, hi long")
+                  .collect())
 
 
 class SegmentFamily(NamedTuple):

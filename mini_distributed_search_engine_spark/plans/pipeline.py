@@ -18,36 +18,89 @@ storage.py`` (tests/test_storage.py).
 
 Stages:
   docs              stable docIDs + dl                    (parquet)
-  term_doc_tf       (term, doc_id, tf, dl)                (parquet, term-clustered)
-  positions         (doc_id, term, pos); positions=True   (parquet, term-clustered)
+  term_doc_tf       (term, doc_id, tf, dl)                (parquet, doc-range ordered)
+  positions         (doc_id, term, pos); positions=True   (parquet, doc-range ordered)
   positions_packed  per-(term, doc-shard) positional      (parquet)
                     segments at the merged shard span;
                     positions=True
   stats             term_stats + doc_stats                (parquet)
   packed            per-(term, doc-shard) varint segments (parquet)
   merged            one hierarchical merge level          (parquet)
-Lineage rows append to ``<root>/_lineage`` parquet per stage run.
+
+Each stage runs about one Spark job per output it writes, under the job
+group ``build:<stage>`` (a caller's job group is kept, and the stage
+rides in the job description instead). A stage's ``_COMMITTED.json``
+records the schema of every sub-directory it wrote, so `read()` of a
+committed stage runs no schema-inference job. Lineage rows are written on
+the driver (`write_lineage`), one parquet file per stage run under
+``<root>/_lineage``.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.analyzer import term_doc_tf_pandas
+from ..functions.analyzer import term_doc_tf_pandas, term_positions_pandas
 from ..index.build import _stable_doc_ids
 from ..index.packed import (build_packed_postings,
                             build_packed_postings_local, merge_packed)
+from ..index.positions import build_packed_positions
 
 LINEAGE_SCHEMA = ("run_id string, stage string, shard_id int, "
                   "term_lo string, term_hi string, doc_count long, "
                   "bytes long, wall_ms long, committed_at double")
+
+
+def write_lineage(root: Path, name: str, rows: list[tuple]) -> None:
+    """``rows`` (LINEAGE_SCHEMA tuples) as the one parquet file
+    ``<root>/_lineage/<name>.parquet``, written on the driver with no
+    Spark job. A rerun of the same step rewrites the same file (temp file
+    + rename), so a step keeps exactly one set of rows, with no read of
+    the existing ones. Shared by the staged build and the streaming
+    indexer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(LINEAGE_SCHEMA))
+    lin_dir = Path(root) / "_lineage"
+    lin_dir.mkdir(exist_ok=True)
+    # dot-prefixed: Spark's reader skips it until the rename
+    tmp = lin_dir / f".{name}.parquet.tmp"
+    pq.write_table(pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=schema),
+        str(tmp))
+    os.replace(tmp, lin_dir / f"{name}.parquet")
+
+
+def _parquet_rows(path: Path) -> int:
+    """Row count of a parquet directory from its files' footers."""
+    import pyarrow.parquet as pq
+    return sum(pq.read_metadata(str(f)).num_rows
+               for f in path.glob("*.parquet"))
+
+
+def _term_stats(tf: DataFrame) -> DataFrame:
+    return tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
+
+
+def _doc_stats(dl: DataFrame) -> DataFrame:
+    """n_docs and avgdl over the per-doc dl rows (one per doc, zero-term
+    docs included)."""
+    return dl.agg(F.count("*").cast("long").alias("n_docs"),
+                  F.avg("dl").alias("avgdl"))
 
 
 class StagedIndexBuild:
@@ -56,6 +109,8 @@ class StagedIndexBuild:
         self.root = Path(root)
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.root.mkdir(parents=True, exist_ok=True)
+        # schemas of the sub-directories written by stages not yet committed
+        self._written: dict[str, dict[str, dict]] = {}
 
     # -- stage plumbing ----------------------------------------------------
     def _dir(self, stage: str) -> Path:
@@ -67,44 +122,93 @@ class StagedIndexBuild:
     def is_committed(self, stage: str) -> bool:
         return self._marker(stage).exists()
 
-    def _commit(self, stage: str, wall_ms: int, extra: dict | None = None) -> None:
+    def _commit(self, stage: str, wall_ms: int) -> None:
         tmp = self._dir(stage) / "_COMMITTED.json.tmp"
         payload = {"run_id": self.run_id, "stage": stage, "wall_ms": wall_ms,
-                   "committed_at": time.time(), **(extra or {})}
+                   "committed_at": time.time(),
+                   "schemas": self._written.pop(stage, {})}
         tmp.write_text(json.dumps(payload))
         tmp.rename(self._marker(stage))  # atomic commit
 
-    def read(self, stage: str, sub: str = "") -> DataFrame:
-        return self.spark.read.parquet(str(self._dir(stage) / sub if sub
-                                           else self._dir(stage)))
+    def _write(self, stage: str, sub: str, df: DataFrame) -> None:
+        df.write.mode("overwrite").parquet(str(self._dir(stage) / sub))
+        self._written.setdefault(stage, {})[sub] = df.schema.jsonValue()
 
-    def _append_lineage(self, stage: str, rows_df: DataFrame) -> None:
-        rows_df.write.mode("append").parquet(str(self.root / "_lineage"))
+    def read(self, stage: str, sub: str) -> DataFrame:
+        """``<stage>/<sub>`` as a DataFrame. The schema comes from the
+        stage's commit marker (or from this build's write, before the
+        commit), so the read runs no Spark job; a stage committed
+        without recorded schemas is read with schema inference."""
+        schema = self._written.get(stage, {}).get(sub)
+        if schema is None and self.is_committed(stage):
+            schema = (json.loads(self._marker(stage).read_text())
+                      .get("schemas", {}).get(sub))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(str(self._dir(stage) / sub))
+
+    @contextmanager
+    def _jobs(self, stage: str):
+        """Tag the stage's Spark jobs: job group ``build:<stage>``, or,
+        when the caller already runs under a job group (a request, a
+        tracing span), that group with ``build:<stage>`` as the job
+        description. The thread's prior job properties are restored."""
+        sc = self.spark.sparkContext
+        keys = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
+        prior = [sc.getLocalProperty(k) for k in keys]
+        if prior[0] is None:
+            sc.setJobGroup(f"build:{stage}", f"build:{stage} {self.run_id}")
+        else:
+            sc.setLocalProperty("spark.job.description", f"build:{stage}")
+        try:
+            yield
+        finally:
+            for k, v in zip(keys, prior):
+                sc.setLocalProperty(k, v)
+
+    def _lineage_simple(self, stage: str, sub: str, wall_ms: int) -> None:
+        write_lineage(self.root, f"{self.run_id}_{stage}", [(
+            self.run_id, stage, -1, "", "",
+            _parquet_rows(self._dir(stage) / sub), 0, wall_ms, time.time())])
 
     def _lineage_from_packed(self, stage: str, wall_ms: int) -> None:
         """Per-doc-shard lineage: shard id, term range, doc count, bytes."""
-        packed = self.read(stage, "data")
-        agg = (packed.groupBy("shard_id")
-               .agg(F.min("term").alias("term_lo"), F.max("term").alias("term_hi"),
-                    F.sum("df").alias("doc_count"),
-                    (F.sum(F.length("doc_gaps")) + F.sum(F.length("tfs"))
-                     + F.sum(F.length("dls"))).alias("bytes"))
-               .select(F.lit(self.run_id).alias("run_id"), F.lit(stage).alias("stage"),
-                       "shard_id", "term_lo", "term_hi",
-                       F.col("doc_count").cast("long"), F.col("bytes").cast("long"),
-                       F.lit(wall_ms).cast("long").alias("wall_ms"),
-                       F.lit(time.time()).alias("committed_at")))
-        self._append_lineage(stage, agg)
+        rows = (self.read(stage, "data").groupBy("shard_id")
+                .agg(F.min("term").alias("term_lo"),
+                     F.max("term").alias("term_hi"),
+                     F.sum("df").alias("doc_count"),
+                     (F.sum(F.length("doc_gaps")) + F.sum(F.length("tfs"))
+                      + F.sum(F.length("dls"))).alias("bytes"))
+                .collect())
+        now = time.time()
+        write_lineage(self.root, f"{self.run_id}_{stage}", [
+            (self.run_id, stage, r["shard_id"], r["term_lo"], r["term_hi"],
+             int(r["doc_count"]), int(r["bytes"]), wall_ms, now)
+            for r in rows])
 
-    def _lineage_simple(self, stage: str, df: DataFrame, wall_ms: int) -> None:
-        agg = df.agg(F.count("*").alias("doc_count")).select(
-            F.lit(self.run_id).alias("run_id"), F.lit(stage).alias("stage"),
-            F.lit(-1).cast("int").alias("shard_id"),
-            F.lit("").alias("term_lo"), F.lit("").alias("term_hi"),
-            F.col("doc_count").cast("long"), F.lit(0).cast("long").alias("bytes"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.lit(time.time()).alias("committed_at"))
-        self._append_lineage(stage, agg)
+    def _build(self, stage: str, body: Callable[[], None],
+               status: dict[str, str], rows_sub: str | None = None) -> None:
+        """Run ``body`` unless ``stage`` is committed, then write its
+        lineage (a row count of ``rows_sub``, or per-shard rows of a
+        segment stage) and commit it."""
+        if self.is_committed(stage):
+            status[stage] = "skipped"
+            return
+        with self._jobs(stage):
+            t0 = time.perf_counter()
+            body()
+            wall = int((time.perf_counter() - t0) * 1000)
+            # lineage BEFORE the commit marker: a crash in between re-runs
+            # the stage, which rewrites its lineage file; the inverse order
+            # would leave a committed stage without lineage forever
+            if rows_sub is None:
+                self._lineage_from_packed(stage, wall)
+            else:
+                self._lineage_simple(stage, rows_sub, wall)
+            self._commit(stage, wall)
+        status[stage] = "built"
 
     # -- the pipeline --------------------------------------------------------
     def run(self, transcripts: DataFrame, stem: bool = True,
@@ -112,133 +216,67 @@ class StagedIndexBuild:
             positions: bool = False) -> dict[str, str]:
         """Run all stages, skipping committed ones. Returns stage -> status."""
         status: dict[str, str] = {}
+        # the fused TF pass of this call, persisted while the packed stage
+        # encodes from its doc-range partitioning
+        fused: dict[str, DataFrame] = {}
 
-        if self.is_committed("docs"):
-            status["docs"] = "skipped"
-        else:
-            t0 = time.perf_counter()
-            docs, cached = _stable_doc_ids(transcripts)
-            docs.write.mode("overwrite").parquet(str(self._dir("docs") / "data"))
+        def docs() -> None:
+            out, cached = _stable_doc_ids(transcripts)
+            self._write("docs", "data", out)
             # later stages read the docs stage back: release the input the
             # docID pass cached, or the corpus stays cached while serving
             for df in cached:
                 df.unpersist()
-            wall = int((time.perf_counter() - t0) * 1000)
-            self._lineage_simple("docs", self.read("docs", "data"), wall)
-            self._commit("docs", wall)
-            status["docs"] = "built"
 
-        # the fused TF pass output is doc-range-partitioned (a narrow map
-        # over the docs stage); the packed stage encodes from THIS layout
-        # (shuffle-free partition-local pack), so keep it persisted across
-        # the term-clustered rewrite below until packing is done
-        tf_fused: DataFrame | None = None
-        if self.is_committed("term_doc_tf"):
-            status["term_doc_tf"] = "skipped"
-        else:
-            t0 = time.perf_counter()
-            docs = self.read("docs", "data")
-            # fused zero-shuffle tokenize+TF+dl pass (see index/build.py)
-            tf_fused = term_doc_tf_pandas(docs, "text", stem=stem,
-                                          with_dl=True).persist()
-            (tf_fused.where(F.col("term").isNull()).select("doc_id", "dl")
-             .write.mode("overwrite")
-             .parquet(str(self._dir("term_doc_tf") / "dl")))
-            (tf_fused.where(F.col("term").isNotNull())
-             .repartitionByRange(self.spark.sparkContext.defaultParallelism,
-                                 "term", "doc_id")
-             .sortWithinPartitions("term", "doc_id")
-             .write.mode("overwrite").parquet(str(self._dir("term_doc_tf") / "data")))
-            wall = int((time.perf_counter() - t0) * 1000)
-            self._lineage_simple("term_doc_tf", self.read("term_doc_tf", "data"), wall)
-            self._commit("term_doc_tf", wall)
-            status["term_doc_tf"] = "built"
+        def tf_pass() -> DataFrame:
+            # fused zero-shuffle tokenize+TF+dl pass (see index/build.py),
+            # doc-range partitioned: a narrow map over the docs stage. On
+            # a resumed run it is recomputed from the docs stage (narrow,
+            # no shuffle).
+            if "tf" not in fused:
+                fused["tf"] = term_doc_tf_pandas(
+                    self.read("docs", "data"), "text", stem=stem,
+                    with_dl=True).persist()
+            return fused["tf"]
 
-        if positions:
-            # optional positional index (phrase search); term-range-clustered
-            # like term_doc_tf so phrase-term IN-lists prune row groups
-            if self.is_committed("positions"):
-                status["positions"] = "skipped"
-            else:
-                from ..functions.analyzer import term_positions_pandas
-                t0 = time.perf_counter()
-                docs = self.read("docs", "data")
-                # fused zero-shuffle pass (positions assigned partition-
-                # locally; JVM posexplode+window would exchange O(tokens))
-                (term_positions_pandas(docs, "text", stem=stem)
-                 .repartitionByRange(
-                     self.spark.sparkContext.defaultParallelism,
-                     "term", "doc_id")
-                 .sortWithinPartitions("term", "doc_id", "pos")
-                 .write.mode("overwrite")
-                 .parquet(str(self._dir("positions") / "data")))
-                wall = int((time.perf_counter() - t0) * 1000)
-                self._lineage_simple("positions",
-                                     self.read("positions", "data"), wall)
-                self._commit("positions", wall)
-                status["positions"] = "built"
+        def term_doc_tf() -> None:
+            tf = tf_pass()
+            self._write("term_doc_tf", "dl", tf.where(F.col("term").isNull())
+                        .select("doc_id", "dl"))
+            self._write("term_doc_tf", "data",
+                        tf.where(F.col("term").isNotNull()))
 
-            # packed positional segments (index/positions.py): the
-            # at-rest format phrase/proximity serve from. Sharded at
-            # shard_span * merge_factor == the doc range a MERGED TF
-            # shard covers (merge sets shard = doc // (span * factor)),
-            # so the proximity kernel can cogroup this table with the
-            # `merged` stage on shard_id directly.
-            if self.is_committed("positions_packed"):
-                status["positions_packed"] = "skipped"
-            else:
-                from ..index.positions import build_packed_positions
-                t0 = time.perf_counter()
-                pos = self.read("positions", "data")
-                (build_packed_positions(
-                    pos, shard_span=shard_span * merge_factor)
-                 .write.mode("overwrite")
-                 .parquet(str(self._dir("positions_packed") / "data")))
-                wall = int((time.perf_counter() - t0) * 1000)
-                self._lineage_simple(
-                    "positions_packed",
-                    self.read("positions_packed", "data"), wall)
-                self._commit("positions_packed", wall)
-                status["positions_packed"] = "built"
+        def positions_rows() -> None:
+            # fused zero-shuffle pass (positions assigned partition-
+            # locally; JVM posexplode+window would exchange O(tokens))
+            self._write("positions", "data", term_positions_pandas(
+                self.read("docs", "data"), "text", stem=stem))
 
-        if self.is_committed("stats"):
-            status["stats"] = "skipped"
-        else:
-            t0 = time.perf_counter()
-            tf = self.read("term_doc_tf", "data")
-            (tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-             .write.mode("overwrite").parquet(str(self._dir("stats") / "term_stats")))
-            docs = self.read("docs", "data")
-            dl = self.read("term_doc_tf", "dl")
-            (docs.join(dl, "doc_id", "left").na.fill({"dl": 0})
-             .agg(F.count("*").cast("long").alias("n_docs"),
-                  F.avg("dl").alias("avgdl"))
-             .write.mode("overwrite").parquet(str(self._dir("stats") / "doc_stats")))
-            wall = int((time.perf_counter() - t0) * 1000)
-            self._lineage_simple("stats", self.read("stats", "term_stats"), wall)
-            self._commit("stats", wall)
-            status["stats"] = "built"
+        def positions_packed() -> None:
+            # packed positional segments (index/positions.py): the at-rest
+            # format phrase/proximity serve from. Sharded at
+            # shard_span * merge_factor == the doc range a MERGED TF shard
+            # covers (merge sets shard = doc // (span * factor)), so the
+            # proximity kernel can cogroup this table with the `merged`
+            # stage on shard_id directly.
+            self._write("positions_packed", "data", build_packed_positions(
+                self.read("positions", "data"),
+                shard_span=shard_span * merge_factor))
 
-        if self.is_committed("packed"):
-            status["packed"] = "skipped"
-            if tf_fused is not None:
-                tf_fused.unpersist()
-        else:
-            t0 = time.perf_counter()
-            avgdl = float(self.read("stats", "doc_stats").collect()[0]["avgdl"])
-            # Encode from the DOC-RANGE-PARTITIONED fused TF pass, not the
-            # term-clustered stage output: partition-local pack replaces the
-            # O(posting rows) exchange with a segment-level splice of the
-            # few boundary shards (~2x faster measured, BENCH.md). On a
-            # resumed run the fused pass is recomputed from the docs stage
-            # (narrow, no shuffle — cheaper than shuffling the clustered
-            # rows back into doc order).
-            src = tf_fused
-            if src is None:
-                docs = self.read("docs", "data")
-                src = term_doc_tf_pandas(docs, "text", stem=stem,
-                                         with_dl=True).persist()
-            tf_dl = (src.where(F.col("term").isNotNull())
+        def stats() -> None:
+            self._write("stats", "term_stats",
+                        _term_stats(self.read("term_doc_tf", "data")))
+            self._write("stats", "doc_stats",
+                        _doc_stats(self.read("term_doc_tf", "dl")))
+
+        def packed() -> None:
+            avgdl = float(
+                self.read("stats", "doc_stats").collect()[0]["avgdl"])
+            # Encode from the DOC-RANGE-PARTITIONED fused TF pass:
+            # partition-local pack replaces the O(posting rows) exchange
+            # with a segment-level splice of the few boundary shards (~2x
+            # faster measured, BENCH.md)
+            tf_dl = (tf_pass().where(F.col("term").isNotNull())
                      .select("term", "doc_id", "tf", "dl"))
             try:
                 seg = build_packed_postings_local(tf_dl, avgdl,
@@ -248,32 +286,32 @@ class StagedIndexBuild:
                 # fall back to the shuffle-based encoder, same bytes
                 seg = build_packed_postings(tf_dl, avgdl,
                                             shard_span=shard_span)
-            seg.write.mode("overwrite").parquet(str(self._dir("packed") / "data"))
-            src.unpersist()
-            wall = int((time.perf_counter() - t0) * 1000)
-            # lineage BEFORE the commit marker (like every other stage): a
-            # crash in between re-runs the stage; the inverse order would
-            # leave a committed stage without lineage forever (resume skips it)
-            self._lineage_from_packed("packed", wall)
-            self._commit("packed", wall)
-            status["packed"] = "built"
+            self._write("packed", "data", seg)
+            fused.pop("tf").unpersist()
 
-        if self.is_committed("merged"):
-            status["merged"] = "skipped"
-        else:
-            t0 = time.perf_counter()
-            packed = self.read("packed", "data")
-            (merge_packed(packed, level_factor=merge_factor)
-             .write.mode("overwrite").parquet(str(self._dir("merged") / "data")))
-            wall = int((time.perf_counter() - t0) * 1000)
-            self._lineage_from_packed("merged", wall)
-            self._commit("merged", wall)
-            status["merged"] = "built"
+        def merged() -> None:
+            self._write("merged", "data",
+                        merge_packed(self.read("packed", "data"),
+                                     level_factor=merge_factor))
 
+        try:
+            self._build("docs", docs, status, "data")
+            self._build("term_doc_tf", term_doc_tf, status, "data")
+            if positions:
+                self._build("positions", positions_rows, status, "data")
+                self._build("positions_packed", positions_packed, status,
+                            "data")
+            self._build("stats", stats, status, "term_stats")
+            self._build("packed", packed, status)
+            self._build("merged", merged, status)
+        finally:
+            for df in fused.values():
+                df.unpersist()
         return status
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(str(self.root / "_lineage"))
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
+            str(self.root / "_lineage"))
 
     # -- delete lifecycle ----------------------------------------------------
     # The LSM write discipline for batch roots, mirroring the streaming
@@ -394,20 +432,14 @@ class StagedIndexBuild:
                               self.read("positions_packed", "data"), tomb))
         if self.is_committed("stats"):
             # mirror the build's stats stage over the (now purged) inputs
-            tf = self.read("term_doc_tf", "data")
             self._swap_in("stats", "term_stats",
-                          tf.groupBy("term")
-                          .agg(F.count("*").cast("long").alias("df")))
-            docs = self.read("docs", "data")
-            dl = self.read("term_doc_tf", "dl")
+                          _term_stats(self.read("term_doc_tf", "data")))
             self._swap_in("stats", "doc_stats",
-                          docs.join(dl, "doc_id", "left").na.fill({"dl": 0})
-                          .agg(F.count("*").cast("long").alias("n_docs"),
-                               F.avg("dl").alias("avgdl")))
+                          _doc_stats(self.read("term_doc_tf", "dl")))
         wall = int((time.perf_counter() - t0) * 1000)
-        self._append_lineage("purge", self.spark.createDataFrame(
-            [(self.run_id, "purge", -1, "", "", int(tomb.size), 0,
-              wall, time.time())], LINEAGE_SCHEMA))
+        write_lineage(self.root, f"{self.run_id}_purge_{uuid.uuid4().hex[:8]}",
+                      [(self.run_id, "purge", -1, "", "", int(tomb.size), 0,
+                        wall, time.time())])
         for f in pending_files:
             shutil.rmtree(f, ignore_errors=True)
         return {"purged_docs": int(tomb.size), "wall_ms": wall}

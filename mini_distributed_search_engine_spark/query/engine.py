@@ -30,28 +30,28 @@ from .wand import compute_shard_bounds, wand_topk
 class SearchEngine:
     def __init__(self, spark: SparkSession, index_root: str):
         self.spark = spark
-        self.doc_stats = spark.read.parquet(f"{index_root}/stats/doc_stats")
+        # stage reads take their schema from the commit markers: no job
+        root = StagedIndexBuild(spark, index_root)
+        self.doc_stats = root.read("stats", "doc_stats")
         self._stats_row = self.doc_stats.collect()[0]  # warm once
         self._corpus_stats = (int(self._stats_row["n_docs"]),
                               float(self._stats_row["avgdl"]))
         # Cache hash-partitioned on shard_id (`packed.serving_layout`,
         # the layout a streaming root serves too): a warm query is one
         # shuffle-free scan stage whose candidates the driver merges.
-        self.packed = serving_layout(
-            spark.read.parquet(f"{index_root}/merged/data"))
+        self.packed = serving_layout(root.read("merged", "data"))
         self.packed.count()
         # per-shard doc lower bounds: computed LAZILY on the first
         # role-filtered query and memoized (wand.compute_shard_bounds note)
         # — unfiltered engines never pay the bounds aggregation at all,
         # filtered ones pay one metadata-scale collect total
         self._shard_bounds: list | None = None
-        self.docs = spark.read.parquet(f"{index_root}/docs/data")
-        self._index_root = index_root
+        self.docs = root.read("docs", "data")
+        self._root = root
         self._positions_packed: DataFrame | None = None
         # checkpointed deletes of an earlier engine on this root stay
         # masked; with no `_tombstones/` directory this runs no job
-        self._tombstones: set[int] = set(
-            StagedIndexBuild(spark, index_root).pending_tombstones())
+        self._tombstones: set[int] = set(root.pending_tombstones())
         self._checkpointed = frozenset(self._tombstones)
         import threading
         self._tombstones_lock = threading.Lock()
@@ -59,8 +59,7 @@ class SearchEngine:
 
     def _ensure_term_stats(self) -> DataFrame:
         if not hasattr(self, "term_stats"):
-            self.term_stats = self.spark.read.parquet(
-                f"{self._index_root}/stats/term_stats").cache()
+            self.term_stats = self._root.read("stats", "term_stats").cache()
             self.term_stats.count()
         return self.term_stats
 
@@ -95,8 +94,7 @@ class SearchEngine:
             new = self._tombstones - self._checkpointed
             if not new:
                 return 0
-            StagedIndexBuild(self.spark,
-                             self._index_root).record_tombstones(new)
+            self._root.record_tombstones(new)
             self._checkpointed = self._checkpointed | new
             return len(new)
 
@@ -179,10 +177,8 @@ class SearchEngine:
         are hash-partitioned on shard_id, so a warm phrase, near or
         proximity query is one exchange-free job."""
         if self._positions_packed is None:
-            import os
-            stage = f"{self._index_root}/positions_packed/data"
-            if os.path.isdir(stage):
-                pos = self.spark.read.parquet(stage)
+            if (self._root.root / "positions_packed" / "data").is_dir():
+                pos = self._root.read("positions_packed", "data")
             else:
                 from ..functions.analyzer import term_positions_pandas
                 from ..index.positions import build_packed_positions

@@ -53,7 +53,6 @@ crosses an ops threshold (``stream_index_job.py --compact-after K``).
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import threading
 import time
@@ -66,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import term_tokens_df
-from ..plans.pipeline import LINEAGE_SCHEMA
+from ..plans.pipeline import write_lineage
 from ..index.packed import (PACKED_SCHEMA, TF_FAMILY, _as_sorted_ids,
                             build_packed_postings, purge_counting,
                             purge_segments, serving_layout, splice_boundary)
@@ -376,12 +375,13 @@ class StreamingIndexer:
         man.append(entry)
         # per-batch lineage row (north rule: every stage leaves lineage):
         # batch id, docs appended, segment bytes written, wall time —
-        # BEFORE the flip (`_write_lineage`): a kill after the flip skips
+        # BEFORE the flip (`write_lineage`): a kill after the flip skips
         # the replay by the batch-id mark, so the row must already exist
-        self._write_lineage(
-            f"batch_{batch_id}", "stream_append", int(start), entry["path"],
+        run_id = f"batch_{batch_id}"
+        write_lineage(self.root, run_id, [(
+            run_id, "stream_append", int(start), entry["path"], "",
             int(n_new), self._dir_bytes(entry["path"], entry.get("pos_path")),
-            int((time.time() - t_start) * 1000))
+            int((time.time() - t_start) * 1000), time.time())])
         meta.update({"n_docs": new_n, "sum_dl": new_sum,
                      "next_doc_id": base + n_new,
                      "generation": gen + 1, "batch_id": int(batch_id),
@@ -393,31 +393,6 @@ class StreamingIndexer:
         for p in dead:
             shutil.rmtree(self.root / p, ignore_errors=True)
         shutil.rmtree(old_tot_dir, ignore_errors=True)
-
-    def _write_lineage(self, run_id: str, stage: str, shard_id: int,
-                       path: str, doc_count: int, nbytes: int,
-                       wall_ms: int) -> None:
-        """One ``_lineage`` row (LINEAGE_SCHEMA) in its own parquet file
-        named by ``run_id``. Appends and compactions write it BEFORE their
-        meta flip, so a process killed after the flip already has it; a
-        rerun of the same step before the flip rewrites the same file
-        (temp file + rename), so a step has exactly one row, with no
-        read of the existing rows."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = to_arrow_schema(_parse_datatype_string(LINEAGE_SCHEMA))
-        row = (run_id, stage, shard_id, path, "", doc_count, nbytes,
-               wall_ms, time.time())
-        lin_dir = self.root / "_lineage"
-        lin_dir.mkdir(exist_ok=True)
-        # dot-prefixed: Spark's reader skips it until the rename
-        tmp = lin_dir / f".{run_id}.parquet.tmp"
-        pq.write_table(pa.Table.from_pylist(
-            [dict(zip(schema.names, row))], schema=schema), str(tmp))
-        os.replace(tmp, lin_dir / f"{run_id}.parquet")
 
     def _dir_bytes(self, *dirs: str | None) -> int:
         """Summed file bytes of the named root directories (None skipped):
@@ -558,8 +533,10 @@ class StreamingIndexer:
         # the same file. (If an append commits that generation number
         # instead, the abandoned compaction's row stays: one row too many,
         # never one missing.)
-        self._write_lineage(f"compact_g{gen}", "compact", -1, out_dir, n_docs,
-                            seg_bytes, int((time.time() - t0) * 1000))
+        run_id = f"compact_g{gen}"
+        write_lineage(self.root, run_id, [(
+            run_id, "compact", -1, out_dir, "", n_docs, seg_bytes,
+            int((time.time() - t0) * 1000), time.time())])
         meta.update({"generation": gen, "updated_at": time.time(),
                      "manifest": [new_entry], "n_docs": n_docs,
                      "sum_dl": int(meta["sum_dl"]) - dl_del})

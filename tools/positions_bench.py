@@ -85,13 +85,11 @@ def main() -> None:
     tf_packed.count()
     bounds = compute_shard_bounds(tf_packed)
 
-    # at-rest size: row layout (term-clustered like the pipeline writes
-    # it, the fair disk layout) vs packed segments
+    # at-rest size: row layout (in the fused pass's doc order, as the
+    # pipeline writes it) vs packed segments
     pos = term_positions_pandas(docs, "text", stem=True)
     t0 = time.perf_counter()
-    (pos.repartitionByRange(cpus, "term", "doc_id")
-     .sortWithinPartitions("term", "doc_id", "pos")
-     .write.mode("overwrite").parquet(str(out / "pos_rows")))
+    pos.write.mode("overwrite").parquet(str(out / "pos_rows"))
     rows_write_sec = time.perf_counter() - t0
     t0 = time.perf_counter()
     (build_packed_positions(pos, shard_bounds=bounds)
